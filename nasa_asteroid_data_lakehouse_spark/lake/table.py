@@ -23,6 +23,16 @@ and dependency-free:
   keys.  An upsert touching 1% of keys rewrites ~1% of the table
   (vs the reference's 100%), and old files stay for time travel.
 
+Write path: every write goes through one bucket writer and one commit
+step.  ``_write_bucket_files`` hash-buckets rows with the single
+``_bucket_of`` expression and keeps one row per key (incoming beats
+existing) in the same exchange as the write.  Data files, merges,
+rewrites and deletion-vector key files all land through it.
+``_transact`` opens the head manifest, adopts its bucket count, runs
+the operation's build step and publishes the next manifest, retrying on
+``CommitConflict``.  A crash before the publish leaves the head
+unchanged; ``vacuum`` reclaims the orphaned files.
+
 At 100 TB the same design works with the manifest in an object store
 using put-if-absent, and bucket count sized so one bucket ≈ one
 executor's worth of data.
@@ -32,8 +42,11 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
+from collections.abc import Iterable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +54,21 @@ from pyspark.sql import functions as F
 
 class CommitConflict(RuntimeError):
     """Another writer committed this version first; retry on latest."""
+
+
+class _Change(NamedTuple):
+    """What one commit attempt does to the head snapshot (see
+    ``VersionedTable._transact``).  ``buckets`` replace the ``touched``
+    bucket ids, dropping those buckets' deletion vectors; every other
+    bucket and vector carries over, and ``dvs`` files append per
+    bucket.  With ``touched=None``, ``buckets`` and ``dvs`` are the
+    whole new snapshot.  ``meta`` overrides the head's keys and schema
+    in the manifest."""
+
+    meta: dict
+    buckets: dict | None = None
+    touched: Iterable[str] | None = ()
+    dvs: dict | None = None
 
 
 class VersionedTable:
@@ -162,10 +190,10 @@ class VersionedTable:
 
         ``dvs`` is the snapshot's deletion-vector map (bucket id ->
         key-file list, see :meth:`delete_where` ``deferred=True``).  It
-        is EXPLICIT, never carried forward implicitly: each write path
-        decides which buckets' vectors it materialized (and therefore
-        drops) — an implicit carry would silently resurrect purged
-        vectors after a rewrite."""
+        is EXPLICIT, never carried forward implicitly: the commit step
+        (:meth:`_transact`) drops the vectors of every bucket a write
+        rewrote (it materialized them) — an implicit carry would
+        silently resurrect purged vectors after a rewrite."""
         watermarks = self._stream_watermarks(version - 1)
         txn = meta.get("stream_txn")
         if txn and not watermarks:
@@ -204,110 +232,150 @@ class VersionedTable:
 
     # --- write paths ---------------------------------------------------------
 
-    def _write_bucket_files(self, df: DataFrame, keys: list[str]) -> dict[str, list[str]]:
-        """Write df hash-bucketed by key; returns bucket -> [files]."""
-        txn = uuid.uuid4().hex[:8]
-        out_dir = os.path.join(self._data_dir, txn)
-        bucketed = df.withColumn(
-            "__bucket", F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(self.num_buckets))
-        )
+    def _bucket_of(self, keys: list[str]):
+        """A row's bucket id, ``pmod(xxhash64(keys), num_buckets)``: the
+        one expression that assigns data rows and deletion vectors to
+        buckets and probes the buckets of deleted keys, so all of them
+        agree on where a key lives (reading concrete file paths loses
+        the partition-dir ``__bucket`` column, so a scan that needs it
+        recomputes it from here)."""
+        return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(self.num_buckets))
+
+    @staticmethod
+    def _list_bucket_files(out_dir: str) -> dict[str, list[str]]:
+        """bucket -> sorted parquet files of a finished write's
+        ``__bucket=`` directories, recursing into nested partition dirs
+        (optimize's ``__slot=``).  A write that produced no file leaves
+        no residue: its txn directory (only ``_SUCCESS``) is removed."""
+        buckets: dict[str, list[str]] = {}
+        for entry in sorted(os.listdir(out_dir)):
+            if entry.startswith("__bucket="):
+                files = sorted(
+                    os.path.join(d, f)
+                    for d, _, fs in os.walk(os.path.join(out_dir, entry))
+                    for f in fs
+                    if f.endswith(".parquet")
+                )
+                if files:
+                    buckets[entry.split("=", 1)[1]] = files
+        if not buckets:
+            shutil.rmtree(out_dir)
+        return buckets
+
+    def _write_bucket_files(
+        self,
+        df: DataFrame,
+        keys: list[str],
+        existing: DataFrame | None = None,
+        order_by: list | None = None,
+    ) -> dict[str, list[str]]:
+        """Write ``df`` hash-bucketed by key, ONE row per key, into a
+        fresh txn directory; returns bucket -> [files].  The table's
+        only bucket writer: creates, merges, rewrites and deletion
+        vectors all land through it, so the one-row-per-key invariant
+        holds on every path.
+
+        Survivor rule (``operators.merge.merge_dataframes``): ``df``
+        rows win over ``existing`` rows of the same key; within a side
+        ``order_by`` breaks ties (default: arbitrary-but-stable
+        monotonically_increasing_id).  Merge and write share ONE
+        exchange (guide §2.4: two operations keyed the same way share
+        an exchange): the bucket id is a pure function of the keys, so
+        every row of one key lands in one bucket partition and the
+        survivor window partitioned by ``(__bucket, *keys)`` runs
+        directly on the write's hash-repartition by ``__bucket``
+        (HashPartitioning on a subset of the window keys satisfies the
+        window's required clustering)."""
+        from pyspark.sql.window import Window
+
+        rows = df.withColumn("__prio", F.lit(0))
+        if existing is not None:
+            rows = rows.unionByName(
+                existing.withColumn("__prio", F.lit(1)), allowMissingColumns=True
+            )
+        tiebreak = list(order_by) if order_by else [F.monotonically_increasing_id()]
+        w = Window.partitionBy("__bucket", *keys).orderBy(F.col("__prio"), *tiebreak)
+        out_dir = os.path.join(self._data_dir, uuid.uuid4().hex[:8])
         (
-            bucketed.repartition(self.num_buckets, "__bucket")
+            rows.withColumn("__bucket", self._bucket_of(keys))
+            .repartition(self.num_buckets, "__bucket")
+            .withColumn("__rn", F.row_number().over(w))
+            .where(F.col("__rn") == 1)
+            .drop("__rn", "__prio")
             .write.partitionBy("__bucket")
             .mode("overwrite")
             .parquet(out_dir)
         )
-        buckets: dict[str, list[str]] = {}
-        for entry in os.listdir(out_dir):
-            if entry.startswith("__bucket="):
-                b = entry.split("=", 1)[1]
-                files = [
-                    os.path.join(out_dir, entry, f)
-                    for f in os.listdir(os.path.join(out_dir, entry))
-                    if f.endswith(".parquet")
-                ]
-                if files:
-                    buckets[b] = sorted(files)
-        return buckets
+        return self._list_bucket_files(out_dir)
 
-    def _merge_write_bucket_files(
-        self,
-        existing: DataFrame | None,
-        incoming: DataFrame,
-        keys: list[str],
-        order_by: list | None = None,
-    ) -> tuple["StructType", dict[str, list[str]]]:
-        """``operators.merge.merge_dataframes`` + :meth:`_write_bucket_files`
-        fused into ONE exchange (guide §2.4: two operations keyed the
-        same way share an exchange).  ``__bucket = pmod(xxhash64(keys))``
-        is a pure function of the merge keys, so every row of one key
-        lands in one bucket partition — the survivor window can run
-        partitioned by ``(__bucket, *keys)`` directly on top of the
-        write's hash-repartition by ``__bucket`` (HashPartitioning on a
-        subset of the window keys satisfies the window's required
-        clustering), where the unfused form shuffled once for the
-        key-window and AGAIN for the bucket write.  Same survivor rule:
-        refining a window partition by a function of its keys changes
-        no group, and the (priority, tiebreak) rank order is unchanged.
-        Returns ``(merged logical schema, bucket -> [files])``."""
-        from pyspark.sql.types import StructType  # noqa: F401 — return type
-        from pyspark.sql.window import Window
-
-        inc = incoming.withColumn("__prio", F.lit(0))
-        if existing is not None:
-            unioned = inc.unionByName(
-                existing.withColumn("__prio", F.lit(1)),
-                allowMissingColumns=True,
-            )
-        else:
-            unioned = inc
-        schema = unioned.drop("__prio").schema
-        tiebreak = (
-            list(order_by) if order_by else [F.monotonically_increasing_id()]
-        )
-        bucketed = unioned.withColumn(
-            "__bucket",
-            F.pmod(
-                F.xxhash64(*[F.col(k) for k in keys]), F.lit(self.num_buckets)
-            ),
-        )
-        w = Window.partitionBy("__bucket", *keys).orderBy(
-            F.col("__prio"), *tiebreak
-        )
-        merged = (
-            bucketed.repartition(self.num_buckets, "__bucket")
-            .withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn", "__prio")
-        )
-        txn = uuid.uuid4().hex[:8]
-        out_dir = os.path.join(self._data_dir, txn)
-        (
-            merged.write.partitionBy("__bucket")
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        buckets: dict[str, list[str]] = {}
-        for entry in os.listdir(out_dir):
-            if entry.startswith("__bucket="):
-                b = entry.split("=", 1)[1]
-                files = [
-                    os.path.join(out_dir, entry, f)
-                    for f in os.listdir(os.path.join(out_dir, entry))
-                    if f.endswith(".parquet")
-                ]
-                if files:
-                    buckets[b] = sorted(files)
-        return schema, buckets
+    def _transact(self, build, retries: int = 1) -> int:
+        """The one commit step behind every write after :meth:`create`:
+        open the head manifest, adopt its ``num_buckets``, run
+        ``build(version, manifest)`` — which writes any data files and
+        returns a :class:`_Change`, or ``None`` for a no-op that commits
+        nothing and returns the head — fold the change into the head
+        snapshot and publish ``version + 1``.  Losing the publish race
+        re-runs the whole attempt on the new head, at most ``retries``
+        times; an attempt that does not commit leaves the handle on the
+        head's bucket count (a rebucket must not leave it claiming a
+        count no manifest recorded, ADVICE r08)."""
+        for _ in range(retries):
+            version = self.latest_version()
+            if version is None:
+                raise ValueError("table does not exist; call create() first")
+            manifest = self._load_manifest(version)
+            # Adopt the table's committed bucket count: re-opening with
+            # a different num_buckets default must not re-hash a write
+            # — an incoming key would land in a new bucket while its old
+            # version stays in an untouched one, duplicating the key
+            # across the snapshot.
+            head_buckets = int(manifest.get("num_buckets", self.num_buckets))
+            self.num_buckets = head_buckets
+            try:
+                change = build(version, manifest)
+                if change is None:
+                    return version
+                if change.touched is None:
+                    buckets, dvs = change.buckets or {}, change.dvs
+                else:
+                    # swap the touched buckets and drop their vectors
+                    # (the rewrite materialized them); every other
+                    # bucket and vector carries over, and new vector
+                    # files append per bucket
+                    touched = set(change.touched)
+                    buckets = {
+                        b: fs for b, fs in manifest["buckets"].items() if b not in touched
+                    }
+                    buckets.update(change.buckets or {})
+                    dvs = {
+                        b: list(fs)
+                        for b, fs in manifest.get("dvs", {}).items()
+                        if b not in touched
+                    }
+                    for b, fs in (change.dvs or {}).items():
+                        dvs[b] = dvs.get(b, []) + fs
+                self._commit(
+                    version + 1,
+                    buckets,
+                    {"keys": manifest["keys"], "schema": manifest.get("schema"), **change.meta},
+                    dvs=dvs,
+                )
+                return version + 1
+            except CommitConflict:
+                self.num_buckets = head_buckets  # retry on the new head
+            except BaseException:
+                self.num_buckets = head_buckets
+                raise
+        raise CommitConflict(f"gave up after {retries} conflicting commits")
 
     def _buckets_of_key_values(
         self, manifest: dict, keys: list[str], key_values: list[tuple]
     ) -> set[int]:
         """Bucket ids the given key tuples hash to — evaluated with the
-        writer's own ``pmod(xxhash64(keys), n)`` expression on an
-        O(|tuples|) driver-built frame, typed from the snapshot schema
-        (``xxhash64`` is type-sensitive: hashing an int where the table
-        stores bigint would prune the WRONG buckets)."""
+        writer's own :meth:`_bucket_of` expression on an O(|tuples|)
+        driver-built frame, typed from the snapshot schema (``xxhash64``
+        is type-sensitive: hashing an int where the table stores bigint
+        would prune the WRONG buckets)."""
         from pyspark.sql.types import StructField, StructType
 
         schema_json = manifest.get("schema")
@@ -324,12 +392,7 @@ class VersionedTable:
         probe = self.spark.createDataFrame(rows, key_schema)
         return {
             r["__b"]
-            for r in probe.select(
-                F.pmod(
-                    F.xxhash64(*[F.col(k) for k in keys]),
-                    F.lit(self.num_buckets),
-                ).alias("__b")
-            )
+            for r in probe.select(self._bucket_of(keys).alias("__b"))
             .distinct()
             .collect()
         }
@@ -378,21 +441,18 @@ class VersionedTable:
         """Initial commit (version 0). Fails if the table exists.
 
         Enforces the table's one-row-per-key invariant from the first
-        commit with the SAME rule every later merge uses
-        (``merge_dataframes`` with no existing side) — duplicate-key
-        source rows collapse at create instead of corrupting the first
+        commit with the SAME survivor rule every later write uses (the
+        bucket writer with no existing side) — duplicate-key source
+        rows collapse at create instead of corrupting the first
         upsert's merge and fanning out the change feed.  Pass
-        ``order_by`` (forwarded to the merge, as in :meth:`upsert`) to
-        pick WHICH duplicate survives deterministically; without it the
-        default tiebreak is arbitrary-but-stable within a run
-        (monotonically_increasing_id), i.e. the surviving payload can
-        differ across runs when duplicate keys carry conflicting
-        payloads."""
+        ``order_by`` (as in :meth:`upsert`) to pick WHICH duplicate
+        survives deterministically; without it the default tiebreak is
+        arbitrary-but-stable within a run (monotonically_increasing_id),
+        i.e. the surviving payload can differ across runs when
+        duplicate keys carry conflicting payloads."""
         if self.latest_version() is not None:
             raise ValueError(f"table at {self.root} already exists")
-        schema, buckets = self._merge_write_bucket_files(
-            None, df, keys, order_by=order_by
-        )
+        buckets = self._write_bucket_files(df, keys, order_by=order_by)
         # The logical schema travels in the manifest so snapshot reads
         # of an empty table (zero data files — e.g. created from an
         # empty source) still resolve every column.
@@ -402,7 +462,7 @@ class VersionedTable:
             {
                 "keys": keys,
                 "operation": "create",
-                "schema": schema.jsonValue(),
+                "schema": df.schema.jsonValue(),
             },
         )
         return 0
@@ -414,100 +474,59 @@ class VersionedTable:
         retries: int = 3,
         extra_meta: dict | None = None,
     ) -> int:
-        """Merge incoming rows (incoming wins per key), rewriting only
-        the buckets that contain incoming keys.  Optimistic retry on
-        concurrent commits.
+        """Merge incoming rows (incoming wins per key, one row per key
+        even when the batch repeats a key), rewriting only the buckets
+        that contain incoming keys.  Optimistic retry on concurrent
+        commits.
 
         ``extra_meta`` merges into the commit manifest — the hook an
         idempotent streaming writer uses to record its batch id IN the
         same atomic commit as the data (Delta's txn appId/version
         pattern; see streaming/lakehouse.py)."""
-        from nasa_asteroid_data_lakehouse_spark.operators.merge import merge_dataframes
 
-        for _ in range(retries):
-            version = self.latest_version()
-            if version is None:
-                raise ValueError("table does not exist; call create() first")
-            manifest = self._load_manifest(version)
+        def build(version: int, manifest: dict) -> _Change:
             keys = manifest["keys"]
-            # Adopt the table's committed bucket count: re-opening with
-            # a different num_buckets default must not re-hash the
-            # merge — an incoming key would land in a new bucket while
-            # its old version stays in an untouched one, duplicating
-            # the key across the snapshot.
-            self.num_buckets = int(manifest.get("num_buckets", self.num_buckets))
-
             # Schema-merge contract (Delta mergeSchema on MERGE): an
             # incoming batch MISSING table columns reads them as NULL
             # (full-row replacement, operators/merge), and the commit's
             # logical schema is always the UNION of table and incoming
             # schemas.  Aligning here (not via unionByName alone)
-            # matters when the touched buckets hold no files — merged
-            # would otherwise BE the narrow incoming and the commit
-            # would silently drop table columns from the manifest
-            # schema.
-            incoming = self._align_to_schema(incoming, manifest)
-
-            inc_bucketed = incoming.withColumn(
-                "__bucket",
-                F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(self.num_buckets)),
-            )
+            # matters when the touched buckets hold no files — the
+            # merge would otherwise BE the narrow incoming and the
+            # commit would silently drop table columns from the
+            # manifest schema.
+            inc = self._align_to_schema(incoming, manifest)
             touched = sorted(
-                r["__bucket"] for r in inc_bucketed.select("__bucket").distinct().collect()
+                str(r["__b"])
+                for r in inc.select(self._bucket_of(keys).alias("__b"))
+                .distinct()
+                .collect()
             )
-            touched_set = {str(b) for b in touched}
+            # The snapshot read applies the touched buckets' deletion
+            # vectors BEFORE the merge — a deferred-deleted row must not
+            # resurrect through the rewrite — and the commit drops them.
+            existing = (
+                self._read_buckets(manifest, touched)
+                if any(manifest["buckets"].get(b) for b in touched)
+                else None
+            )
+            schema = (
+                inc.schema
+                if existing is None
+                else inc.unionByName(existing, allowMissingColumns=True).schema
+            )
+            return _Change(
+                {
+                    "operation": "upsert",
+                    "touched_buckets": touched,
+                    "schema": schema.jsonValue(),
+                    **(extra_meta or {}),
+                },
+                self._write_bucket_files(inc, keys, existing, order_by),
+                touched,
+            )
 
-            old_files = [
-                f for b in touched_set for f in manifest["buckets"].get(b, [])
-            ]
-            if old_files:
-                # deletion vectors of touched buckets apply BEFORE the
-                # merge — a deferred-deleted row must not resurrect
-                # through the rewrite — and are dropped from the new
-                # manifest below (the rewrite materializes them).
-                # mergeSchema: touched buckets can hold files from
-                # commits with evolved schemas (upserts union-by-name)
-                existing = self._apply_dvs(
-                    self.spark.read.option("mergeSchema", "true").parquet(
-                        *old_files
-                    ),
-                    manifest,
-                    sorted(touched_set),
-                )
-                merged_schema, new_buckets = self._merge_write_bucket_files(
-                    existing, incoming, keys, order_by=order_by
-                )
-            else:
-                merged_schema = incoming.schema
-                new_buckets = self._write_bucket_files(incoming, keys)
-
-            combined = dict(manifest["buckets"])
-            for b in touched_set:
-                combined.pop(b, None)
-            combined.update(new_buckets)
-            carried_dvs = {
-                b: fs
-                for b, fs in manifest.get("dvs", {}).items()
-                if b not in touched_set
-            }
-
-            try:
-                self._commit(
-                    version + 1,
-                    combined,
-                    {
-                        "keys": keys,
-                        "operation": "upsert",
-                        "touched_buckets": sorted(touched_set),
-                        "schema": merged_schema.jsonValue(),
-                        **(extra_meta or {}),
-                    },
-                    dvs=carried_dvs,
-                )
-                return version + 1
-            except CommitConflict:
-                continue  # re-read latest manifest and retry
-        raise CommitConflict(f"gave up after {retries} conflicting commits")
+        return self._transact(build, retries)
 
     def overwrite(self, df: DataFrame, order_by: list[str] | None = None,
                   retries: int = 3) -> int:
@@ -515,38 +534,24 @@ class VersionedTable:
         table's keys — the API path for schema evolution beyond what
         upsert's union-by-name can express (dropping a column, or a
         wholesale recompute).  The one-row-per-key invariant is
-        enforced with the same merge rule create() uses; ``changes()``
-        across an overwrite classifies per row (insert / update /
-        delete / schema_drop / schema_add), so the CDF stays exact.
+        enforced with the same survivor rule create() uses;
+        ``changes()`` across an overwrite classifies per row (insert /
+        update / delete / schema_drop / schema_add), so the CDF stays
+        exact.
 
         Scale note: an overwrite rewrites the whole table by
         definition — use :meth:`upsert`/:meth:`delete_where` for
         incremental change; this exists for the schema-evolution and
         recompute commits where full rewrite IS the operation."""
-        for _ in range(retries):
-            version = self.latest_version()
-            if version is None:
-                raise ValueError("table does not exist; call create() first")
-            manifest = self._load_manifest(version)
-            keys = manifest["keys"]
-            self.num_buckets = int(manifest.get("num_buckets", self.num_buckets))
-            merged_schema, buckets = self._merge_write_bucket_files(
-                None, df, keys, order_by=order_by
+
+        def build(version: int, manifest: dict) -> _Change:
+            return _Change(
+                {"operation": "overwrite", "schema": df.schema.jsonValue()},
+                self._write_bucket_files(df, manifest["keys"], order_by=order_by),
+                touched=None,
             )
-            try:
-                self._commit(
-                    version + 1,
-                    buckets,
-                    {
-                        "keys": keys,
-                        "operation": "overwrite",
-                        "schema": merged_schema.jsonValue(),
-                    },
-                )
-                return version + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"gave up after {retries} conflicting commits")
+
+        return self._transact(build, retries)
 
     def delete_where(
         self, condition, retries: int = 3, key_values=None, deferred: bool = False
@@ -570,10 +575,10 @@ class VersionedTable:
         bucket-pruned.  For the common key-targeted delete, pass
         ``key_values`` (an iterable of key tuples, one value per key
         column in manifest order): candidate buckets are then computed
-        by hashing those literals — the same ``pmod(xxhash64(keys), n)``
-        expression the writer assigns, evaluated on an O(|tuples|)
-        driver-built frame — and both the discovery scan and the
-        rewrite read only those buckets' files.
+        by hashing those literals — the writer's own :meth:`_bucket_of`
+        expression, evaluated on an O(|tuples|) driver-built frame —
+        and both the discovery scan and the rewrite read only those
+        buckets' files.
 
         ``key_values`` is SEMANTIC, not a hint (ADVICE r05): when
         given, a row deletes iff ``condition`` is TRUE **and** its key
@@ -610,143 +615,64 @@ class VersionedTable:
         no file-position bookkeeping — and the vector survives
         compaction-era file renames by construction."""
         base_cond = F.expr(condition) if isinstance(condition, str) else condition
-        for _ in range(retries):
-            version = self.latest_version()
-            if version is None:
-                raise ValueError("table does not exist; call create() first")
-            manifest = self._load_manifest(version)
-            keys = manifest["keys"]
-            self.num_buckets = int(manifest.get("num_buckets", self.num_buckets))
+        kv = None if key_values is None else list(key_values)
 
-            files = [f for fs in manifest["buckets"].values() for f in fs]
-            if not files:
-                return version
-            # the partition-dir __bucket column is lost when reading
-            # concrete file paths; recompute it from the key hash (the
-            # exact expression _write_bucket_files assigns)
-            bucket_of = F.pmod(
-                F.xxhash64(*[F.col(k) for k in keys]), F.lit(self.num_buckets)
-            )
+        def build(version: int, manifest: dict) -> _Change | None:
+            keys = manifest["keys"]
+            scanned = list(manifest["buckets"])
             cond = base_cond
-            if key_values is not None:
-                kv = list(key_values)
+            if kv is not None:
                 # Key-pruned path: hash the caller's key literals with
                 # the writer's own expression (typed via the snapshot
-                # schema, since xxhash64(int) != xxhash64(bigint)).
-                candidates = self._buckets_of_key_values(manifest, keys, kv)
-                files = [
-                    f
-                    for b in sorted(candidates)
-                    for f in manifest["buckets"].get(str(b), [])
-                ]
-                if not files:
-                    return version
-                # Conjoin key-membership so pruning is semantics-
+                # schema, since xxhash64(int) != xxhash64(bigint)), and
+                # conjoin key-membership so pruning is semantics-
                 # preserving: rows whose keys are unlisted never
                 # delete, whether or not their bucket was scanned.
+                scanned = sorted(
+                    str(b) for b in self._buckets_of_key_values(manifest, keys, kv)
+                )
                 cond = F.coalesce(base_cond, F.lit(False)) & (
                     self._key_membership_cond(keys, kv)
                 )
-            # Apply existing deletion vectors to the discovery scan:
+            if not any(manifest["buckets"].get(b) for b in scanned):
+                return None
+            # The discovery scan applies existing deletion vectors:
             # already-deleted rows must neither re-trigger a bucket
-            # rewrite nor re-enter a vector (idempotent DV debt).  The
-            # scanned bucket set is everything the candidate files span.
-            scanned_buckets = (
-                sorted(str(b) for b in candidates)
-                if key_values is not None
-                else list(manifest["buckets"])
-            )
-            snap = self._apply_dvs(
-                self.spark.read.option("mergeSchema", "true").parquet(*files),
-                manifest,
-                scanned_buckets,
-            )
-            matching = snap.where(cond)
+            # rewrite nor re-enter a vector (idempotent DV debt).
+            matching = self._read_buckets(manifest, scanned).where(cond)
 
             if deferred:
                 # merge-on-read: record the deleted keys, touch no data
-                # file.  Vectors bucket by the same key hash as the
-                # data, so new files merge into the per-bucket lists.
-                # ONE job (guide §1.2): the DV write's dynamic
-                # partitionBy assigns the same pmod(xxhash64(keys))
-                # bucket the discovery distinct-collect used to compute,
-                # so the written bucket dirs ARE the touched set — the
-                # separate discovery job is gone, and zero written
-                # files ⇔ zero matching rows (the no-op early exit).
-                dv_new = self._write_bucket_files(
-                    matching.select(*keys).distinct(), keys
-                )
+                # file.  ONE job (guide §1.2): the vector write's
+                # dynamic partitionBy assigns each key its bucket, so
+                # the written bucket dirs ARE the touched set, and zero
+                # written files <=> zero matching rows (the no-op exit).
+                dv_new = self._write_bucket_files(matching.select(*keys), keys)
                 if not dv_new:
-                    return version
-                merged_dvs = {
-                    b: list(fs) for b, fs in manifest.get("dvs", {}).items()
-                }
-                for b, fs in dv_new.items():
-                    merged_dvs[b] = merged_dvs.get(b, []) + fs
-                try:
-                    self._commit(
-                        version + 1,
-                        dict(manifest["buckets"]),
-                        {
-                            "keys": keys,
-                            "operation": "delete_deferred",
-                            "touched_buckets": sorted(dv_new),
-                            "schema": manifest.get("schema"),
-                        },
-                        dvs=merged_dvs,
-                    )
-                    return version + 1
-                except CommitConflict:
-                    continue
+                    return None
+                return _Change(
+                    {"operation": "delete_deferred", "touched_buckets": sorted(dv_new)},
+                    dvs=dv_new,
+                )
 
             touched = sorted(
-                r["__b"]
-                for r in matching.select(bucket_of.alias("__b"))
+                str(r["__b"])
+                for r in matching.select(self._bucket_of(keys).alias("__b"))
                 .distinct()
                 .collect()
             )
             if not touched:
-                return version
-            touched_set = {str(b) for b in touched}
+                return None
+            kept = self._read_buckets(manifest, touched).where(
+                ~F.coalesce(cond, F.lit(False))
+            )
+            return _Change(
+                {"operation": "delete", "touched_buckets": touched},
+                self._write_bucket_files(kept, keys),
+                touched,
+            )
 
-            touched_files = [
-                f for b in touched_set for f in manifest["buckets"].get(b, [])
-            ]
-            kept = self._apply_dvs(
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(*touched_files),
-                manifest,
-                sorted(touched_set),
-            ).where(~F.coalesce(cond, F.lit(False)))
-            new_buckets = self._write_bucket_files(kept, keys)
-
-            combined = dict(manifest["buckets"])
-            for b in touched_set:
-                combined.pop(b, None)
-            combined.update(new_buckets)
-            # the rewrite materialized the touched buckets' vectors
-            carried_dvs = {
-                b: fs
-                for b, fs in manifest.get("dvs", {}).items()
-                if b not in touched_set
-            }
-
-            try:
-                self._commit(
-                    version + 1,
-                    combined,
-                    {
-                        "keys": keys,
-                        "operation": "delete",
-                        "touched_buckets": sorted(touched_set),
-                        "schema": manifest.get("schema"),
-                    },
-                    dvs=carried_dvs,
-                )
-                return version + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"gave up after {retries} conflicting commits")
+        return self._transact(build, retries)
 
     def delete_keys(
         self,
@@ -763,19 +689,15 @@ class VersionedTable:
         and the commit is O(deleted keys) regardless of table size.
         Keys absent from the table are harmless: their vector entries
         subtract nothing and purge with the rest at the next rewrite.
+        An empty key set is a no-op: no commit, no files.
 
         ``extra_meta`` merges into the commit manifest (the idempotent
         streaming marker hook, as on :meth:`upsert`) — a CDC apply can
         make its delete half carry the batch marker."""
         from pyspark.sql.types import StructType
 
-        for _ in range(retries):
-            version = self.latest_version()
-            if version is None:
-                raise ValueError("table does not exist; call create() first")
-            manifest = self._load_manifest(version)
+        def build(version: int, manifest: dict) -> _Change | None:
             keys = manifest["keys"]
-            self.num_buckets = int(manifest.get("num_buckets", self.num_buckets))
             # Cast the caller's key columns to the TABLE's key types
             # before bucket-hashing: xxhash64 is type-sensitive, so a
             # mistyped frame (int32 keys for a bigint table) would file
@@ -793,33 +715,19 @@ class VersionedTable:
                     else F.col(k)
                     for k in keys
                 ]
-            dv_new = self._write_bucket_files(
-                keys_df.select(*key_cols).distinct(), keys
-            )
+            dv_new = self._write_bucket_files(keys_df.select(*key_cols), keys)
             if not dv_new:
-                return version  # empty key set: no-op, no commit spam
-            merged_dvs = {
-                b: list(fs) for b, fs in manifest.get("dvs", {}).items()
-            }
-            for b, fs in dv_new.items():
-                merged_dvs[b] = merged_dvs.get(b, []) + fs
-            try:
-                self._commit(
-                    version + 1,
-                    dict(manifest["buckets"]),
-                    {
-                        "keys": keys,
-                        "operation": "delete_deferred",
-                        "touched_buckets": sorted(dv_new),
-                        "schema": manifest.get("schema"),
-                        **(extra_meta or {}),
-                    },
-                    dvs=merged_dvs,
-                )
-                return version + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"gave up after {retries} conflicting commits")
+                return None
+            return _Change(
+                {
+                    "operation": "delete_deferred",
+                    "touched_buckets": sorted(dv_new),
+                    **(extra_meta or {}),
+                },
+                dvs=dv_new,
+            )
+
+        return self._transact(build, retries)
 
     # --- read paths ----------------------------------------------------------
 
@@ -915,7 +823,9 @@ class VersionedTable:
         whole snapshot when all ids are passed), with the snapshot's
         deletion vectors applied — logical reads never see
         deferred-deleted rows.  Zero files resolves to an empty frame
-        with the manifest's logical schema."""
+        with the manifest's logical schema.  Also the one snapshot
+        reader of the write paths: every rewrite and merge reads the
+        buckets it replaces through here."""
         files = [f for b in bucket_ids for f in manifest["buckets"].get(b, [])]
         if not files:
             schema_json = manifest.get("schema")
@@ -1261,58 +1171,41 @@ class VersionedTable:
         rewrite materializes the vector (surviving rows only) and
         drops it from the new manifest, which is the PURGE half of the
         merge-on-read bargain (Delta's OPTIMIZE does the same)."""
-        version = self.latest_version()
-        if version is None:
-            raise ValueError("table does not exist")
-        manifest = self._load_manifest(version)
-        keys = manifest["keys"]
-        self.num_buckets = int(manifest.get("num_buckets", self.num_buckets))
-        dvs = manifest.get("dvs", {})
-        to_compact = {
-            b: fs
-            for b, fs in manifest["buckets"].items()
-            if len(fs) > target_files_per_bucket or dvs.get(b)
-        }
-        # A vector filed under a bucket with NO data files (delete_keys
-        # for keys absent from the table) references rows that cannot
-        # exist; it would never join a rewrite and be carried forward
-        # in every manifest indefinitely — drop it here so its key
-        # files become vacuum-eligible (ADVICE r09 #3).
-        orphan_dvs = sorted(b for b in dvs if b not in manifest["buckets"])
-        if not to_compact and not orphan_dvs:
-            return version
-        combined = dict(manifest["buckets"])
-        if to_compact:
-            files = [f for fs in to_compact.values() for f in fs]
-            consolidated = self._apply_dvs(
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(*files)
-                .drop("__bucket"),
-                manifest,
-                sorted(to_compact),
+
+        def build(version: int, manifest: dict) -> _Change | None:
+            dvs = manifest.get("dvs", {})
+            to_compact = sorted(
+                b
+                for b, fs in manifest["buckets"].items()
+                if len(fs) > target_files_per_bucket or dvs.get(b)
             )
-            new_buckets = self._write_bucket_files(consolidated, keys)
-            for b in to_compact:
-                combined.pop(b, None)
-            combined.update(new_buckets)
-        carried_dvs = {
-            b: fs
-            for b, fs in dvs.items()
-            if b not in to_compact and b in manifest["buckets"]
-        }
-        self._commit(
-            version + 1,
-            combined,
-            {
-                "keys": keys,
-                "operation": "compact",
-                "data_change": False,
-                "compacted_buckets": sorted(to_compact),
-                "schema": manifest.get("schema"),
-            },
-            dvs=carried_dvs,
-        )
-        return version + 1
+            # A vector filed under a bucket with NO data files
+            # (delete_keys for keys absent from the table) references
+            # rows that cannot exist; it would never join a rewrite and
+            # be carried forward in every manifest indefinitely — drop
+            # it here so its key files become vacuum-eligible (ADVICE
+            # r09 #3).
+            orphan_dvs = [b for b in dvs if b not in manifest["buckets"]]
+            if not to_compact and not orphan_dvs:
+                return None
+            new_buckets = (
+                self._write_bucket_files(
+                    self._read_buckets(manifest, to_compact), manifest["keys"]
+                )
+                if to_compact
+                else {}
+            )
+            return _Change(
+                {
+                    "operation": "compact",
+                    "data_change": False,
+                    "compacted_buckets": to_compact,
+                },
+                new_buckets,
+                to_compact + orphan_dvs,
+            )
+
+        return self._transact(build)
 
     def rebucket(self, new_num_buckets: int) -> int:
         """Re-partition the table into a NEW bucket count — bucket-spec
@@ -1323,9 +1216,9 @@ class VersionedTable:
 
         One full rewrite commit: every row re-hashed into the new
         bucket space, the manifest records the new count, and every
-        later writer adopts it (upsert/delete read ``num_buckets`` from
-        the committed manifest — the re-open safety added in round 5
-        exists for exactly this).  Data content is unchanged (a
+        later writer adopts it (the commit step reads ``num_buckets``
+        from the committed manifest — the re-open safety added in
+        round 5 exists for exactly this).  Data content is unchanged (a
         maintenance commit like compact): ``changes()`` across a
         rebucket classifies ZERO rows — the bucket-id file lists all
         differ so it degrades to one full-table key diff, correct just
@@ -1336,50 +1229,32 @@ class VersionedTable:
         ``pmod(hash, 2N)`` every old bucket splits into exactly two new
         ones (b and b+N), so the shuffle is bucket-local even though
         the rewrite is total."""
-        version = self.latest_version()
-        if version is None:
-            raise ValueError("table does not exist")
-        manifest = self._load_manifest(version)
-        keys = manifest["keys"]
-        old_count = int(manifest.get("num_buckets", self.num_buckets))
-        if int(new_num_buckets) == old_count:
-            self.num_buckets = old_count
-            return version
-        # num_buckets drives _write_bucket_files, so it must be set
-        # before the write — but a failed write or losing the commit
-        # race must not leave the in-memory handle claiming a bucket
-        # count the committed manifest never recorded (ADVICE r08):
-        # restore the old count on any failure.
-        self.num_buckets = int(new_num_buckets)
-        try:
-            files = [f for fs in manifest["buckets"].values() for f in fs]
-            if files:
+        new_count = int(new_num_buckets)
+
+        def build(version: int, manifest: dict) -> _Change | None:
+            old_count = self.num_buckets  # adopted from the head
+            if new_count == old_count:
+                return None
+            # num_buckets drives the bucket writer, so it is set before
+            # the write; the commit step restores the head's count if
+            # the write fails or the commit loses the race.
+            self.num_buckets = new_count
+            new_buckets = {}
+            if any(manifest["buckets"].values()):
                 # full rewrite: deletion vectors materialize and drop
-                df = self._apply_dvs(
-                    self.spark.read.option("mergeSchema", "true")
-                    .parquet(*files)
-                    .drop("__bucket"),
-                    manifest,
-                    list(manifest["buckets"]),
-                )
-                new_buckets = self._write_bucket_files(df, keys)
-            else:
-                new_buckets = {}
-            self._commit(
-                version + 1,
-                new_buckets,
+                df = self._read_buckets(manifest, list(manifest["buckets"]))
+                new_buckets = self._write_bucket_files(df, manifest["keys"])
+            return _Change(
                 {
-                    "keys": keys,
                     "operation": "rebucket",
                     "data_change": False,
                     "previous_num_buckets": old_count,
-                    "schema": manifest.get("schema"),
                 },
+                new_buckets,
+                touched=None,
             )
-        except BaseException:
-            self.num_buckets = old_count
-            raise
-        return version + 1
+
+        return self._transact(build)
 
     def restore(
         self,
@@ -1408,6 +1283,12 @@ class VersionedTable:
         :meth:`rebucket` reverts the bucket spec too, since the
         referenced files ARE the old bucket layout).
 
+        The restore target is fixed, so losing the race to a
+        concurrent commit is always safe to retry against the new
+        head: like upsert / overwrite / delete_where / delete_keys it
+        retries up to ``retries`` times (ADVICE r09 #4), where the
+        maintenance commits (compact / rebucket / optimize) try once.
+
         What is NOT rolled back: the ``stream_txn_watermarks`` map
         carries forward from the pre-restore head like every commit
         (Delta preserves txn identifiers across RESTORE for the same
@@ -1423,49 +1304,38 @@ class VersionedTable:
             raise ValueError("pass exactly one of version / timestamp")
         if timestamp is not None:
             version = self.version_as_of(timestamp)
-        if self.latest_version() is None:
-            raise ValueError("table does not exist")
-        target = self._load_manifest(version)  # FileNotFoundError if vacuumed
-        missing = [
-            f
-            for fs in list(target["buckets"].values())
-            + list(target.get("dvs", {}).values())
-            for f in fs
-            if not os.path.exists(f)
-        ]
-        if missing:
-            raise FileNotFoundError(
-                f"restore to version {version} impossible: "
-                f"{len(missing)} referenced files were vacuumed "
-                f"(first: {missing[0]})"
+
+        def build(head: int, manifest: dict) -> _Change:
+            target = self._load_manifest(version)  # FileNotFoundError if vacuumed
+            missing = [
+                f
+                for fs in list(target["buckets"].values())
+                + list(target.get("dvs", {}).values())
+                for f in fs
+                if not os.path.exists(f)
+            ]
+            if missing:
+                raise FileNotFoundError(
+                    f"restore to version {version} impossible: "
+                    f"{len(missing)} referenced files were vacuumed "
+                    f"(first: {missing[0]})"
+                )
+            self.num_buckets = int(target.get("num_buckets", self.num_buckets))
+            return _Change(
+                {
+                    "keys": target["keys"],
+                    "operation": "restore",
+                    "restored_version": int(version),
+                    "schema": target.get("schema"),
+                },
+                dict(target["buckets"]),
+                touched=None,
+                dvs=target.get("dvs"),
             )
+
         old_count = self.num_buckets
-        self.num_buckets = int(target.get("num_buckets", self.num_buckets))
         try:
-            # The restore target is fixed, so losing a race to a
-            # concurrent commit is always safe to retry against the new
-            # head — same bounded optimistic loop as every other write
-            # path (ADVICE r09 #4).
-            for _ in range(retries):
-                head = self.latest_version()
-                try:
-                    self._commit(
-                        head + 1,
-                        dict(target["buckets"]),
-                        {
-                            "keys": target["keys"],
-                            "operation": "restore",
-                            "restored_version": int(version),
-                            "schema": target.get("schema"),
-                        },
-                        dvs=target.get("dvs"),
-                    )
-                    return head + 1
-                except CommitConflict:
-                    continue  # re-read the head and retry
-            raise CommitConflict(
-                f"gave up after {retries} conflicting commits"
-            )
+            return self._transact(build, retries)
         except BaseException:
             self.num_buckets = old_count
             raise
@@ -1502,76 +1372,46 @@ class VersionedTable:
         )
         from pyspark.sql import Window
 
-        version = self.latest_version()
-        if version is None:
-            raise ValueError("table does not exist")
-        manifest = self._load_manifest(version)
-        keys = manifest["keys"]
-        self.num_buckets = int(manifest.get("num_buckets", self.num_buckets))
-        files = [f for fs in manifest["buckets"].values() for f in fs]
-        if not files:
-            return version
-        # full rewrite: deletion vectors materialize and drop
-        df = self._apply_dvs(
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(*files)
-            .drop("__bucket"),
-            manifest,
-            list(manifest["buckets"]),
-        )
-        z = morton_interleave(zorder_buckets(df, zorder_by, zbits), zbits)
-        bucketed = df.withColumn(
-            "__bucket",
-            F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(self.num_buckets)),
-        ).withColumn("__z", z)
-        w = Window.partitionBy("__bucket").orderBy("__z", *keys)
-        wcnt = Window.partitionBy("__bucket")
-        sliced = bucketed.withColumn(
-            "__slot",
-            F.floor(
-                (F.row_number().over(w) - 1)
-                * files_per_bucket
-                / F.count(F.lit(1)).over(wcnt)
-            ).cast("int"),
-        )
-
-        txn = uuid.uuid4().hex[:8]
-        out_dir = os.path.join(self._data_dir, txn)
-        (
-            sliced.repartition(
-                self.num_buckets * files_per_bucket, "__bucket", "__slot"
+        def build(version: int, manifest: dict) -> _Change | None:
+            keys = manifest["keys"]
+            if not any(manifest["buckets"].values()):
+                return None
+            # full rewrite: deletion vectors materialize and drop
+            df = self._read_buckets(manifest, list(manifest["buckets"]))
+            z = morton_interleave(zorder_buckets(df, zorder_by, zbits), zbits)
+            bucketed = df.withColumn("__bucket", self._bucket_of(keys)).withColumn(
+                "__z", z
             )
-            .sortWithinPartitions("__bucket", "__slot", "__z")
-            .drop("__z")
-            .write.partitionBy("__bucket", "__slot")
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        new_buckets: dict[str, list[str]] = {}
-        for entry in sorted(os.listdir(out_dir)):
-            if not entry.startswith("__bucket="):
-                continue
-            b = entry.split("=", 1)[1]
-            bdir = os.path.join(out_dir, entry)
-            fs = [
-                os.path.join(bdir, slot_dir, f)
-                for slot_dir in sorted(os.listdir(bdir))
-                if slot_dir.startswith("__slot=")
-                for f in sorted(os.listdir(os.path.join(bdir, slot_dir)))
-                if f.endswith(".parquet")
-            ]
-            if fs:
-                new_buckets[b] = fs
-        self._commit(
-            version + 1,
-            new_buckets,
-            {
-                "keys": keys,
-                "operation": "optimize",
-                "data_change": False,
-                "zorder_by": list(zorder_by),
-                "files_per_bucket": files_per_bucket,
-                "schema": manifest.get("schema"),
-            },
-        )
-        return version + 1
+            w = Window.partitionBy("__bucket").orderBy("__z", *keys)
+            wcnt = Window.partitionBy("__bucket")
+            sliced = bucketed.withColumn(
+                "__slot",
+                F.floor(
+                    (F.row_number().over(w) - 1)
+                    * files_per_bucket
+                    / F.count(F.lit(1)).over(wcnt)
+                ).cast("int"),
+            )
+            out_dir = os.path.join(self._data_dir, uuid.uuid4().hex[:8])
+            (
+                sliced.repartition(
+                    self.num_buckets * files_per_bucket, "__bucket", "__slot"
+                )
+                .sortWithinPartitions("__bucket", "__slot", "__z")
+                .drop("__z")
+                .write.partitionBy("__bucket", "__slot")
+                .mode("overwrite")
+                .parquet(out_dir)
+            )
+            return _Change(
+                {
+                    "operation": "optimize",
+                    "data_change": False,
+                    "zorder_by": list(zorder_by),
+                    "files_per_bucket": files_per_bucket,
+                },
+                self._list_bucket_files(out_dir),
+                touched=None,
+            )
+
+        return self._transact(build)

@@ -81,6 +81,43 @@ REPROVE: dict[int, list[str]] = {
         "vacuum_retention_orders",
         "lsh_index_maintenance_embeddings",
     ],
+    # r13: VersionedTable's write side collapsed onto one bucket writer
+    # (survivor rule on every bucket write) and one commit loop.  First
+    # every registered query that commits through VersionedTable
+    # (found by counting _commit calls per query at sf0.001), then the
+    # round-12 rewrites the driver has not oracle-checked yet (the
+    # lake ones among them are already in the first group).
+    13: [
+        "vacuum_retention_orders",
+        "rebucket_roundtrip_orders",
+        "physical_erasure_audit_orders",
+        "versioned_table_cdf_orders",
+        "versioned_table_delete_cdf_orders",
+        "versioned_table_schema_evolution_orders",
+        "cdc_apply_roundtrip_orders",
+        "txn_consistent_snapshot_orders",
+        "zorder_optimize_roundtrip_orders",
+        "cdc_apply_schema_evolution_orders",
+        "streaming_upsert_replay_events",
+        "ivm_incremental_dim_orders",
+        "clone_divergence_orders",
+        "time_travel_timestamp_orders",
+        "restore_undo_feed_orders",
+        "dv_merge_on_read_orders",
+        "dv_upsert_materialize_orders",
+        "lake_history_audit_orders",
+        "cdf_stream_replay_orders",
+        "dv_vector_store_topk_embeddings",
+        "optimize_dv_purge_orders",
+        "streaming_cdf_subscription_orders",
+        "streaming_replication_orders",
+        "versioned_table_key_delete_orders",
+        "compaction_roundtrip_orders",
+        "pca_power_iteration_embeddings",
+        "pca_two_components_embeddings",
+        "markov_stationary_events",
+        "minhash_band_sweep_documents",
+    ],
 }
 
 

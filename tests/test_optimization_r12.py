@@ -12,6 +12,8 @@ on, so a later refactor cannot silently break it:
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -121,6 +123,24 @@ def test_power_chain_sql_matches_dataframe_loop(spark):
     assert have == want
 
 
+# Spark job counts measured on the table shape of
+# test_deferred_delete_is_one_spark_job (4 buckets, 1000 rows) before
+# every bucket write applied the survivor window: the pins below are
+# ceilings, so a change may lower them but never raise them.
+DELETE_KEYS_JOBS = 2
+COMPACT_JOBS = 6
+
+
+def _jobs_in_group(sc, group: str, fn):
+    """Run ``fn()`` under job group ``group``; return (result, job count)."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_deferred_delete_is_one_spark_job(spark, tmp_path):
     """VERDICT r11 #3: delete_where(deferred=True) used to run a
     discovery distinct+collect pass AND the DV write over the same
@@ -128,7 +148,12 @@ def test_deferred_delete_is_one_spark_job(spark, tmp_path):
     bucket dirs.  Measured on this exact table shape: the old two-pass
     structure spawned 11 Spark jobs (the discovery's mergeSchema scan
     + AQE stages), the fused path 4 — pin the fused ceiling so a
-    regression reintroducing the discovery pass fails loudly."""
+    regression reintroducing the discovery pass fails loudly.
+
+    ``delete_keys`` and ``compact`` on the same table are pinned the
+    same way, at the counts measured before the bucket writer applied
+    its one-row-per-key survivor window to every write, so that window
+    cannot add a Spark job unnoticed."""
     from pyspark.sql import functions as F
 
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
@@ -140,23 +165,36 @@ def test_deferred_delete_is_one_spark_job(spark, tmp_path):
     t.create(df, keys=["k"])
 
     sc = spark.sparkContext
-    group = "r12-deferred-delete-probe"
-    sc.setJobGroup(group, "deferred delete job count")
-    try:
-        v = t.delete_where(F.col("k") % 7 == 0, deferred=True)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    v, jobs = _jobs_in_group(
+        sc,
+        "r12-deferred-delete-probe",
+        lambda: t.delete_where(F.col("k") % 7 == 0, deferred=True),
+    )
     assert v == 1
-    tracker = sc.statusTracker()
-    job_ids = tracker.getJobIdsForGroup(group)
-    assert len(job_ids) <= 4, f"expected <=4 jobs, saw {len(job_ids)}"
+    assert jobs <= 4, f"expected <=4 jobs, saw {jobs}"
     # and the delete is really in effect
     assert t.read().where(F.col("k") % 7 == 0).count() == 0
+
+    doomed = spark.range(0, 1000, 11).select(F.col("id").alias("k"))
+    v, jobs = _jobs_in_group(
+        sc, "delete-keys-probe", lambda: t.delete_keys(doomed)
+    )
+    assert v == 2
+    assert jobs <= DELETE_KEYS_JOBS, f"expected <={DELETE_KEYS_JOBS} jobs, saw {jobs}"
+
+    v, jobs = _jobs_in_group(sc, "compact-probe", lambda: t.compact())
+    assert v == 3
+    assert jobs <= COMPACT_JOBS, f"expected <={COMPACT_JOBS} jobs, saw {jobs}"
+    gone = F.col("k") % 7 == 0
+    assert t.read().where(gone | (F.col("k") % 11 == 0)).count() == 0
+    assert t.read().count() == 1000 - 143 - 91 + 13
 
 
 def test_deferred_delete_noop_commits_nothing(spark, tmp_path):
     """The fused path must keep the no-op contract: a predicate
-    matching zero rows writes no DV files and commits no version."""
+    matching zero rows writes no DV files, commits no version and
+    leaves no txn directory behind; so does delete_keys on an empty
+    key frame."""
     from pyspark.sql import functions as F
 
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
@@ -166,10 +204,20 @@ def test_deferred_delete_noop_commits_nothing(spark, tmp_path):
     )
     t = VersionedTable(spark, str(tmp_path / "t"), num_buckets=4)
     t.create(df, keys=["k"])
+    data_dirs = sorted(os.listdir(t._data_dir))
+    assert len(data_dirs) == 1  # the create's txn dir
     v = t.delete_where(F.col("k") < 0, deferred=True)
     assert v == 0  # unchanged head, no new manifest
     assert t.latest_version() == 0
     assert t.read().count() == 100
+    # no residue either: the empty vector write removes its txn dir
+    assert sorted(os.listdir(t._data_dir)) == data_dirs
+
+    # an empty delete_keys frame is the same no-op
+    v = t.delete_keys(spark.createDataFrame([], "k bigint"))
+    assert v == 0
+    assert t.latest_version() == 0
+    assert sorted(os.listdir(t._data_dir)) == data_dirs
 
 
 def test_markov_sql_chain_renormalizes(spark, sf_dir):

@@ -186,6 +186,78 @@ def test_create_order_by_picks_deterministic_survivor(spark, tmp_path):
     assert rows == {1: "new", 2: "only"}
 
 
+def test_upsert_duplicate_key_into_empty_bucket_keeps_one_row(spark, tmp_path):
+    """An upsert batch that repeats a key keeps ONE row for it even when
+    the key's bucket holds no files: the survivor rule runs on every
+    bucket write, not only when the touched bucket has an existing side
+    to merge with.  The order_by tiebreak picks the survivor as in
+    create(); repeating the batch into the now-occupied bucket keeps one
+    row too."""
+    t = VersionedTable(spark, str(tmp_path / "dupempty"), num_buckets=8)
+    schema = "k bigint, val string, m double"
+    t.create(spark.createDataFrame([(0, "a", 0.0)], schema), keys=["k"])
+    m0 = t._load_manifest(0)
+    k = next(
+        k
+        for k in range(1, 100)
+        if {str(b) for b in t._buckets_of_key_values(m0, ["k"], [(k,)])}
+        .isdisjoint(m0["buckets"])
+    )
+    batch = spark.createDataFrame(
+        [(k, "old", 1.0), (k, "new", 2.0)], schema
+    ).repartition(2)
+    for _ in range(2):
+        t.upsert(batch, order_by=[F.desc("m")])
+        rows = t.read().where(F.col("k") == k).collect()
+        assert [r["val"] for r in rows] == ["new"]
+        assert t.read().count() == 2
+
+
+def test_crashed_publish_keeps_head_and_vacuum_reclaims(spark, table, monkeypatch):
+    """Crash injection between the data write and the manifest publish:
+    the head stays where it was, readers see the previous snapshot, no
+    temp manifest lingers, and vacuum reclaims the orphaned data files.
+    The next commit then succeeds on the same head."""
+    head = table.latest_version()
+    before = sorted(map(tuple, table.read().collect()))
+    real_link = os.link
+    crashes = []
+
+    def crash_once(src, dst, *args, **kwargs):
+        if not crashes:
+            crashes.append(dst)
+            raise OSError("injected crash before manifest publish")
+        return real_link(src, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "link", crash_once)
+    batch = spark.createDataFrame(
+        [(5, "X", 5.5), (500, "Y", 1.0)], ["k", "val", "m"]
+    )
+    with pytest.raises(OSError, match="injected crash"):
+        table.upsert(batch)
+    assert len(crashes) == 1
+    assert table.latest_version() == head
+    assert sorted(map(tuple, table.read().collect())) == before
+    assert not [f for f in os.listdir(table._manifest_dir) if ".tmp." in f]
+
+    referenced = {
+        f for fs in table._load_manifest(head)["buckets"].values() for f in fs
+    }
+    on_disk = {
+        os.path.join(d, f)
+        for d, _, fs in os.walk(table._data_dir)
+        for f in fs
+        if f.endswith(".parquet")
+    }
+    orphans = on_disk - referenced
+    assert orphans  # the data files were written before the crash
+    assert set(table.vacuum(keep_last=1)) == orphans
+    assert sorted(map(tuple, table.read().collect())) == before
+
+    assert table.upsert(batch) == head + 1
+    assert table.read().count() == len(before) + 1
+
+
 def test_changes_reads_only_changed_buckets(spark, tmp_path):
     """CDF is O(changed buckets): data files are immutable, so buckets
     with identical manifest file lists in both versions are skipped —
