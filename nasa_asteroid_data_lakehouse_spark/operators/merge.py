@@ -9,10 +9,20 @@ fixed deliberately (SURVEY.md §4 anti-patterns 4):
    arbitrary row.  Here new rows win over existing rows, ties within a
    batch broken by an optional ``order_by`` — semantics equivalent to
    ``MERGE INTO ... WHEN MATCHED THEN UPDATE WHEN NOT MATCHED INSERT``.
+   The same rule applies when the table does not exist yet: a create
+   is a merge against no existing rows, so a batch that repeats a key
+   stores one row for it.  Columns whose names start with ``__`` are
+   merge-private (``order_by`` helpers) and never reach the output.
 2. *Read-then-overwrite same path*: the reference overwrites the path
    it is still (lazily) reading, surviving only via Spark's
    ``_temporary`` staging.  Here the merged result is staged to a
    sibling directory and atomically renamed over the target.
+
+A caller that knows the table's schema passes it as ``schema``: the
+existing table is then read with that declared schema, like
+``DataFrameReader.schema``, which skips the Spark job that infers it
+from a parquet footer.  With ``schema=None`` the footer is read, and a
+column only the existing table has survives the union-by-name.
 
 Scale notes: plain-parquet merge is O(table) per batch — that is
 inherent to the format (no row-level transaction log).  At 100 TB the
@@ -31,6 +41,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 from pyspark.sql.utils import AnalysisException
 
@@ -46,7 +57,9 @@ def merge_dataframes(
     Implemented as union + windowed rank so precedence is explicit:
     priority 0 = incoming, 1 = existing; within a priority class the
     optional ``order_by`` breaks ties, else arbitrary-but-stable via
-    monotonically_increasing_id.
+    monotonically_increasing_id.  ``existing=None`` dedups ``incoming``
+    alone.  ``__``-prefixed columns are dropped from the result, so
+    ``order_by`` may rank on helper columns that are not stored.
     """
     inc = incoming.withColumn("__prio", F.lit(0))
     if existing is not None:
@@ -56,20 +69,24 @@ def merge_dataframes(
         unioned = inc
     tiebreak: list[Column | str] = list(order_by) if order_by else [F.monotonically_increasing_id()]
     w = Window.partitionBy(*keys).orderBy(F.col("__prio"), *tiebreak)
-    return (
-        unioned.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn", "__prio")
-    )
+    ranked = unioned.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1)
+    return ranked.drop(*[c for c in ranked.columns if c.startswith("__")])
 
 
 def read_table_if_exists(
-    spark: SparkSession, path: str, fmt: str = "parquet"
+    spark: SparkSession,
+    path: str,
+    fmt: str = "parquet",
+    schema: StructType | None = None,
 ) -> DataFrame | None:
     """Existence probe via read-attempt, like the reference's
-    try/except AnalysisException (``src/utils/bucket.py:68-75``)."""
+    try/except AnalysisException (``src/utils/bucket.py:68-75``).
+    A declared ``schema`` skips footer inference."""
+    reader = spark.read.format(fmt)
+    if schema is not None:
+        reader = reader.schema(schema)
     try:
-        return spark.read.format(fmt).load(path)
+        return reader.load(path)
     except AnalysisException:
         return None
 
@@ -82,31 +99,30 @@ def save_or_update_table(
     order_by: list[Column | str] | None = None,
     fmt: str = "parquet",
     partition_by: list[str] | None = None,
+    schema: StructType | None = None,
 ) -> None:
     """Upsert ``df`` into the table at ``path`` on ``keys``.
 
-    Create-if-absent; else merge with incoming-wins precedence, staged
-    write, atomic swap.  Local-FS implementation of staging; on object
-    stores swap becomes a metastore/manifest pointer update (or use
+    One merge for create and update (a create merges against no
+    existing rows); only an update needs the staged write + atomic
+    swap.  ``schema`` is the stored table's schema, if the caller
+    knows it.  Local-FS implementation of staging; on object stores
+    swap becomes a metastore/manifest pointer update (or use
     Delta/Iceberg and skip this function's staging entirely).
     """
-    existing = read_table_if_exists(spark, path, fmt)
-    if existing is None:
-        writer = df.write.format(fmt).mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(path)
-        return
-
+    existing = read_table_if_exists(spark, path, fmt, schema)
     merged = merge_dataframes(existing, df, keys, order_by)
 
-    def write_to(staging: str) -> None:
+    def write_to(target: str) -> None:
         writer = merged.write.format(fmt).mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        writer.save(staging)
+        writer.save(target)
 
-    staged_swap(path, write_to)
+    if existing is None:
+        write_to(path)
+    else:
+        staged_swap(path, write_to)
 
 
 def staged_swap(path: str, write_fn) -> None:

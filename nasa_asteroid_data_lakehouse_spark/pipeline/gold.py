@@ -9,20 +9,34 @@ key columns.  Divergences (intentional, SURVEY.md §7):
   ``dropDuplicates`` only works because its input is one day);
 * upserts use the deterministic incoming-wins merge instead of
   arbitrary-survivor dropDuplicates.
+
+The dedup lives in the merge only.  ``GOLD_TABLES`` holds each table's
+undeduplicated projection of silver, its business keys and its
+survivor order; ``build_gold`` hands the projection straight to
+``save_or_update_table``, whose one ``row_number`` window both dedups
+the day and merges it into the stored rows, so each table costs one
+exchange.  The stored schema is the projection's (minus ``__`` helper
+columns), declared to the existing-table read instead of inferred from
+its files.  The public ``build_dim_*`` builders return the same
+key-unique frames by running that merge against no existing rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.column import Column
+from pyspark.sql.types import StructType
 
 from nasa_asteroid_data_lakehouse_spark.functions.dates import (
     NEOWS_TS_FORMAT,
     parse_neows_timestamp,
 )
 from nasa_asteroid_data_lakehouse_spark.functions.keys import surrogate_key
-from nasa_asteroid_data_lakehouse_spark.operators.dedup import dedup_deterministic
-from nasa_asteroid_data_lakehouse_spark.operators.merge import save_or_update_table
+from nasa_asteroid_data_lakehouse_spark.operators.merge import (
+    merge_dataframes,
+    save_or_update_table,
+)
 
 ASTEROID_DESCRIPTIVE = [
     "id",
@@ -44,12 +58,11 @@ ASTEROID_DESCRIPTIVE = [
 ]
 
 
-def build_dim_approach_date(silver: DataFrame) -> DataFrame:
+def _approach_date_rows(silver: DataFrame) -> DataFrame:
     """Date dimension: calendar decomposition of the full approach ts."""
     base = (
         silver.select("approach_date_full")
         .na.drop()
-        .distinct()
         .withColumn("parsed_ts", parse_neows_timestamp("approach_date_full", NEOWS_TS_FORMAT))
     )
     return base.select(
@@ -66,28 +79,29 @@ def build_dim_approach_date(silver: DataFrame) -> DataFrame:
     )
 
 
-def build_dim_orbiting_body(silver: DataFrame) -> DataFrame:
+def _orbiting_body_rows(silver: DataFrame) -> DataFrame:
     return (
         silver.select("orbiting_body")
         .na.drop()
-        .distinct()
         .withColumn("sk_orbiting_body", surrogate_key("orbiting_body"))
     )
 
 
-def build_dim_asteroid(silver: DataFrame) -> DataFrame:
-    """Asteroid dimension: 16 descriptive columns, one row per id.
+def _asteroid_rows(silver: DataFrame) -> DataFrame:
+    """Asteroid dimension: 16 descriptive columns + sk, one row per
+    approach; ``__approach_epoch`` ranks them and is never stored."""
+    return silver.select(
+        *ASTEROID_DESCRIPTIVE,
+        surrogate_key(F.col("id").cast("string")).alias("sk_asteroid"),
+        F.col("approach_epoch").alias("__approach_epoch"),
+    )
 
-    Survivor = max approach_epoch (latest observation wins) — the
-    deterministic refinement of the reference's arbitrary
-    ``dropDuplicates(["id"])``.
-    """
-    deduped = dedup_deterministic(
-        silver.select(*ASTEROID_DESCRIPTIVE, "approach_epoch"),
-        ["id"],
-        [F.desc_nulls_last("approach_epoch")],
-    ).drop("approach_epoch")
-    return deduped.withColumn("sk_asteroid", surrogate_key(F.col("id").cast("string")))
+
+def _latest_approach_first() -> list[Column]:
+    """dim_asteroid survivor: max approach_epoch (latest observation
+    wins) — the deterministic refinement of the reference's arbitrary
+    ``dropDuplicates(["id"])``."""
+    return [F.desc_nulls_last("__approach_epoch")]
 
 
 def build_fact(silver: DataFrame) -> DataFrame:
@@ -108,12 +122,36 @@ def build_fact(silver: DataFrame) -> DataFrame:
     )
 
 
+# name -> (undeduplicated projection, business keys, survivor order).
+# The order is a function because Columns need an active SparkContext.
 GOLD_TABLES = {
-    "dim_asteroid": (build_dim_asteroid, ["id"]),
-    "dim_approach_date": (build_dim_approach_date, ["approach_date_full"]),
-    "dim_orbiting_body": (build_dim_orbiting_body, ["orbiting_body"]),
-    "fact_asteroid_approach": (build_fact, ["sk_asteroid", "sk_approach_date"]),
+    "dim_asteroid": (_asteroid_rows, ["id"], _latest_approach_first),
+    "dim_approach_date": (_approach_date_rows, ["approach_date_full"], None),
+    "dim_orbiting_body": (_orbiting_body_rows, ["orbiting_body"], None),
+    "fact_asteroid_approach": (build_fact, ["sk_asteroid", "sk_approach_date"], None),
 }
+
+
+def _gold_input(name: str, silver: DataFrame):
+    """(projection, keys, order_by) of gold table ``name`` over ``silver``."""
+    project, keys, order = GOLD_TABLES[name]
+    return project(silver), keys, order() if order else None
+
+
+def _key_unique(name: str, silver: DataFrame) -> DataFrame:
+    return merge_dataframes(None, *_gold_input(name, silver))
+
+
+def build_dim_approach_date(silver: DataFrame) -> DataFrame:
+    return _key_unique("dim_approach_date", silver)
+
+
+def build_dim_orbiting_body(silver: DataFrame) -> DataFrame:
+    return _key_unique("dim_orbiting_body", silver)
+
+
+def build_dim_asteroid(silver: DataFrame) -> DataFrame:
+    return _key_unique("dim_asteroid", silver)
 
 
 def build_gold(
@@ -130,18 +168,20 @@ def build_gold(
     containing incoming keys are rewritten).
     """
     out = {}
-    for name, (builder, keys) in GOLD_TABLES.items():
+    for name in GOLD_TABLES:
         path = f"{lake_root}/gold/{name}"
-        df = builder(silver)
+        df, keys, order_by = _gold_input(name, silver)
         if table_format == "versioned":
             from nasa_asteroid_data_lakehouse_spark.lake import VersionedTable
 
+            unique = merge_dataframes(None, df, keys, order_by)
             table = VersionedTable(spark, path)
             if table.latest_version() is None:
-                table.create(df, keys=keys)
+                table.create(unique, keys=keys)
             else:
-                table.upsert(df)
+                table.upsert(unique)
         else:
-            save_or_update_table(spark, df, path, keys)
+            stored = StructType([f for f in df.schema if not f.name.startswith("__")])
+            save_or_update_table(spark, df, path, keys, order_by, schema=stored)
         out[name] = path
     return out

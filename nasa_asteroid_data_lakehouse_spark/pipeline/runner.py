@@ -9,6 +9,7 @@ as a plain function that any scheduler (or a notebook) can call.
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
 from nasa_asteroid_data_lakehouse_spark.pipeline.bronze import ingest_document
 from nasa_asteroid_data_lakehouse_spark.pipeline.gold import build_gold
@@ -31,7 +32,16 @@ def run_pipeline(
     silver_path = write_silver(silver_df, lake_root)
     # Re-read what was written: gold must see the persisted partition,
     # not the in-flight plan (avoids the reference's read-overwrite race).
-    persisted = spark.read.parquet(silver_path).where(f"approach_date = '{day}'")
+    # The schema is the one just written, so it is declared rather than
+    # inferred from a footer (one Spark job less, and an empty day, which
+    # writes no file, still reads as zero rows).  The day is a filter,
+    # not a partition-directory path: the directory of an empty day does
+    # not exist.
+    persisted = (
+        spark.read.schema(silver_df.schema)
+        .parquet(silver_path)
+        .where(F.col("approach_date") == day)
+    )
     tables = build_gold(spark, persisted, lake_root)
     tables["silver"] = silver_path
     return tables

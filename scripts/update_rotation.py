@@ -118,6 +118,19 @@ REPROVE: dict[int, list[str]] = {
         "markov_stationary_events",
         "minhash_band_sweep_documents",
     ],
+    # r14: the gold builders' dedup moved into the merge
+    # (merge_dataframes now drops every __-prefixed helper column), the
+    # create path merges too, and read_table_if_exists gained a
+    # declared-schema option.  Every registered query that reaches
+    # those functions: the NeoWs star join (build_dim_*), the silver
+    # flatten that feeds it, the merge operator query, and the
+    # streaming rollup (fold_mergeable_batch's existence probes).
+    14: [
+        "neows_star_join",
+        "neows_flatten_silver",
+        "merge_upsert_orders",
+        "streaming_rollup_replay_events",
+    ],
 }
 
 

@@ -125,6 +125,41 @@ def test_save_or_update_table_roundtrip(spark, tmp_path):
     assert spark.read.parquet(path).count() == 3
 
 
+def test_save_or_update_table_create_keeps_one_row_per_key(spark, tmp_path):
+    """A create is a merge against no existing rows: a batch repeating a
+    key stores one row for it, as an update would."""
+    path = str(tmp_path / "tbl")
+    batch = spark.createDataFrame([(1, "a"), (1, "b"), (2, "c")], ["k", "val"])
+    ops.save_or_update_table(spark, batch, path, ["k"])
+    stored = spark.read.parquet(path)
+    assert stored.count() == 2
+    assert stored.select("k").distinct().count() == 2
+
+
+def test_save_or_update_table_inferred_schema_keeps_existing_column(spark, tmp_path):
+    """With schema=None the existing table's schema is read from its
+    files, so a column only the stored rows have survives the merge
+    (NULL for incoming rows)."""
+    path = str(tmp_path / "tbl")
+    wide = spark.createDataFrame([(1, "a", 10), (2, "b", 20)], ["k", "val", "extra"])
+    ops.save_or_update_table(spark, wide, path, ["k"])
+    narrow = spark.createDataFrame([(2, "B"), (3, "c")], ["k", "val"])
+    ops.save_or_update_table(spark, narrow, path, ["k"], schema=None)
+    stored = spark.read.parquet(path)
+    assert "extra" in stored.columns
+    rows = {r["k"]: (r["val"], r["extra"]) for r in stored.collect()}
+    assert rows == {1: ("a", 10), 2: ("B", None), 3: ("c", None)}
+
+
+def test_merge_dataframes_drops_helper_columns(spark):
+    """``__``-prefixed columns may rank the survivors but never reach
+    the merged output."""
+    df = spark.createDataFrame([(1, "old", 1), (1, "new", 2)], ["k", "val", "__ts"])
+    merged = ops.merge_dataframes(None, df, ["k"], [F.desc("__ts")])
+    assert merged.columns == ["k", "val"]
+    assert [r["val"] for r in merged.collect()] == ["new"]
+
+
 def test_surrogate_key_deterministic(spark):
     df = spark.createDataFrame([("Earth",), ("Earth",), ("Mars",)], ["body"])
     out = df.withColumn("sk", surrogate_key("body")).collect()

@@ -18,6 +18,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import jobs_in_group
+
 
 def _reset_lsh_caches():
     from nasa_asteroid_data_lakehouse_spark.plans import llm_queries as llm
@@ -131,16 +133,6 @@ DELETE_KEYS_JOBS = 2
 COMPACT_JOBS = 6
 
 
-def _jobs_in_group(sc, group: str, fn):
-    """Run ``fn()`` under job group ``group``; return (result, job count)."""
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_deferred_delete_is_one_spark_job(spark, tmp_path):
     """VERDICT r11 #3: delete_where(deferred=True) used to run a
     discovery distinct+collect pass AND the DV write over the same
@@ -165,7 +157,7 @@ def test_deferred_delete_is_one_spark_job(spark, tmp_path):
     t.create(df, keys=["k"])
 
     sc = spark.sparkContext
-    v, jobs = _jobs_in_group(
+    v, jobs = jobs_in_group(
         sc,
         "r12-deferred-delete-probe",
         lambda: t.delete_where(F.col("k") % 7 == 0, deferred=True),
@@ -176,13 +168,13 @@ def test_deferred_delete_is_one_spark_job(spark, tmp_path):
     assert t.read().where(F.col("k") % 7 == 0).count() == 0
 
     doomed = spark.range(0, 1000, 11).select(F.col("id").alias("k"))
-    v, jobs = _jobs_in_group(
+    v, jobs = jobs_in_group(
         sc, "delete-keys-probe", lambda: t.delete_keys(doomed)
     )
     assert v == 2
     assert jobs <= DELETE_KEYS_JOBS, f"expected <={DELETE_KEYS_JOBS} jobs, saw {jobs}"
 
-    v, jobs = _jobs_in_group(sc, "compact-probe", lambda: t.compact())
+    v, jobs = jobs_in_group(sc, "compact-probe", lambda: t.compact())
     assert v == 3
     assert jobs <= COMPACT_JOBS, f"expected <={COMPACT_JOBS} jobs, saw {jobs}"
     gone = F.col("k") % 7 == 0

@@ -18,7 +18,15 @@ from nasa_asteroid_data_lakehouse_spark.pipeline.silver import (
     build_silver,
 )
 from nasa_asteroid_data_lakehouse_spark.pipeline.bronze import ingest_document
+from tests.conftest import jobs_in_group
 from tests.fixtures_neows import DAY1, DAY2, DOC_DAY1, DOC_DAY2
+
+GOLD_BUILDERS = {
+    "dim_asteroid": build_dim_asteroid,
+    "dim_approach_date": build_dim_approach_date,
+    "dim_orbiting_body": build_dim_orbiting_body,
+    "fact_asteroid_approach": build_fact,
+}
 
 
 @pytest.fixture(scope="module")
@@ -115,7 +123,15 @@ def test_full_pipeline_two_days_idempotent(spark, tmp_path):
     run_pipeline(spark, root, DAY1, DOC_DAY1)
     tables = run_pipeline(spark, root, DAY2, DOC_DAY2)
 
+    # on disk, each gold table has exactly its builder's columns: the
+    # merge's ranking helpers never reach storage
+    silver = spark.read.parquet(tables["silver"])
+    for name, builder in GOLD_BUILDERS.items():
+        on_disk = spark.read.parquet(tables[name]).columns
+        assert on_disk == builder(silver).columns, name
+        assert not [c for c in on_disk if c.startswith("__")], name
     dim_asteroid = spark.read.parquet(tables["dim_asteroid"])
+    assert len(dim_asteroid.columns) == 17
     assert dim_asteroid.count() == 3  # 3542519, 2099942, 54016476
     pk9 = dim_asteroid.where(F.col("id") == 3542519).collect()[0]
     assert pk9["absolute_magnitude_h"] == 21.90  # day-2 observation won
@@ -136,3 +152,33 @@ def test_full_pipeline_two_days_idempotent(spark, tmp_path):
     assert dim_asteroid2.count() == 3
     empty_name = dim_asteroid2.where(F.col("id") == 54016476).collect()[0]
     assert empty_name["name"] is None  # "" -> null survived the merge
+
+
+def test_empty_first_day_then_real_day(spark, tmp_path):
+    """A day with no NEOs writes no silver file; the gold re-read uses
+    the declared silver schema, so it neither fails nor blocks the next
+    day from landing."""
+    root = str(tmp_path / "lake")
+    run_pipeline(spark, root, "2025-12-27", {"near_earth_objects": {"2025-12-27": []}})
+    tables = run_pipeline(spark, root, DAY1, DOC_DAY1)
+    assert spark.read.parquet(tables["fact_asteroid_approach"]).count() == 3
+    assert spark.read.parquet(tables["dim_asteroid"]).count() == 2
+    assert spark.read.parquet(tables["dim_approach_date"]).count() == 3
+    assert spark.read.parquet(tables["dim_orbiting_body"]).count() == 2
+
+
+# Spark jobs of one merge day: the silver write, then one merge
+# exchange (map stage + write) per gold table; no schema inference.
+MERGE_DAY_JOBS = 9
+
+
+def test_merge_day_spark_job_ceiling(spark, tmp_path):
+    root = str(tmp_path / "lake")
+    run_pipeline(spark, root, DAY1, DOC_DAY1)
+    _, jobs = jobs_in_group(
+        spark.sparkContext,
+        "pipeline-merge-day",
+        lambda: run_pipeline(spark, root, DAY2, DOC_DAY2),
+    )
+    assert jobs <= MERGE_DAY_JOBS, f"expected <={MERGE_DAY_JOBS} jobs, saw {jobs}"
+    assert spark.read.parquet(f"{root}/gold/dim_asteroid").count() == 3
