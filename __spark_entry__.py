@@ -17,89 +17,21 @@ from nasa_asteroid_data_lakehouse_spark.plans import (
     curation_queries,
     llm_queries,
     neows_queries,
-    r05b_queries,
-    streaming_queries,
     operator_queries,
+    r05_queries,
+    r05b_queries,
+    r06_queries,
+    r07_queries,
+    r08_queries,
+    r09_queries,
+    r10_queries,
     stats_queries,
+    streaming_queries,
     tpch_queries,
 )
 from nasa_asteroid_data_lakehouse_spark.plans import queries as plans
 
 SF0001 = "/root/testdata/sf0.001"
-
-# Round-5 registration switch: flip to True once CORRECTNESS_r04
-# confirms the frozen 190-surface (VERDICT r03 ask #1), which lifts the
-# freeze and serves plans/r05_queries.py's staged batch (gate-verified
-# in round 4 via driver_sim --staged; see the round-4c SKILL notes for
-# the companion checklist — KEY_UNIQUE and _BNLJ_ALLOWED entries are
-# already pre-wired).
-REGISTER_R05 = True
-
-# Round-6 registration switch: flip to True at round-6 start once
-# CORRECTNESS_r05 lands; serves plans/r06_queries.py's staged batch
-# (gate-verified in round 5 via driver_sim --staged).  On flip, add
-# the batch's BNLJ-allowlist entries to tests/test_plan_quality.py
-# (stl_decomposition_daily_events, stump_split_events,
-# pca_power_iteration_embeddings, markov_stationary_events,
-# stylometry_delta_sources, ndcg_lsh_embeddings — all bounded
-# single-row / broadcast-anchor shapes) and bench entries.
-REGISTER_R06 = True
-
-# Round-7 registration switch: flip to True at round-7 start once
-# CORRECTNESS_r06 lands; serves plans/r07_queries.py's 13 staged
-# queries (gate-verified in round 6 via driver_sim --staged; see
-# SURVEY.md M113-M125).  On flip: the _BNLJ_ALLOWED entries
-# (skyline_daily_events, bootstrap_ci_orders,
-# tfidf_cosine_pairs_documents) and the KEY_UNIQUE_PRECONDITION entry
-# (span_dedup_rewrite_documents) are already committed; bench picks
-# the batch up automatically.  Then run update_rotation 7.
-REGISTER_R07 = True
-
-# Round-8 registration switch: flip to True at round-8 start once
-# CORRECTNESS_r07 lands; serves plans/r08_queries.py's 12 staged
-# queries (gate-verified in round 7 via driver_sim --staged: IVF-PQ
-# top-k + recall, multi-table transactional snapshot, OPTIMIZE ZORDER
-# roundtrip, LSH index maintenance, CDF apply across schema
-# evolution, auto-plane hubness, exactly-once streaming upsert
-# replay, CDF-preimage incremental view maintenance).  On flip: the
-# _BNLJ_ALLOWED entries
-# (ivfpq_recall_embeddings, lsh_index_maintenance_embeddings) and the
-# KEY_UNIQUE_PRECONDITION entries (ivfpq pair, txn snapshot, zorder
-# roundtrip) are already committed; bench picks the batch up
-# automatically.  Then run update_rotation 8.
-REGISTER_R08 = True
-
-# Round-9 registration switch: flip to True at round-9 start once
-# CORRECTNESS_r08 lands; serves plans/r09_queries.py's staged batch
-# (gate-verified in round 8 via driver_sim --staged + adversarial,
-# pytest pins in tests/test_r09_staged.py): stream-stream
-# interval-join replay, stream-static enrich replay, VACUUM/retention
-# lifecycle, bucket re-partitioning round-trip, IVF nprobe tuning
-# sweep, mixture temperature sweep, physical erasure audit,
-# LEFT-OUTER interval-join replay (watermark-emission semantics),
-# context-length packing sweep, jaccard threshold sweep.  Pre-wired: KEY_UNIQUE entry (ivf_nprobe_sweep_embeddings —
-# ORDER-BY-id seed quantizer) and BNLJ allowlist entry (same name,
-# broadcast anchors x corpus + 1-row count broadcasts).  Then run
-# update_rotation 9.
-REGISTER_R09 = True
-
-# Round-10 registration switch: flip to True at round-10 start once
-# CORRECTNESS_r09 lands; serves plans/r10_queries.py's staged batch
-# (gate-verified in round 9 via driver_sim --staged across all six
-# fixtures + adversarial, pytest pins in tests/test_r10_staged.py):
-# timestamp-as-of time travel, RESTORE with CDF undo feed, deletion-
-# vector merge-on-read + upsert materialization, lake history audit,
-# CDF stream replay across commit types, quantization-bits sweep
-# (int8/int4/int2), stream-stream FULL OUTER interval-join replay,
-# vector-store-over-lakehouse top-k with retired vectors, OPTIMIZE
-# ZORDER DV purge, streaming CDF subscription through the
-# table_changes Python DataSource, decontamination n-gram sweep,
-# quality-gate threshold sweep, continuous replication mirror,
-# sessionization gap sweep.  Pre-wired: _BNLJ_ALLOWED entry
-# (quant_bits_sweep_embeddings — broadcast anchors x corpus) and
-# KEY_UNIQUE entry (dv_vector_store_topk_embeddings — per-identity
-# vector store).  Then run update_rotation 10.
-REGISTER_R10 = True
 
 # Round-11 staged batch (plans/r11_queries.py, TEN queries): flip to
 # True at ROUND-11 START, after CORRECTNESS_r10 lands.  Replication
@@ -112,6 +44,29 @@ REGISTER_R10 = True
 # entry (kmeans_lloyd_embeddings — ORDER-BY-id seeds).  Then run
 # update_rotation 11.
 REGISTER_R11 = False
+
+# Registration order is the unrotated key order of queries() and
+# oracle_sql(): modules exporting QUERIES/ORACLES first, then the
+# batches that were staged as STAGED_QUERIES/STAGED_ORACLES.
+_MODULES = (
+    operator_queries,
+    llm_queries,
+    analytics_queries,
+    tpch_queries,
+    curation_queries,
+    stats_queries,
+    neows_queries,
+    streaming_queries,
+    r05b_queries,
+)
+_STAGED_MODULES = (
+    r05_queries,
+    r06_queries,
+    r07_queries,
+    r08_queries,
+    r09_queries,
+    r10_queries,
+)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -271,95 +226,38 @@ def _rotate(full: dict) -> dict:
     return {k: full[k] for k in ordered}
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2."""
-    out = {
-        "q1_pricing_summary": plans.q1_pricing_summary,
-        "q3_top_unshipped_orders": plans.q3_top_unshipped_orders,
-        "q5_revenue_by_nation": plans.q5_revenue_by_nation,
-    }
-    out.update(operator_queries.QUERIES)
-    out.update(llm_queries.QUERIES)
-    out.update(analytics_queries.QUERIES)
-    out.update(tpch_queries.QUERIES)
-    out.update(curation_queries.QUERIES)
-    out.update(stats_queries.QUERIES)
-    out.update(neows_queries.QUERIES)
-    out.update(streaming_queries.QUERIES)
-    out.update(r05b_queries.QUERIES)
-    if REGISTER_R05:
-        from nasa_asteroid_data_lakehouse_spark.plans import r05_queries
-
-        out.update(r05_queries.STAGED_QUERIES)
-    if REGISTER_R06:
-        from nasa_asteroid_data_lakehouse_spark.plans import r06_queries
-
-        out.update(r06_queries.STAGED_QUERIES)
-    if REGISTER_R07:
-        from nasa_asteroid_data_lakehouse_spark.plans import r07_queries
-
-        out.update(r07_queries.STAGED_QUERIES)
-    if REGISTER_R08:
-        from nasa_asteroid_data_lakehouse_spark.plans import r08_queries
-
-        out.update(r08_queries.STAGED_QUERIES)
-    if REGISTER_R09:
-        from nasa_asteroid_data_lakehouse_spark.plans import r09_queries
-
-        out.update(r09_queries.STAGED_QUERIES)
-    if REGISTER_R10:
-        from nasa_asteroid_data_lakehouse_spark.plans import r10_queries
-
-        out.update(r10_queries.STAGED_QUERIES)
+def _registry(kind: str) -> dict:
+    """Every registered query (``kind="QUERIES"``) or oracle
+    (``kind="ORACLES"``) in registration order, before rotation."""
+    if kind == "QUERIES":
+        out = {
+            "q1_pricing_summary": plans.q1_pricing_summary,
+            "q3_top_unshipped_orders": plans.q3_top_unshipped_orders,
+            "q5_revenue_by_nation": plans.q5_revenue_by_nation,
+        }
+    else:
+        out = {
+            "q1_pricing_summary": plans.Q1_SQL,
+            "q3_top_unshipped_orders": plans.Q3_SQL,
+            "q5_revenue_by_nation": plans.Q5_SQL,
+        }
+    for module in _MODULES:
+        out.update(getattr(module, kind))
+    staged = list(_STAGED_MODULES)
     if REGISTER_R11:
         from nasa_asteroid_data_lakehouse_spark.plans import r11_queries
 
-        out.update(r11_queries.STAGED_QUERIES)
-    return _rotate(out)
+        staged.append(r11_queries)
+    for module in staged:
+        out.update(getattr(module, f"STAGED_{kind}"))
+    return out
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """One entry per implemented operator from SURVEY.md §2."""
+    return _rotate(_registry("QUERIES"))
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent ANSI SQL per queries() key."""
-    out = {
-        "q1_pricing_summary": plans.Q1_SQL,
-        "q3_top_unshipped_orders": plans.Q3_SQL,
-        "q5_revenue_by_nation": plans.Q5_SQL,
-    }
-    out.update(operator_queries.ORACLES)
-    out.update(llm_queries.ORACLES)
-    out.update(analytics_queries.ORACLES)
-    out.update(tpch_queries.ORACLES)
-    out.update(curation_queries.ORACLES)
-    out.update(stats_queries.ORACLES)
-    out.update(neows_queries.ORACLES)
-    out.update(streaming_queries.ORACLES)
-    out.update(r05b_queries.ORACLES)
-    if REGISTER_R05:
-        from nasa_asteroid_data_lakehouse_spark.plans import r05_queries
-
-        out.update(r05_queries.STAGED_ORACLES)
-    if REGISTER_R06:
-        from nasa_asteroid_data_lakehouse_spark.plans import r06_queries
-
-        out.update(r06_queries.STAGED_ORACLES)
-    if REGISTER_R07:
-        from nasa_asteroid_data_lakehouse_spark.plans import r07_queries
-
-        out.update(r07_queries.STAGED_ORACLES)
-    if REGISTER_R08:
-        from nasa_asteroid_data_lakehouse_spark.plans import r08_queries
-
-        out.update(r08_queries.STAGED_ORACLES)
-    if REGISTER_R09:
-        from nasa_asteroid_data_lakehouse_spark.plans import r09_queries
-
-        out.update(r09_queries.STAGED_ORACLES)
-    if REGISTER_R10:
-        from nasa_asteroid_data_lakehouse_spark.plans import r10_queries
-
-        out.update(r10_queries.STAGED_ORACLES)
-    if REGISTER_R11:
-        from nasa_asteroid_data_lakehouse_spark.plans import r11_queries
-
-        out.update(r11_queries.STAGED_ORACLES)
-    return _rotate(out)
+    return _rotate(_registry("ORACLES"))

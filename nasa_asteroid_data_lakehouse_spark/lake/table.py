@@ -902,7 +902,12 @@ class VersionedTable:
 
     def vacuum(self, keep_last: int = 1) -> list[str]:
         """Delete data files unreferenced by the ``keep_last`` newest
-        manifests (and drop older manifests).  Returns removed files."""
+        manifests (and drop older manifests).  Returns removed files.
+
+        Every txn directory is walked to any depth (optimize nests its
+        files under ``__slot=``), and a txn directory none of whose
+        files is referenced is removed whole, so erased rows never
+        survive on disk and empty txn directories do not pile up."""
         latest = self.latest_version()
         if latest is None:
             return []
@@ -917,15 +922,17 @@ class VersionedTable:
         removed = []
         for txn in os.listdir(self._data_dir):
             txn_dir = os.path.join(self._data_dir, txn)
-            for entry in os.listdir(txn_dir):
-                bucket_dir = os.path.join(txn_dir, entry)
-                if not os.path.isdir(bucket_dir):
-                    continue
-                for f in os.listdir(bucket_dir):
-                    path = os.path.join(bucket_dir, f)
-                    if path.endswith(".parquet") and path not in referenced:
+            live = False
+            for d, _, fs in os.walk(txn_dir):
+                for f in fs:
+                    path = os.path.join(d, f)
+                    if path in referenced:
+                        live = True
+                    elif f.endswith(".parquet"):
                         os.remove(path)
                         removed.append(path)
+            if not live:
+                shutil.rmtree(txn_dir, ignore_errors=True)
         for v in range(0, latest - keep_last + 1):
             p = self._manifest_path(v)
             if os.path.exists(p):

@@ -5,17 +5,12 @@ spark.sql serving path.  All oracle-checked against DuckDB.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
-from nasa_asteroid_data_lakehouse_spark.scratch import (
-    scratch_dir,
-    table_scratch_bytes,
-)
+from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1573,17 +1568,10 @@ def file_skipping_stats_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the output — it depends on the writer's parallelism, not the
     data).
     """
-    import shutil
-    import tempfile
-
     from nasa_asteroid_data_lakehouse_spark.lake.stats import collect_file_stats
 
     orders = _t(spark, sf_dir, "orders")
-    tmp = scratch_dir(
-        "ndl_filestats_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_filestats_", sf_dir, "orders") as tmp:
         orders.write.partitionBy("o_orderpriority").mode("overwrite").parquet(tmp)
 
         # Explicit schema: an empty source writes zero data files and
@@ -1608,8 +1596,6 @@ def file_skipping_stats_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("o_orderpriority")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 FILE_SKIPPING_SQL = """

@@ -17,16 +17,11 @@ pipeline runs after that ETL stage.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
-from nasa_asteroid_data_lakehouse_spark.scratch import (
-    scratch_dir,
-    table_scratch_bytes,
-)
+from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 from nasa_asteroid_data_lakehouse_spark.llm import curation, similarity, text
 from nasa_asteroid_data_lakehouse_spark.plans.llm_queries import _bucket_sql
 
@@ -1356,19 +1351,12 @@ def versioned_table_cdf_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL-price rows never register as updates: +100 keeps them NULL
     and the diff's null-safe compare sees no change — pinned on both
     sides."""
-    import shutil
-    import tempfile
-
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
 
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    tmp = scratch_dir(
-        "ndl_vtcdf_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_vtcdf_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         v1 = t.create(orders, keys=["o_orderkey"])
         updates = orders.where(F.col("o_orderkey") % 10 == 0).withColumn(
@@ -1393,8 +1381,6 @@ def versioned_table_cdf_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("_change_type")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 VT_CDF_SQL = """

@@ -1,8 +1,6 @@
-"""Round-5 STAGED queries — built and gate-verified during round 4,
-NOT yet registered in ``__spark_entry__`` (the 190-query surface is
-frozen until CORRECTNESS_r04 confirms the round-4 driver window; see
-VERDICT r03 ask #1).  At round-5 start, merge STAGED_QUERIES /
-STAGED_ORACLES into the served registry.
+"""Round-5 batch, registered in ``__spark_entry__`` from its
+STAGED_QUERIES / STAGED_ORACLES (built and gate-verified in round 4
+behind ``driver_sim --staged``).
 
 The batch gives the multimodal binary-payload path (llm/multimodal.py)
 its driver-checkable surface, per VERDICT r03 ask #6: payloads are
@@ -21,16 +19,11 @@ carry NULL features (the round-4b contract).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
-from nasa_asteroid_data_lakehouse_spark.scratch import (
-    scratch_dir,
-    table_scratch_bytes,
-)
+from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 from nasa_asteroid_data_lakehouse_spark.llm import multimodal as mm
 
 STAGED_QUERIES: dict = {}
@@ -202,50 +195,29 @@ def streaming_score_replay_documents(spark: SparkSession, sf_dir: str) -> DataFr
     --const fixture's 50 copies score once while a batch engine counts
     tokens 50x.  driver_sim skips it under --const.
     """
-    import shutil
-    import tempfile
-
     from nasa_asteroid_data_lakehouse_spark.streaming.curation import (
         read_scored,
         score_stream,
     )
-    from nasa_asteroid_data_lakehouse_spark.streaming.tuning import (
-        scaled_stream_shuffle,
+    from nasa_asteroid_data_lakehouse_spark.streaming.replay import (
+        drain,
+        file_stream,
     )
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    tmp = scratch_dir(
-        "ndl_stream_score_",
-        table_scratch_bytes(os.path.join(sf_dir, "documents.parquet")),
-    )
-    try:
+    with query_scratch("ndl_stream_score_", sf_dir, "documents") as tmp:
         src = f"{tmp}/in"
         docs.repartition(4).write.parquet(src)
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
         out = f"{tmp}/scored"
-        # Scale-adaptive shuffle partitions for the drain (streaming
-        # has no AQE; the per-batch scoring aggregates otherwise fan
-        # into cluster-sized tiny partitions — streaming/tuning.py).
-        with scaled_stream_shuffle(spark, src):
-            q = (
-                score_stream(spark, stream, docs, out)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        stream = file_stream(spark, docs, src)
+        drain(spark, score_stream(spark, stream, docs, out), src)
         return (
             read_scored(spark, out, latest_only=True)
             .select("doc_id", "n_tokens", "mean_surprisal")
             .orderBy("doc_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # the batch twin's oracle IS the contract: the streamed scores must
@@ -344,19 +316,12 @@ def versioned_table_delete_cdf_orders(spark: SparkSession, sf_dir: str) -> DataF
     (key-only DISTINCT — the same trick the upsert CDF oracle uses).
     NULL keys never match (NULL % 7 is NULL, SQL DELETE keeps
     NULL-predicate rows) on both engines."""
-    import shutil
-    import tempfile
-
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
 
     orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
-    tmp = scratch_dir(
-        "ndl_vtdel_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_vtdel_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         v1 = t.create(orders, keys=["o_orderkey"])
         v2 = t.delete_where(F.col("o_orderkey") % 7 == 0)
@@ -370,8 +335,6 @@ def versioned_table_delete_cdf_orders(spark: SparkSession, sf_dir: str) -> DataF
             .orderBy("_change_type")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 VT_DELETE_CDF_SQL = """
@@ -528,8 +491,6 @@ def streaming_session_replay_events(spark: SparkSession, sf_dir: str) -> DataFra
     * sum_value re-rounds to the 6-decimal lattice on read-back, the
       same absorption the batch query relies on across engines.
     """
-    import shutil
-    import tempfile
     from datetime import timedelta
 
     ev = (
@@ -548,15 +509,15 @@ def streaming_session_replay_events(spark: SparkSession, sf_dir: str) -> DataFra
         return spark.createDataFrame([], out_schema)
     sentinel_ts = max_row["m"] + timedelta(days=30)
 
+    from nasa_asteroid_data_lakehouse_spark.streaming.replay import (
+        drain_to_parquet,
+        file_stream,
+    )
     from nasa_asteroid_data_lakehouse_spark.streaming.tuning import (
         write_time_quartile_batches,
     )
 
-    tmp = scratch_dir(
-        "ndl_stream_sess_",
-        table_scratch_bytes(os.path.join(sf_dir, "events.parquet")),
-    )
-    try:
+    with query_scratch("ndl_stream_sess_", sf_dir, "events") as tmp:
         src = f"{tmp}/in"
         # time-quartile batch assignment via percentile CUTS, not a
         # global NTILE window (an unpartitioned rank-all window is the
@@ -579,13 +540,9 @@ def streaming_session_replay_events(spark: SparkSession, sf_dir: str) -> DataFra
             .parquet(src)
         )
 
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
         sessions = (
-            stream.withWatermark("ts", "1 minute")
+            file_stream(spark, ev, src)
+            .withWatermark("ts", "1 minute")
             .groupBy("user_id", F.session_window("ts", "30 minutes"))
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -599,27 +556,7 @@ def streaming_session_replay_events(spark: SparkSession, sf_dir: str) -> DataFra
                 "sum_value",
             )
         )
-        out = f"{tmp}/sessions"
-        # Scale-adaptive state partitions for the session-window state
-        # store (streaming has no AQE; see streaming/tuning.py —
-        # measured 39 s -> 6 s at sf0.1 with 32 -> scaled partitions).
-        from nasa_asteroid_data_lakehouse_spark.streaming.tuning import (
-            scaled_stream_shuffle,
-        )
-
-        with scaled_stream_shuffle(spark, src):
-            q = (
-                sessions.writeStream.outputMode("append")
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .format("parquet")
-                .start(out)
-            )
-            q.awaitTermination()
-        try:
-            got = spark.read.parquet(out)
-        except Exception:  # no session emitted (e.g. single-user tiny input)
-            got = spark.createDataFrame([], out_schema)
+        got = drain_to_parquet(spark, sessions, f"{tmp}/sessions", src)
         return (
             got.select(
                 "user_id",
@@ -631,8 +568,6 @@ def streaming_session_replay_events(spark: SparkSession, sf_dir: str) -> DataFra
             .orderBy("user_id", "session_start")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 from nasa_asteroid_data_lakehouse_spark.plans.analytics_queries import (  # noqa: E402

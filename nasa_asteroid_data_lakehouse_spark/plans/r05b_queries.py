@@ -16,16 +16,11 @@ No reference analog for any of these: the reference
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
-from nasa_asteroid_data_lakehouse_spark.scratch import (
-    scratch_dir,
-    table_scratch_bytes,
-)
+from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 from nasa_asteroid_data_lakehouse_spark.llm import dedup, text
 from nasa_asteroid_data_lakehouse_spark.operators.stats import finite
 
@@ -1151,9 +1146,6 @@ def versioned_table_schema_evolution_orders(
     Every output is KEY-derived (membership and the new column's value
     are functions of the key), so duplicate-key payload ambiguity
     cannot leak in — the versioned_table_cdf oracle trick."""
-    import shutil
-    import tempfile
-
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
 
     base = (
@@ -1161,11 +1153,7 @@ def versioned_table_schema_evolution_orders(
         .where(F.col("o_orderkey").isNotNull())
         .select("o_orderkey", "o_custkey")
     )
-    tmp = scratch_dir(
-        "ndl_vtevo_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_vtevo_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         v0 = t.create(base, keys=["o_orderkey"])
         keys = base.select("o_orderkey").distinct()
@@ -1216,8 +1204,6 @@ def versioned_table_schema_evolution_orders(
             )
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 VT_SCHEMA_EVOLUTION_SQL = """
@@ -1252,9 +1238,6 @@ def versioned_table_key_delete_orders(
     frame instead of the O(table) discovery scan — then rewrites only
     those buckets.  Outputs are key-derived (count + key sum of the
     delete CDF, survivor count)."""
-    import shutil
-    import tempfile
-
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
 
     base = (
@@ -1262,11 +1245,7 @@ def versioned_table_key_delete_orders(
         .where(F.col("o_orderkey").isNotNull())
         .select("o_orderkey", "o_custkey")
     )
-    tmp = scratch_dir(
-        "ndl_vtkdel_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_vtkdel_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         v0 = t.create(base, keys=["o_orderkey"])
         targets = [
@@ -1290,8 +1269,6 @@ def versioned_table_key_delete_orders(
             t.read().agg(F.count(F.lit(1)).alias("n_remaining"))
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 VT_KEY_DELETE_SQL = """
@@ -1318,9 +1295,6 @@ def compaction_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket (1 by contract), and an EMPTY compact CDF (0 changes).
     File-count deltas are hash-placement-dependent and deliberately
     not emitted (the oracle cannot evaluate xxhash64)."""
-    import shutil
-    import tempfile
-
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
 
     base = (
@@ -1328,11 +1302,7 @@ def compaction_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderkey").isNotNull())
         .select("o_orderkey", "o_custkey")
     )
-    tmp = scratch_dir(
-        "ndl_vtcomp_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_vtcomp_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         t.create(base, keys=["o_orderkey"])
         keys = base.select("o_orderkey").distinct()
@@ -1360,8 +1330,6 @@ def compaction_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(n_changes).cast("bigint").alias("n_compact_changes"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 COMPACTION_ROUNDTRIP_SQL = """

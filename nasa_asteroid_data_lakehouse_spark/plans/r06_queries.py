@@ -1,6 +1,6 @@
-"""Round-6 staged batch (gate-verified behind ``driver_sim --staged``;
-registered by flipping ``REGISTER_R06`` in ``__spark_entry__`` at
-round-6 start, after CORRECTNESS_r05 lands).
+"""Round-6 batch, registered in ``__spark_entry__`` from its
+STAGED_QUERIES / STAGED_ORACLES (gate-verified in round 5 behind
+``driver_sim --staged``).
 
 Families: seasonal decomposition (STL-style trend/seasonal/residual),
 survival analysis (Kaplan–Meier over inter-order gaps), score

@@ -1,6 +1,6 @@
-"""Round-7 staged batch (gate-verified behind ``driver_sim --staged``;
-registered by flipping ``REGISTER_R07`` in ``__spark_entry__`` at
-round-7 start, after CORRECTNESS_r06 lands).
+"""Round-7 batch, registered in ``__spark_entry__`` from its
+STAGED_QUERIES / STAGED_ORACLES (gate-verified in round 6 behind
+``driver_sim --staged``).
 
 Families (VERDICT r05 ask #3 plus thinnest-coverage extensions):
 embedding-space split-leakage audit (cross-split cosine near-dups,
@@ -28,16 +28,11 @@ No reference analog for any of these: the reference
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
-from nasa_asteroid_data_lakehouse_spark.scratch import (
-    scratch_dir,
-    table_scratch_bytes,
-)
+from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 from nasa_asteroid_data_lakehouse_spark.llm import similarity, text
 from nasa_asteroid_data_lakehouse_spark.operators.stats import finite
 
@@ -1144,9 +1139,6 @@ def cdc_apply_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: apply is two key-keyed anti joins + a union; verify is one
     key-keyed full-outer join — all bucket-local on the table's own
     key hash at 100 TB."""
-    import shutil
-    import tempfile
-
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
 
     base = (
@@ -1156,11 +1148,7 @@ def cdc_apply_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .select("o_orderkey", (F.col("o_orderkey") % 100).alias("seg"))
     )
-    tmp = scratch_dir(
-        "ndl_cdcapply_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_cdcapply_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         v0 = t.create(base, keys=["o_orderkey"])
         updates = base.where(F.col("o_orderkey") % 6 == 0).select(
@@ -1202,8 +1190,6 @@ def cdc_apply_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("key_sum_actual"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 CDC_APPLY_SQL = """
@@ -1255,8 +1241,10 @@ def streaming_dedup_replay_events(spark: SparkSession, sf_dir: str) -> DataFrame
     the horizon is the dedup-correctness window: duplicates farther
     apart than the horizon are the upstream batch deduper's job (this
     replay verifies the full log, so it sizes to the full span)."""
-    import shutil
-    import tempfile
+    from nasa_asteroid_data_lakehouse_spark.streaming.replay import (
+        drain_to_parquet,
+        file_stream,
+    )
 
     ev = (
         read_table(spark, sf_dir, "events")
@@ -1265,7 +1253,6 @@ def streaming_dedup_replay_events(spark: SparkSession, sf_dir: str) -> DataFrame
         # LTZ cast value-identical (same as streaming_session_replay)
         .select("event_id", F.col("ts").cast("timestamp").alias("ts"))
     )
-    out_schema = "event_id bigint, ts timestamp"
     span = ev.agg(
         F.min("ts").alias("lo"), F.max("ts").alias("hi")
     ).first()
@@ -1274,41 +1261,15 @@ def streaming_dedup_replay_events(spark: SparkSession, sf_dir: str) -> DataFrame
         span_days = (span["hi"] - span["lo"]).days + 2
         horizon_days = max(horizon_days, span_days)
 
-    tmp = scratch_dir(
-        "ndl_stream_dedup_",
-        table_scratch_bytes(os.path.join(sf_dir, "events.parquet")),
-    )
-    try:
+    with query_scratch("ndl_stream_dedup_", sf_dir, "events") as tmp:
         src = f"{tmp}/in"
         ev.repartition(4).write.parquet(src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        deduped = (
+            file_stream(spark, ev, src)
+            .withWatermark("ts", f"{horizon_days} days")
+            .dropDuplicatesWithinWatermark(["event_id"])
         )
-        deduped = stream.withWatermark(
-            "ts", f"{horizon_days} days"
-        ).dropDuplicatesWithinWatermark(["event_id"])
-        out = f"{tmp}/deduped"
-        # Scale-adaptive state partitions for the dedup state store
-        # (streaming has no AQE; see streaming/tuning.py).
-        from nasa_asteroid_data_lakehouse_spark.streaming.tuning import (
-            scaled_stream_shuffle,
-        )
-
-        with scaled_stream_shuffle(spark, src):
-            q = (
-                deduped.writeStream.outputMode("append")
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .format("parquet")
-                .start(out)
-            )
-            q.awaitTermination()
-        try:
-            got = spark.read.parquet(out)
-        except Exception:  # zero input files -> no sink directory
-            got = spark.createDataFrame([], out_schema)
+        got = drain_to_parquet(spark, deduped, f"{tmp}/deduped", src)
         return (
             got.agg(
                 F.count(F.lit(1)).alias("n_unique"),
@@ -1318,8 +1279,6 @@ def streaming_dedup_replay_events(spark: SparkSession, sf_dir: str) -> DataFrame
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 STREAMING_DEDUP_SQL = """

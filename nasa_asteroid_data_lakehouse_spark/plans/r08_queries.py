@@ -1,6 +1,6 @@
-"""Round-8 staged batch (gate-verified behind ``driver_sim --staged``;
-registered by flipping ``REGISTER_R08`` in ``__spark_entry__`` at
-round-8 start, after CORRECTNESS_r07 lands).
+"""Round-8 batch, registered in ``__spark_entry__`` from its
+STAGED_QUERIES / STAGED_ORACLES (gate-verified in round 7 behind
+``driver_sim --staged``).
 
 Families (VERDICT r06 ask #4, where coverage is thinnest):
 composite IVF-PQ ANN — top-k AND its recall audit (the production
@@ -33,18 +33,13 @@ layout maintenance, no change feed.
 
 from __future__ import annotations
 
-import os
-
 import math
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
-from nasa_asteroid_data_lakehouse_spark.scratch import (
-    scratch_dir,
-    table_scratch_bytes,
-)
+from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 from nasa_asteroid_data_lakehouse_spark.llm import similarity
 from nasa_asteroid_data_lakehouse_spark.operators.stats import finite
 
@@ -388,9 +383,6 @@ def txn_consistent_snapshot_orders(spark: SparkSession, sf_dir: str) -> DataFram
     O(customers); the txn manifest is O(tables) driver-side JSON.
     KEY-UNIQUE precondition (orders keyed by o_orderkey).
     Exact integer cents (floor before cast, both engines)."""
-    import shutil
-    import tempfile
-
     from nasa_asteroid_data_lakehouse_spark.lake import MultiTableTransaction
 
     base = (
@@ -412,11 +404,7 @@ def txn_consistent_snapshot_orders(spark: SparkSession, sf_dir: str) -> DataFram
             F.sum("cents").alias("cust_cents"),
         )
 
-    tmp = scratch_dir(
-        "ndl_txn_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_txn_", sf_dir, "orders") as tmp:
         txn = MultiTableTransaction(spark, tmp, num_buckets=8)
         fact, dim = txn.table("fact"), txn.table("dim")
         vf = fact.create(base, keys=["o_orderkey"])
@@ -462,8 +450,6 @@ def txn_consistent_snapshot_orders(spark: SparkSession, sf_dir: str) -> DataFram
             )
         out = audits[0].unionByName(audits[1]).orderBy("txn_id")
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 TXN_SNAPSHOT_SQL = """
@@ -511,9 +497,6 @@ def zorder_optimize_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFr
     windows + one exchange (no global sort); upserts keep their
     key-hash bucket pruning because z-slicing happens WITHIN buckets.
     KEY-UNIQUE precondition (table keyed by o_orderkey)."""
-    import shutil
-    import tempfile
-
     from nasa_asteroid_data_lakehouse_spark.lake import VersionedTable
 
     base = (
@@ -528,11 +511,7 @@ def zorder_optimize_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFr
             ).alias("cents"),
         )
     )
-    tmp = scratch_dir(
-        "ndl_zopt_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_zopt_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         t.create(base, keys=["o_orderkey"])
         t.optimize(zorder_by=["o_custkey", "cents"], files_per_bucket=4)
@@ -544,8 +523,6 @@ def zorder_optimize_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFr
             F.max("o_orderkey").alias("key_max"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 ZORDER_OPTIMIZE_SQL = """
@@ -581,9 +558,6 @@ def cdc_apply_schema_evolution_orders(spark: SparkSession, sf_dir: str) -> DataF
     must zero it.  Scale: apply is one key-keyed anti join + union;
     verify one key-keyed full-outer join — bucket-local at 100 TB.
     KEY-UNIQUE precondition."""
-    import shutil
-    import tempfile
-
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
 
     base = (
@@ -597,11 +571,7 @@ def cdc_apply_schema_evolution_orders(spark: SparkSession, sf_dir: str) -> DataF
             (F.col("o_orderkey") % 7).alias("extra"),
         )
     )
-    tmp = scratch_dir(
-        "ndl_cdcse_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_cdcse_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         v0 = t.create(base, keys=["o_orderkey"])
         survivors = base.where(~(F.col("o_orderkey") % 13 == 0)).select(
@@ -658,8 +628,6 @@ def cdc_apply_schema_evolution_orders(spark: SparkSession, sf_dir: str) -> DataF
             ).cast("bigint").alias("key_sum_actual"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 CDC_SCHEMA_EVOLUTION_SQL = """
@@ -1010,12 +978,13 @@ def streaming_upsert_replay_events(spark: SparkSession, sf_dir: str) -> DataFram
     source rows collapse identically on both engines.  Scale: each
     micro-batch rewrites only touched buckets; the replay guard is one
     O(versions) driver-side manifest walk."""
-    import shutil
-    import tempfile
-
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
     from nasa_asteroid_data_lakehouse_spark.streaming.lakehouse import (
         versioned_upsert_sink,
+    )
+    from nasa_asteroid_data_lakehouse_spark.streaming.replay import (
+        drain,
+        file_stream,
     )
 
     ev = (
@@ -1026,38 +995,18 @@ def streaming_upsert_replay_events(spark: SparkSession, sf_dir: str) -> DataFram
         )
     )
 
-    tmp = scratch_dir(
-        "ndl_stream_upsert_",
-        table_scratch_bytes(os.path.join(sf_dir, "events.parquet")),
-    )
-    try:
+    with query_scratch("ndl_stream_upsert_", sf_dir, "events") as tmp:
         src = f"{tmp}/in"
         ev.repartition(4).write.parquet(src)
         t = VersionedTable(spark, f"{tmp}/table", num_buckets=8)
         t.create(ev.limit(0), keys=["event_id"])
 
-        from nasa_asteroid_data_lakehouse_spark.streaming.tuning import (
-            scaled_stream_shuffle,
-        )
-
         def replay(checkpoint: str) -> None:
-            stream = (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
+            stream = file_stream(spark, ev, src)
+            sink = versioned_upsert_sink(
+                stream, t, f"{tmp}/{checkpoint}", app_id="evload"
             )
-            # Scale-adaptive shuffle partitions for the per-batch merge
-            # windows inside the foreachBatch upsert (streaming has no
-            # AQE; see streaming/tuning.py).
-            with scaled_stream_shuffle(spark, src):
-                q = (
-                    versioned_upsert_sink(
-                        stream, t, f"{tmp}/{checkpoint}", app_id="evload"
-                    )
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
+            drain(spark, sink, src)
 
         replay("ckpt1")
         v_first = t.latest_version()
@@ -1076,8 +1025,6 @@ def streaming_upsert_replay_events(spark: SparkSession, sf_dir: str) -> DataFram
             ),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 STREAMING_UPSERT_SQL = """
@@ -1116,9 +1063,6 @@ def ivm_incremental_dim_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate-key payload ambiguity cannot leak in.  Scale: the feed
     is O(changed buckets); delta and merge are custkey-keyed
     aggregates; the verify recompute exists only for the audit."""
-    import shutil
-    import tempfile
-
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
 
     base = (
@@ -1132,11 +1076,7 @@ def ivm_incremental_dim_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("o_orderkey") % 500).alias("cents"),
         )
     )
-    tmp = scratch_dir(
-        "ndl_ivm_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_ivm_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         v0 = t.create(base, keys=["o_orderkey"])
         dim0 = t.read(v0).groupBy("cust").agg(
@@ -1214,8 +1154,6 @@ def ivm_incremental_dim_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.sum("b.c"), F.lit(0)).cast("bigint").alias("total_cents"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 IVM_INCREMENTAL_SQL = """
@@ -1262,9 +1200,6 @@ def clone_divergence_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     Payloads are KEY-DERIVED (seg = key % 100), dup-key-safe.  Scale:
     the clone commit is O(1) manifest I/O; each divergent write is the
     normal bucket-pruned path on its own lineage."""
-    import shutil
-    import tempfile
-
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
 
     base = (
@@ -1274,11 +1209,7 @@ def clone_divergence_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .select("o_orderkey", (F.col("o_orderkey") % 100).alias("seg"))
     )
-    tmp = scratch_dir(
-        "ndl_clone_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_clone_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, f"{tmp}/src", num_buckets=8)
         t.create(base, keys=["o_orderkey"])
         c = t.clone(f"{tmp}/clone")
@@ -1305,8 +1236,6 @@ def clone_divergence_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 CLONE_DIVERGENCE_SQL = """

@@ -1,6 +1,6 @@
-"""Round-9 staged batch (gate-verified behind ``driver_sim --staged``;
-registered by flipping ``REGISTER_R09`` in ``__spark_entry__`` at
-round-9 start, after CORRECTNESS_r08 lands).
+"""Round-9 batch, registered in ``__spark_entry__`` from its
+STAGED_QUERIES / STAGED_ORACLES (gate-verified in round 8 behind
+``driver_sim --staged``).
 
 Families (VERDICT r07 ask #6 — the thinnest remaining areas):
 
@@ -32,16 +32,11 @@ manifest log, and no maintenance operations.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
-from nasa_asteroid_data_lakehouse_spark.scratch import (
-    scratch_dir,
-    table_scratch_bytes,
-)
+from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 
 STAGED_QUERIES: dict = {}
 STAGED_ORACLES: dict = {}
@@ -79,8 +74,13 @@ def streaming_interval_join_replay_events(
     Output is the bounded audit aggregate (pair count, matched users,
     id sums) — pair-level output would be arrival-order independent
     too, but the aggregate keeps the driver compare O(1)."""
-    import shutil
-    import tempfile
+    from nasa_asteroid_data_lakehouse_spark.streaming.events import (
+        interval_join_streams,
+    )
+    from nasa_asteroid_data_lakehouse_spark.streaming.replay import (
+        drain_to_parquet,
+        file_stream,
+    )
 
     ev = (
         read_table(spark, sf_dir, "events")
@@ -100,58 +100,19 @@ def streaming_interval_join_replay_events(
     left = ev.where(F.col("event_id") % 2 == 0)
     right = ev.where(F.col("event_id") % 2 == 1)
 
-    tmp = scratch_dir(
-        "ndl_stream_ij_",
-        table_scratch_bytes(os.path.join(sf_dir, "events.parquet")),
-    )
-    try:
+    with query_scratch("ndl_stream_ij_", sf_dir, "events") as tmp:
         src_l, src_r = f"{tmp}/in_l", f"{tmp}/in_r"
         left.repartition(2).write.parquet(src_l)
         right.repartition(2).write.parquet(src_r)
-
-        def stream(src: str) -> DataFrame:
-            return (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-
-        from nasa_asteroid_data_lakehouse_spark.streaming.events import (
-            interval_join_streams,
-        )
-
         joined = interval_join_streams(
-            stream(src_l),
-            stream(src_r),
+            file_stream(spark, left, src_l),
+            file_stream(spark, right, src_r),
             key="user_id",
             ts_col="ts",
             watermark=f"{horizon_days} days",
             max_gap=f"{_IJ_GAP_DAYS} day",
         ).select("l_event_id", "r_event_id", "l_user_id")
-        out = f"{tmp}/pairs"
-        # Scale-adaptive state partitions: a stream-stream join keeps
-        # four state stores per partition per micro-batch (streaming
-        # has no AQE; see streaming/tuning.py — measured 20 s -> 5 s
-        # at sf0.1 with 32 -> scaled partitions).
-        from nasa_asteroid_data_lakehouse_spark.streaming.tuning import (
-            scaled_stream_shuffle,
-        )
-
-        with scaled_stream_shuffle(spark, src_l, src_r):
-            q = (
-                joined.writeStream.outputMode("append")
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .format("parquet")
-                .start(out)
-            )
-            q.awaitTermination()
-        try:
-            got = spark.read.parquet(out)
-        except Exception:  # zero input files -> no sink directory
-            got = spark.createDataFrame(
-                [], "l_event_id bigint, r_event_id bigint, l_user_id bigint"
-            )
+        got = drain_to_parquet(spark, joined, f"{tmp}/pairs", src_l, src_r)
         return (
             got.agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
@@ -165,8 +126,6 @@ def streaming_interval_join_replay_events(
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 STREAMING_INTERVAL_JOIN_SQL = f"""
@@ -214,8 +173,11 @@ def streaming_enrich_replay_events(
 
     Output: per-segment event counts and id sums (NULL segment is a
     real group)."""
-    import shutil
-    import tempfile
+    from nasa_asteroid_data_lakehouse_spark.streaming.events import enrich_with_dim
+    from nasa_asteroid_data_lakehouse_spark.streaming.replay import (
+        drain_to_parquet,
+        file_stream,
+    )
 
     ev = (
         read_table(spark, sf_dir, "events")
@@ -231,38 +193,13 @@ def streaming_enrich_replay_events(
         )
     )
 
-    tmp = scratch_dir(
-        "ndl_stream_enrich_",
-        table_scratch_bytes(os.path.join(sf_dir, "events.parquet")),
-    )
-    try:
+    with query_scratch("ndl_stream_enrich_", sf_dir, "events") as tmp:
         src = f"{tmp}/in"
         ev.repartition(4).write.parquet(src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
+        enriched = enrich_with_dim(
+            file_stream(spark, ev, src), dim, keys=["user_id"], how="left"
         )
-        from nasa_asteroid_data_lakehouse_spark.streaming.events import (
-            enrich_with_dim,
-        )
-
-        enriched = enrich_with_dim(stream, dim, keys=["user_id"], how="left")
-        out = f"{tmp}/enriched"
-        q = (
-            enriched.writeStream.outputMode("append")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .format("parquet")
-            .start(out)
-        )
-        q.awaitTermination()
-        try:
-            got = spark.read.parquet(out)
-        except Exception:
-            got = spark.createDataFrame(
-                [], "event_id bigint, user_id bigint, segment string"
-            )
+        got = drain_to_parquet(spark, enriched, f"{tmp}/enriched", src)
         return (
             got.groupBy("segment")
             .agg(
@@ -274,8 +211,6 @@ def streaming_enrich_replay_events(
             .orderBy(F.asc_nulls_first("segment"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 STREAMING_ENRICH_SQL = """
@@ -319,9 +254,6 @@ def vacuum_retention_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side manifest walk plus unreferenced-file deletes; the
     stream-txn watermark folded into every manifest survives it
     (tests/test_versioned_table.py pins that)."""
-    import shutil
-    import tempfile
-
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
 
     base = (
@@ -338,11 +270,7 @@ def vacuum_retention_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic = spark.createDataFrame(
         [(-1, -1, -1)], "o_orderkey bigint, cust bigint, cents bigint"
     )
-    tmp = scratch_dir(
-        "ndl_vacuum_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_vacuum_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         t.create(base, keys=["o_orderkey"])
         updates = base.where(F.col("o_orderkey") % 6 == 0).select(
@@ -374,8 +302,6 @@ def vacuum_retention_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(int(floor_enforced)).cast("bigint").alias("floor_enforced"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 VACUUM_RETENTION_SQL = """
@@ -425,9 +351,6 @@ def rebucket_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebucket untouched.  Scale: rebucket is the one deliberately
     full-table maintenance op; DOUBLING the count keeps the shuffle
     bucket-local (pmod(h, 2N) sends old bucket b only to b or b+N)."""
-    import shutil
-    import tempfile
-
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
 
     base = (
@@ -444,11 +367,7 @@ def rebucket_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic = spark.createDataFrame(
         [(-1, -1, -1)], "o_orderkey bigint, cust bigint, cents bigint"
     )
-    tmp = scratch_dir(
-        "ndl_rebucket_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_rebucket_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=4)
         t.create(base, keys=["o_orderkey"])
         up1 = base.where(F.col("o_orderkey") % 7 == 0).select(
@@ -485,8 +404,6 @@ def rebucket_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(int(n_dup)).cast("bigint").alias("n_dup_keys"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 REBUCKET_SQL = """
@@ -879,8 +796,6 @@ def physical_erasure_audit_orders(spark: SparkSession, sf_dir: str) -> DataFrame
     only buckets that ever held the keys (this audit scans everything
     by design: it is the trust check)."""
     import os as _os
-    import shutil
-    import tempfile
 
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
 
@@ -898,11 +813,7 @@ def physical_erasure_audit_orders(spark: SparkSession, sf_dir: str) -> DataFrame
     synthetic = spark.createDataFrame(
         [(-1, -1, -1)], "o_orderkey bigint, cust bigint, cents bigint"
     )
-    tmp = scratch_dir(
-        "ndl_erasure_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_erasure_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         t.create(base.unionByName(synthetic), keys=["o_orderkey"])
         erase = (F.col("o_orderkey") % 9 == 0) | (F.col("o_orderkey") == -1)
@@ -930,8 +841,6 @@ def physical_erasure_audit_orders(spark: SparkSession, sf_dir: str) -> DataFrame
             F.lit(int(leftover)).cast("bigint").alias("n_physical_leftover"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 PHYSICAL_ERASURE_SQL = """
@@ -979,8 +888,13 @@ def streaming_outer_join_replay_events(
     emits — the stream behavior).  The audit aggregate separates
     matched pairs, emitted NULL rows, and (by subtraction in the
     oracle) suppressed tails."""
-    import shutil
-    import tempfile
+    from nasa_asteroid_data_lakehouse_spark.streaming.events import (
+        interval_join_streams,
+    )
+    from nasa_asteroid_data_lakehouse_spark.streaming.replay import (
+        drain_to_parquet,
+        file_stream,
+    )
 
     ev = (
         read_table(spark, sf_dir, "events")
@@ -997,58 +911,23 @@ def streaming_outer_join_replay_events(
         write_time_quartile_batches,
     )
 
-    tmp = scratch_dir(
-        "ndl_stream_oj_",
-        table_scratch_bytes(os.path.join(sf_dir, "events.parquet")),
-    )
-    try:
+    with query_scratch("ndl_stream_oj_", sf_dir, "events") as tmp:
         src_l, src_r = f"{tmp}/in_l", f"{tmp}/in_r"
         # Same time-quartile mtime-pinned batches as before (the
         # ADVICE r08 ordering pin), written in ONE job per side
         # instead of four (streaming/tuning.py).
         write_time_quartile_batches(left, src_l)
         write_time_quartile_batches(right, src_r)
-
-        def stream(src: str) -> DataFrame:
-            return (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-
-        from nasa_asteroid_data_lakehouse_spark.streaming.events import (
-            interval_join_streams,
-        )
-
         joined = interval_join_streams(
-            stream(src_l),
-            stream(src_r),
+            file_stream(spark, left, src_l),
+            file_stream(spark, right, src_r),
             key="user_id",
             ts_col="ts",
             watermark="0 seconds",
             max_gap=f"{_IJ_GAP_DAYS} day",
             how="leftOuter",
         ).select("l_event_id", "r_event_id")
-        out = f"{tmp}/rows"
-        # Scale-adaptive state partitions (streaming has no AQE; see
-        # streaming/tuning.py and the inner-join replay note).
-        from nasa_asteroid_data_lakehouse_spark.streaming.tuning import (
-            scaled_stream_shuffle,
-        )
-
-        with scaled_stream_shuffle(spark, src_l, src_r):
-            q = (
-                joined.writeStream.outputMode("append")
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .format("parquet")
-                .start(out)
-            )
-            q.awaitTermination()
-        try:
-            got = spark.read.parquet(out)
-        except Exception:  # zero input files -> no sink directory
-            got = spark.createDataFrame([], "l_event_id bigint, r_event_id bigint")
+        got = drain_to_parquet(spark, joined, f"{tmp}/rows", src_l, src_r)
         return (
             got.agg(
                 F.coalesce(
@@ -1070,8 +949,6 @@ def streaming_outer_join_replay_events(
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 STREAMING_OUTER_JOIN_SQL = f"""

@@ -1,6 +1,6 @@
-"""Round-10 staged batch (gate-verified behind ``driver_sim --staged``;
-registered by flipping ``REGISTER_R10`` in ``__spark_entry__`` at
-round-10 start, after CORRECTNESS_r09 lands).
+"""Round-10 batch, registered in ``__spark_entry__`` from its
+STAGED_QUERIES / STAGED_ORACLES (gate-verified in round 9 behind
+``driver_sim --staged``).
 
 Families (VERDICT r08 "engine-internal gaps" + natural continuations):
 
@@ -42,18 +42,11 @@ vector search.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
-from nasa_asteroid_data_lakehouse_spark.scratch import (
-    scratch_dir,
-    table_scratch_bytes,
-)
+from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 
 STAGED_QUERIES: dict = {}
 STAGED_ORACLES: dict = {}
@@ -145,11 +138,7 @@ def time_travel_timestamp_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
 
     base = _orders_base(spark, sf_dir)
-    tmp = scratch_dir(
-        "ndl_ttts_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_ttts_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         t.create(base, keys=["o_orderkey"])
         v1 = t.upsert(
@@ -195,8 +184,6 @@ def time_travel_timestamp_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "before_first_raises bigint",
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 TIME_TRAVEL_TIMESTAMP_SQL = f"""
@@ -249,11 +236,7 @@ def restore_undo_feed_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic = spark.createDataFrame(
         [(-1, -1)], "o_orderkey bigint, cents bigint"
     )
-    tmp = scratch_dir(
-        "ndl_restore_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_restore_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         t.create(base, keys=["o_orderkey"])
         t.upsert(
@@ -292,8 +275,6 @@ def restore_undo_feed_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_undo_deletes bigint",
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 RESTORE_UNDO_FEED_SQL = f"""
@@ -333,11 +314,7 @@ def dv_merge_on_read_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
 
     base = _orders_base(spark, sf_dir)
-    tmp = scratch_dir(
-        "ndl_dv_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_dv_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         t.create(base, keys=["o_orderkey"])
         m0 = t._load_manifest(0)
@@ -382,8 +359,6 @@ def dv_merge_on_read_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_rows_v0 bigint",
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 DV_MERGE_ON_READ_SQL = f"""
@@ -418,11 +393,7 @@ def dv_upsert_materialize_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
 
     base = _orders_base(spark, sf_dir)
-    tmp = scratch_dir(
-        "ndl_dvu_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_dvu_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         t.create(base, keys=["o_orderkey"])
         t.delete_where(
@@ -453,8 +424,6 @@ def dv_upsert_materialize_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("bigint").alias("n_resurrected"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 DV_UPSERT_MATERIALIZE_SQL = f"""
@@ -502,11 +471,7 @@ def lake_history_audit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic = spark.createDataFrame(
         [(-1, -1)], "o_orderkey bigint, cents bigint"
     )
-    tmp = scratch_dir(
-        "ndl_hist_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_hist_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         t.create(base.unionByName(synthetic), keys=["o_orderkey"])
         t.delete_where(
@@ -534,8 +499,6 @@ def lake_history_audit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows, "version bigint, operation string, n_rows bigint"
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 LAKE_HISTORY_AUDIT_SQL = f"""
@@ -588,11 +551,7 @@ def cdf_stream_replay_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthetic = spark.createDataFrame(
         [(-1, -1)], "o_orderkey bigint, cents bigint"
     )
-    tmp = scratch_dir(
-        "ndl_cdfr_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_cdfr_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         t.create(base, keys=["o_orderkey"])
         t.upsert(
@@ -653,8 +612,6 @@ def cdf_stream_replay_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_feed_upsert bigint, n_feed_delete bigint, n_feed_restore bigint",
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 CDF_STREAM_REPLAY_SQL = f"""
@@ -940,6 +897,14 @@ def streaming_full_outer_join_replay_events(
     TIME-QUARTILE ordered single-file batches on both sides (mtime-
     pinned so FileStreamSource cannot reorder ties), so no row is ever
     late and the end state is a pure function of the data."""
+    from nasa_asteroid_data_lakehouse_spark.streaming.events import (
+        interval_join_streams,
+    )
+    from nasa_asteroid_data_lakehouse_spark.streaming.replay import (
+        drain_to_parquet,
+        file_stream,
+    )
+
     ev = (
         read_table(spark, sf_dir, "events")
         .where(
@@ -955,59 +920,22 @@ def streaming_full_outer_join_replay_events(
         write_time_quartile_batches,
     )
 
-    tmp = scratch_dir(
-        "ndl_stream_foj_",
-        table_scratch_bytes(os.path.join(sf_dir, "events.parquet")),
-    )
-    try:
+    with query_scratch("ndl_stream_foj_", sf_dir, "events") as tmp:
         src_l, src_r = f"{tmp}/in_l", f"{tmp}/in_r"
         # Same time-quartile mtime-pinned batches as before, written in
         # ONE job per side instead of four (streaming/tuning.py).
         write_time_quartile_batches(left, src_l)
         write_time_quartile_batches(right, src_r)
-
-        def stream(src: str) -> DataFrame:
-            return (
-                spark.readStream.schema(ev.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-
-        from nasa_asteroid_data_lakehouse_spark.streaming.events import (
-            interval_join_streams,
-        )
-
         joined = interval_join_streams(
-            stream(src_l),
-            stream(src_r),
+            file_stream(spark, left, src_l),
+            file_stream(spark, right, src_r),
             key="user_id",
             ts_col="ts",
             watermark="0 seconds",
             max_gap=f"{_FOJ_GAP_DAYS} day",
             how="fullOuter",
         ).select("l_event_id", "r_event_id")
-        out = f"{tmp}/rows"
-        # Scale-adaptive state partitions: the FULL OUTER stream-stream
-        # join keeps four state stores per partition per micro-batch
-        # (streaming has no AQE; see streaming/tuning.py — measured
-        # 47 s -> 9 s at sf0.1 with 32 -> scaled partitions).
-        from nasa_asteroid_data_lakehouse_spark.streaming.tuning import (
-            scaled_stream_shuffle,
-        )
-
-        with scaled_stream_shuffle(spark, src_l, src_r):
-            q = (
-                joined.writeStream.outputMode("append")
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .format("parquet")
-                .start(out)
-            )
-            q.awaitTermination()
-        try:
-            got = spark.read.parquet(out)
-        except Exception:  # zero input files -> no sink directory
-            got = spark.createDataFrame([], "l_event_id bigint, r_event_id bigint")
+        got = drain_to_parquet(spark, joined, f"{tmp}/rows", src_l, src_r)
         return (
             got.agg(
                 F.coalesce(
@@ -1041,8 +969,6 @@ def streaming_full_outer_join_replay_events(
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 STREAMING_FULL_OUTER_JOIN_SQL = f"""
@@ -1131,11 +1057,7 @@ def dv_vector_store_topk_embeddings(
         )
         .select("vec_id", "embedding")
     )
-    tmp = scratch_dir(
-        "ndl_dvvs_",
-        table_scratch_bytes(os.path.join(sf_dir, "embeddings.parquet")),
-    )
-    try:
+    with query_scratch("ndl_dvvs_", sf_dir, "embeddings") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         t.create(emb, keys=["vec_id"])
         t.delete_where(
@@ -1157,8 +1079,6 @@ def dv_vector_store_topk_embeddings(
             .limit(20)
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 DV_VECTOR_STORE_TOPK_SQL = """
@@ -1200,11 +1120,7 @@ def optimize_dv_purge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
 
     base = _orders_base(spark, sf_dir)
-    tmp = scratch_dir(
-        "ndl_odv_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_odv_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, tmp, num_buckets=8)
         t.create(base, keys=["o_orderkey"])
         t.delete_where(
@@ -1236,8 +1152,6 @@ def optimize_dv_purge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "physical_after_vacuum bigint",
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 OPTIMIZE_DV_PURGE_SQL = f"""
@@ -1276,6 +1190,7 @@ def streaming_cdf_subscription_orders(
     executors; the subscription never scans unchanged data."""
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
     from nasa_asteroid_data_lakehouse_spark.sources import cdf_stream
+    from nasa_asteroid_data_lakehouse_spark.streaming.replay import drain_to_parquet
 
     cdf_stream.register(spark)
     base = _orders_base(spark, sf_dir)
@@ -1283,11 +1198,7 @@ def streaming_cdf_subscription_orders(
         [(-1, -1)], "o_orderkey bigint, cents bigint"
     )
 
-    tmp = scratch_dir(
-        "ndl_cdfsub_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_cdfsub_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, f"{tmp}/t", num_buckets=8)
         t.create(base, keys=["o_orderkey"])
         t.upsert(
@@ -1301,20 +1212,13 @@ def streaming_cdf_subscription_orders(
             deferred=True,
         )
         t.restore(0)
-        out = f"{tmp}/rows"
-        q = (
+        subscription = (
             spark.readStream.format("table_changes")
             .option("path", t.root)
             .option("starting_version", 1)
             .load()
-            .writeStream.format("parquet")
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start(out)
         )
-        q.awaitTermination()
-        feed = spark.read.parquet(out)
+        feed = drain_to_parquet(spark, subscription, f"{tmp}/rows", t.root)
         return (
             feed.agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_feed_rows"),
@@ -1344,8 +1248,6 @@ def streaming_cdf_subscription_orders(
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 STREAMING_CDF_SUBSCRIPTION_SQL = f"""
@@ -1667,6 +1569,7 @@ def streaming_replication_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nasa_asteroid_data_lakehouse_spark.streaming.lakehouse import (
         stream_batch_watermark,
     )
+    from nasa_asteroid_data_lakehouse_spark.streaming.replay import drain
     from nasa_asteroid_data_lakehouse_spark.streaming.replication import (
         replication_sink,
     )
@@ -1677,11 +1580,7 @@ def streaming_replication_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(-1, -1)], "o_orderkey bigint, cents bigint"
     )
 
-    tmp = scratch_dir(
-        "ndl_repl_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_repl_", sf_dir, "orders") as tmp:
         src = VersionedTable(spark, f"{tmp}/src", num_buckets=8)
         src.create(base, keys=["o_orderkey"])
         src.upsert(
@@ -1702,23 +1601,12 @@ def streaming_replication_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("starting_version", 1)
             .load()
         )
-        # Scale-adaptive shuffle partitions for the per-batch apply
-        # (delete_where + upsert windows inside foreachBatch; streaming
-        # has no AQE — see streaming/tuning.py).  Sized from the source
-        # table's data, an upper bound on any batch's feed.
-        from nasa_asteroid_data_lakehouse_spark.streaming.tuning import (
-            scaled_stream_shuffle,
+        # Shuffle partitions for the per-batch apply are sized from the
+        # source table's data, an upper bound on any batch's feed.
+        sink = replication_sink(
+            feed, rep, keys=["o_orderkey"], checkpoint_dir=f"{tmp}/ck"
         )
-
-        with scaled_stream_shuffle(spark, src.root):
-            q = (
-                replication_sink(
-                    feed, rep, keys=["o_orderkey"], checkpoint_dir=f"{tmp}/ck"
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(spark, sink, src.root)
         got, want = rep.read(), src.read()
         mismatch = _row_set_mismatch(got, want, ["o_orderkey", "cents"])
         wm_advanced = 1 if stream_batch_watermark(rep, "replication") >= 0 else 0
@@ -1732,8 +1620,6 @@ def streaming_replication_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "watermark_advanced bigint",
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 STREAMING_REPLICATION_SQL = f"""

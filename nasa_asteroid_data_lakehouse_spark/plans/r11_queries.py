@@ -62,11 +62,6 @@ is a daily batch ETL with no manifest log, no streams, no clustering.
 
 from __future__ import annotations
 
-import os
-
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -74,10 +69,7 @@ from nasa_asteroid_data_lakehouse_spark.catalog import read_table
 from nasa_asteroid_data_lakehouse_spark.plans.r10_queries import (
     _row_set_mismatch,
 )
-from nasa_asteroid_data_lakehouse_spark.scratch import (
-    scratch_dir,
-    table_scratch_bytes,
-)
+from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 
 STAGED_QUERIES: dict = {}
 STAGED_ORACLES: dict = {}
@@ -130,6 +122,7 @@ def replication_across_rebucket_orders(
     from nasa_asteroid_data_lakehouse_spark.streaming.lakehouse import (
         stream_batch_watermark,
     )
+    from nasa_asteroid_data_lakehouse_spark.streaming.replay import drain
     from nasa_asteroid_data_lakehouse_spark.streaming.replication import (
         replication_sink,
     )
@@ -140,11 +133,7 @@ def replication_across_rebucket_orders(
         [(-1, -1)], "o_orderkey bigint, cents bigint"
     )
 
-    tmp = scratch_dir(
-        "ndl_rrb_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_rrb_", sf_dir, "orders") as tmp:
         src = VersionedTable(spark, f"{tmp}/src", num_buckets=8)
         src.create(base, keys=["o_orderkey"])
         src.upsert(
@@ -171,21 +160,10 @@ def replication_across_rebucket_orders(
             .option("starting_version", 1)
             .load()
         )
-        # Scale-adaptive shuffle partitions for the per-batch apply
-        # (streaming has no AQE; see streaming/tuning.py).
-        from nasa_asteroid_data_lakehouse_spark.streaming.tuning import (
-            scaled_stream_shuffle,
+        sink = replication_sink(
+            feed, rep, keys=["o_orderkey"], checkpoint_dir=f"{tmp}/ck"
         )
-
-        with scaled_stream_shuffle(spark, src.root):
-            q = (
-                replication_sink(
-                    feed, rep, keys=["o_orderkey"], checkpoint_dir=f"{tmp}/ck"
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(spark, sink, src.root)
         rebucket_emitted = (
             spark.read.format("table_changes")
             .option("path", src.root)
@@ -215,8 +193,6 @@ def replication_across_rebucket_orders(
             "rebucket_emitted bigint, watermark_advanced bigint",
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 REPLICATION_ACROSS_REBUCKET_SQL = f"""
@@ -269,11 +245,7 @@ def maintenance_cdf_skip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cdf_stream.register(spark)
     base = _orders_base(spark, sf_dir)
-    tmp = scratch_dir(
-        "ndl_mcen_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_mcen_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, f"{tmp}/t", num_buckets=8)
         t.create(base, keys=["o_orderkey"])
 
@@ -342,8 +314,6 @@ def maintenance_cdf_skip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "slot bigint, operation string, n_rows bigint",
         )
         return out.orderBy("slot").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 MAINTENANCE_CDF_SKIP_SQL = f"""
@@ -399,11 +369,7 @@ def txn_snapshot_across_dv_orders(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     base = _orders_base(spark, sf_dir)
-    tmp = scratch_dir(
-        "ndl_txdv_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_txdv_", sf_dir, "orders") as tmp:
         txn = MultiTableTransaction(spark, tmp, num_buckets=8)
         fact = txn.table("fact")
         dim = txn.table("dim")
@@ -453,8 +419,6 @@ def txn_snapshot_across_dv_orders(spark: SparkSession, sf_dir: str) -> DataFrame
             "joined_weight_sum bigint",
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 TXN_SNAPSHOT_ACROSS_DV_SQL = f"""
@@ -499,11 +463,7 @@ def upsert_schema_merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
 
     base = _orders_base(spark, sf_dir)
-    tmp = scratch_dir(
-        "ndl_usm_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_usm_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, f"{tmp}/t", num_buckets=8)
         t.create(base, keys=["o_orderkey"])
         t.upsert(
@@ -532,8 +492,6 @@ def upsert_schema_merge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.sum("flag"), F.lit(0)).cast("bigint").alias("flag_sum"),
         )
         return agg.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 UPSERT_SCHEMA_MERGE_SQL = f"""
@@ -591,6 +549,7 @@ def cdf_schema_evolution_subscription_orders(
     snapshot change; the later commits go back to O(changed buckets)."""
     from nasa_asteroid_data_lakehouse_spark.lake.table import VersionedTable
     from nasa_asteroid_data_lakehouse_spark.sources import cdf_stream
+    from nasa_asteroid_data_lakehouse_spark.streaming.replay import drain
     from nasa_asteroid_data_lakehouse_spark.streaming.replication import (
         replication_sink,
     )
@@ -598,11 +557,7 @@ def cdf_schema_evolution_subscription_orders(
     cdf_stream.register(spark)
     base = _orders_base(spark, sf_dir)
 
-    tmp = scratch_dir(
-        "ndl_sevo_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_sevo_", sf_dir, "orders") as tmp:
         src = VersionedTable(spark, f"{tmp}/src", num_buckets=8)
         src.create(base, keys=["o_orderkey"])
         src.upsert(
@@ -613,30 +568,19 @@ def cdf_schema_evolution_subscription_orders(
         rep = VersionedTable(spark, f"{tmp}/rep", num_buckets=8)
         rep.create(src.read(version=0), keys=["o_orderkey"])
 
-        from nasa_asteroid_data_lakehouse_spark.streaming.tuning import (
-            scaled_stream_shuffle,
-        )
-
-        def drain():
+        def catch_up():
             feed = (
                 spark.readStream.format("table_changes")
                 .option("path", src.root)
                 .option("starting_version", 1)
                 .load()
             )
-            # Scale-adaptive shuffle partitions for the per-batch apply
-            # (streaming has no AQE; see streaming/tuning.py).
-            with scaled_stream_shuffle(spark, src.root):
-                q = (
-                    replication_sink(
-                        feed, rep, keys=["o_orderkey"], checkpoint_dir=f"{tmp}/ck"
-                    )
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
+            sink = replication_sink(
+                feed, rep, keys=["o_orderkey"], checkpoint_dir=f"{tmp}/ck"
+            )
+            drain(spark, sink, src.root)
 
-        drain()  # old schema: covers the upsert
+        catch_up()  # old schema: covers the upsert
         src.overwrite(
             base.where(F.col("o_orderkey") % 2 == 0).select(
                 "o_orderkey", (F.col("o_orderkey") % 3).alias("flag")
@@ -645,7 +589,7 @@ def cdf_schema_evolution_subscription_orders(
         src.upsert(
             spark.createDataFrame([(-5, 9)], "o_orderkey bigint, flag bigint")
         )
-        drain()  # same checkpoint, re-pinned onto the evolved schema
+        catch_up()  # same checkpoint, re-pinned onto the evolved schema
         got, want = rep.read(), src.read()
         mismatch = _row_set_mismatch(got, want, ["o_orderkey", "flag"])
         agg = got.agg(
@@ -661,8 +605,6 @@ def cdf_schema_evolution_subscription_orders(
             "n_mismatch bigint",
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 CDF_SCHEMA_EVOLUTION_SUBSCRIPTION_SQL = f"""
@@ -986,10 +928,6 @@ def streaming_sliding_window_replay_events(
     Scale: state is bounded by (windows in the watermark horizon) x
     (group keys) — closed windows are evicted at emission; the shuffle
     key is (window, event_type), never a global window."""
-    import os
-    import shutil
-    import tempfile
-
     ev = (
         read_table(spark, sf_dir, "events")
         .where(F.col("ts").isNotNull())
@@ -999,26 +937,22 @@ def streaming_sliding_window_replay_events(
             "user_id",
         )
     )
+    from nasa_asteroid_data_lakehouse_spark.streaming.replay import (
+        drain_to_parquet,
+        file_stream,
+    )
     from nasa_asteroid_data_lakehouse_spark.streaming.tuning import (
         write_time_quartile_batches,
     )
 
-    tmp = scratch_dir(
-        "ndl_swr_",
-        table_scratch_bytes(os.path.join(sf_dir, "events.parquet")),
-    )
-    try:
+    with query_scratch("ndl_swr_", sf_dir, "events") as tmp:
         src = f"{tmp}/in"
         # Same time-quartile mtime-pinned batches as before, written in
         # ONE job instead of four (streaming/tuning.py).
         write_time_quartile_batches(ev, src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
         agg = (
-            stream.withWatermark("ts", "0 seconds")
+            file_stream(spark, ev, src)
+            .withWatermark("ts", "0 seconds")
             .groupBy(
                 F.window(
                     "ts", f"{_SWR_WINDOW_S} seconds", f"{_SWR_SLIDE_S} seconds"
@@ -1032,30 +966,7 @@ def streaming_sliding_window_replay_events(
                 .alias("user_sum"),
             )
         )
-        out = f"{tmp}/rows"
-        # Scale-adaptive state partitions for the windowed-aggregate
-        # state store (streaming has no AQE; see streaming/tuning.py).
-        from nasa_asteroid_data_lakehouse_spark.streaming.tuning import (
-            scaled_stream_shuffle,
-        )
-
-        with scaled_stream_shuffle(spark, src):
-            q = (
-                agg.writeStream.outputMode("append")
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .trigger(availableNow=True)
-                .format("parquet")
-                .start(out)
-            )
-            q.awaitTermination()
-        try:
-            got = spark.read.parquet(out)
-        except Exception:  # zero input files -> no sink directory
-            return spark.createDataFrame(
-                [],
-                "window_start timestamp_ntz, event_type string, "
-                "n_events bigint, user_sum bigint",
-            )
+        got = drain_to_parquet(spark, agg, f"{tmp}/rows", src)
         return (
             got.select(
                 F.col("w.start")
@@ -1068,8 +979,6 @@ def streaming_sliding_window_replay_events(
             .orderBy("window_start", "event_type")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 STREAMING_SLIDING_WINDOW_SQL = f"""
@@ -1123,11 +1032,7 @@ def cdf_vacuum_boundary_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cdf_stream.register(spark)
     base = _orders_base(spark, sf_dir)
-    tmp = scratch_dir(
-        "ndl_vb_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_vb_", sf_dir, "orders") as tmp:
         t = VersionedTable(spark, f"{tmp}/t", num_buckets=8)
         t.create(base, keys=["o_orderkey"])
         t.upsert(
@@ -1190,8 +1095,6 @@ def cdf_vacuum_boundary_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_inserts bigint",
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 CDF_VACUUM_BOUNDARY_SQL = f"""
@@ -1231,6 +1134,7 @@ def clone_bootstrap_replication_orders(
     from nasa_asteroid_data_lakehouse_spark.streaming.lakehouse import (
         stream_batch_watermark,
     )
+    from nasa_asteroid_data_lakehouse_spark.streaming.replay import drain
     from nasa_asteroid_data_lakehouse_spark.streaming.replication import (
         replication_sink,
     )
@@ -1241,11 +1145,7 @@ def clone_bootstrap_replication_orders(
         [(-1, -1)], "o_orderkey bigint, cents bigint"
     )
 
-    tmp = scratch_dir(
-        "ndl_cbr_",
-        table_scratch_bytes(os.path.join(sf_dir, "orders.parquet")),
-    )
-    try:
+    with query_scratch("ndl_cbr_", sf_dir, "orders") as tmp:
         src = VersionedTable(spark, f"{tmp}/src", num_buckets=8)
         src.create(base, keys=["o_orderkey"])
         src.upsert(
@@ -1271,21 +1171,10 @@ def clone_bootstrap_replication_orders(
             .option("starting_version", 2)
             .load()
         )
-        # Scale-adaptive shuffle partitions for the per-batch apply
-        # (streaming has no AQE; see streaming/tuning.py).
-        from nasa_asteroid_data_lakehouse_spark.streaming.tuning import (
-            scaled_stream_shuffle,
+        sink = replication_sink(
+            feed, rep, keys=["o_orderkey"], checkpoint_dir=f"{tmp}/ck"
         )
-
-        with scaled_stream_shuffle(spark, src.root):
-            q = (
-                replication_sink(
-                    feed, rep, keys=["o_orderkey"], checkpoint_dir=f"{tmp}/ck"
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(spark, sink, src.root)
         got, want = rep.read(), src.read()
         mismatch = _row_set_mismatch(got, want, ["o_orderkey", "cents"])
         wm_advanced = 1 if stream_batch_watermark(rep, "replication") >= 0 else 0
@@ -1307,8 +1196,6 @@ def clone_bootstrap_replication_orders(
             "bootstrap_commits bigint, watermark_advanced bigint",
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 CLONE_BOOTSTRAP_REPLICATION_SQL = f"""

@@ -19,16 +19,11 @@ commits), not a single-batch degenerate case.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
-from nasa_asteroid_data_lakehouse_spark.scratch import (
-    scratch_dir,
-    table_scratch_bytes,
-)
+from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -42,14 +37,12 @@ def streaming_rollup_replay_events(spark: SparkSession, sf_dir: str) -> DataFram
     read back.  Must equal the one-shot batch aggregation bit-for-bit
     — count/sum/min/max over an integer measure are mergeable with no
     order sensitivity, so any divergence is a fold/marker bug."""
-    import shutil
-    import tempfile
-
+    from nasa_asteroid_data_lakehouse_spark.streaming.replay import (
+        drain,
+        file_stream,
+    )
     from nasa_asteroid_data_lakehouse_spark.streaming.rollup import (
         incremental_rollup_sink,
-    )
-    from nasa_asteroid_data_lakehouse_spark.streaming.tuning import (
-        scaled_stream_shuffle,
     )
 
     ev = (
@@ -58,31 +51,18 @@ def streaming_rollup_replay_events(spark: SparkSession, sf_dir: str) -> DataFram
         .select(F.to_date("ts").alias("day"), "event_type", "user_id")
     )
 
-    tmp = scratch_dir(
-        "ndl_stream_rollup_",
-        table_scratch_bytes(os.path.join(sf_dir, "events.parquet")),
-    )
-    try:
+    with query_scratch("ndl_stream_rollup_", sf_dir, "events") as tmp:
         src = f"{tmp}/in"
         ev.repartition(4).write.parquet(src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
         root = f"{tmp}/rollup"
-        # Scale-adaptive state/shuffle partitions for the drain: AQE
-        # cannot coalesce streaming micro-batch shuffles (guide §2.2,
-        # streaming/tuning.py) — size them from the replayed bytes.
-        with scaled_stream_shuffle(spark, src):
-            q = (
-                incremental_rollup_sink(
-                    spark, stream, root, ["day", "event_type"], "user_id"
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        stream = file_stream(spark, ev, src)
+        drain(
+            spark,
+            incremental_rollup_sink(
+                spark, stream, root, ["day", "event_type"], "user_id"
+            ),
+            src,
+        )
         return (
             spark.read.parquet(f"{root}/data")
             .select(
@@ -97,8 +77,6 @@ def streaming_rollup_replay_events(spark: SparkSession, sf_dir: str) -> DataFram
             .orderBy("day", "event_type")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 STREAMING_ROLLUP_REPLAY_SQL = """

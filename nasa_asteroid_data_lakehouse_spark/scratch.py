@@ -2,11 +2,12 @@
 
 Replay-style queries (streaming drains, VersionedTable round-trips)
 build their own scaffolding — micro-batch source files, streaming
-checkpoints, sink directories, temporary table roots — use it for the
-duration of one query, and delete it in a ``finally``.  That
-scaffolding is pure scratch: it is never an input, never survives the
-query, and its durability is irrelevant (a crashed replay re-runs from
-the real parquet inputs).
+checkpoints, sink directories, temporary table roots — and use it for
+the duration of one query.  ``query_scratch`` is that lifecycle: one
+directory sized from the query's source table, removed when the
+``with`` block returns or raises.  That scaffolding is pure scratch:
+it is never an input, never survives the query, and its durability is
+irrelevant (a crashed replay re-runs from the real parquet inputs).
 
 Structured Streaming checkpoints, however, fsync every offset-log,
 commit-log and state-store delta file.  On block devices with slow
@@ -15,19 +16,23 @@ sf0.1: the FULL OUTER join replay's drain phase halves, 11.6 s ->
 6.0 s, when the checkpoint moves from a ~6 ms-fsync disk to tmpfs).
 None of that I/O is the operator under measurement.
 
-``scratch_dir`` therefore prefers a RAM-backed tmpfs (``/dev/shm``)
-for this scaffolding, overridable with ``$NDL_SCRATCH_DIR`` (set it to
-a durable path when a deployment wants replay checkpoints to survive a
-driver crash mid-query), falling back to the system tempdir.  In a
-production pipeline long-lived streams pass their own durable
-``checkpointLocation`` explicitly — this helper is only for
-query-scoped scratch that is removed when the query returns.
+``scratch_dir`` (and so ``query_scratch``) therefore prefers a
+RAM-backed tmpfs (``/dev/shm``) for this scaffolding, overridable with
+``$NDL_SCRATCH_DIR`` (set it to a durable path when a deployment wants
+replay checkpoints to survive a driver crash mid-query), falling back
+to the system tempdir.  In a production pipeline long-lived streams
+pass their own durable ``checkpointLocation`` explicitly — these
+helpers are only for query-scoped scratch that is removed when the
+query returns.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 
 # tmpfs must hold a whole replay's scaffolding with headroom; container
@@ -73,15 +78,24 @@ def scratch_dir(prefix: str, expect_bytes: int | None = None) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=scratch_base(expect_bytes))
 
 
-def table_scratch_bytes(*paths: str, factor: int = 8) -> int:
-    """Size hint for a VersionedTable/replay scratch root built from
-    the given source file(s)/dir(s): ``factor`` x their on-disk bytes.
+@contextmanager
+def query_scratch(prefix: str, sf_dir: str, table: str) -> Iterator[str]:
+    """Scratch directory for one query, removed when the block returns
+    or raises.  A query that returns a frame built on this directory
+    must materialize it inside the block (e.g.
+    ``localCheckpoint(eager=True)``).
 
-    A lake round-trip keeps every commit's files until vacuum (3-5
-    commits, each O(touched buckets) plus the v0 full copy) and a
-    replay adds batch files + checkpoint state; 8x the (compressed
-    parquet) source is a conservative envelope for all current
-    callers."""
+    The size hint is 8x the on-disk bytes of ``table``'s parquet under
+    ``sf_dir``: a lake round-trip keeps every commit's files until
+    vacuum (3-5 commits, each O(touched buckets) plus the v0 full copy)
+    and a replay adds batch files + checkpoint state, so 8x the
+    (compressed parquet) source is a conservative envelope for all
+    current callers."""
     from nasa_asteroid_data_lakehouse_spark.streaming.tuning import dir_bytes
 
-    return factor * dir_bytes(*paths)
+    source = os.path.join(sf_dir, f"{table}.parquet")
+    tmp = scratch_dir(prefix, 8 * dir_bytes(source))
+    try:
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

@@ -23,7 +23,11 @@ bytes the replay will stream (the batch files/table it just wrote), so
 the setting is data-adaptive, not tuned to either local mode or a
 cluster:  ``clamp(ceil(bytes / bytes_per_partition), floor, session)``.
 The session value is restored after the stream drains — batch plans in
-the same query keep their AQE-coalesced sizing.
+the same query keep their AQE-coalesced sizing.  Every plans replay
+drains through ``streaming.replay.drain``, which always applies it
+(the session-window replay also measured 39 s -> 6 s at sf0.1 with
+32 -> scaled partitions); stateless replays (stream-static enrich, the
+CDF subscription) pay nothing for it.
 """
 
 from __future__ import annotations

@@ -189,7 +189,7 @@ def run_fixture(spark, mod, dst: str, only, skip=frozenset(), tag="") -> list[st
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     qs, oracles = mod.queries(), mod.oracle_sql()
     if "--staged" in sys.argv:
-        # round-10 staging (r09's batch is registered since REGISTER_R09)
+        # the staged batch (r11) is gated without touching the served surface
         from nasa_asteroid_data_lakehouse_spark.plans import r11_queries
 
         qs = {**qs, **r11_queries.STAGED_QUERIES}

@@ -387,9 +387,8 @@ def main() -> int:
 
     qs, oracles = mod.queries(), mod.oracle_sql()
     if staged:
-        # round-(N+1) staging: gate queries built this round WITHOUT
-        # touching the served surface (REGISTER_R09 flipped in round 9,
-        # so the r10 batch is now the staged one)
+        # staging: gate the r11 batch WITHOUT touching the served
+        # surface (r05-r10 are registered unconditionally)
         from nasa_asteroid_data_lakehouse_spark.plans import r11_queries
 
         qs = {**qs, **r11_queries.STAGED_QUERIES}

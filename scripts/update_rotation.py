@@ -131,6 +131,47 @@ REPROVE: dict[int, list[str]] = {
         "merge_upsert_orders",
         "streaming_rollup_replay_events",
     ],
+    # r16: every registered replay moved onto one scratch lifecycle
+    # (scratch.query_scratch) and the stream replays onto one drain
+    # (streaming/replay.py) that raises on watermark drops and reads the
+    # sink with the stream's schema; vacuum now reaches optimize's
+    # nested files.  Streaming replays first, then the lake round trips.
+    16: [
+        "streaming_score_replay_documents",
+        "streaming_session_replay_events",
+        "streaming_dedup_replay_events",
+        "streaming_upsert_replay_events",
+        "streaming_interval_join_replay_events",
+        "streaming_enrich_replay_events",
+        "streaming_outer_join_replay_events",
+        "streaming_full_outer_join_replay_events",
+        "streaming_cdf_subscription_orders",
+        "streaming_replication_orders",
+        "streaming_rollup_replay_events",
+        "file_skipping_stats_orders",
+        "versioned_table_cdf_orders",
+        "versioned_table_delete_cdf_orders",
+        "versioned_table_schema_evolution_orders",
+        "versioned_table_key_delete_orders",
+        "compaction_roundtrip_orders",
+        "cdc_apply_roundtrip_orders",
+        "txn_consistent_snapshot_orders",
+        "zorder_optimize_roundtrip_orders",
+        "cdc_apply_schema_evolution_orders",
+        "ivm_incremental_dim_orders",
+        "clone_divergence_orders",
+        "vacuum_retention_orders",
+        "rebucket_roundtrip_orders",
+        "physical_erasure_audit_orders",
+        "time_travel_timestamp_orders",
+        "restore_undo_feed_orders",
+        "dv_merge_on_read_orders",
+        "dv_upsert_materialize_orders",
+        "lake_history_audit_orders",
+        "cdf_stream_replay_orders",
+        "dv_vector_store_topk_embeddings",
+        "optimize_dv_purge_orders",
+    ],
 }
 
 
@@ -144,57 +185,7 @@ def main() -> None:
     except (OSError, ValueError):
         state = {"rounds": []}
 
-    # the full registry, unrotated
-    full: dict = {}
-    from nasa_asteroid_data_lakehouse_spark.plans import (
-        analytics_queries,
-        curation_queries,
-        llm_queries,
-        neows_queries,
-        r05b_queries,
-        streaming_queries,
-        operator_queries,
-        stats_queries,
-        tpch_queries,
-    )
-    from nasa_asteroid_data_lakehouse_spark.plans import queries as plans
-
-    full["q1_pricing_summary"] = plans.q1_pricing_summary
-    full["q3_top_unshipped_orders"] = plans.q3_top_unshipped_orders
-    full["q5_revenue_by_nation"] = plans.q5_revenue_by_nation
-    full.update(operator_queries.QUERIES)
-    full.update(llm_queries.QUERIES)
-    full.update(analytics_queries.QUERIES)
-    full.update(tpch_queries.QUERIES)
-    full.update(curation_queries.QUERIES)
-    full.update(stats_queries.QUERIES)
-    full.update(neows_queries.QUERIES)
-    full.update(streaming_queries.QUERIES)
-    full.update(r05b_queries.QUERIES)
-    if getattr(entry, "REGISTER_R05", False):
-        from nasa_asteroid_data_lakehouse_spark.plans import r05_queries
-
-        full.update(r05_queries.STAGED_QUERIES)
-    if getattr(entry, "REGISTER_R06", False):
-        from nasa_asteroid_data_lakehouse_spark.plans import r06_queries
-
-        full.update(r06_queries.STAGED_QUERIES)
-    if getattr(entry, "REGISTER_R07", False):
-        from nasa_asteroid_data_lakehouse_spark.plans import r07_queries
-
-        full.update(r07_queries.STAGED_QUERIES)
-    if getattr(entry, "REGISTER_R08", False):
-        from nasa_asteroid_data_lakehouse_spark.plans import r08_queries
-
-        full.update(r08_queries.STAGED_QUERIES)
-    if getattr(entry, "REGISTER_R09", False):
-        from nasa_asteroid_data_lakehouse_spark.plans import r09_queries
-
-        full.update(r09_queries.STAGED_QUERIES)
-    if getattr(entry, "REGISTER_R10", False):
-        from nasa_asteroid_data_lakehouse_spark.plans import r10_queries
-
-        full.update(r10_queries.STAGED_QUERIES)
+    full = entry._registry("QUERIES")  # the full registry, unrotated
 
     red, green, _ = entry._driver_history()
     seen = set(red) | set(green)

@@ -26,7 +26,7 @@ _BNLJ_ALLOWED = {
     # jsd's pair skeleton: inequality self-join over the O(groups)
     # totals table — bounded broadcast-anchor shape by construction.
     "jsd_source_pairs",
-    # r05 staged (no effect until REGISTER_R05): bounded broadcast-
+    # r05: bounded broadcast-
     # anchor recall audits, same shape as quantized_recall
     "truncated_dim_recall_embeddings",
     "ivf_recall_embeddings",
@@ -41,7 +41,7 @@ _BNLJ_ALLOWED = {
     "pq_adc_recall_embeddings",
     # r05b: two single-row aggregates cross-joined (node/edge counts)
     "kcore_peel_documents",
-    # r06 staged (inert until REGISTER_R06): bounded single-row /
+    # r06: bounded single-row /
     # broadcast-anchor crossJoin shapes, audited at staging time
     "stl_decomposition_daily_events",   # 1-row grand-mean broadcast
     "stump_split_events",               # 19-row threshold grid broadcast
@@ -108,16 +108,16 @@ _BNLJ_ALLOWED = {
     # r06: single-row percentile-boundary + count broadcast feeding the
     # bucketed exact-rank NTILE rewrite (VERDICT r05 ask #2)
     "lorenz_deciles_orders",
-    # r07 staged (inert until REGISTER_R07): audited bounded shapes
+    # r07: audited bounded shapes
     "skyline_daily_events",      # O(days) broadcast dominance anti-join
     "bootstrap_ci_orders",       # 1-row CI broadcast onto 1-row base
     "tfidf_cosine_pairs_documents",  # 1-row corpus-count broadcast
-    # r08 staged (inert until REGISTER_R08): audited bounded shapes
+    # r08: audited bounded shapes
     "ivfpq_recall_embeddings",   # broadcast anchors x corpus (as pq_adc_recall)
     "lsh_index_maintenance_embeddings",  # single-row total/count broadcasts
     "clone_divergence_orders",   # two 1-row audit aggregates cross-joined
     "minhash_band_sweep_documents",  # 1-row verified/truth-count broadcasts
-    # r09 staged (inert until REGISTER_R09): broadcast anchors x corpus
+    # r09: broadcast anchors x corpus
     # + 1-row exact/total-count broadcasts (as ivf_recall)
     "ivf_nprobe_sweep_embeddings",
     # r09 sweeps (caught by this scan at registration, audited):
@@ -126,7 +126,7 @@ _BNLJ_ALLOWED = {
     # per-lang-total broadcast onto the bounded lang-weight grid
     "jaccard_threshold_sweep_documents",
     "mixture_temperature_sweep_documents",
-    # r10 staged (inert until REGISTER_R10): broadcast anchors x corpus
+    # r10: broadcast anchors x corpus
     # (as quantized_recall) — one shared pair frame, 3 rank filters
     "quant_bits_sweep_embeddings",
     # single-row group-total / series-mean broadcasts

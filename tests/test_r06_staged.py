@@ -1,7 +1,7 @@
 """Pins for the round-6 STAGED query batch (plans/r06_queries.py) —
-gate-verified in round 5 behind ``driver_sim --staged``, registered at
-round-6 start by flipping ``REGISTER_R06``.  These tests keep the
-staged queries (and the operators underneath) green in the meantime.
+gate-verified in round 5 behind ``driver_sim --staged``, registered
+in ``__spark_entry__`` since round 6.  These tests keep the queries
+(and the operators underneath) green.
 """
 
 import datetime as dt

@@ -1,7 +1,7 @@
 """Pins for the round-7 STAGED query batch (plans/r07_queries.py) —
-gate-verified in round 6 behind ``driver_sim --staged``, registered at
-round-7 start by flipping ``REGISTER_R07``.  These tests keep the
-staged queries green in the meantime, with synthetic micro-fixtures
+gate-verified in round 6 behind ``driver_sim --staged``, registered
+in ``__spark_entry__`` since round 7.  These tests keep the queries
+green with synthetic micro-fixtures
 that pin the SEMANTICS (not just oracle agreement).
 """
 

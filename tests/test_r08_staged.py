@@ -1,6 +1,6 @@
 """Pins for the round-8 STAGED query batch (plans/r08_queries.py) —
-gate-verified in round 7 behind ``driver_sim --staged``, registered at
-round-8 start by flipping ``REGISTER_R08``.  These tests pin the
+gate-verified in round 7 behind ``driver_sim --staged``, registered
+in ``__spark_entry__`` since round 8.  These tests pin the
 SEMANTICS with synthetic micro-fixtures (not just oracle agreement).
 """
 

@@ -1,6 +1,6 @@
 """Pins for the round-9 STAGED query batch (plans/r09_queries.py) —
-gate-verified in round 8 behind ``driver_sim --staged``, to be
-registered at round-9 start by flipping ``REGISTER_R09``.  These tests
+gate-verified in round 8 behind ``driver_sim --staged``, registered
+in ``__spark_entry__`` since round 9.  These tests
 pin the SEMANTICS with synthetic micro-fixtures (not just oracle
 agreement).
 """

@@ -1,7 +1,7 @@
 import pytest
 """Pins for the round-10 STAGED query batch (plans/r10_queries.py) —
-gate-verified in round 9 behind ``driver_sim --staged``, to be
-registered at round-10 start by flipping ``REGISTER_R10``.  These tests
+gate-verified in round 9 behind ``driver_sim --staged``, registered
+in ``__spark_entry__`` since round 10.  These tests
 pin the SEMANTICS with synthetic micro-fixtures (not just oracle
 agreement); the lake mechanics themselves are pinned in
 tests/test_versioned_table.py (timestamp resolution, restore, deletion

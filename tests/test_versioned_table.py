@@ -104,6 +104,44 @@ def test_vacuum_removes_unreferenced_files(spark, table):
         table.read(version=0).count()
 
 
+def test_vacuum_after_optimize_leaves_no_erased_rows_on_disk(spark, tmp_path):
+    """optimize nests its files under ``__slot=``; once a later rewrite
+    purges a deferred delete, vacuum must reach those nested files so
+    no erased key survives anywhere under ``data/``, and no
+    unreferenced parquet file (or emptied txn directory) is left."""
+    t = VersionedTable(spark, str(tmp_path / "opt"), num_buckets=4)
+    df = spark.createDataFrame(
+        [(k, k % 10, k % 7, k) for k in range(200)],
+        "k bigint, x bigint, y bigint, val bigint",
+    )
+    t.create(df, keys=["k"])
+    t.optimize(["x", "y"], files_per_bucket=2)
+    t.upsert(df.withColumn("val", F.col("val") + 1))
+    t.delete_where(F.col("k") % 5 == 0, deferred=True)
+    t.upsert(df.where(F.col("k") % 5 != 0).withColumn("val", F.col("val") + 2))
+    t.vacuum(keep_last=1)
+
+    head = t._load_manifest(t.latest_version())
+    referenced = {
+        f
+        for part in ("buckets", "dvs")
+        for fs in head.get(part, {}).values()
+        for f in fs
+    }
+    on_disk = {
+        os.path.join(d, f)
+        for d, _, fs in os.walk(t._data_dir)
+        for f in fs
+        if f.endswith(".parquet")
+    }
+    assert on_disk == referenced
+    erased = spark.read.parquet(*on_disk).where(F.col("k") % 5 == 0)
+    assert erased.count() == 0
+    assert t.read().count() == 160
+    for txn in os.listdir(t._data_dir):
+        assert any(f.startswith(os.path.join(t._data_dir, txn, "")) for f in referenced)
+
+
 def test_gold_pipeline_on_versioned_tables(spark, tmp_path):
     """The NeoWs gold build runs on VersionedTable: two daily upserts,
     history recorded, time travel to day 1."""
@@ -251,8 +289,13 @@ def test_crashed_publish_keeps_head_and_vacuum_reclaims(spark, table, monkeypatc
     }
     orphans = on_disk - referenced
     assert orphans  # the data files were written before the crash
+    crashed_txns = {
+        os.path.relpath(f, table._data_dir).split(os.sep)[0] for f in orphans
+    }
     assert set(table.vacuum(keep_last=1)) == orphans
     assert sorted(map(tuple, table.read().collect())) == before
+    # the crashed txn directory goes with its files
+    assert not crashed_txns & set(os.listdir(table._data_dir))
 
     assert table.upsert(batch) == head + 1
     assert table.read().count() == len(before) + 1
