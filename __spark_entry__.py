@@ -33,22 +33,10 @@ from nasa_asteroid_data_lakehouse_spark.plans import queries as plans
 
 SF0001 = "/root/testdata/sf0.001"
 
-# Round-11 staged batch (plans/r11_queries.py, TEN queries): flip to
-# True at ROUND-11 START, after CORRECTNESS_r10 lands.  Replication
-# across rebucket (the data_change=false planner skip), maintenance
-# CDF census, transactional snapshot across deferred-delete commits,
-# upsert schema merge, schema evolution mid-subscription, Gopher
-# repetition census, Lloyd-iterated k-means (SemDeDup's clustering
-# step), sliding-window streaming replay, change-feed vacuum boundary
-# (fail-closed), clone-bootstrap replication.  Pre-wired: KEY_UNIQUE
-# entry (kmeans_lloyd_embeddings — ORDER-BY-id seeds).  Then run
-# update_rotation 11.
-REGISTER_R11 = False
-
 # Registration order is the unrotated key order of queries() and
-# oracle_sql(): modules exporting QUERIES/ORACLES first, then the
-# batches that were staged as STAGED_QUERIES/STAGED_ORACLES.
+# oracle_sql(); every module exports a QUERIES/ORACLES pair.
 _MODULES = (
+    plans,
     operator_queries,
     llm_queries,
     analytics_queries,
@@ -58,8 +46,6 @@ _MODULES = (
     neows_queries,
     streaming_queries,
     r05b_queries,
-)
-_STAGED_MODULES = (
     r05_queries,
     r06_queries,
     r07_queries,
@@ -228,28 +214,16 @@ def _rotate(full: dict) -> dict:
 
 def _registry(kind: str) -> dict:
     """Every registered query (``kind="QUERIES"``) or oracle
-    (``kind="ORACLES"``) in registration order, before rotation."""
-    if kind == "QUERIES":
-        out = {
-            "q1_pricing_summary": plans.q1_pricing_summary,
-            "q3_top_unshipped_orders": plans.q3_top_unshipped_orders,
-            "q5_revenue_by_nation": plans.q5_revenue_by_nation,
-        }
-    else:
-        out = {
-            "q1_pricing_summary": plans.Q1_SQL,
-            "q3_top_unshipped_orders": plans.Q3_SQL,
-            "q5_revenue_by_nation": plans.Q5_SQL,
-        }
+    (``kind="ORACLES"``) in registration order, before rotation.
+    Raises on a name two modules both register."""
+    out: dict = {}
     for module in _MODULES:
-        out.update(getattr(module, kind))
-    staged = list(_STAGED_MODULES)
-    if REGISTER_R11:
-        from nasa_asteroid_data_lakehouse_spark.plans import r11_queries
-
-        staged.append(r11_queries)
-    for module in staged:
-        out.update(getattr(module, f"STAGED_{kind}"))
+        for name, value in getattr(module, kind).items():
+            if name in out:
+                raise ValueError(
+                    f"{name!r} is registered twice ({module.__name__} repeats it)"
+                )
+            out[name] = value
     return out
 
 

@@ -74,7 +74,8 @@ class _Change(NamedTuple):
 class VersionedTable:
     def __init__(self, spark: SparkSession, root: str, num_buckets: int = 16):
         self.spark = spark
-        self.root = root
+        # one spelling per table: manifests store paths under this root
+        self.root = os.path.abspath(root)
         self.num_buckets = num_buckets
         os.makedirs(self._manifest_dir, exist_ok=True)
         os.makedirs(self._data_dir, exist_ok=True)
@@ -907,7 +908,12 @@ class VersionedTable:
         Every txn directory is walked to any depth (optimize nests its
         files under ``__slot=``), and a txn directory none of whose
         files is referenced is removed whole, so erased rows never
-        survive on disk and empty txn directories do not pile up."""
+        survive on disk and empty txn directories do not pile up.
+
+        Paths compare by ``realpath``, so a table written under one
+        spelling of its root and vacuumed under another keeps its live
+        files.  Raises ``FileNotFoundError`` before deleting anything if
+        a kept manifest references a file that does not exist."""
         latest = self.latest_version()
         if latest is None:
             return []
@@ -919,6 +925,13 @@ class VersionedTable:
                 referenced.update(fs)
             for fs in m.get("dvs", {}).values():
                 referenced.update(fs)  # live deletion vectors stay
+        missing = sorted(p for p in referenced if not os.path.exists(p))
+        if missing:
+            raise FileNotFoundError(
+                f"vacuum of {self.root} refused: {len(missing)} file(s) "
+                f"referenced by a kept manifest do not exist, e.g. {missing[0]}"
+            )
+        referenced = {os.path.realpath(p) for p in referenced}
         removed = []
         for txn in os.listdir(self._data_dir):
             txn_dir = os.path.join(self._data_dir, txn)
@@ -926,7 +939,7 @@ class VersionedTable:
             for d, _, fs in os.walk(txn_dir):
                 for f in fs:
                     path = os.path.join(d, f)
-                    if path in referenced:
+                    if os.path.realpath(path) in referenced:
                         live = True
                     elif f.endswith(".parquet"):
                         os.remove(path)

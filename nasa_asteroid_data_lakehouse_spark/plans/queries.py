@@ -171,3 +171,15 @@ WHERE r_name = 'ASIA'
 GROUP BY n_name
 ORDER BY revenue DESC, n_name
 """
+
+
+QUERIES = {
+    "q1_pricing_summary": q1_pricing_summary,
+    "q3_top_unshipped_orders": q3_top_unshipped_orders,
+    "q5_revenue_by_nation": q5_revenue_by_nation,
+}
+ORACLES = {
+    "q1_pricing_summary": Q1_SQL,
+    "q3_top_unshipped_orders": Q3_SQL,
+    "q5_revenue_by_nation": Q5_SQL,
+}

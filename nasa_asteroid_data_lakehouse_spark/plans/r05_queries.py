@@ -1,6 +1,5 @@
 """Round-5 batch, registered in ``__spark_entry__`` from its
-STAGED_QUERIES / STAGED_ORACLES (built and gate-verified in round 4
-behind ``driver_sim --staged``).
+QUERIES / ORACLES.
 
 The batch gives the multimodal binary-payload path (llm/multimodal.py)
 its driver-checkable surface, per VERDICT r03 ask #6: payloads are
@@ -26,8 +25,8 @@ from nasa_asteroid_data_lakehouse_spark.catalog import read_table
 from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 from nasa_asteroid_data_lakehouse_spark.llm import multimodal as mm
 
-STAGED_QUERIES: dict = {}
-STAGED_ORACLES: dict = {}
+QUERIES: dict = {}
+ORACLES: dict = {}
 
 
 # --- exact payload dedup accounting per source --------------------------------
@@ -64,8 +63,8 @@ SELECT source,
 FROM per GROUP BY source ORDER BY source
 """
 
-STAGED_QUERIES["payload_dedup_sources"] = payload_dedup_sources
-STAGED_ORACLES["payload_dedup_sources"] = PAYLOAD_DEDUP_SQL
+QUERIES["payload_dedup_sources"] = payload_dedup_sources
+ORACLES["payload_dedup_sources"] = PAYLOAD_DEDUP_SQL
 
 
 # --- keep-one-survivor payload dedup ------------------------------------------
@@ -102,8 +101,8 @@ WHERE d.doc_id IN (SELECT doc_id FROM keep) OR d.text IS NULL
 ORDER BY doc_id
 """
 
-STAGED_QUERIES["payload_survivors_documents"] = payload_survivors_documents
-STAGED_ORACLES["payload_survivors_documents"] = PAYLOAD_SURVIVORS_SQL
+QUERIES["payload_survivors_documents"] = payload_survivors_documents
+ORACLES["payload_survivors_documents"] = PAYLOAD_SURVIVORS_SQL
 
 
 # --- deterministic frame-sampling manifest ------------------------------------
@@ -171,8 +170,8 @@ FROM ex
 ORDER BY doc_id, frame_i
 """
 
-STAGED_QUERIES["frame_sample_manifest_documents"] = frame_sample_manifest_documents
-STAGED_ORACLES["frame_sample_manifest_documents"] = FRAME_SAMPLE_SQL
+QUERIES["frame_sample_manifest_documents"] = frame_sample_manifest_documents
+ORACLES["frame_sample_manifest_documents"] = FRAME_SAMPLE_SQL
 
 
 # --- streaming surprisal scoring replay ----------------------------------------
@@ -226,8 +225,8 @@ from nasa_asteroid_data_lakehouse_spark.plans.llm_queries import (  # noqa: E402
     UNIGRAM_SURPRISAL_SQL as _UNIGRAM_SQL,
 )
 
-STAGED_QUERIES["streaming_score_replay_documents"] = streaming_score_replay_documents
-STAGED_ORACLES["streaming_score_replay_documents"] = _UNIGRAM_SQL
+QUERIES["streaming_score_replay_documents"] = streaming_score_replay_documents
+ORACLES["streaming_score_replay_documents"] = _UNIGRAM_SQL
 
 
 # --- Matryoshka dimension-truncation recall ------------------------------------
@@ -297,8 +296,8 @@ SELECT ex.anchor_id AS anchor_id, n_exact,
 FROM ex LEFT JOIN hits ON ex.anchor_id = hits.anchor_id
 """
 
-STAGED_QUERIES["truncated_dim_recall_embeddings"] = truncated_dim_recall_embeddings
-STAGED_ORACLES["truncated_dim_recall_embeddings"] = TRUNCATED_DIM_RECALL_SQL
+QUERIES["truncated_dim_recall_embeddings"] = truncated_dim_recall_embeddings
+ORACLES["truncated_dim_recall_embeddings"] = TRUNCATED_DIM_RECALL_SQL
 
 
 # --- DELETE WHERE through the lakehouse path ------------------------------------
@@ -350,8 +349,8 @@ FROM del
 HAVING COUNT(*) > 0
 """
 
-STAGED_QUERIES["versioned_table_delete_cdf_orders"] = versioned_table_delete_cdf_orders
-STAGED_ORACLES["versioned_table_delete_cdf_orders"] = VT_DELETE_CDF_SQL
+QUERIES["versioned_table_delete_cdf_orders"] = versioned_table_delete_cdf_orders
+ORACLES["versioned_table_delete_cdf_orders"] = VT_DELETE_CDF_SQL
 
 
 # --- IVF cell-probing recall ----------------------------------------------------
@@ -462,8 +461,8 @@ SELECT ex.anchor_id AS anchor_id, n_exact,
 FROM ex LEFT JOIN hits ON ex.anchor_id = hits.anchor_id
 """
 
-STAGED_QUERIES["ivf_recall_embeddings"] = ivf_recall_embeddings
-STAGED_ORACLES["ivf_recall_embeddings"] = IVF_RECALL_SQL
+QUERIES["ivf_recall_embeddings"] = ivf_recall_embeddings
+ORACLES["ivf_recall_embeddings"] = IVF_RECALL_SQL
 
 
 # --- streaming session-window replay ---------------------------------------------
@@ -574,5 +573,5 @@ from nasa_asteroid_data_lakehouse_spark.plans.analytics_queries import (  # noqa
     NATIVE_SESSION_SQL as _NATIVE_SESSION_SQL,
 )
 
-STAGED_QUERIES["streaming_session_replay_events"] = streaming_session_replay_events
-STAGED_ORACLES["streaming_session_replay_events"] = _NATIVE_SESSION_SQL
+QUERIES["streaming_session_replay_events"] = streaming_session_replay_events
+ORACLES["streaming_session_replay_events"] = _NATIVE_SESSION_SQL

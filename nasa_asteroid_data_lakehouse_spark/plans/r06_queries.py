@@ -1,6 +1,5 @@
 """Round-6 batch, registered in ``__spark_entry__`` from its
-STAGED_QUERIES / STAGED_ORACLES (gate-verified in round 5 behind
-``driver_sim --staged``).
+QUERIES / ORACLES.
 
 Families: seasonal decomposition (STL-style trend/seasonal/residual),
 survival analysis (Kaplan–Meier over inter-order gaps), score
@@ -33,8 +32,8 @@ from nasa_asteroid_data_lakehouse_spark.catalog import read_table
 from nasa_asteroid_data_lakehouse_spark.llm import similarity, text
 from nasa_asteroid_data_lakehouse_spark.operators.stats import finite
 
-STAGED_QUERIES: dict = {}
-STAGED_ORACLES: dict = {}
+QUERIES: dict = {}
+ORACLES: dict = {}
 
 # DuckDB twin of llm/text.normalized_text (NULL propagates)
 _NORM = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
@@ -136,10 +135,10 @@ SELECT t2.ds, t2.total, t2.trend,
 FROM t2 LEFT JOIN sea ON sea.dow = t2.dow
 """
 
-STAGED_QUERIES["stl_decomposition_daily_events"] = (
+QUERIES["stl_decomposition_daily_events"] = (
     stl_decomposition_daily_events
 )
-STAGED_ORACLES["stl_decomposition_daily_events"] = STL_DECOMPOSITION_SQL
+ORACLES["stl_decomposition_daily_events"] = STL_DECOMPOSITION_SQL
 
 
 # === Kaplan–Meier survival over inter-order gaps =============================
@@ -237,8 +236,8 @@ WINDOW w_cum AS (ORDER BY gap_days
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
 """
 
-STAGED_QUERIES["kaplan_meier_orders"] = kaplan_meier_orders
-STAGED_ORACLES["kaplan_meier_orders"] = KAPLAN_MEIER_SQL
+QUERIES["kaplan_meier_orders"] = kaplan_meier_orders
+ORACLES["kaplan_meier_orders"] = KAPLAN_MEIER_SQL
 
 
 # === quality-score calibration (reliability diagram) =========================
@@ -327,8 +326,8 @@ FROM scored s JOIN dups d ON d.key = s.key
 GROUP BY LEAST(CAST(floor(s.score * 10) AS BIGINT), 9)
 """
 
-STAGED_QUERIES["calibration_curve_documents"] = calibration_curve_documents
-STAGED_ORACLES["calibration_curve_documents"] = CALIBRATION_CURVE_SQL
+QUERIES["calibration_curve_documents"] = calibration_curve_documents
+ORACLES["calibration_curve_documents"] = CALIBRATION_CURVE_SQL
 
 
 # === decision-stump information gain =========================================
@@ -448,8 +447,8 @@ SELECT ROUND(t, 6) AS threshold,
 FROM agg
 """
 
-STAGED_QUERIES["stump_split_events"] = stump_split_events
-STAGED_ORACLES["stump_split_events"] = STUMP_SPLIT_SQL
+QUERIES["stump_split_events"] = stump_split_events
+ORACLES["stump_split_events"] = STUMP_SPLIT_SQL
 
 
 # === Burrows' Delta stylometric distance =====================================
@@ -619,8 +618,8 @@ FROM z a JOIN z b ON a.tok = b.tok AND a.source < b.source
 GROUP BY a.source, b.source
 """
 
-STAGED_QUERIES["stylometry_delta_sources"] = stylometry_delta_sources
-STAGED_ORACLES["stylometry_delta_sources"] = STYLOMETRY_DELTA_SQL
+QUERIES["stylometry_delta_sources"] = stylometry_delta_sources
+ORACLES["stylometry_delta_sources"] = STYLOMETRY_DELTA_SQL
 
 
 # === PCA leading component via power iteration ===============================
@@ -886,10 +885,10 @@ FROM {prev} v, sgn, lam
 """
 
 
-STAGED_QUERIES["pca_power_iteration_embeddings"] = (
+QUERIES["pca_power_iteration_embeddings"] = (
     pca_power_iteration_embeddings
 )
-STAGED_ORACLES["pca_power_iteration_embeddings"] = _pca_sql()
+ORACLES["pca_power_iteration_embeddings"] = _pca_sql()
 
 
 # === Markov stationary distribution over event-type transitions ==============
@@ -1041,8 +1040,8 @@ SELECT state AS event_type, ROUND(pi, 6) AS stationary_prob FROM {prev}
 """
 
 
-STAGED_QUERIES["markov_stationary_events"] = markov_stationary_events
-STAGED_ORACLES["markov_stationary_events"] = _markov_sql()
+QUERIES["markov_stationary_events"] = markov_stationary_events
+ORACLES["markov_stationary_events"] = _markov_sql()
 
 
 # === NDCG@k / MRR of the LSH probe ranking ===================================
@@ -1133,8 +1132,8 @@ FROM ex LEFT JOIN flags ON flags.anchor_id = ex.anchor_id
 """
 
 
-STAGED_QUERIES["ndcg_lsh_embeddings"] = ndcg_lsh_embeddings
-STAGED_ORACLES["ndcg_lsh_embeddings"] = _ndcg_sql()
+QUERIES["ndcg_lsh_embeddings"] = ndcg_lsh_embeddings
+ORACLES["ndcg_lsh_embeddings"] = _ndcg_sql()
 
 
 # === pairwise Kolmogorov–Smirnov matrix over sources =========================
@@ -1226,8 +1225,8 @@ FROM ecdf a JOIN ecdf b ON a.len = b.len AND a.source < b.source
 GROUP BY a.source, b.source
 """
 
-STAGED_QUERIES["ks_matrix_sources"] = ks_matrix_sources
-STAGED_ORACLES["ks_matrix_sources"] = KS_MATRIX_SQL
+QUERIES["ks_matrix_sources"] = ks_matrix_sources
+ORACLES["ks_matrix_sources"] = KS_MATRIX_SQL
 
 
 # === empirical-Bayes shrunk duplicate rates ==================================
@@ -1309,8 +1308,8 @@ SELECT source, CAST(n_docs AS BIGINT) AS n_docs,
 FROM per_source, pooled
 """
 
-STAGED_QUERIES["shrunk_dup_rates_sources"] = shrunk_dup_rates_sources
-STAGED_ORACLES["shrunk_dup_rates_sources"] = SHRUNK_DUP_RATES_SQL
+QUERIES["shrunk_dup_rates_sources"] = shrunk_dup_rates_sources
+ORACLES["shrunk_dup_rates_sources"] = SHRUNK_DUP_RATES_SQL
 
 
 # === simhash vs minhash pair-set agreement ===================================
@@ -1414,10 +1413,10 @@ FROM nm, nsh, nb
 """
 
 
-STAGED_QUERIES["simhash_vs_minhash_agreement_documents"] = (
+QUERIES["simhash_vs_minhash_agreement_documents"] = (
     simhash_vs_minhash_agreement_documents
 )
-STAGED_ORACLES["simhash_vs_minhash_agreement_documents"] = _agreement_sql()
+ORACLES["simhash_vs_minhash_agreement_documents"] = _agreement_sql()
 
 
 # === conformal-style coverage bands ==========================================
@@ -1492,8 +1491,8 @@ WHERE t.event_id % 2 = 1
 GROUP BY t.event_type, b.lo, b.hi
 """
 
-STAGED_QUERIES["conformal_band_events"] = conformal_band_events
-STAGED_ORACLES["conformal_band_events"] = CONFORMAL_BAND_SQL
+QUERIES["conformal_band_events"] = conformal_band_events
+ORACLES["conformal_band_events"] = CONFORMAL_BAND_SQL
 
 
 # === two-component PCA via deflation =========================================
@@ -1702,10 +1701,10 @@ FROM wa JOIN wb ON wb.dim = wa.dim, lama, lamb
 """
 
 
-STAGED_QUERIES["pca_two_components_embeddings"] = (
+QUERIES["pca_two_components_embeddings"] = (
     pca_two_components_embeddings
 )
-STAGED_ORACLES["pca_two_components_embeddings"] = _pca2_sql()
+ORACLES["pca_two_components_embeddings"] = _pca2_sql()
 
 
 # === Good-Turing frequency spectrum ==========================================
@@ -1802,8 +1801,8 @@ LEFT JOIN spectrum nx ON nx.r = s.r + 1, total
 WHERE s.r <= {_GT_MAX_R}
 """
 
-STAGED_QUERIES["good_turing_documents"] = good_turing_documents
-STAGED_ORACLES["good_turing_documents"] = GOOD_TURING_SQL
+QUERIES["good_turing_documents"] = good_turing_documents
+ORACLES["good_turing_documents"] = GOOD_TURING_SQL
 
 
 # === Gumbel (EV-I) fit of daily maxima =======================================
@@ -1869,8 +1868,8 @@ FROM mom
 WHERE n_days > 0
 """
 
-STAGED_QUERIES["gumbel_fit_daily_events"] = gumbel_fit_daily_events
-STAGED_ORACLES["gumbel_fit_daily_events"] = GUMBEL_FIT_SQL
+QUERIES["gumbel_fit_daily_events"] = gumbel_fit_daily_events
+ORACLES["gumbel_fit_daily_events"] = GUMBEL_FIT_SQL
 
 
 # === Hill tail-index estimator ===============================================
@@ -1937,5 +1936,5 @@ SELECT CAST(k AS BIGINT) AS k, ROUND(xk, 2) AS x_k,
 FROM excess GROUP BY k, xk
 """
 
-STAGED_QUERIES["hill_tail_index_orders"] = hill_tail_index_orders
-STAGED_ORACLES["hill_tail_index_orders"] = HILL_TAIL_SQL
+QUERIES["hill_tail_index_orders"] = hill_tail_index_orders
+ORACLES["hill_tail_index_orders"] = HILL_TAIL_SQL

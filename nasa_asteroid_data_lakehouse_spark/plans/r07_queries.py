@@ -1,6 +1,5 @@
 """Round-7 batch, registered in ``__spark_entry__`` from its
-STAGED_QUERIES / STAGED_ORACLES (gate-verified in round 6 behind
-``driver_sim --staged``).
+QUERIES / ORACLES.
 
 Families (VERDICT r05 ask #3 plus thinnest-coverage extensions):
 embedding-space split-leakage audit (cross-split cosine near-dups,
@@ -36,8 +35,8 @@ from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 from nasa_asteroid_data_lakehouse_spark.llm import similarity, text
 from nasa_asteroid_data_lakehouse_spark.operators.stats import finite
 
-STAGED_QUERIES: dict = {}
-STAGED_ORACLES: dict = {}
+QUERIES: dict = {}
+ORACLES: dict = {}
 
 # DuckDB twin of llm/text.normalized_text (NULL propagates)
 _NORM = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
@@ -110,8 +109,8 @@ WHERE NOT EXISTS (
 ORDER BY ds
 """
 
-STAGED_QUERIES["skyline_daily_events"] = skyline_daily_events
-STAGED_ORACLES["skyline_daily_events"] = SKYLINE_SQL
+QUERIES["skyline_daily_events"] = skyline_daily_events
+ORACLES["skyline_daily_events"] = SKYLINE_SQL
 
 
 # === Seasonal-naive forecast error (MASE) =====================================
@@ -221,8 +220,8 @@ FROM snaive s FULL OUTER JOIN naive n
 ORDER BY event_type
 """
 
-STAGED_QUERIES["mase_seasonal_naive_events"] = mase_seasonal_naive_events
-STAGED_ORACLES["mase_seasonal_naive_events"] = MASE_SQL
+QUERIES["mase_seasonal_naive_events"] = mase_seasonal_naive_events
+ORACLES["mase_seasonal_naive_events"] = MASE_SQL
 
 
 # === Binary-payload block-level dedup =========================================
@@ -317,8 +316,8 @@ GROUP BY source
 ORDER BY source
 """
 
-STAGED_QUERIES["payload_block_dedup_documents"] = payload_block_dedup_documents
-STAGED_ORACLES["payload_block_dedup_documents"] = PAYLOAD_BLOCK_SQL
+QUERIES["payload_block_dedup_documents"] = payload_block_dedup_documents
+ORACLES["payload_block_dedup_documents"] = PAYLOAD_BLOCK_SQL
 
 
 # === Rendezvous-hash shard churn ==============================================
@@ -396,10 +395,10 @@ GROUP BY shard9
 ORDER BY shard9
 """
 
-STAGED_QUERIES["rendezvous_shard_churn_documents"] = (
+QUERIES["rendezvous_shard_churn_documents"] = (
     rendezvous_shard_churn_documents
 )
-STAGED_ORACLES["rendezvous_shard_churn_documents"] = RENDEZVOUS_SQL
+ORACLES["rendezvous_shard_churn_documents"] = RENDEZVOUS_SQL
 
 
 # === Poisson-bootstrap confidence interval ====================================
@@ -560,8 +559,8 @@ SELECT n_orders,
 FROM base, ci
 """.replace("{POIS}", _pois_case_sql())
 
-STAGED_QUERIES["bootstrap_ci_orders"] = bootstrap_ci_orders
-STAGED_ORACLES["bootstrap_ci_orders"] = BOOTSTRAP_SQL
+QUERIES["bootstrap_ci_orders"] = bootstrap_ci_orders
+ORACLES["bootstrap_ci_orders"] = BOOTSTRAP_SQL
 
 
 # === Size-budgeted deterministic shard manifest ================================
@@ -659,8 +658,8 @@ GROUP BY shard
 ORDER BY shard
 """
 
-STAGED_QUERIES["shard_manifest_documents"] = shard_manifest_documents
-STAGED_ORACLES["shard_manifest_documents"] = SHARD_MANIFEST_SQL
+QUERIES["shard_manifest_documents"] = shard_manifest_documents
+ORACLES["shard_manifest_documents"] = SHARD_MANIFEST_SQL
 
 
 # === Split-centroid embedding drift ===========================================
@@ -788,10 +787,10 @@ FROM pivoted
 ORDER BY dim
 """
 
-STAGED_QUERIES["centroid_drift_splits_embeddings"] = (
+QUERIES["centroid_drift_splits_embeddings"] = (
     centroid_drift_splits_embeddings
 )
-STAGED_ORACLES["centroid_drift_splits_embeddings"] = CENTROID_DRIFT_SQL
+ORACLES["centroid_drift_splits_embeddings"] = CENTROID_DRIFT_SQL
 
 
 # === Embedding-space split-leakage audit ======================================
@@ -932,10 +931,10 @@ ORDER BY split_x, split_y
 """
 
 
-STAGED_QUERIES["embedding_split_leakage_embeddings"] = (
+QUERIES["embedding_split_leakage_embeddings"] = (
     embedding_split_leakage_embeddings
 )
-STAGED_ORACLES["embedding_split_leakage_embeddings"] = _esl_sql()
+ORACLES["embedding_split_leakage_embeddings"] = _esl_sql()
 
 
 # === Sparse lexical (tf-idf) cosine similarity join ===========================
@@ -1071,8 +1070,8 @@ ORDER BY cosine_sim DESC, id_a, id_b
 LIMIT {_TFIDF_TOPK}
 """
 
-STAGED_QUERIES["tfidf_cosine_pairs_documents"] = tfidf_cosine_pairs_documents
-STAGED_ORACLES["tfidf_cosine_pairs_documents"] = TFIDF_COSINE_SQL
+QUERIES["tfidf_cosine_pairs_documents"] = tfidf_cosine_pairs_documents
+ORACLES["tfidf_cosine_pairs_documents"] = TFIDF_COSINE_SQL
 
 
 # === LSH-kNN hubness audit ====================================================
@@ -1109,8 +1108,8 @@ def _hub_sql() -> str:
     return r08_queries.HUBNESS_AUTOPLANE_SQL
 
 
-STAGED_QUERIES["hubness_lsh_embeddings"] = hubness_lsh_embeddings
-STAGED_ORACLES["hubness_lsh_embeddings"] = _hub_sql()
+QUERIES["hubness_lsh_embeddings"] = hubness_lsh_embeddings
+ORACLES["hubness_lsh_embeddings"] = _hub_sql()
 
 
 # === CDF apply round-trip =====================================================
@@ -1213,8 +1212,8 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_actual,
 FROM finals
 """
 
-STAGED_QUERIES["cdc_apply_roundtrip_orders"] = cdc_apply_roundtrip_orders
-STAGED_ORACLES["cdc_apply_roundtrip_orders"] = CDC_APPLY_SQL
+QUERIES["cdc_apply_roundtrip_orders"] = cdc_apply_roundtrip_orders
+ORACLES["cdc_apply_roundtrip_orders"] = CDC_APPLY_SQL
 
 
 # === Streaming exactly-once dedup replay ======================================
@@ -1293,8 +1292,8 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_unique,
 FROM d
 """
 
-STAGED_QUERIES["streaming_dedup_replay_events"] = streaming_dedup_replay_events
-STAGED_ORACLES["streaming_dedup_replay_events"] = STREAMING_DEDUP_SQL
+QUERIES["streaming_dedup_replay_events"] = streaming_dedup_replay_events
+ORACLES["streaming_dedup_replay_events"] = STREAMING_DEDUP_SQL
 
 
 # === Span-level dedup REWRITE =================================================
@@ -1432,5 +1431,5 @@ SELECT b.doc_id,
 FROM base b LEFT JOIN surv s USING (doc_id)
 """
 
-STAGED_QUERIES["span_dedup_rewrite_documents"] = span_dedup_rewrite_documents
-STAGED_ORACLES["span_dedup_rewrite_documents"] = SPAN_REWRITE_SQL
+QUERIES["span_dedup_rewrite_documents"] = span_dedup_rewrite_documents
+ORACLES["span_dedup_rewrite_documents"] = SPAN_REWRITE_SQL

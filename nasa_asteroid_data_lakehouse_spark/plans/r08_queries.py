@@ -1,6 +1,5 @@
 """Round-8 batch, registered in ``__spark_entry__`` from its
-STAGED_QUERIES / STAGED_ORACLES (gate-verified in round 7 behind
-``driver_sim --staged``).
+QUERIES / ORACLES.
 
 Families (VERDICT r06 ask #4, where coverage is thinnest):
 composite IVF-PQ ANN — top-k AND its recall audit (the production
@@ -43,8 +42,8 @@ from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 from nasa_asteroid_data_lakehouse_spark.llm import similarity
 from nasa_asteroid_data_lakehouse_spark.operators.stats import finite
 
-STAGED_QUERIES: dict = {}
-STAGED_ORACLES: dict = {}
+QUERIES: dict = {}
+ORACLES: dict = {}
 
 _EMB_DIM = 64
 _VEC_VALID_SQL = (
@@ -226,8 +225,8 @@ ORDER BY adc_score DESC, cl.vec_id
 LIMIT {_IPQ_TOPK}
 """
 
-STAGED_QUERIES["ivfpq_topk_embeddings"] = ivfpq_topk_embeddings
-STAGED_ORACLES["ivfpq_topk_embeddings"] = IVFPQ_TOPK_SQL
+QUERIES["ivfpq_topk_embeddings"] = ivfpq_topk_embeddings
+ORACLES["ivfpq_topk_embeddings"] = IVFPQ_TOPK_SQL
 
 
 def ivfpq_recall_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -361,8 +360,8 @@ SELECT n_ex.aid AS anchor_id,
 FROM n_ex LEFT JOIN hits ON hits.aid = n_ex.aid
 """
 
-STAGED_QUERIES["ivfpq_recall_embeddings"] = ivfpq_recall_embeddings
-STAGED_ORACLES["ivfpq_recall_embeddings"] = IVFPQ_RECALL_SQL
+QUERIES["ivfpq_recall_embeddings"] = ivfpq_recall_embeddings
+ORACLES["ivfpq_recall_embeddings"] = IVFPQ_RECALL_SQL
 
 
 # === Multi-table transactional snapshot ========================================
@@ -476,8 +475,8 @@ SELECT CAST(1 AS BIGINT),
 ORDER BY txn_id
 """
 
-STAGED_QUERIES["txn_consistent_snapshot_orders"] = txn_consistent_snapshot_orders
-STAGED_ORACLES["txn_consistent_snapshot_orders"] = TXN_SNAPSHOT_SQL
+QUERIES["txn_consistent_snapshot_orders"] = txn_consistent_snapshot_orders
+ORACLES["txn_consistent_snapshot_orders"] = TXN_SNAPSHOT_SQL
 
 
 # === OPTIMIZE ZORDER BY on a VersionedTable ====================================
@@ -536,8 +535,8 @@ FROM orders
 WHERE o_orderkey IS NOT NULL AND o_custkey <= 400
 """
 
-STAGED_QUERIES["zorder_optimize_roundtrip_orders"] = zorder_optimize_roundtrip_orders
-STAGED_ORACLES["zorder_optimize_roundtrip_orders"] = ZORDER_OPTIMIZE_SQL
+QUERIES["zorder_optimize_roundtrip_orders"] = zorder_optimize_roundtrip_orders
+ORACLES["zorder_optimize_roundtrip_orders"] = ZORDER_OPTIMIZE_SQL
 
 
 # === CDF apply round-trip across schema evolution ==============================
@@ -652,8 +651,8 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_actual,
 FROM finals
 """
 
-STAGED_QUERIES["cdc_apply_schema_evolution_orders"] = cdc_apply_schema_evolution_orders
-STAGED_ORACLES["cdc_apply_schema_evolution_orders"] = CDC_SCHEMA_EVOLUTION_SQL
+QUERIES["cdc_apply_schema_evolution_orders"] = cdc_apply_schema_evolution_orders
+ORACLES["cdc_apply_schema_evolution_orders"] = CDC_SCHEMA_EVOLUTION_SQL
 
 
 # === Online LSH index maintenance ==============================================
@@ -838,8 +837,8 @@ SELECT
   (SELECT CAST(COALESCE(MAX(post_occ), 0) AS BIGINT) FROM post) AS max_occ_after
 """
 
-STAGED_QUERIES["lsh_index_maintenance_embeddings"] = lsh_index_maintenance_embeddings
-STAGED_ORACLES["lsh_index_maintenance_embeddings"] = LSH_INDEX_MAINT_SQL
+QUERIES["lsh_index_maintenance_embeddings"] = lsh_index_maintenance_embeddings
+ORACLES["lsh_index_maintenance_embeddings"] = LSH_INDEX_MAINT_SQL
 
 
 # === Occupancy-constant auto-plane hubness (the executable LSH lever) =========
@@ -956,8 +955,8 @@ GROUP BY in_degree
 ORDER BY in_degree
 """
 
-STAGED_QUERIES["hubness_autoplane_embeddings"] = hubness_autoplane_embeddings
-STAGED_ORACLES["hubness_autoplane_embeddings"] = HUBNESS_AUTOPLANE_SQL
+QUERIES["hubness_autoplane_embeddings"] = hubness_autoplane_embeddings
+ORACLES["hubness_autoplane_embeddings"] = HUBNESS_AUTOPLANE_SQL
 
 
 # === Exactly-once streaming upsert into a VersionedTable =======================
@@ -1039,8 +1038,8 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
 FROM d
 """
 
-STAGED_QUERIES["streaming_upsert_replay_events"] = streaming_upsert_replay_events
-STAGED_ORACLES["streaming_upsert_replay_events"] = STREAMING_UPSERT_SQL
+QUERIES["streaming_upsert_replay_events"] = streaming_upsert_replay_events
+ORACLES["streaming_upsert_replay_events"] = STREAMING_UPSERT_SQL
 
 
 # === Incremental view maintenance from the CDF =================================
@@ -1180,8 +1179,8 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_groups,
 FROM groups
 """
 
-STAGED_QUERIES["ivm_incremental_dim_orders"] = ivm_incremental_dim_orders
-STAGED_ORACLES["ivm_incremental_dim_orders"] = IVM_INCREMENTAL_SQL
+QUERIES["ivm_incremental_dim_orders"] = ivm_incremental_dim_orders
+ORACLES["ivm_incremental_dim_orders"] = IVM_INCREMENTAL_SQL
 
 
 # === Shallow clone divergence ==================================================
@@ -1257,8 +1256,8 @@ SELECT
   (SELECT CAST(COALESCE(SUM(seg), 0) AS BIGINT) FROM cl) AS clone_seg_sum
 """
 
-STAGED_QUERIES["clone_divergence_orders"] = clone_divergence_orders
-STAGED_ORACLES["clone_divergence_orders"] = CLONE_DIVERGENCE_SQL
+QUERIES["clone_divergence_orders"] = clone_divergence_orders
+ORACLES["clone_divergence_orders"] = CLONE_DIVERGENCE_SQL
 
 
 # === Residual-encoded IVF-PQ (the full FAISS IVFPQ shape) ======================
@@ -1416,8 +1415,8 @@ ORDER BY adc_score DESC, cl.vec_id
 LIMIT {_IPQ_TOPK}
 """
 
-STAGED_QUERIES["ivfpq_residual_topk_embeddings"] = ivfpq_residual_topk_embeddings
-STAGED_ORACLES["ivfpq_residual_topk_embeddings"] = IVFPQ_RESIDUAL_SQL
+QUERIES["ivfpq_residual_topk_embeddings"] = ivfpq_residual_topk_embeddings
+ORACLES["ivfpq_residual_topk_embeddings"] = IVFPQ_RESIDUAL_SQL
 
 
 # === MinHash (bands x rows) parameter sweep ====================================
@@ -1731,5 +1730,5 @@ ORDER BY n_bands DESC
 """
 
 
-STAGED_QUERIES["minhash_band_sweep_documents"] = minhash_band_sweep_documents
-STAGED_ORACLES["minhash_band_sweep_documents"] = _mbs_sql()
+QUERIES["minhash_band_sweep_documents"] = minhash_band_sweep_documents
+ORACLES["minhash_band_sweep_documents"] = _mbs_sql()

@@ -1,6 +1,5 @@
 """Round-9 batch, registered in ``__spark_entry__`` from its
-STAGED_QUERIES / STAGED_ORACLES (gate-verified in round 8 behind
-``driver_sim --staged``).
+QUERIES / ORACLES.
 
 Families (VERDICT r07 ask #6 — the thinnest remaining areas):
 
@@ -38,8 +37,8 @@ from pyspark.sql import functions as F
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
 from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 
-STAGED_QUERIES: dict = {}
-STAGED_ORACLES: dict = {}
+QUERIES: dict = {}
+ORACLES: dict = {}
 
 
 # === Stream-stream interval-join replay ========================================
@@ -147,10 +146,10 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
 FROM j
 """
 
-STAGED_QUERIES["streaming_interval_join_replay_events"] = (
+QUERIES["streaming_interval_join_replay_events"] = (
     streaming_interval_join_replay_events
 )
-STAGED_ORACLES["streaming_interval_join_replay_events"] = (
+ORACLES["streaming_interval_join_replay_events"] = (
     STREAMING_INTERVAL_JOIN_SQL
 )
 
@@ -229,8 +228,8 @@ GROUP BY 1
 ORDER BY segment NULLS FIRST
 """
 
-STAGED_QUERIES["streaming_enrich_replay_events"] = streaming_enrich_replay_events
-STAGED_ORACLES["streaming_enrich_replay_events"] = STREAMING_ENRICH_SQL
+QUERIES["streaming_enrich_replay_events"] = streaming_enrich_replay_events
+ORACLES["streaming_enrich_replay_events"] = STREAMING_ENRICH_SQL
 
 
 # === VACUUM / retention lifecycle ==============================================
@@ -326,8 +325,8 @@ SELECT CAST((SELECT COUNT(*) FROM v2) AS BIGINT) AS n_rows,
        CAST(1 AS BIGINT) AS floor_enforced
 """
 
-STAGED_QUERIES["vacuum_retention_orders"] = vacuum_retention_orders
-STAGED_ORACLES["vacuum_retention_orders"] = VACUUM_RETENTION_SQL
+QUERIES["vacuum_retention_orders"] = vacuum_retention_orders
+ORACLES["vacuum_retention_orders"] = VACUUM_RETENTION_SQL
 
 
 # === Bucket re-partitioning round-trip =========================================
@@ -429,8 +428,8 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
 FROM final
 """
 
-STAGED_QUERIES["rebucket_roundtrip_orders"] = rebucket_roundtrip_orders
-STAGED_ORACLES["rebucket_roundtrip_orders"] = REBUCKET_SQL
+QUERIES["rebucket_roundtrip_orders"] = rebucket_roundtrip_orders
+ORACLES["rebucket_roundtrip_orders"] = REBUCKET_SQL
 
 
 # === IVF nprobe tuning sweep ====================================================
@@ -666,8 +665,8 @@ exact AS (
 ORDER BY n_probe DESC
 """
 
-STAGED_QUERIES["ivf_nprobe_sweep_embeddings"] = ivf_nprobe_sweep_embeddings
-STAGED_ORACLES["ivf_nprobe_sweep_embeddings"] = IVF_NPROBE_SWEEP_SQL
+QUERIES["ivf_nprobe_sweep_embeddings"] = ivf_nprobe_sweep_embeddings
+ORACLES["ivf_nprobe_sweep_embeddings"] = IVF_NPROBE_SWEEP_SQL
 
 
 # === Mixture temperature sweep ==================================================
@@ -764,10 +763,10 @@ WITH counts AS (
 ORDER BY alpha_pct DESC, source NULLS FIRST
 """
 
-STAGED_QUERIES["mixture_temperature_sweep_documents"] = (
+QUERIES["mixture_temperature_sweep_documents"] = (
     mixture_temperature_sweep_documents
 )
-STAGED_ORACLES["mixture_temperature_sweep_documents"] = (
+ORACLES["mixture_temperature_sweep_documents"] = (
     MIXTURE_TEMPERATURE_SWEEP_SQL
 )
 
@@ -857,8 +856,8 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
 FROM survivors
 """
 
-STAGED_QUERIES["physical_erasure_audit_orders"] = physical_erasure_audit_orders
-STAGED_ORACLES["physical_erasure_audit_orders"] = PHYSICAL_ERASURE_SQL
+QUERIES["physical_erasure_audit_orders"] = physical_erasure_audit_orders
+ORACLES["physical_erasure_audit_orders"] = PHYSICAL_ERASURE_SQL
 
 
 # === Stream-stream LEFT OUTER interval-join replay ==============================
@@ -987,10 +986,10 @@ SELECT CAST((SELECT COUNT(*) FROM j) AS BIGINT) AS n_pairs,
        CAST(COALESCE((SELECT SUM(rid) FROM j), 0) AS BIGINT) AS rid_sum
 """
 
-STAGED_QUERIES["streaming_outer_join_replay_events"] = (
+QUERIES["streaming_outer_join_replay_events"] = (
     streaming_outer_join_replay_events
 )
-STAGED_ORACLES["streaming_outer_join_replay_events"] = STREAMING_OUTER_JOIN_SQL
+ORACLES["streaming_outer_join_replay_events"] = STREAMING_OUTER_JOIN_SQL
 
 
 # === Context-length packing sweep ===============================================
@@ -1110,8 +1109,8 @@ c AS (
 ORDER BY budget
 """
 
-STAGED_QUERIES["packing_budget_sweep_documents"] = packing_budget_sweep_documents
-STAGED_ORACLES["packing_budget_sweep_documents"] = PACKING_BUDGET_SWEEP_SQL
+QUERIES["packing_budget_sweep_documents"] = packing_budget_sweep_documents
+ORACLES["packing_budget_sweep_documents"] = PACKING_BUDGET_SWEEP_SQL
 
 
 # === Jaccard threshold sweep ====================================================
@@ -1309,7 +1308,7 @@ ORDER BY threshold_pct DESC
 """
 
 
-STAGED_QUERIES["jaccard_threshold_sweep_documents"] = (
+QUERIES["jaccard_threshold_sweep_documents"] = (
     jaccard_threshold_sweep_documents
 )
-STAGED_ORACLES["jaccard_threshold_sweep_documents"] = _jts_sql()
+ORACLES["jaccard_threshold_sweep_documents"] = _jts_sql()

@@ -1,6 +1,5 @@
 """Round-10 batch, registered in ``__spark_entry__`` from its
-STAGED_QUERIES / STAGED_ORACLES (gate-verified in round 9 behind
-``driver_sim --staged``).
+QUERIES / ORACLES.
 
 Families (VERDICT r08 "engine-internal gaps" + natural continuations):
 
@@ -48,8 +47,8 @@ from pyspark.sql import functions as F
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
 from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 
-STAGED_QUERIES: dict = {}
-STAGED_ORACLES: dict = {}
+QUERIES: dict = {}
+ORACLES: dict = {}
 
 
 def _orders_base(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -209,8 +208,8 @@ SELECT CAST((SELECT COUNT(*) FROM v1) AS BIGINT) AS n_rows_asof_mid,
        CAST(1 AS BIGINT) AS before_first_raises
 """
 
-STAGED_QUERIES["time_travel_timestamp_orders"] = time_travel_timestamp_orders
-STAGED_ORACLES["time_travel_timestamp_orders"] = TIME_TRAVEL_TIMESTAMP_SQL
+QUERIES["time_travel_timestamp_orders"] = time_travel_timestamp_orders
+ORACLES["time_travel_timestamp_orders"] = TIME_TRAVEL_TIMESTAMP_SQL
 
 
 # === RESTORE with CDF undo feed =================================================
@@ -290,8 +289,8 @@ SELECT CAST((SELECT COUNT(*) FROM base) AS BIGINT) AS n_rows_final,
        CAST(0 AS BIGINT) AS n_undo_deletes
 """
 
-STAGED_QUERIES["restore_undo_feed_orders"] = restore_undo_feed_orders
-STAGED_ORACLES["restore_undo_feed_orders"] = RESTORE_UNDO_FEED_SQL
+QUERIES["restore_undo_feed_orders"] = restore_undo_feed_orders
+ORACLES["restore_undo_feed_orders"] = RESTORE_UNDO_FEED_SQL
 
 
 # === Deletion vectors: merge-on-read proof ======================================
@@ -374,8 +373,8 @@ SELECT CAST((SELECT COUNT(*) FROM survivors) AS BIGINT) AS n_rows,
        CAST((SELECT COUNT(*) FROM base) AS BIGINT) AS n_rows_v0
 """
 
-STAGED_QUERIES["dv_merge_on_read_orders"] = dv_merge_on_read_orders
-STAGED_ORACLES["dv_merge_on_read_orders"] = DV_MERGE_ON_READ_SQL
+QUERIES["dv_merge_on_read_orders"] = dv_merge_on_read_orders
+ORACLES["dv_merge_on_read_orders"] = DV_MERGE_ON_READ_SQL
 
 
 # === Deletion vectors: rewrite materialization ==================================
@@ -442,8 +441,8 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
 FROM final
 """
 
-STAGED_QUERIES["dv_upsert_materialize_orders"] = dv_upsert_materialize_orders
-STAGED_ORACLES["dv_upsert_materialize_orders"] = DV_UPSERT_MATERIALIZE_SQL
+QUERIES["dv_upsert_materialize_orders"] = dv_upsert_materialize_orders
+ORACLES["dv_upsert_materialize_orders"] = DV_UPSERT_MATERIALIZE_SQL
 
 
 # === Commit-log audit across the full maintenance surface ======================
@@ -525,8 +524,8 @@ SELECT * FROM (
 ) ORDER BY version
 """
 
-STAGED_QUERIES["lake_history_audit_orders"] = lake_history_audit_orders
-STAGED_ORACLES["lake_history_audit_orders"] = LAKE_HISTORY_AUDIT_SQL
+QUERIES["lake_history_audit_orders"] = lake_history_audit_orders
+ORACLES["lake_history_audit_orders"] = LAKE_HISTORY_AUDIT_SQL
 
 
 # === CDF stream replay across commit types ======================================
@@ -635,8 +634,8 @@ SELECT CAST((SELECT COUNT(*) FROM base) AS BIGINT) AS n_rows,
          AS n_feed_restore
 """
 
-STAGED_QUERIES["cdf_stream_replay_orders"] = cdf_stream_replay_orders
-STAGED_ORACLES["cdf_stream_replay_orders"] = CDF_STREAM_REPLAY_SQL
+QUERIES["cdf_stream_replay_orders"] = cdf_stream_replay_orders
+ORACLES["cdf_stream_replay_orders"] = CDF_STREAM_REPLAY_SQL
 
 
 # === Quantization-bits sweep ====================================================
@@ -861,8 +860,8 @@ ORDER BY bits DESC
 """
 
 
-STAGED_QUERIES["quant_bits_sweep_embeddings"] = quant_bits_sweep_embeddings
-STAGED_ORACLES["quant_bits_sweep_embeddings"] = _qbs_sql()
+QUERIES["quant_bits_sweep_embeddings"] = quant_bits_sweep_embeddings
+ORACLES["quant_bits_sweep_embeddings"] = _qbs_sql()
 
 
 # === Stream-stream FULL OUTER interval-join replay ==============================
@@ -1020,10 +1019,10 @@ SELECT CAST((SELECT COUNT(*) FROM j) AS BIGINT) AS n_pairs,
          AS rid_sum
 """
 
-STAGED_QUERIES["streaming_full_outer_join_replay_events"] = (
+QUERIES["streaming_full_outer_join_replay_events"] = (
     streaming_full_outer_join_replay_events
 )
-STAGED_ORACLES["streaming_full_outer_join_replay_events"] = (
+ORACLES["streaming_full_outer_join_replay_events"] = (
     STREAMING_FULL_OUTER_JOIN_SQL
 )
 
@@ -1099,10 +1098,10 @@ ORDER BY cosine_sim DESC, vec_id
 LIMIT 20
 """
 
-STAGED_QUERIES["dv_vector_store_topk_embeddings"] = (
+QUERIES["dv_vector_store_topk_embeddings"] = (
     dv_vector_store_topk_embeddings
 )
-STAGED_ORACLES["dv_vector_store_topk_embeddings"] = DV_VECTOR_STORE_TOPK_SQL
+ORACLES["dv_vector_store_topk_embeddings"] = DV_VECTOR_STORE_TOPK_SQL
 
 
 # === OPTIMIZE ZORDER purges deletion vectors ====================================
@@ -1164,8 +1163,8 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
 FROM survivors
 """
 
-STAGED_QUERIES["optimize_dv_purge_orders"] = optimize_dv_purge_orders
-STAGED_ORACLES["optimize_dv_purge_orders"] = OPTIMIZE_DV_PURGE_SQL
+QUERIES["optimize_dv_purge_orders"] = optimize_dv_purge_orders
+ORACLES["optimize_dv_purge_orders"] = OPTIMIZE_DV_PURGE_SQL
 
 
 # === Streaming CDF subscription through the table_changes source ===============
@@ -1271,10 +1270,10 @@ SELECT CAST((SELECT c FROM n5) + 1 + (SELECT c FROM n7) + 1
                      THEN 1 ELSE 0 END AS BIGINT) AS n_versions
 """
 
-STAGED_QUERIES["streaming_cdf_subscription_orders"] = (
+QUERIES["streaming_cdf_subscription_orders"] = (
     streaming_cdf_subscription_orders
 )
-STAGED_ORACLES["streaming_cdf_subscription_orders"] = (
+ORACLES["streaming_cdf_subscription_orders"] = (
     STREAMING_CDF_SUBSCRIPTION_SQL
 )
 
@@ -1408,10 +1407,10 @@ ORDER BY n
 """
 
 
-STAGED_QUERIES["decontamination_ngram_sweep_documents"] = (
+QUERIES["decontamination_ngram_sweep_documents"] = (
     decontamination_ngram_sweep_documents
 )
-STAGED_ORACLES["decontamination_ngram_sweep_documents"] = _dns_sql()
+ORACLES["decontamination_ngram_sweep_documents"] = _dns_sql()
 
 
 # === Quality-gate threshold sweep ===============================================
@@ -1540,10 +1539,10 @@ ORDER BY min_words
 """
 
 
-STAGED_QUERIES["quality_threshold_sweep_documents"] = (
+QUERIES["quality_threshold_sweep_documents"] = (
     quality_threshold_sweep_documents
 )
-STAGED_ORACLES["quality_threshold_sweep_documents"] = _qts_sql()
+ORACLES["quality_threshold_sweep_documents"] = _qts_sql()
 
 
 # === Continuous replication: CDF subscription -> replica sink ===================
@@ -1637,8 +1636,8 @@ SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
 FROM final
 """
 
-STAGED_QUERIES["streaming_replication_orders"] = streaming_replication_orders
-STAGED_ORACLES["streaming_replication_orders"] = STREAMING_REPLICATION_SQL
+QUERIES["streaming_replication_orders"] = streaming_replication_orders
+ORACLES["streaming_replication_orders"] = STREAMING_REPLICATION_SQL
 
 
 # === Sessionization gap sweep ===================================================
@@ -1763,5 +1762,5 @@ ORDER BY gap_minutes
 """
 
 
-STAGED_QUERIES["session_gap_sweep_events"] = session_gap_sweep_events
-STAGED_ORACLES["session_gap_sweep_events"] = _sgs_sql()
+QUERIES["session_gap_sweep_events"] = session_gap_sweep_events
+ORACLES["session_gap_sweep_events"] = _sgs_sql()

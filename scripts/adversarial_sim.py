@@ -188,12 +188,6 @@ def run_fixture(spark, mod, dst: str, only, skip=frozenset(), tag="") -> list[st
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     qs, oracles = mod.queries(), mod.oracle_sql()
-    if "--staged" in sys.argv:
-        # the staged batch (r11) is gated without touching the served surface
-        from nasa_asteroid_data_lakehouse_spark.plans import r11_queries
-
-        qs = {**qs, **r11_queries.STAGED_QUERIES}
-        oracles = {**oracles, **r11_queries.STAGED_ORACLES}
     failures = []
     for name, fn in qs.items():
         if only is not None and name not in only:

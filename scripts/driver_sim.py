@@ -51,7 +51,7 @@ KEY_UNIQUE_PRECONDITION = {
     "minhash_error_pairs_documents",
     "ivf_topk_embeddings",
     "pack_documents_for_training",
-    # staged: same ORDER-BY-id seed selection as ivf_topk, and the
+    # r05: same ORDER-BY-id seed selection as ivf_topk, and the
     # exact∩approx hits join fans out when a duplicated nbr id appears
     # in both top-k lists.
     "ivf_recall_embeddings",
@@ -60,19 +60,19 @@ KEY_UNIQUE_PRECONDITION = {
     "centroid_inertia_embeddings",
     "silhouette_embeddings",
     "pq_adc_recall_embeddings",
-    # r07 staged: survivor assembly groups by doc_id — duplicate ids
+    # r07: survivor assembly groups by doc_id — duplicate ids
     # with conflicting text interleave arbitrarily (dup_span_coverage's
     # documented contract)
     "span_dedup_rewrite_documents",
-    # r08 staged: ORDER-BY-id seed quantizers (same ambiguity as
+    # r08: ORDER-BY-id seed quantizers (same ambiguity as
     # ivf_topk / pq_adc_recall)...
     "ivfpq_topk_embeddings",
     "ivfpq_recall_embeddings",
     "ivfpq_residual_topk_embeddings",
-    # r09 staged: same ORDER-BY-id seed quantizer, and duplicate nbr
+    # r09: same ORDER-BY-id seed quantizer, and duplicate nbr
     # ids fan out the anchor-pair table (the ivf_recall ambiguity)
     "ivf_nprobe_sweep_embeddings",
-    # r09 staged: the packer's per-lang cumsum orders by doc_id, which
+    # r09: the packer's per-lang cumsum orders by doc_id, which
     # is not a total order under duplicate ids with different lengths —
     # bin boundaries can land between the tied rows' two possible
     # cum values (pack_documents_for_training's documented contract;
@@ -85,15 +85,11 @@ KEY_UNIQUE_PRECONDITION = {
     # oracle aggregates every row.
     "txn_consistent_snapshot_orders",
     "zorder_optimize_roundtrip_orders",
-    # r10 staged: the vector store materializes embeddings into a
+    # r10: the vector store materializes embeddings into a
     # VersionedTable keyed by vec_id — create() collapses duplicate
     # ids to one arbitrary-but-stable embedding while the oracle scores
     # every row (the vector-store per-identity contract).
     "dv_vector_store_topk_embeddings",
-    # r11 staged: ORDER-BY-vec_id seed selection (the ivf_topk
-    # ambiguity) — duplicate ids with conflicting vectors make the
-    # k-means seeds arbitrary on both engines.
-    "kmeans_lloyd_embeddings",
 }
 
 
@@ -160,7 +156,6 @@ def main() -> int:
     one = "--one" in argv
     const = "--const" in argv
     extreme = "--extreme" in argv
-    staged = "--staged" in argv
     dup = "--dup" in argv
     args = [
         a
@@ -172,7 +167,6 @@ def main() -> int:
             "--one",
             "--const",
             "--extreme",
-            "--staged",
             "--dup",
         )
     ]
@@ -386,15 +380,6 @@ def main() -> int:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     qs, oracles = mod.queries(), mod.oracle_sql()
-    if staged:
-        # staging: gate the r11 batch WITHOUT touching the served
-        # surface (r05-r10 are registered unconditionally)
-        from nasa_asteroid_data_lakehouse_spark.plans import r11_queries
-
-        qs = {**qs, **r11_queries.STAGED_QUERIES}
-        oracles = {**oracles, **r11_queries.STAGED_ORACLES}
-        if only is None:
-            only = set(r11_queries.STAGED_QUERIES)
     for name, fn in qs.items():
         if only is not None and name not in only:
             continue

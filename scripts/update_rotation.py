@@ -172,6 +172,15 @@ REPROVE: dict[int, list[str]] = {
         "dv_vector_store_topk_embeddings",
         "optimize_dv_purge_orders",
     ],
+    # r17: VersionedTable.vacuum compares realpaths and fails closed on
+    # a missing referenced file; these are the registered queries that
+    # vacuum.
+    17: [
+        "vacuum_retention_orders",
+        "physical_erasure_audit_orders",
+        "dv_merge_on_read_orders",
+        "optimize_dv_purge_orders",
+    ],
 }
 
 

@@ -2,6 +2,7 @@
 
 import importlib.util
 import os
+import types
 
 import pytest
 
@@ -33,6 +34,18 @@ def test_query_matches_oracle(spark, sf_dir, name):
     fn = spark_entry.queries()[name]
     sql = spark_entry.oracle_sql()[name]
     assert_matches_oracle(fn(spark, sf_dir), sql, sf_dir)
+
+
+def test_registry_fails_closed_on_duplicate_key(monkeypatch):
+    """A later module must not silently replace an earlier module's
+    query or oracle of the same name."""
+    dup = types.ModuleType("dup_queries")
+    dup.QUERIES = {"q1_pricing_summary": lambda spark, sf_dir: None}
+    dup.ORACLES = {"q1_pricing_summary": "SELECT 1"}
+    monkeypatch.setattr(spark_entry, "_MODULES", (*spark_entry._MODULES, dup))
+    for kind in ("QUERIES", "ORACLES"):
+        with pytest.raises(ValueError, match="q1_pricing_summary"):
+            spark_entry._registry(kind)
 
 
 def test_entry_twice_same_session(spark):

@@ -1,51 +1,11 @@
-"""Tests for data-quality gates and source readers (JSONL, multiline
-JSON, distributed REST fetch)."""
+"""Tests for source readers (JSONL, multiline JSON, distributed REST
+fetch), incremental sources and catalog views."""
 
 import json
 
-import pytest
 from pyspark.sql import functions as F
 
-from nasa_asteroid_data_lakehouse_spark.operators import quality
 from nasa_asteroid_data_lakehouse_spark.sources import readers, rest
-
-
-@pytest.fixture(scope="module")
-def people(spark):
-    return spark.createDataFrame(
-        [(1, "a", "x"), (2, None, "y"), (2, "c", "zz"), (4, "d", None)],
-        ["id", "name", "tag"],
-    )
-
-
-def test_expect_columns(people):
-    quality.expect_columns(people, ["id", "name", "tag"])
-    with pytest.raises(quality.QualityError, match="schema mismatch"):
-        quality.expect_columns(people, ["id", "name"])
-
-
-def test_non_null_violations(people):
-    bad = quality.non_null_violations(people, ["name", "tag"]).collect()
-    assert {r["id"] for r in bad} == {2, 4}
-
-
-def test_unique_key_violations(people):
-    dups = quality.unique_key_violations(people, ["id"]).collect()
-    assert len(dups) == 1 and dups[0]["id"] == 2 and dups[0]["dup_count"] == 2
-
-
-def test_referential_violations(spark, people):
-    parent = spark.createDataFrame([(1,), (2,)], ["id"])
-    orphans = quality.referential_violations(people, parent, "id").collect()
-    assert {r["id"] for r in orphans} == {4}
-
-
-def test_accepted_values_and_enforce(spark, people):
-    bad = quality.accepted_values_violations(people, "tag", ["x", "y"])
-    assert {r["id"] for r in bad.collect()} == {2, 4}
-    with pytest.raises(quality.QualityError, match="tag_domain"):
-        quality.enforce(bad, "tag_domain")
-    quality.enforce(bad.limit(0), "empty_ok")  # no violations -> no raise
 
 
 def test_read_jsonl_with_schema(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Pins for the round-5 STAGED query batch (plans/r05_queries.py) —
+"""Pins for the round-5 query batch (plans/r05_queries.py) —
 gate-verified in round 4, registered at round-5 start once
 CORRECTNESS_r04 confirms the frozen 190-surface.  These tests keep the
 staged queries green in the meantime."""
@@ -12,8 +12,8 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_staged_registry_shape():
-    assert set(r5.STAGED_QUERIES) == set(r5.STAGED_ORACLES)
-    assert len(r5.STAGED_QUERIES) == 8
+    assert set(r5.QUERIES) == set(r5.ORACLES)
+    assert len(r5.QUERIES) == 8
 
 
 def test_payload_dedup_sources(spark):
@@ -144,7 +144,7 @@ def test_truncated_dim_recall_bounds(spark):
 # the streaming replay runs a real multi-batch job; its plan is the
 # sink's, not a single query plan — exclude from the static plan check
 _PLAN_CHECK = sorted(
-    set(r5.STAGED_QUERIES)
+    set(r5.QUERIES)
     - {"streaming_score_replay_documents", "streaming_session_replay_events"}
 )
 
@@ -156,7 +156,7 @@ _BNLJ_ALLOWED = {"truncated_dim_recall_embeddings", "ivf_recall_embeddings"}
 @pytest.mark.parametrize("name", _PLAN_CHECK)
 def test_staged_plans_have_no_cartesian(spark, name):
     plan = (
-        r5.STAGED_QUERIES[name](spark, SF)
+        r5.QUERIES[name](spark, SF)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "CartesianProduct" not in plan

@@ -1,6 +1,5 @@
-"""Pins for the round-6 STAGED query batch (plans/r06_queries.py) —
-gate-verified in round 5 behind ``driver_sim --staged``, registered
-in ``__spark_entry__`` since round 6.  These tests keep the queries
+"""Pins for the round-6 query batch (plans/r06_queries.py) —
+registered in ``__spark_entry__`` since round 6.  These tests keep the queries
 (and the operators underneath) green.
 """
 
@@ -15,8 +14,8 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_staged_registry_shape():
-    assert set(r6.STAGED_QUERIES) == set(r6.STAGED_ORACLES)
-    assert len(r6.STAGED_QUERIES) == 16
+    assert set(r6.QUERIES) == set(r6.ORACLES)
+    assert len(r6.QUERIES) == 16
 
 
 def _write(df, tmp_path, table):

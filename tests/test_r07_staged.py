@@ -1,6 +1,5 @@
-"""Pins for the round-7 STAGED query batch (plans/r07_queries.py) —
-gate-verified in round 6 behind ``driver_sim --staged``, registered
-in ``__spark_entry__`` since round 7.  These tests keep the queries
+"""Pins for the round-7 query batch (plans/r07_queries.py) —
+registered in ``__spark_entry__`` since round 7.  These tests keep the queries
 green with synthetic micro-fixtures
 that pin the SEMANTICS (not just oracle agreement).
 """
@@ -15,8 +14,8 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_staged_registry_shape():
-    assert set(r7.STAGED_QUERIES) == set(r7.STAGED_ORACLES)
-    assert len(r7.STAGED_QUERIES) == 13
+    assert set(r7.QUERIES) == set(r7.ORACLES)
+    assert len(r7.QUERIES) == 13
 
 
 def _write(df, tmp_path, table):

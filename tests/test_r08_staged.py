@@ -1,6 +1,5 @@
-"""Pins for the round-8 STAGED query batch (plans/r08_queries.py) —
-gate-verified in round 7 behind ``driver_sim --staged``, registered
-in ``__spark_entry__`` since round 8.  These tests pin the
+"""Pins for the round-8 query batch (plans/r08_queries.py) —
+registered in ``__spark_entry__`` since round 8.  These tests pin the
 SEMANTICS with synthetic micro-fixtures (not just oracle agreement).
 """
 
@@ -13,8 +12,8 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_staged_registry_shape():
-    assert set(r8.STAGED_QUERIES) == set(r8.STAGED_ORACLES)
-    assert len(r8.STAGED_QUERIES) == 12
+    assert set(r8.QUERIES) == set(r8.ORACLES)
+    assert len(r8.QUERIES) == 12
 
 
 def _write(df, tmp_path, table):

@@ -1,6 +1,5 @@
-"""Pins for the round-9 STAGED query batch (plans/r09_queries.py) —
-gate-verified in round 8 behind ``driver_sim --staged``, registered
-in ``__spark_entry__`` since round 9.  These tests
+"""Pins for the round-9 query batch (plans/r09_queries.py) —
+registered in ``__spark_entry__`` since round 9.  These tests
 pin the SEMANTICS with synthetic micro-fixtures (not just oracle
 agreement).
 """
@@ -13,8 +12,8 @@ from nasa_asteroid_data_lakehouse_spark.plans import r09_queries as r9
 
 
 def test_staged_registry_shape():
-    assert set(r9.STAGED_QUERIES) == set(r9.STAGED_ORACLES)
-    assert len(r9.STAGED_QUERIES) == 10
+    assert set(r9.QUERIES) == set(r9.ORACLES)
+    assert len(r9.QUERIES) == 10
 
 
 def _write(df, tmp_path, table):

@@ -1,7 +1,6 @@
 import pytest
-"""Pins for the round-10 STAGED query batch (plans/r10_queries.py) —
-gate-verified in round 9 behind ``driver_sim --staged``, registered
-in ``__spark_entry__`` since round 10.  These tests
+"""Pins for the round-10 query batch (plans/r10_queries.py) —
+registered in ``__spark_entry__`` since round 10.  These tests
 pin the SEMANTICS with synthetic micro-fixtures (not just oracle
 agreement); the lake mechanics themselves are pinned in
 tests/test_versioned_table.py (timestamp resolution, restore, deletion
@@ -20,8 +19,8 @@ from nasa_asteroid_data_lakehouse_spark.plans import r10_queries as r10
 
 
 def test_staged_registry_shape():
-    assert set(r10.STAGED_QUERIES) == set(r10.STAGED_ORACLES)
-    assert len(r10.STAGED_QUERIES) == 15
+    assert set(r10.QUERIES) == set(r10.ORACLES)
+    assert len(r10.QUERIES) == 15
 
 
 def _write(df, tmp_path, table):

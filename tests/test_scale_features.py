@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
 from nasa_asteroid_data_lakehouse_spark.operators import skew
-from nasa_asteroid_data_lakehouse_spark.sources import bucketed
 from nasa_asteroid_data_lakehouse_spark.sources.writers import write_partitioned
 
 
@@ -55,44 +54,6 @@ def test_salted_broadcast_left_matches_plain(spark):
     plain = fact.join(dim, "k").groupBy("name").count().collect()
     salted = skew.salted_broadcast_left(fact, dim, "k", buckets=4).groupBy("name").count().collect()
     assert sorted(map(tuple, plain)) == sorted(map(tuple, salted))
-
-
-def test_bucketed_join_no_shuffle(spark, tmp_path_factory):
-    spark.sql("CREATE DATABASE IF NOT EXISTS bucketed_test")
-    import shutil
-
-    for t in ("orders_b", "lineitem_b"):
-        spark.sql(f"DROP TABLE IF EXISTS bucketed_test.{t}")
-        loc = f"spark-warehouse/bucketed_test.db/{t}"
-        shutil.rmtree(loc, ignore_errors=True)
-    orders = read_table(spark, "/root/testdata/sf0.001", "orders")
-    lineitem = read_table(spark, "/root/testdata/sf0.001", "lineitem")
-    bucketed.write_bucketed(
-        orders, "bucketed_test.orders_b", ["o_orderkey"], 8, sort_by=["o_orderkey"]
-    )
-    bucketed.write_bucketed(
-        lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-        "bucketed_test.lineitem_b",
-        ["o_orderkey"],
-        8,
-        sort_by=["o_orderkey"],
-    )
-    a = bucketed.read_table(spark, "bucketed_test.orders_b")
-    b = bucketed.read_table(spark, "bucketed_test.lineitem_b")
-    joined = a.join(b, "o_orderkey")
-    # bucketed both sides on the join key, same bucket count -> no exchange
-    assert not bucketed.plan_has_shuffle(joined)
-    assert joined.count() == lineitem.count()
-    # sanity: the same join over plain parquet DOES shuffle (or broadcasts);
-    # disable broadcast to expose the exchange
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plain = read_table(spark, "/root/testdata/sf0.001", "orders").join(
-            lineitem.withColumnRenamed("l_orderkey", "o_orderkey"), "o_orderkey"
-        )
-        assert bucketed.plan_has_shuffle(plain)
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
 def test_partition_pruning(spark, tmp_path):

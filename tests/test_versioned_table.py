@@ -104,6 +104,43 @@ def test_vacuum_removes_unreferenced_files(spark, table):
         table.read(version=0).count()
 
 
+def test_vacuum_under_another_root_spelling_keeps_live_files(
+    spark, tmp_path, monkeypatch
+):
+    """A table written at an absolute root and reopened relative, with
+    a trailing slash, must vacuum only the files no kept manifest
+    references (string-compared paths used to delete every live file)."""
+    root = tmp_path / "t"
+    t = VersionedTable(spark, str(root), num_buckets=2)
+    t.create(
+        spark.createDataFrame([(i, f"v{i}") for i in range(10)], ["k", "val"]),
+        keys=["k"],
+    )
+    t.upsert(spark.createDataFrame([(3, "NEW3")], ["k", "val"]))
+    monkeypatch.chdir(tmp_path)
+    again = VersionedTable(spark, "t/", num_buckets=2)
+    removed = again.vacuum(keep_last=1)
+    assert len(removed) == 1  # only the v0 copy of the touched bucket
+    rows = {r["k"]: r["val"] for r in again.read().collect()}
+    assert len(rows) == 10 and rows[3] == "NEW3"
+
+
+def test_vacuum_fails_closed_on_missing_referenced_file(spark, table):
+    """A kept manifest that references a missing file means the table
+    is already damaged: vacuum raises before deleting anything."""
+    table.upsert(spark.createDataFrame([(5, "NEW5", 5.5)], ["k", "val", "m"]))
+    head = table._load_manifest(table.latest_version())
+    live = sorted(f for fs in head["buckets"].values() for f in fs)
+    before = {
+        os.path.join(d, f) for d, _, fs in os.walk(table._data_dir) for f in fs
+    }
+    os.remove(live[0])
+    with pytest.raises(FileNotFoundError, match="refused"):
+        table.vacuum(keep_last=1)
+    after = {os.path.join(d, f) for d, _, fs in os.walk(table._data_dir) for f in fs}
+    assert after == before - {live[0]}
+
+
 def test_vacuum_after_optimize_leaves_no_erased_rows_on_disk(spark, tmp_path):
     """optimize nests its files under ``__slot=``; once a later rewrite
     purges a deferred delete, vacuum must reach those nested files so
@@ -194,6 +231,18 @@ def test_schema_evolution_on_upsert(spark, table):
     assert df.where(F.col("k") == 5).collect()[0]["note"] == "extra"
     # rows from untouched buckets read as null for the new column
     assert df.where(F.col("note").isNull()).count() == 99
+
+
+def test_narrow_upsert_never_narrows_schema(spark, tmp_path):
+    """An upsert batch missing committed columns is aligned to the
+    manifest schema (typed NULLs), also into an empty table."""
+    t = VersionedTable(spark, str(tmp_path / "t"), num_buckets=4)
+    t.create(spark.createDataFrame([], "k bigint, a string"), keys=["k"])
+    t.upsert(spark.createDataFrame([], "k bigint, b bigint"))
+    assert set(t.read().columns) == {"k", "a", "b"}  # union, never narrowed
+    t.upsert(spark.createDataFrame([(1, "x")], "k bigint, a string"))
+    rows = [tuple(r) for r in t.read().select("k", "a", "b").collect()]
+    assert rows == [(1, "x", None)]
 
 
 def test_compact(spark, table):
@@ -1508,3 +1557,43 @@ def test_restore_retries_on_commit_conflict(spark, table):
     assert v == table.latest_version()
     assert table._load_manifest(v)["operation"] == "restore"
     assert table.read().count() == 100  # version-0 content
+
+
+def test_txn_snapshot_pins_dv_state(spark, tmp_path):
+    """A transaction pin reads exactly its pinned versions' deletion
+    vectors: a deferred delete committed between two pins is visible
+    only to the later pin, and one committed after the last pin only
+    at the table head."""
+    from nasa_asteroid_data_lakehouse_spark.lake.transaction import (
+        MultiTableTransaction,
+    )
+
+    txn = MultiTableTransaction(spark, str(tmp_path / "txn"), num_buckets=4)
+    fact, dim = txn.table("fact"), txn.table("dim")
+    v_f0 = fact.create(
+        spark.createDataFrame([(k, k % 4) for k in range(30)], ["k", "grp"]),
+        keys=["k"],
+    )
+    v_d0 = dim.create(
+        spark.createDataFrame([(g, g * 10) for g in range(4)], ["grp", "w"]),
+        keys=["grp"],
+    )
+    txn.commit({"fact": v_f0, "dim": v_d0})  # txn 0
+    v_f1 = fact.delete_where(F.col("k") % 3 == 0, deferred=True)
+    v_d1 = dim.upsert(spark.createDataFrame([(0, 5)], ["grp", "w"]))
+    txn.commit({"fact": v_f1, "dim": v_d1})  # txn 1
+    fact.delete_where(F.col("k") % 5 == 0, deferred=True)  # after the last pin
+
+    def keys(df):
+        return {r["k"] for r in df.collect()}
+
+    assert keys(txn.read("fact", txn_id=0)) == set(range(30))
+    at_txn1 = {k for k in range(30) if k % 3}
+    assert keys(txn.read("fact", txn_id=1)) == at_txn1
+    assert keys(fact.read()) == {k for k in at_txn1 if k % 5}
+
+    def weights(df):
+        return {r["grp"]: r["w"] for r in df.collect()}
+
+    assert weights(txn.read("dim", txn_id=0)) == {0: 0, 1: 10, 2: 20, 3: 30}
+    assert weights(txn.read("dim", txn_id=1)) == {0: 5, 1: 10, 2: 20, 3: 30}
