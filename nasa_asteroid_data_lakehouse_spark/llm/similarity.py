@@ -37,7 +37,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -340,6 +340,36 @@ def embedding_near_dup_pairs(
 
 # --- IVF (k-means coarse quantizer) ----------------------------------------
 
+def seed_centroids(
+    df: DataFrame,
+    k: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> list[list[float]]:
+    """The seed quantizer: the vectors of the ``k`` lowest ids among the
+    :func:`vec_valid` rows, as Python floats — k-means at iteration 0,
+    the deterministic init :func:`kmeans_fit` starts from and the
+    quantizer every oracle-checked IVF/PQ query uses, since it stays
+    SQL-expressible.
+
+    Validity is filtered BEFORE the limit (a NULL-headed table still
+    seeds from the valid rows further down), and a NULL id sorts LAST:
+    Spark's ascending default puts NULLs first, the oracles' DuckDB
+    ``ORDER BY vec_id`` puts them last, so an id-less vector must not
+    become centroid 0 on one engine only.  Callers whose oracle also
+    requires a non-NULL id filter ``df`` first.  KEY-UNIQUE
+    precondition: duplicate ids make "the vector of id i" ambiguous on
+    both engines (the documented driver_sim --dup skip)."""
+    rows = (
+        df.where(vec_valid(F.col(vec_col)))
+        .select(id_col, vec_col)
+        .orderBy(F.col(id_col).asc_nulls_last())
+        .limit(k)
+        .collect()
+    )
+    return [[float(v) for v in r[vec_col]] for r in rows]
+
+
 def kmeans_fit(
     df: DataFrame,
     k: int = 8,
@@ -352,21 +382,11 @@ def kmeans_fit(
     Each iteration is two DataFrame jobs: (1) assign each vector to its
     nearest centroid (broadcast centroid literals, argmin over k dots),
     (2) recompute centroids via posexplode + groupBy(cluster, dim) avg.
-    Only the k×d centroid matrix ever reaches the driver.  Init is the
-    k lowest ids WITH a non-NULL vector (deterministic across
-    runs/engines; filtering before the limit means a NULL-headed table
-    still seeds from the valid rows further down instead of returning
-    zero centroids for a fittable table).
+    Only the k×d centroid matrix ever reaches the driver.  Init is
+    :func:`seed_centroids` (deterministic across runs/engines).
     """
     df = df.where(vec_valid(F.col(vec_col)))  # module vector contract
-    init_rows = (
-        df
-        .select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(k)
-        .collect()
-    )
-    centroids = [list(map(float, r[vec_col])) for r in init_rows]
+    centroids = seed_centroids(df, k, id_col, vec_col)
     if not centroids:  # empty (or all-NULL-vector) input: nothing to fit
         return []
 
@@ -441,6 +461,19 @@ def with_ivf_assignment(
     ).drop("__dists")
 
 
+def _nearest_cells(
+    query_vec: list[float], centroids: list[list[float]], nprobe: int
+) -> list[int]:
+    """Indices of the ``nprobe`` centroids nearest a literal query by
+    squared distance, ties to the lower index (``sorted`` is stable) —
+    the driver-side probe list of the IVF top-k paths."""
+    d2 = [
+        sum((float(q) - c) ** 2 for q, c in zip(query_vec, cent))
+        for cent in centroids
+    ]
+    return sorted(range(len(centroids)), key=lambda i: d2[i])[:nprobe]
+
+
 def ivf_topk(
     df: DataFrame,
     query_vec: list[float],
@@ -454,11 +487,7 @@ def ivf_topk(
     """IVF search: score only vectors assigned to the query's ``nprobe``
     nearest centroids.  At scale the table is stored partitioned by
     ``cluster`` so probing prunes partitions instead of filtering."""
-    dists = [
-        sum((float(q) - c) ** 2 for q, c in zip(query_vec, cent))
-        for cent in centroids
-    ]
-    probe = sorted(range(len(centroids)), key=lambda i: dists[i])[:nprobe]
+    probe = _nearest_cells(query_vec, centroids, nprobe)
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     df = df.where(vec_valid(F.col(vec_col)))  # module vector contract
     assigned = with_ivf_assignment(df, centroids, vec_col)
@@ -540,14 +569,21 @@ def semantic_dedup(
     )
 
 
+def _sym_scale(vec_dbl: Column, qmax: int) -> Column:
+    """Symmetric lattice scale for a double array: qmax / max |v|, with
+    a zero vector pinned to scale 1.0."""
+    max_abs = F.array_max(F.transform(vec_dbl, F.abs))
+    return F.when(max_abs > 0.0, F.lit(float(qmax)) / max_abs).otherwise(F.lit(1.0))
+
+
 def int8_scale(vec_dbl: Column) -> Column:
     """Symmetric int8 scale for a double array: 127 / max |v|, with a
-    zero vector pinned to scale 1.0.  THE single definition of the
-    quantization lattice — quantize_embeddings and quantized_recall
-    must see the same codes or the recall diagnostic measures a
-    lattice the store does not produce."""
-    max_abs = F.array_max(F.transform(vec_dbl, F.abs))
-    return F.when(max_abs > 0.0, F.lit(127.0) / max_abs).otherwise(F.lit(1.0))
+    zero vector pinned to scale 1.0.  quantize_embeddings and
+    quantized_recall both code on it, so the recall diagnostic measures
+    the lattice the store produces; the int4/int2 rows of the
+    quantization-bits sweep use the same :func:`_sym_scale` at a
+    narrower qmax."""
+    return _sym_scale(vec_dbl, 127)
 
 
 def int8_codes(vec_dbl: Column, scale: Column) -> Column:
@@ -609,6 +645,152 @@ def quantize_embeddings(
     )
 
 
+# --- anchor-audit kit -------------------------------------------------------
+#
+# Every recall audit below (and the nprobe / quantization-bits sweeps in
+# plans/r09_queries.py and plans/r10_queries.py) is one pipeline: scan
+# the valid vectors, score broadcast anchors (``id < anchor_max_id``)
+# against the whole corpus, rank each anchor's exact top-k and an
+# approximate top-k, and count the overlap.  These helpers are that
+# pipeline's single copy; an audit only adds its approximate score.
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The audits' scan: rows with a non-NULL id and a :func:`vec_valid`
+    vector, as ``id``, the double-cast vector ``v`` and its norm
+    ``nrm`` (hoisted out of the pair loop: N folds instead of 2·A·N)."""
+    return df.where(F.col(id_col).isNotNull() & vec_valid(F.col(vec_col))).select(
+        F.col(id_col).alias("id"),
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
+        norm(F.col(vec_col)).alias("nrm"),
+    )
+
+
+def _pair_cos(v: str = "v", nrm: str = "nrm") -> Column:
+    """Cosine of the anchor row ``a`` and the neighbour row ``b`` from a
+    stored vector column and its norm, on the 6-decimal lattice;
+    ``try_divide`` makes a zero norm NULL (sinks to the bottom of a
+    DESC rank on both engines)."""
+    return F.round(
+        F.try_divide(
+            dot(F.col(f"a.{v}"), F.col(f"b.{v}")),
+            F.col(f"a.{nrm}") * F.col(f"b.{nrm}"),
+        ),
+        6,
+    )
+
+
+def _anchor_pairs(base: DataFrame, anchor_max_id: int, **cols: Column) -> DataFrame:
+    """Every (anchor, neighbour) pair of ``base`` with ``id <
+    anchor_max_id`` on the anchor side, self excluded, as ``anchor_id``,
+    ``nbr`` and one column per keyword (expressions over ``a.*`` and
+    ``b.*``).  The anchor side broadcasts, so the cost is |anchors| x N,
+    never N²; checkpointed lazily, so the rankings and counts over it
+    score each pair once."""
+    return (
+        F.broadcast(base.where(F.col("id") < anchor_max_id).alias("a"))
+        .join(base.alias("b"), F.col("a.id") != F.col("b.id"))
+        .select(
+            F.col("a.id").alias("anchor_id"),
+            F.col("b.id").alias("nbr"),
+            *[c.alias(name) for name, c in cols.items()],
+        )
+        .localCheckpoint(eager=False)
+    )
+
+
+def _topk(pairs: DataFrame, score: str, k: int) -> DataFrame:
+    """Each anchor's top-``k`` neighbours by ``score`` DESC, ties to the
+    lower ``nbr``, as (anchor_id, nbr, rk) — a ``row_number <= k``
+    window, which Spark distributes as a per-partition group limit."""
+    w = Window.partitionBy("anchor_id").orderBy(F.desc(score), F.asc("nbr"))
+    return (
+        pairs.withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= k)
+        .select("anchor_id", "nbr", "rk")
+    )
+
+
+def _recall(exact: DataFrame, approx: DataFrame, k: int, out: str) -> DataFrame:
+    """Per anchor: ``n_exact`` (size of the exact top-k), ``n_hits`` =
+    |exact ∩ approx| and ``out`` = n_hits / least(k, n_exact) — the
+    denominator caps at the achievable neighbour count, and the ratio
+    is a division of two exact integers."""
+    hits = (
+        exact.join(approx, ["anchor_id", "nbr"])
+        .groupBy("anchor_id")
+        .agg(F.count(F.lit(1)).alias("n_hits"))
+    )
+    n_hits = F.coalesce("n_hits", F.lit(0))
+    return (
+        exact.groupBy("anchor_id")
+        .agg(F.count(F.lit(1)).alias("n_exact"))
+        .join(F.broadcast(hits), "anchor_id", "left")
+        .select(
+            "anchor_id",
+            "n_exact",
+            n_hits.alias("n_hits"),
+            F.round(n_hits / F.least(F.lit(k), F.col("n_exact")), 6).alias(out),
+        )
+    )
+
+
+def _probe_cells(
+    anchors: DataFrame, centroids: list[list[float]], nprobe: int
+) -> DataFrame:
+    """Each anchor's ``nprobe`` nearest IVF cells as (anchor_id, v,
+    cluster, probe_rank): squared distance to every centroid, ties to
+    the lower cell index — the :func:`with_ivf_assignment` contract.
+    Bounded at |anchors|·|cells| rows."""
+    d2 = F.array(*[_sq_dist(F.col("v"), c) for c in centroids])
+    w = Window.partitionBy("anchor_id").orderBy("__d2", "cluster")
+    return (
+        anchors.select(
+            F.col("id").alias("anchor_id"),
+            "v",
+            F.posexplode(d2).alias("cluster", "__d2"),
+        )
+        .withColumn("probe_rank", F.row_number().over(w))
+        .where(F.col("probe_rank") <= nprobe)
+        .drop("__d2")
+    )
+
+
+def _ivf_pairs(
+    df: DataFrame,
+    centroids: list[list[float]],
+    anchor_max_id: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The IVF audits' shared frames: the anchor pairs with the exact
+    cosine and the neighbour's cell, and each anchor's ``nprobe``
+    nearest cells (anchor_id, cluster, probe_rank)."""
+    base = with_ivf_assignment(
+        _vectors(df, id_col, vec_col), centroids, "v"
+    ).localCheckpoint(eager=False)
+    pairs = _anchor_pairs(
+        base, anchor_max_id, cos=_pair_cos(), cluster=F.col("b.cluster")
+    )
+    probes = _probe_cells(
+        base.where(F.col("id") < anchor_max_id), centroids, nprobe
+    ).select("anchor_id", "cluster", "probe_rank")
+    return pairs, probes
+
+
+def _lattice_codes(base: DataFrame, qmax: int, codes: str, nrm: str) -> DataFrame:
+    """``base`` plus the codes of ``v`` on the symmetric lattice at
+    ``qmax`` (:func:`int8_codes` on :func:`_sym_scale`) and their norm.
+    Codes are integers, so every dot over them is exact in double."""
+    return (
+        base.withColumn("__scale", _sym_scale(F.col("v"), qmax))
+        .withColumn(codes, int8_codes(F.col("v"), F.col("__scale")))
+        .withColumn(nrm, norm(F.col(codes)))
+        .drop("__scale")
+    )
+
+
 def hard_negatives(
     df: DataFrame,
     anchor_max_id: int,
@@ -630,7 +812,6 @@ def hard_negatives(
     Norms and double casts are hoisted out of the pair loop (same 3x
     as :func:`knn_label_agreement`).
     """
-    from pyspark.sql import Window
     from pyspark.sql.functions import broadcast
 
     base = df.select(
@@ -665,6 +846,32 @@ def hard_negatives(
     )
 
 
+def _lsh_pairs(
+    df: DataFrame,
+    anchor_max_id: int,
+    num_planes: int,
+    probe_hamming: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """The sign-LSH audits' pair frame: the exact cosine and ``probed``
+    — whether the neighbour's bucket lies within ``probe_hamming`` bits
+    of the anchor's (the candidate set the LSH probe would score)."""
+    planes = hyperplane_coefficients(num_planes, vector_dim(df, vec_col))
+    base = (
+        _vectors(df, id_col, vec_col)
+        .withColumn("bucket", bucket_id(F.col("v"), planes))
+        .localCheckpoint(eager=False)
+    )
+    return _anchor_pairs(
+        base,
+        anchor_max_id,
+        cos=_pair_cos(),
+        probed=F.bit_count(F.col("a.bucket").bitwiseXOR(F.col("b.bucket")))
+        <= probe_hamming,
+    )
+
+
 def ann_recall_lsh(
     df: DataFrame,
     anchor_max_id: int,
@@ -688,72 +895,12 @@ def ann_recall_lsh(
     cost is |anchors| x N with the LSH side further pruned by the
     bucket filter.  Recall is a division of two exact integers.
     """
-    from pyspark.sql import Window
-    from pyspark.sql.functions import broadcast
-
-    dim = vector_dim(df, vec_col)
-    planes = hyperplane_coefficients(num_planes, dim)
-    base = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-            norm(F.col(vec_col)).alias("nrm"),
-            bucket_id(F.col(vec_col), planes).alias("bucket"),
-        )
-        .where(F.col(id_col).isNotNull() & vec_valid(F.col("v")))
-        .localCheckpoint(eager=False)
-    )
-    anchors = base.where(F.col("id") < anchor_max_id)
-    pairs = (
-        broadcast(
-            anchors.select(
-                F.col("id").alias("anchor_id"),
-                F.col("v").alias("av"),
-                F.col("nrm").alias("anrm"),
-                F.col("bucket").alias("abucket"),
-            )
-        )
-        .join(base.alias("b"), F.col("anchor_id") != F.col("b.id"))
-        .select(
-            "anchor_id",
-            "abucket",
-            F.col("b.id").alias("nbr"),
-            F.col("b.bucket").alias("nbucket"),
-            F.round(
-                F.try_divide(dot(F.col("av"), F.col("b.v")), F.col("anrm") * F.col("b.nrm")), 6
-            ).alias("cos"),
-        )
-        .localCheckpoint(eager=False)  # scored once, ranked twice below
-    )
-    w = Window.partitionBy("anchor_id").orderBy(F.desc("cos"), F.asc("nbr"))
-    exact = (
-        pairs.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .select("anchor_id", "nbr")
-    )
-    probed = pairs.where(
-        F.bit_count(F.col("nbucket").bitwiseXOR(F.col("abucket"))) <= probe_hamming
-    )
-    approx = (
-        probed.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .select("anchor_id", "nbr")
-    )
-    hits = (
-        exact.join(approx, ["anchor_id", "nbr"])
-        .groupBy("anchor_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    return (
-        exact.groupBy("anchor_id")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-        .join(broadcast(hits), "anchor_id", "left")
-        .select(
-            "anchor_id",
-            "n_exact",
-            F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            F.round(F.coalesce("n_hits", F.lit(0)) / F.least(F.lit(k), F.col("n_exact")), 6).alias("recall_at_k"),
-        )
+    pairs = _lsh_pairs(df, anchor_max_id, num_planes, probe_hamming, id_col, vec_col)
+    return _recall(
+        _topk(pairs, "cos", k),
+        _topk(pairs.where("probed"), "cos", k),
+        k,
+        "recall_at_k",
     )
 
 
@@ -794,63 +941,10 @@ def ndcg_lsh(
     Same cost shape as ``ann_recall_lsh``: |anchors| × N broadcast
     scoring, two group-limit windows, then O(anchors) arithmetic.
     """
-    from pyspark.sql import Window
-    from pyspark.sql.functions import broadcast
-
     ws, cum = dcg_weights(k)
-    dim = vector_dim(df, vec_col)
-    planes = hyperplane_coefficients(num_planes, dim)
-    base = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-            norm(F.col(vec_col)).alias("nrm"),
-            bucket_id(F.col(vec_col), planes).alias("bucket"),
-        )
-        .where(F.col(id_col).isNotNull() & vec_valid(F.col("v")))
-        .localCheckpoint(eager=False)
-    )
-    anchors = base.where(F.col("id") < anchor_max_id)
-    pairs = (
-        broadcast(
-            anchors.select(
-                F.col("id").alias("anchor_id"),
-                F.col("v").alias("av"),
-                F.col("nrm").alias("anrm"),
-                F.col("bucket").alias("abucket"),
-            )
-        )
-        .join(base.alias("b"), F.col("anchor_id") != F.col("b.id"))
-        .select(
-            "anchor_id",
-            "abucket",
-            F.col("b.id").alias("nbr"),
-            F.col("b.bucket").alias("nbucket"),
-            F.round(
-                F.try_divide(
-                    dot(F.col("av"), F.col("b.v")),
-                    F.col("anrm") * F.col("b.nrm"),
-                ),
-                6,
-            ).alias("cos"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    w = Window.partitionBy("anchor_id").orderBy(F.desc("cos"), F.asc("nbr"))
-    exact = (
-        pairs.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .select("anchor_id", "nbr")
-    )
-    approx = (
-        pairs.where(
-            F.bit_count(F.col("nbucket").bitwiseXOR(F.col("abucket")))
-            <= probe_hamming
-        )
-        .withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("anchor_id", "nbr", "rk")
-    )
+    pairs = _lsh_pairs(df, anchor_max_id, num_planes, probe_hamming, id_col, vec_col)
+    exact = _topk(pairs, "cos", k)
+    approx = _topk(pairs.where("probed"), "cos", k)
     hit = approx.join(exact, ["anchor_id", "nbr"], "left_semi")
     flags = hit.groupBy("anchor_id").agg(
         F.min("rk").alias("first_hit"),
@@ -874,7 +968,7 @@ def ndcg_lsh(
         F.count(F.lit(1)).alias("n_exact")
     )
     return (
-        n_exact.join(broadcast(flags), "anchor_id", "left")
+        n_exact.join(F.broadcast(flags), "anchor_id", "left")
         .select(
             "anchor_id",
             "n_exact",
@@ -907,104 +1001,24 @@ def quantized_recall(
     to "is int8 storage good enough for this corpus's ANN".
 
     The quantized score is the cosine over the ``floor(v*scale+0.5)``
-    code vectors: the per-vector scale cancels in a cosine, so this
-    isolates pure quantization loss.  All three dot products are
-    exact integer arithmetic; the only float ops are one sqrt and one
-    division per pair (correctly-rounded IEEE, 6-decimal lattice) —
-    portable across engines.  The exact side is the same rounded
-    cosine the rest of the ANN kit uses.  Cost is |anchors| x N with
-    the anchor side broadcast, same shape as :func:`ann_recall_lsh`.
-    Assumes no all-zero vectors (a zero code vector would divide by
-    zero).
+    code vectors (:func:`int8_scale` lattice): the per-vector scale
+    cancels in a cosine, so this isolates pure quantization loss.
+    Every dot product over codes is exact integer arithmetic; the only
+    float ops are one sqrt and one division per pair (correctly-rounded
+    IEEE, 6-decimal lattice) — portable across engines.  The exact side
+    is the same rounded cosine the rest of the ANN kit uses.  Cost is
+    |anchors| x N with the anchor side broadcast, same shape as
+    :func:`ann_recall_lsh`.  A zero vector has all-zero codes, so its
+    cosine on either side is NULL (``try_divide``) and ranks last.
     """
-    from pyspark.sql import Window
-    from pyspark.sql.functions import broadcast
-
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = (
-        df.select(
-            F.col(id_col).alias("id"),
-            v.alias("v"),
-            norm(F.col(vec_col)).alias("nrm"),
-            int8_scale(v).alias("__scale"),
-        )
-        .withColumn("codes", int8_codes(F.col("v"), F.col("__scale")))
-        .withColumn(
-            "qnrm",
-            F.sqrt(
-                F.aggregate(
-                    F.col("codes"),
-                    F.lit(0).cast("long"),
-                    lambda acc, c: acc + c * c,
-                ).cast("double")
-            ),
-        )
-        .where(F.col(id_col).isNotNull() & vec_valid(F.col("v")))
-        .drop("__scale")
-        .localCheckpoint(eager=False)
+    base = _lattice_codes(
+        _vectors(df, id_col, vec_col), 127, "codes", "qnrm"
+    ).localCheckpoint(eager=False)
+    pairs = _anchor_pairs(
+        base, anchor_max_id, cos=_pair_cos(), qcos=_pair_cos("codes", "qnrm")
     )
-    pairs = (
-        broadcast(
-            base.where(F.col("id") < anchor_max_id).select(
-                F.col("id").alias("anchor_id"),
-                F.col("v").alias("av"),
-                F.col("nrm").alias("anrm"),
-                F.col("codes").alias("acodes"),
-                F.col("qnrm").alias("aqnrm"),
-            )
-        )
-        .join(base.alias("b"), F.col("anchor_id") != F.col("b.id"))
-        .select(
-            "anchor_id",
-            F.col("b.id").alias("nbr"),
-            F.round(
-                F.try_divide(dot(F.col("av"), F.col("b.v")), F.col("anrm") * F.col("b.nrm")), 6
-            ).alias("cos"),
-            F.round(
-                F.try_divide(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("acodes"), F.col("b.codes"), lambda x, y: x * y
-                        ),
-                        F.lit(0).cast("long"),
-                        lambda acc, p: acc + p,
-                    ).cast("double"),
-                    F.col("aqnrm") * F.col("b.qnrm"),
-                ),
-                6,
-            ).alias("qcos"),
-        )
-        .localCheckpoint(eager=False)  # ranked twice below
-    )
-    w_exact = Window.partitionBy("anchor_id").orderBy(F.desc("cos"), F.asc("nbr"))
-    w_quant = Window.partitionBy("anchor_id").orderBy(F.desc("qcos"), F.asc("nbr"))
-    exact = (
-        pairs.withColumn("__rk", F.row_number().over(w_exact))
-        .where(F.col("__rk") <= k)
-        .select("anchor_id", "nbr")
-    )
-    quant = (
-        pairs.withColumn("__rk", F.row_number().over(w_quant))
-        .where(F.col("__rk") <= k)
-        .select("anchor_id", "nbr")
-    )
-    hits = (
-        exact.join(quant, ["anchor_id", "nbr"])
-        .groupBy("anchor_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    return (
-        exact.groupBy("anchor_id")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-        .join(broadcast(hits), "anchor_id", "left")
-        .select(
-            "anchor_id",
-            "n_exact",
-            F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            F.round(F.coalesce("n_hits", F.lit(0)) / F.least(F.lit(k), F.col("n_exact")), 6).alias(
-                "overlap_at_k"
-            ),
-        )
+    return _recall(
+        _topk(pairs, "cos", k), _topk(pairs, "qcos", k), k, "overlap_at_k"
     )
 
 
@@ -1031,88 +1045,12 @@ def ivf_recall(
     :func:`with_ivf_assignment` / the ivf_topk oracle use).  Cost is
     |anchors| x N with the anchor side broadcast, the
     :func:`ann_recall_lsh` shape."""
-    from pyspark.sql import Window
-    from pyspark.sql.functions import broadcast
-
-    valid = df.where(F.col(id_col).isNotNull() & vec_valid(F.col(vec_col)))
-    assigned = with_ivf_assignment(valid, centroids, vec_col)
-    base = assigned.select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        norm(F.col(vec_col)).alias("nrm"),
-        F.col("cluster"),
-    ).localCheckpoint(eager=False)
-    anchors = base.where(F.col("id") < anchor_max_id).select(
-        F.col("id").alias("anchor_id"),
-        F.col("v").alias("av"),
-        F.col("nrm").alias("anrm"),
+    pairs, probes = _ivf_pairs(df, centroids, anchor_max_id, nprobe, id_col, vec_col)
+    probed = pairs.join(
+        F.broadcast(probes.select("anchor_id", "cluster")), ["anchor_id", "cluster"]
     )
-
-    spark = df.sparkSession
-    cent_rows = spark.createDataFrame(
-        [(j, [float(x) for x in cvec]) for j, cvec in enumerate(centroids)],
-        "c int, cv array<double>",
-    )
-    d2 = F.aggregate(
-        F.zip_with(F.col("av"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
-    wp = Window.partitionBy("anchor_id").orderBy(F.asc("__d2"), F.asc("c"))
-    probes = (
-        broadcast(anchors.select("anchor_id", "av"))
-        .crossJoin(broadcast(cent_rows))
-        .withColumn("__d2", d2)
-        .withColumn("__rn", F.row_number().over(wp))
-        .where(F.col("__rn") <= nprobe)
-        .select("anchor_id", F.col("c").alias("cluster"))
-    )
-
-    pairs = (
-        broadcast(anchors)
-        .join(base.alias("b"), F.col("anchor_id") != F.col("b.id"))
-        .select(
-            "anchor_id",
-            F.col("b.id").alias("nbr"),
-            F.col("b.cluster").alias("cluster"),
-            F.round(
-                F.try_divide(
-                    dot(F.col("av"), F.col("b.v")), F.col("anrm") * F.col("b.nrm")
-                ),
-                6,
-            ).alias("cos"),
-        )
-        .localCheckpoint(eager=False)  # ranked twice below
-    )
-    w = Window.partitionBy("anchor_id").orderBy(F.desc("cos"), F.asc("nbr"))
-    exact = (
-        pairs.withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .select("anchor_id", "nbr")
-    )
-    approx = (
-        pairs.join(broadcast(probes), ["anchor_id", "cluster"])
-        .withColumn("__rk", F.row_number().over(w))
-        .where(F.col("__rk") <= k)
-        .select("anchor_id", "nbr")
-    )
-    hits = (
-        exact.join(approx, ["anchor_id", "nbr"])
-        .groupBy("anchor_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    return (
-        exact.groupBy("anchor_id")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-        .join(broadcast(hits), "anchor_id", "left")
-        .select(
-            "anchor_id",
-            "n_exact",
-            F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            F.round(F.coalesce("n_hits", F.lit(0)) / F.least(F.lit(k), F.col("n_exact")), 6).alias(
-                "recall_at_k"
-            ),
-        )
+    return _recall(
+        _topk(pairs, "cos", k), _topk(probed, "cos", k), k, "recall_at_k"
     )
 
 
@@ -1138,80 +1076,17 @@ def truncated_dim_recall(
     scores are ``try_divide`` cosines on the 6-decimal lattice — a
     zero-norm prefix (all-zero leading dims) scores NULL and sinks to
     the bottom of the DESC rank on both engines."""
-    from pyspark.sql import Window
-    from pyspark.sql.functions import broadcast
-
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     base = (
-        df.select(
-            F.col(id_col).alias("id"),
-            v.alias("v"),
-            norm(F.col(vec_col)).alias("nrm"),
-        )
+        _vectors(df, id_col, vec_col)
         .withColumn("tv", F.slice(F.col("v"), 1, dims_keep))
-        .withColumn("tnrm", F.sqrt(dot(F.col("tv"), F.col("tv"))))
-        .where(F.col(id_col).isNotNull() & vec_valid(F.col("v")))
+        .withColumn("tnrm", norm(F.col("tv")))
         .localCheckpoint(eager=False)
     )
-    pairs = (
-        broadcast(
-            base.where(F.col("id") < anchor_max_id).select(
-                F.col("id").alias("anchor_id"),
-                F.col("v").alias("av"),
-                F.col("nrm").alias("anrm"),
-                F.col("tv").alias("atv"),
-                F.col("tnrm").alias("atnrm"),
-            )
-        )
-        .join(base.alias("b"), F.col("anchor_id") != F.col("b.id"))
-        .select(
-            "anchor_id",
-            F.col("b.id").alias("nbr"),
-            F.round(
-                F.try_divide(
-                    dot(F.col("av"), F.col("b.v")), F.col("anrm") * F.col("b.nrm")
-                ),
-                6,
-            ).alias("cos"),
-            F.round(
-                F.try_divide(
-                    dot(F.col("atv"), F.col("b.tv")),
-                    F.col("atnrm") * F.col("b.tnrm"),
-                ),
-                6,
-            ).alias("tcos"),
-        )
-        .localCheckpoint(eager=False)  # ranked twice below
+    pairs = _anchor_pairs(
+        base, anchor_max_id, cos=_pair_cos(), tcos=_pair_cos("tv", "tnrm")
     )
-    w_exact = Window.partitionBy("anchor_id").orderBy(F.desc("cos"), F.asc("nbr"))
-    w_trunc = Window.partitionBy("anchor_id").orderBy(F.desc("tcos"), F.asc("nbr"))
-    exact = (
-        pairs.withColumn("__rk", F.row_number().over(w_exact))
-        .where(F.col("__rk") <= k)
-        .select("anchor_id", "nbr")
-    )
-    trunc = (
-        pairs.withColumn("__rk", F.row_number().over(w_trunc))
-        .where(F.col("__rk") <= k)
-        .select("anchor_id", "nbr")
-    )
-    hits = (
-        exact.join(trunc, ["anchor_id", "nbr"])
-        .groupBy("anchor_id")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    return (
-        exact.groupBy("anchor_id")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-        .join(broadcast(hits), "anchor_id", "left")
-        .select(
-            "anchor_id",
-            "n_exact",
-            F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            F.round(F.coalesce("n_hits", F.lit(0)) / F.least(F.lit(k), F.col("n_exact")), 6).alias(
-                "overlap_at_k"
-            ),
-        )
+    return _recall(
+        _topk(pairs, "cos", k), _topk(pairs, "tcos", k), k, "overlap_at_k"
     )
 
 
@@ -1309,8 +1184,6 @@ def knn_label_agreement(
     for the bucketed probe join); the vote/confusion stages are
     identical.
     """
-    from pyspark.sql import Window
-
     # Norms are per-VECTOR, not per-pair: fold each array once here
     # (N folds) instead of twice inside every pair (2·N² folds) — the
     # arithmetic stays dot/(nrm_a·nrm_b), bit-identical to the oracle's
@@ -1359,6 +1232,54 @@ def knn_label_agreement(
 # --- product-quantization ADC recall ----------------------------------------
 
 
+def _pq_codes_cols(
+    vec_col: Column, centroids: list[list[float]], bounds: list[tuple[int, int]]
+) -> list[Column]:
+    """Per-subspace PQ code columns ``__c{s}`` (argmin over centroid
+    subvectors, map-only; an empty trailing subspace codes 0) — the
+    one fold behind every PQ code: the corpus of :func:`pq_adc_recall`
+    and :func:`ivfpq_recall`, the probed cells of the IVF-PQ top-k
+    paths, and the pq_codes query's code table."""
+    out = []
+    for s, (lo, hi) in enumerate(bounds):
+        if hi <= lo:
+            out.append(F.lit(0).cast("int").alias(f"__c{s}"))
+            continue
+        sub = F.slice(vec_col, lo + 1, hi - lo)
+        dists = F.array(*[_sq_dist(sub, c[lo:hi]) for c in centroids])
+        out.append(
+            (F.array_position(dists, F.array_min(dists)) - 1)
+            .cast("int")
+            .alias(f"__c{s}")
+        )
+    return out
+
+
+def _adc_score(
+    q: Column,
+    centroids: list[list[float]],
+    bounds: list[tuple[int, int]],
+    codes: str = "__c",
+) -> Column:
+    """ADC inner-product approximation of ``q · v`` from a row's PQ code
+    columns ``{codes}{s}``: the per-subspace dots of the query against
+    the CODED centroid subvector, added in fixed textual (ascending-s)
+    order so the float sum is reduction-order-exact across engines.
+    Empty trailing subspaces (d < m·sublen) contribute nothing."""
+    adc = F.lit(0.0)
+    for s, (lo, hi) in enumerate(bounds):
+        if hi <= lo:
+            continue
+        cent_subs = F.array(
+            *[F.array(*[F.lit(float(x)) for x in c[lo:hi]]) for c in centroids]
+        )
+        adc = adc + dot(
+            F.slice(q, lo + 1, hi - lo),
+            F.element_at(cent_subs, F.col(f"{codes}{s}") + 1),
+        )
+    return adc
+
+
 def pq_adc_recall(
     df: DataFrame,
     centroids: list[list[float]],
@@ -1383,127 +1304,24 @@ def pq_adc_recall(
 
     KEY-UNIQUE precondition (seed quantizer + pair fan-out, like
     ivf_recall)."""
-    from pyspark.sql import Window
-    from pyspark.sql.functions import broadcast
-
-    base = (
-        df.where(F.col(id_col).isNotNull() & vec_valid(F.col(vec_col)))
-        .select(
-            F.col(id_col).alias("id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    # per-vector PQ codes (argmin over centroid subvectors, map-only)
-    coded = base
-    live = [(s, lo, hi) for s, (lo, hi) in enumerate(bounds) if hi > lo]
-    for s, lo, hi in live:
-        sub = F.slice(F.col("v"), lo + 1, hi - lo)
-        dists = F.array(*[_sq_dist(sub, c[lo:hi]) for c in centroids])
-        coded = coded.withColumn(
-            f"__c{s}",
-            (F.array_position(dists, F.array_min(dists)) - 1).cast("int"),
-        )
-    anchors = base.where(F.col("id") < anchor_max_id).select(
-        F.col("id").alias("aid"), F.col("v").alias("av")
-    )
-    pairs = broadcast(anchors).join(coded, F.col("aid") != F.col("id"))
-    # exact MIPS score and the ADC approximation, fixed term order
-    exact_score = dot(F.col("av"), F.col("v"))
-    adc = F.lit(0.0)
-    for s, lo, hi in live:
-        a_sub = F.slice(F.col("av"), lo + 1, hi - lo)
-        cent_subs = F.array(
-            *[F.array(*[F.lit(float(x)) for x in c[lo:hi]]) for c in centroids]
-        )
-        adc = adc + dot(a_sub, F.element_at(cent_subs, F.col(f"__c{s}") + 1))
-    scored = pairs.select(
-        "aid",
-        F.col("id").alias("nbr"),
-        exact_score.alias("exact_score"),
-        adc.alias("adc_score"),
+    coded = _vectors(df, id_col, vec_col).select(
+        "*", *_pq_codes_cols(F.col("v"), centroids, bounds)
     ).localCheckpoint(eager=False)
-    w_exact = Window.partitionBy("aid").orderBy(
-        F.desc("exact_score"), F.asc("nbr")
+    pairs = _anchor_pairs(
+        coded,
+        anchor_max_id,
+        exact_score=dot(F.col("a.v"), F.col("b.v")),
+        adc_score=_adc_score(F.col("a.v"), centroids, bounds, "b.__c"),
     )
-    w_adc = Window.partitionBy("aid").orderBy(
-        F.desc("adc_score"), F.asc("nbr")
-    )
-    exact = (
-        scored.withColumn("__rk", F.row_number().over(w_exact))
-        .where(F.col("__rk") <= k)
-        .select("aid", "nbr")
-    )
-    approx = (
-        scored.withColumn("__rk", F.row_number().over(w_adc))
-        .where(F.col("__rk") <= k)
-        .select("aid", "nbr")
-    )
-    hits = (
-        exact.join(approx, ["aid", "nbr"])
-        .groupBy("aid")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    return (
-        exact.groupBy("aid")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-        .join(broadcast(hits), "aid", "left")
-        .select(
-            F.col("aid").alias("anchor_id"),
-            "n_exact",
-            F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            F.round(
-                F.coalesce("n_hits", F.lit(0))
-                / F.least(F.lit(k), F.col("n_exact")),
-                6,
-            ).alias("recall_at_k"),
-        )
+    return _recall(
+        _topk(pairs, "exact_score", k),
+        _topk(pairs, "adc_score", k),
+        k,
+        "recall_at_k",
     )
 
 
 # --- IVF-PQ composite (the production ANN serving shape) ---------------------
-
-
-def _pq_codes_cols(
-    vec_col: Column, centroids: list[list[float]], bounds: list[tuple[int, int]]
-) -> list[Column]:
-    """Per-subspace PQ code columns (argmin over centroid subvectors) —
-    the same map-only fold pq_adc_recall uses, factored so IVF-PQ can
-    code only the vectors inside probed cells."""
-    out = []
-    for s, (lo, hi) in enumerate(bounds):
-        if hi <= lo:
-            out.append(F.lit(0).cast("int").alias(f"__c{s}"))
-            continue
-        sub = F.slice(vec_col, lo + 1, hi - lo)
-        dists = F.array(*[_sq_dist(sub, c[lo:hi]) for c in centroids])
-        out.append(
-            (F.array_position(dists, F.array_min(dists)) - 1)
-            .cast("int")
-            .alias(f"__c{s}")
-        )
-    return out
-
-
-def _adc_score(
-    query_vec: list[float],
-    centroids: list[list[float]],
-    bounds: list[tuple[int, int]],
-) -> Column:
-    """ADC inner-product approximation of ``q · v`` from a row's PQ code
-    columns ``__c{s}``: the per-subspace dots of the query against the
-    CODED centroid subvector, added in fixed textual (ascending-s)
-    order so the float sum is reduction-order-exact across engines."""
-    adc = F.lit(0.0)
-    for s, (lo, hi) in enumerate(bounds):
-        if hi <= lo:
-            continue
-        q_sub = F.array(*[F.lit(float(v)) for v in query_vec[lo:hi]])
-        cent_subs = F.array(
-            *[F.array(*[F.lit(float(x)) for x in c[lo:hi]]) for c in centroids]
-        )
-        adc = adc + dot(q_sub, F.element_at(cent_subs, F.col(f"__c{s}") + 1))
-    return adc
 
 
 def ivfpq_topk(
@@ -1532,11 +1350,7 @@ def ivfpq_topk(
     literals — no shuffle, no join); the top-k is one TakeOrdered.
     Ranking uses the ROUNDED score with the id as tiebreak, so the
     boundary of the top-k set is reduction-order-proof."""
-    dists = [
-        sum((float(q) - c) ** 2 for q, c in zip(query_vec, cent))
-        for cent in coarse_centroids
-    ]
-    probe = sorted(range(len(coarse_centroids)), key=lambda i: dists[i])[:nprobe]
+    probe = _nearest_cells(query_vec, coarse_centroids, nprobe)
     df = df.where(F.col(id_col).isNotNull() & vec_valid(F.col(vec_col)))
     vcol = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     assigned = with_ivf_assignment(
@@ -1547,11 +1361,12 @@ def ivfpq_topk(
         F.col("cluster"),
         *_pq_codes_cols(F.col("__v"), pq_centroids, bounds),
     )
+    q = F.array(*[F.lit(float(v)) for v in query_vec])
     return (
         coded.select(
             F.col(id_col),
             F.col("cluster"),
-            F.round(_adc_score(query_vec, pq_centroids, bounds), round_to).alias(
+            F.round(_adc_score(q, pq_centroids, bounds), round_to).alias(
                 "adc_score"
             ),
         )
@@ -1586,96 +1401,36 @@ def ivfpq_recall(
 
     KEY-UNIQUE precondition (seed quantizer + anchor fan-out, like
     ivf_recall / pq_adc_recall)."""
-    from pyspark.sql import Window
-    from pyspark.sql.functions import broadcast
-
-    base = (
-        df.where(F.col(id_col).isNotNull() & vec_valid(F.col(vec_col)))
-        .select(
-            F.col(id_col).alias("id"),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-        )
-        .localCheckpoint(eager=False)
+    coded = with_ivf_assignment(
+        _vectors(df, id_col, vec_col), coarse_centroids, "v"
     )
-    assigned = with_ivf_assignment(base, coarse_centroids, "v")
-    coded = assigned.select(
-        "id", "cluster", "v", *_pq_codes_cols(F.col("v"), pq_centroids, bounds)
+    coded = coded.select(
+        "*", *_pq_codes_cols(F.col("v"), pq_centroids, bounds)
     ).localCheckpoint(eager=False)
-    anchors = assigned.where(F.col("id") < anchor_max_id).select(
-        F.col("id").alias("aid"),
-        F.col("v").alias("av"),
-        F.col("cluster").alias("acl"),
+    pairs = _anchor_pairs(
+        coded, anchor_max_id, exact_score=dot(F.col("a.v"), F.col("b.v"))
     )
-    # per-anchor probe set: the nprobe nearest coarse cells to the anchor
-    a_dists = F.array(
-        *[_sq_dist(F.col("av"), c) for c in coarse_centroids]
+    # candidates: each anchor's nprobe nearest cells, an equi-join on cell
+    probes = _probe_cells(
+        coded.where(F.col("id") < anchor_max_id), coarse_centroids, nprobe
     )
-    probe_w = Window.partitionBy("aid").orderBy("__d", "cell")
-    a_probe = (
-        anchors.select(
-            "aid", "av", F.posexplode(a_dists).alias("cell", "__d")
-        )
-        .withColumn("__rk", F.row_number().over(probe_w))
-        .where(F.col("__rk") <= nprobe)
-        .select("aid", "av", "cell")
+    cand = F.broadcast(probes.alias("a")).join(
+        coded.alias("b"),
+        (F.col("a.cluster") == F.col("b.cluster"))
+        & (F.col("a.anchor_id") != F.col("b.id")),
     )
-    cand = broadcast(a_probe).join(
-        coded,
-        (F.col("cell") == F.col("cluster")) & (F.col("aid") != F.col("id")),
+    approx = cand.select(
+        F.col("a.anchor_id").alias("anchor_id"),
+        F.col("b.id").alias("nbr"),
+        F.round(_adc_score(F.col("a.v"), pq_centroids, bounds, "b.__c"), 6).alias(
+            "adc_score"
+        ),
     )
-    adc = F.lit(0.0)
-    for s, (lo, hi) in enumerate(bounds):
-        if hi <= lo:
-            continue
-        a_sub = F.slice(F.col("av"), lo + 1, hi - lo)
-        cent_subs = F.array(
-            *[F.array(*[F.lit(float(x)) for x in c[lo:hi]]) for c in pq_centroids]
-        )
-        adc = adc + dot(a_sub, F.element_at(cent_subs, F.col(f"__c{s}") + 1))
-    approx_scored = cand.select(
-        "aid", F.col("id").alias("nbr"), F.round(adc, 6).alias("adc_score")
-    )
-    w_adc = Window.partitionBy("aid").orderBy(F.desc("adc_score"), F.asc("nbr"))
-    approx = (
-        approx_scored.withColumn("__rk", F.row_number().over(w_adc))
-        .where(F.col("__rk") <= k)
-        .select("aid", "nbr")
-    )
-    exact_pairs = broadcast(
-        anchors.select("aid", "av")
-    ).join(base, F.col("aid") != F.col("id"))
-    w_exact = Window.partitionBy("aid").orderBy(
-        F.desc("exact_score"), F.asc("nbr")
-    )
-    exact = (
-        exact_pairs.select(
-            "aid",
-            F.col("id").alias("nbr"),
-            dot(F.col("av"), F.col("v")).alias("exact_score"),
-        )
-        .withColumn("__rk", F.row_number().over(w_exact))
-        .where(F.col("__rk") <= k)
-        .select("aid", "nbr")
-    )
-    hits = (
-        exact.join(approx, ["aid", "nbr"])
-        .groupBy("aid")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    return (
-        exact.groupBy("aid")
-        .agg(F.count(F.lit(1)).alias("n_exact"))
-        .join(broadcast(hits), "aid", "left")
-        .select(
-            F.col("aid").alias("anchor_id"),
-            "n_exact",
-            F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            F.round(
-                F.coalesce("n_hits", F.lit(0))
-                / F.least(F.lit(k), F.col("n_exact")),
-                6,
-            ).alias("recall_at_k"),
-        )
+    return _recall(
+        _topk(pairs, "exact_score", k),
+        _topk(approx, "adc_score", k),
+        k,
+        "recall_at_k",
     )
 
 
@@ -1703,11 +1458,7 @@ def ivfpq_residual_topk(
     Same plan shape: projection-only (cell argmin, residual
     subtraction, m code argmins, ADC sum — all centroid literals) +
     one TakeOrdered.  Ranking by ROUNDED score + id tiebreak."""
-    dists = [
-        sum((float(q) - c) ** 2 for q, c in zip(query_vec, cent))
-        for cent in coarse_centroids
-    ]
-    probe = sorted(range(len(coarse_centroids)), key=lambda i: dists[i])[:nprobe]
+    probe = _nearest_cells(query_vec, coarse_centroids, nprobe)
     df = df.where(F.col(id_col).isNotNull() & vec_valid(F.col(vec_col)))
     vcol = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     assigned = with_ivf_assignment(
@@ -1729,7 +1480,7 @@ def ivfpq_residual_topk(
     )
     q = F.array(*[F.lit(float(v)) for v in query_vec])
     base_term = dot(q, F.element_at(cent_arr, F.col("cluster") + 1))
-    adc = base_term + _adc_score(query_vec, pq_centroids, bounds)
+    adc = base_term + _adc_score(q, pq_centroids, bounds)
     return (
         coded.select(
             F.col(id_col),

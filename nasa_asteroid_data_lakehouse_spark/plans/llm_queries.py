@@ -786,17 +786,9 @@ def ivf_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL-expressible so the driver hash-checks the IVF plumbing.
     """
     emb = read_table(spark, sf_dir, "embeddings")
-    # Seeds are the K lowest-id rows WITH a vector (filter BEFORE the
-    # limit — a NULL-headed table still yields K centroids, and the
-    # centroid index then equals the seed's rank, matching the
-    # oracle's row_number()-based cluster label).
-    seeds = (
-        emb.where(similarity.vec_valid(F.col("embedding")))
-        .orderBy("vec_id")
-        .limit(_IVF_K_CENTROIDS)
-        .collect()
-    )
-    centroids = [[float(v) for v in r["embedding"]] for r in seeds]
+    # centroid index == seed rank, matching the oracle's
+    # row_number()-based cluster label
+    centroids = similarity.seed_centroids(emb, _IVF_K_CENTROIDS)
     qvec = similarity.query_vector(emb, "vec_id", "embedding", 0)
     if qvec is None or not centroids:
         # No valid probe (or no valid vectors at all to seed): the
@@ -1616,15 +1608,7 @@ def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     kmeans iters=0) keep the oracle SQL-expressible; the Lloyd-iterated
     quantizer is exercised in tests."""
     emb = read_table(spark, sf_dir, "embeddings")
-    # Filter BEFORE the limit (same rank-vs-index alignment as
-    # ivf_topk_embeddings: centroid index == seed rank).
-    seeds = (
-        emb.where(similarity.vec_valid(F.col("embedding")))
-        .orderBy("vec_id")
-        .limit(_SEMDEDUP_K)
-        .collect()
-    )
-    centroids = [[float(v) for v in r["embedding"]] for r in seeds]
+    centroids = similarity.seed_centroids(emb, _SEMDEDUP_K)
     return similarity.semantic_dedup(
         emb, centroids, _SEMDEDUP_THRESHOLD
     ).orderBy("vec_id")

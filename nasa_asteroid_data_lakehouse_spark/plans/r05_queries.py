@@ -372,20 +372,10 @@ def ivf_recall_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     triptych (LSH: ann_recall, int8: quantized_recall, IVF: here).
     Seed quantizer (8 lowest valid ids, kmeans iters=0) keeps the
     oracle SQL-expressible, same contract as ivf_topk_embeddings."""
-    from pyspark.sql import functions as SF
-
     from nasa_asteroid_data_lakehouse_spark.llm import similarity
 
     emb = read_table(spark, sf_dir, "embeddings")
-    seeds = (
-        emb.where(similarity.vec_valid(SF.col("embedding")))
-        .orderBy("vec_id")
-        .limit(_IVFR_CENTROIDS)
-        .collect()
-    )
-    centroids = [[float(v) for v in r["embedding"]] for r in seeds]
-    if not centroids:
-        centroids = [[0.0]]
+    centroids = similarity.seed_centroids(emb, _IVFR_CENTROIDS) or [[0.0]]
     return similarity.ivf_recall(
         emb,
         centroids,

@@ -960,20 +960,6 @@ def _pq_geometry(d: int) -> list[tuple[int, int]]:
     return [(s * sub, min((s + 1) * sub, d)) for s in range(_PQ_M)]
 
 
-def _pq_seed_centroids(emb: DataFrame) -> list[list[float]]:
-    """K lowest-id valid vectors (the same seed quantizer convention
-    as ivf_topk — kmeans iters=0 keeps the oracle SQL-expressible).
-    KEY-UNIQUE precondition: duplicate ids make 'the vector of id i'
-    ambiguous (documented driver_sim skip, like ivf_topk)."""
-    rows = (
-        emb.where(similarity.vec_valid(F.col("embedding")))
-        .orderBy("vec_id")
-        .limit(_PQ_K)
-        .collect()
-    )
-    return [[float(v) for v in r["embedding"]] for r in rows]
-
-
 def pq_codes_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization code assignment: m=4 contiguous subspaces,
     per-subspace argmin over 8 seed centroids — the storage half of a
@@ -986,29 +972,17 @@ def pq_codes_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned however the serving layer wants it."""
     emb = read_table(spark, sf_dir, "embeddings")
     valid = emb.where(similarity.vec_valid(F.col("embedding")))
-    cents = _pq_seed_centroids(emb)
+    cents = similarity.seed_centroids(emb, _PQ_K)
     if not cents:
         return valid.select(
             "vec_id",
             *[F.lit(None).cast("int").alias(f"c{s}") for s in range(_PQ_M)],
         )
-    d = len(cents[0])
     vcol = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    cols = [F.col("vec_id")]
-    for s, (lo, hi) in enumerate(_pq_geometry(d)):
-        if hi <= lo:
-            cols.append(F.lit(0).cast("int").alias(f"c{s}"))
-            continue
-        sub = F.slice(vcol, lo + 1, hi - lo)
-        dists = F.array(
-            *[similarity._sq_dist(sub, c[lo:hi]) for c in cents]
-        )
-        cols.append(
-            (F.array_position(dists, F.array_min(dists)) - 1)
-            .cast("int")
-            .alias(f"c{s}")
-        )
-    return valid.select(*cols)
+    codes = similarity._pq_codes_cols(vcol, cents, _pq_geometry(len(cents[0])))
+    return valid.select(
+        "vec_id", *[c.alias(f"c{s}") for s, c in enumerate(codes)]
+    )
 
 
 def _pq_d2_sql(vec: str, cent: str, lo: str, hi: str) -> str:
@@ -1079,7 +1053,7 @@ def centroid_inertia_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     the aggregate is keyed on the bounded cluster id."""
     emb = read_table(spark, sf_dir, "embeddings")
     valid = emb.where(similarity.vec_valid(F.col("embedding")))
-    cents = _pq_seed_centroids(emb)
+    cents = similarity.seed_centroids(emb, _PQ_K)
     if not cents:
         return valid.select(
             F.lit(None).cast("int").alias("cluster"),
@@ -1423,7 +1397,7 @@ def silhouette_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     inputs.  Mean silhouette aggregates per bounded cluster id."""
     emb = read_table(spark, sf_dir, "embeddings")
     valid = emb.where(similarity.vec_valid(F.col("embedding")))
-    cents = _pq_seed_centroids(emb)
+    cents = similarity.seed_centroids(emb, _PQ_K)
     if not cents:
         return valid.select(
             F.lit(None).cast("int").alias("cluster"),
@@ -1816,7 +1790,8 @@ def pq_adc_recall_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall family (LSH: ann_recall, int8: quantized_recall, IVF:
     ivf_recall, PQ: here)."""
     emb = read_table(spark, sf_dir, "embeddings")
-    cents = _pq_seed_centroids(emb)
+    # the oracle's seeds come from its vec_id IS NOT NULL scan
+    cents = similarity.seed_centroids(emb.where(F.col("vec_id").isNotNull()), _PQ_K)
     if not cents:
         return emb.limit(0).select(
             F.col("vec_id").alias("anchor_id"),

@@ -97,20 +97,6 @@ def _pq_geometry(d: int) -> list[tuple[int, int]]:
     return [(s * sub, min((s + 1) * sub, d)) for s in range(_IPQ_M)]
 
 
-def _seed_centroids(emb: DataFrame, k: int) -> list[list[float]]:
-    """K lowest-id valid vectors — the seed-quantizer convention every
-    oracle-checked ANN query in this repo uses (kmeans iters=0 keeps
-    the oracle SQL-expressible; the Lloyd loop is pytest-pinned in
-    tests/test_llm.py).  KEY-UNIQUE precondition as for ivf_topk."""
-    rows = (
-        emb.where(F.col("vec_id").isNotNull() & similarity.vec_valid(F.col("embedding")))
-        .orderBy("vec_id")
-        .limit(k)
-        .collect()
-    )
-    return [[float(v) for v in r["embedding"]] for r in rows]
-
-
 def ivfpq_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ top-k (llm/similarity.ivfpq_topk): coarse quantizer
     prunes to 2 of 8 cells, PQ-ADC (m=4 subspaces, 8 codewords) scores
@@ -123,7 +109,9 @@ def ivfpq_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum, all centroid literals) + one TakeOrdered — no shuffle, no
     join.  Ranking by ROUNDED score + id tiebreak."""
     emb = read_table(spark, sf_dir, "embeddings")
-    cents = _seed_centroids(emb, _IPQ_K_CENT)
+    cents = similarity.seed_centroids(
+        emb.where(F.col("vec_id").isNotNull()), _IPQ_K_CENT
+    )
     qvec = similarity.query_vector(emb, "vec_id", "embedding", 0)
     if qvec is None or not cents:
         return emb.limit(0).select(
@@ -240,7 +228,9 @@ def ivfpq_recall_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bounded broadcast-anchor shape (8 anchors); candidate generation
     is an equi-join on cell id.  KEY-UNIQUE precondition."""
     emb = read_table(spark, sf_dir, "embeddings")
-    cents = _seed_centroids(emb, _IPQ_K_CENT)
+    cents = similarity.seed_centroids(
+        emb.where(F.col("vec_id").isNotNull()), _IPQ_K_CENT
+    )
     if not cents:
         return emb.limit(0).select(
             F.col("vec_id").alias("anchor_id"),
@@ -1279,17 +1269,10 @@ def ivfpq_residual_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFram
     than 9 valid vectors -> empty codebook -> empty result on both
     engines.  KEY-UNIQUE precondition (ORDER-BY-id seeds)."""
     emb = read_table(spark, sf_dir, "embeddings")
-    rows = (
-        emb.where(
-            F.col("vec_id").isNotNull()
-            & similarity.vec_valid(F.col("embedding"))
-        )
-        .orderBy("vec_id")
-        .limit(2 * _IPQ_K_CENT)
-        .collect()
+    seeds = similarity.seed_centroids(
+        emb.where(F.col("vec_id").isNotNull()), 2 * _IPQ_K_CENT
     )
-    cents = [[float(v) for v in r["embedding"]] for r in rows[:_IPQ_K_CENT]]
-    pq_src = [[float(v) for v in r["embedding"]] for r in rows[_IPQ_K_CENT:]]
+    cents, pq_src = seeds[:_IPQ_K_CENT], seeds[_IPQ_K_CENT:]
     qvec = similarity.query_vector(emb, "vec_id", "embedding", 0)
     empty = emb.limit(0).select(
         "vec_id",

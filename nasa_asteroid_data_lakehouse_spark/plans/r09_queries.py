@@ -463,73 +463,15 @@ def ivf_nprobe_sweep_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape); each config's audit is a bounded aggregate over a filter
     of the SHARED pair table, so the sweep pays ~one recall audit, not
     three."""
-    from pyspark.sql import Window
-
     from nasa_asteroid_data_lakehouse_spark.llm import similarity
-    from nasa_asteroid_data_lakehouse_spark.llm.similarity import dot, norm
 
     emb = read_table(spark, sf_dir, "embeddings")
-    valid = emb.where(
-        F.col("vec_id").isNotNull() & similarity.vec_valid(F.col("embedding"))
+    centroids = similarity.seed_centroids(emb, _NSW_CENTROIDS) or [[0.0]]
+    pairs, probes = similarity._ivf_pairs(
+        emb, centroids, _NSW_ANCHOR_MAX, max(_NSW_PROBES), "vec_id", "embedding"
     )
-    seeds = valid.orderBy("vec_id").limit(_NSW_CENTROIDS).collect()
-    centroids = [[float(v) for v in r["embedding"]] for r in seeds]
-    if not centroids:
-        centroids = [[0.0]]
-    assigned = similarity.with_ivf_assignment(valid, centroids, "embedding")
-    base = assigned.select(
-        F.col("vec_id").alias("id"),
-        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
-        norm(F.col("embedding")).alias("nrm"),
-        "cluster",
-    ).localCheckpoint(eager=False)
-    anchors = base.where(F.col("id") < _NSW_ANCHOR_MAX).select(
-        F.col("id").alias("anchor_id"),
-        F.col("v").alias("av"),
-        F.col("nrm").alias("anrm"),
-    )
-    cent_rows = spark.createDataFrame(
-        [(j, [float(x) for x in cv]) for j, cv in enumerate(centroids)],
-        "c int, cv array<double>",
-    )
-    d2 = F.aggregate(
-        F.zip_with(F.col("av"), F.col("cv"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
-    wp = Window.partitionBy("anchor_id").orderBy(F.asc("__d2"), F.asc("c"))
-    probes = (
-        F.broadcast(anchors.select("anchor_id", "av"))
-        .crossJoin(F.broadcast(cent_rows))
-        .withColumn("__d2", d2)
-        .withColumn("probe_rank", F.row_number().over(wp))
-        .where(F.col("probe_rank") <= max(_NSW_PROBES))
-        .select("anchor_id", F.col("c").alias("cluster"), "probe_rank")
-    )
-    pairs = (
-        F.broadcast(anchors)
-        .join(base.alias("b"), F.col("anchor_id") != F.col("b.id"))
-        .select(
-            "anchor_id",
-            F.col("b.id").alias("nbr"),
-            F.col("b.cluster").alias("cluster"),
-            F.round(
-                F.try_divide(
-                    dot(F.col("av"), F.col("b.v")),
-                    F.col("anrm") * F.col("b.nrm"),
-                ),
-                6,
-            ).alias("cos"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    wk = Window.partitionBy("anchor_id").orderBy(F.desc("cos"), F.asc("nbr"))
-    exact = (
-        pairs.withColumn("rk", F.row_number().over(wk))
-        .where(F.col("rk") <= _NSW_K)
-        .select("anchor_id", "nbr")
-        .localCheckpoint(eager=False)
-    )
+    probes = probes.localCheckpoint(eager=False)  # filtered once per config
+    exact = similarity._topk(pairs, "cos", _NSW_K).localCheckpoint(eager=False)
     n_exact = F.broadcast(
         exact.agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
     )
@@ -542,11 +484,7 @@ def ivf_nprobe_sweep_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
             probes.where(F.col("probe_rank") <= p).select("anchor_id", "cluster"),
             ["anchor_id", "cluster"],
         )
-        approx = (
-            cand.withColumn("rk", F.row_number().over(wk))
-            .where(F.col("rk") <= _NSW_K)
-            .select("anchor_id", "nbr")
-        )
+        approx = similarity._topk(cand, "cos", _NSW_K)
         hits = approx.join(exact, ["anchor_id", "nbr"])
         row = (
             cand.agg(

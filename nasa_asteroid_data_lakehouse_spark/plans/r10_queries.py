@@ -665,111 +665,26 @@ def quant_bits_sweep_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     per pair, 6-decimal lattice — portable across engines.  Zero-norm
     vectors are excluded on both sides (a zero vector has no cosine
     ranking).  Output: 3 rows."""
-    from pyspark.sql import Window
-    from pyspark.sql.functions import broadcast
-
-    from nasa_asteroid_data_lakehouse_spark.llm.similarity import (
-        dot,
-        norm,
-        vec_valid,
-    )
+    from nasa_asteroid_data_lakehouse_spark.llm import similarity
 
     emb = read_table(spark, sf_dir, "embeddings")
-    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    maxabs = F.array_max(F.transform(F.col("v"), lambda x: F.abs(x)))
-    base = (
-        emb.select(F.col("vec_id").alias("id"), v.alias("v"))
-        .where(F.col("id").isNotNull() & vec_valid(F.col("v")))
-        .withColumn("nrm", norm(F.col("v")))
-        .where(F.col("nrm") > 0)
-    )
-    def _codes(scale_col):
-        # NOTE: the scale must be captured via a closure argument, not a
-        # lambda default — a two-parameter lambda is interpreted by
-        # F.transform as (element, index) and the "default" silently
-        # binds to the array index.
-        return F.transform(
-            F.col("v"), lambda x: F.floor(x * scale_col + F.lit(0.5))
-        )
-
+    base = similarity._vectors(emb, "vec_id", "embedding").where(F.col("nrm") > 0)
     for bits in _QBS_BITS:
-        qmax = 2 ** (bits - 1) - 1
-        scale = F.when(maxabs > 0, F.lit(float(qmax)) / maxabs).otherwise(
-            F.lit(1.0)
+        base = similarity._lattice_codes(
+            base, 2 ** (bits - 1) - 1, f"c{bits}", f"qn{bits}"
         )
-        base = base.withColumn(
-            f"c{bits}",
-            _codes(scale),
-        ).withColumn(
-            f"qn{bits}",
-            F.sqrt(
-                F.aggregate(
-                    F.col(f"c{bits}"),
-                    F.lit(0).cast("long"),
-                    lambda acc, c: acc + c * c,
-                ).cast("double")
-            ),
-        )
-    base = base.localCheckpoint(eager=False)
-
-    def qcos(bits: int) -> F.Column:
-        return F.round(
-            F.try_divide(
-                F.aggregate(
-                    F.zip_with(
-                        F.col(f"ac{bits}"), F.col(f"b.c{bits}"), lambda x, y: x * y
-                    ),
-                    F.lit(0).cast("long"),
-                    lambda acc, p: acc + p,
-                ).cast("double"),
-                F.col(f"aqn{bits}") * F.col(f"b.qn{bits}"),
-            ),
-            6,
-        )
-
-    anchors = broadcast(
-        base.where(F.col("id") < _QBS_ANCHOR_MAX).select(
-            F.col("id").alias("anchor_id"),
-            F.col("v").alias("av"),
-            F.col("nrm").alias("anrm"),
-            *[F.col(f"c{b}").alias(f"ac{b}") for b in _QBS_BITS],
-            *[F.col(f"qn{b}").alias(f"aqn{b}") for b in _QBS_BITS],
-        )
+    pairs = similarity._anchor_pairs(
+        base.localCheckpoint(eager=False),
+        _QBS_ANCHOR_MAX,
+        cos=similarity._pair_cos(),
+        **{f"q{b}": similarity._pair_cos(f"c{b}", f"qn{b}") for b in _QBS_BITS},
     )
-    pairs = (
-        anchors.join(base.alias("b"), F.col("anchor_id") != F.col("b.id"))
-        .select(
-            "anchor_id",
-            F.col("b.id").alias("nbr"),
-            F.round(
-                F.try_divide(
-                    dot(F.col("av"), F.col("b.v")), F.col("anrm") * F.col("b.nrm")
-                ),
-                6,
-            ).alias("cos"),
-            *[qcos(b).alias(f"q{b}") for b in _QBS_BITS],
-        )
-        .localCheckpoint(eager=False)  # ranked 4x below
-    )
-    w_exact = Window.partitionBy("anchor_id").orderBy(F.desc("cos"), F.asc("nbr"))
-    exact = (
-        pairs.withColumn("__rk", F.row_number().over(w_exact))
-        .where(F.col("__rk") <= _QBS_K)
-        .select("anchor_id", "nbr")
-        .localCheckpoint(eager=False)
-    )
+    exact = similarity._topk(pairs, "cos", _QBS_K).localCheckpoint(eager=False)
     n_exact_total = int(exact.count())
     n_anchors = int(exact.select("anchor_id").distinct().count())
     rows = []
     for bits in _QBS_BITS:
-        w_q = Window.partitionBy("anchor_id").orderBy(
-            F.desc(f"q{bits}"), F.asc("nbr")
-        )
-        quant = (
-            pairs.withColumn("__rk", F.row_number().over(w_q))
-            .where(F.col("__rk") <= _QBS_K)
-            .select("anchor_id", "nbr")
-        )
+        quant = similarity._topk(pairs, f"q{bits}", _QBS_K)
         rows.append(
             exact.join(quant, ["anchor_id", "nbr"]).agg(
                 F.lit(bits).cast("bigint").alias("bits"),

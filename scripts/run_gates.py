@@ -9,7 +9,7 @@
 6. driver_sim --extreme (value-domain edges: zero vectors, huge/tiny magnitudes)
 7. driver_sim --dup (duplicate keys with conflicting payloads)
 8. adversarial_sim (NULL/NaN/dup pass + unicode pass)
-9. pytest tests/ (full suite)
+9. pytest tests/ -m "" (full suite, `slow` tests included)
 
 Usage: python scripts/run_gates.py [--fast]
   --fast skips the sf0.1 pass and the full pytest suite (keeps the
@@ -62,7 +62,9 @@ def main() -> int:
         gates.insert(
             1, ("driver_sim sf0.1", [py, "scripts/driver_sim.py", "/root/testdata/sf0.1"])
         )
-        gates.append(("pytest", [py, "-m", "pytest", "tests/", "-x", "-q"]))
+        # -m "": pytest.ini deselects `slow` by default; this gate is
+        # the full suite
+        gates.append(("pytest", [py, "-m", "pytest", "tests/", "-m", "", "-x", "-q"]))
 
     results = [run(name, cmd) for name, cmd in gates]
     failed = [n for n, ok, _ in results if not ok]

@@ -181,6 +181,29 @@ REPROVE: dict[int, list[str]] = {
         "dv_merge_on_read_orders",
         "optimize_dv_purge_orders",
     ],
+    # r18: the nine ANN recall audits run on one anchor-audit kit in
+    # llm/similarity.py, and every seed quantizer goes through
+    # seed_centroids (NULL ids sort last, as in the oracles); the int8
+    # lattice and the PQ code fold each have one definition.
+    18: [
+        "ann_recall_embeddings",
+        "ndcg_lsh_embeddings",
+        "quantized_recall_embeddings",
+        "truncated_dim_recall_embeddings",
+        "ivf_recall_embeddings",
+        "pq_adc_recall_embeddings",
+        "ivfpq_recall_embeddings",
+        "ivf_nprobe_sweep_embeddings",
+        "quant_bits_sweep_embeddings",
+        "ivf_topk_embeddings",
+        "semantic_dedup_embeddings",
+        "pq_codes_embeddings",
+        "centroid_inertia_embeddings",
+        "silhouette_embeddings",
+        "ivfpq_topk_embeddings",
+        "ivfpq_residual_topk_embeddings",
+        "quantized_embeddings",
+    ],
 }
 
 

@@ -16,7 +16,7 @@ import pytest
 import __spark_entry__ as entry
 from tests.test_plan_quality import _BNLJ_ALLOWED
 
-# families + every query restructured in r11/r12
+# families + every query restructured in r11/r12 and by the audit kit
 _SMOKE = [
     # r12-restructured
     "pca_power_iteration_embeddings",
@@ -35,6 +35,15 @@ _SMOKE = [
     "dv_merge_on_read_orders",
     "optimize_dv_purge_orders",
     "txn_consistent_snapshot_orders",
+    # ANN anchor audits rewritten on the shared kit (llm/similarity.py);
+    # quant_bits_sweep and ivfpq_recall are listed below
+    "ann_recall_embeddings",
+    "ndcg_lsh_embeddings",
+    "quantized_recall_embeddings",
+    "truncated_dim_recall_embeddings",
+    "ivf_recall_embeddings",
+    "pq_adc_recall_embeddings",
+    "ivf_nprobe_sweep_embeddings",
     # r11-restructured
     "decontamination_ngram_sweep_documents",
     "streaming_full_outer_join_replay_events",
