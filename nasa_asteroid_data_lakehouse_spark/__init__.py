@@ -5,14 +5,17 @@ Spark-first (DataFrame/SQL/Catalyst/Structured Streaming).
 Layout:
   session     -- SparkSession factory tuned for lakehouse workloads
   catalog     -- name->path registry + temp-view registration
-  sources/    -- parquet / JSON (multiline + JSONL) / REST readers, sinks
+  sources/    -- JSON (multiline + JSONL) readers, the ``rest_feed`` and
+                 change-feed DataSources, sinks
   operators/  -- relational operators (normalize, profile, dedup, joins,
                  topk, merge-upsert, set ops)
-  functions/  -- scalar kits (surrogate keys, calendar, JSON extraction)
+  functions/  -- scalar kits (surrogate keys, calendar)
   plans/      -- headline analytical queries over the star schema
   pipeline/   -- the NeoWs bronze->silver->gold showcase pipeline
   llm/        -- large-scale training-data ops (dedup, similarity,
                  text analysis, multimodal plumbing)
+  lake/       -- VersionedTable (manifest-versioned, bucketed table
+                 format) and multi-table transactions
   streaming/  -- Structured Streaming mirrors of the batch patterns
 """
 

@@ -3,18 +3,11 @@ from nasa_asteroid_data_lakehouse_spark.functions.dates import (
     parse_neows_timestamp,
     with_calendar_parts,
 )
-from nasa_asteroid_data_lakehouse_spark.functions.json import json_get, parse_json_column
-from nasa_asteroid_data_lakehouse_spark.functions.keys import (
-    surrogate_key,
-    with_surrogate_key,
-)
+from nasa_asteroid_data_lakehouse_spark.functions.keys import surrogate_key
 
 __all__ = [
     "calendar_parts",
-    "json_get",
-    "parse_json_column",
     "parse_neows_timestamp",
     "surrogate_key",
     "with_calendar_parts",
-    "with_surrogate_key",
 ]

@@ -10,7 +10,6 @@ point, which is exactly what distributed rebuilds at 100 TB need.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 
@@ -25,7 +24,3 @@ def surrogate_key(*cols: Column | str, sep: str = KEY_SEPARATOR) -> Column:
     """
     normalized = [F.col(c).cast("string") if isinstance(c, str) else c.cast("string") for c in cols]
     return F.sha2(F.concat_ws(sep, *normalized), 256)
-
-
-def with_surrogate_key(df: DataFrame, key_name: str, cols: list[str]) -> DataFrame:
-    return df.withColumn(key_name, surrogate_key(*cols))

@@ -128,13 +128,6 @@ def shingle_base_hash(shingle: Column) -> Column:
     return F.conv(F.substring(F.md5(shingle), 1, 8), 16, 10).cast("long")
 
 
-def minhash_value(base_hashes: Column, a: int, b: int) -> Column:
-    """One MinHash coordinate: min over shingles of (a·h + b) mod p."""
-    return F.array_min(
-        F.transform(base_hashes, lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_PRIME)
-    )
-
-
 def minhash_signature(shingles: Column, num_hashes: int) -> Column:
     """array<long> MinHash signature via a single fold over the shingles.
 

@@ -24,10 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_METADATA_SCHEMA = (
-    "n_bytes bigint, media_type string, format string, checksum string"
-)
-
 
 def with_binary_payload(
     df: DataFrame, source_col: str, out: str = "payload"
@@ -223,54 +219,6 @@ def payload_survivors(
     return survivors.unionByName(df.where(F.col(payload_col).isNull()))
 
 
-RESIZE_SCHEMA = "doc_id bigint, height int, width int, pixels binary"
-
-
-def resize_images(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    height: int = 8,
-    width: int = 8,
-    decoder: Callable[[bytes], np.ndarray] | None = None,
-) -> DataFrame:
-    """Decode + nearest-neighbor resize to (height, width), Arrow-batched.
-
-    The resize math (index-space nearest-neighbor sampling, vectorized
-    numpy) is real; the codec is injected like :func:`decode_image`.
-    With no decoder, payload bytes are interpreted as a square grayscale
-    image (deterministic fake) so the full Spark path — schema, batch
-    shape, output binary — is exercised in tests without PIL/cv2.
-    """
-
-    def fake_decode(payload: bytes) -> np.ndarray:
-        arr = np.frombuffer(payload or b"\x00", dtype=np.uint8)
-        side = max(int(np.sqrt(arr.size)), 1)
-        return arr[: side * side].reshape(side, side)
-
-    dec = decoder or fake_decode
-
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hs, ws, out = [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                img = np.asarray(dec(payload))
-                if img.ndim == 3:  # HxWxC -> grayscale mean for the fake path
-                    img = img.mean(axis=2).astype(np.uint8)
-                rows = (np.arange(height) * img.shape[0] // height).clip(0, img.shape[0] - 1)
-                cols = (np.arange(width) * img.shape[1] // width).clip(0, img.shape[1] - 1)
-                small = img[np.ix_(rows, cols)].astype(np.uint8)
-                ids.append(doc_id)
-                hs.append(height)
-                ws.append(width)
-                out.append(small.tobytes())
-            yield pd.DataFrame(
-                {"doc_id": ids, "height": hs, "width": ws, "pixels": out}
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(resize_batches, RESIZE_SCHEMA)
-
-
 def sample_frames(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -298,64 +246,4 @@ def sample_frames(
 
     return df.select(id_col, payload_col).mapInPandas(
         frame_batches, "doc_id bigint, frame_idx int, frame_bytes binary"
-    )
-
-
-def byte_feature_profile_arrow(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """``mapInArrow`` twin of :func:`byte_feature_profile`: operates on
-    pyarrow RecordBatches directly, skipping the Arrow<->pandas
-    materialization both ways.
-
-    For wide binary payloads that conversion is the dominant cost of
-    the Python boundary — pandas boxes every payload into a Python
-    bytes object per row even when the UDF only needs lengths and
-    hashes; Arrow buffers expose them zero-copy.  Output is
-    byte-identical to the pandas path (equivalence is pinned in
-    tests/test_round3_ops.py), so callers choose per workload: pandas
-    for ergonomic row logic, Arrow for throughput.
-    """
-    import hashlib
-
-    import pyarrow as pa
-
-    schema = pa.schema(
-        [
-            pa.field("doc_id", pa.int64()),
-            pa.field("n_bytes", pa.int64()),
-            pa.field("n_spaces", pa.int64()),
-            pa.field("sha256_hex", pa.string()),
-        ]
-    )
-
-    def profile_batches(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for batch in batches:
-            ids = batch.column(0)
-            # None (NULL payload) propagates; b"" keeps its real profile.
-            payloads = [p.as_py() for p in batch.column(1)]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids.cast(pa.int64()),
-                    pa.array(
-                        [None if p is None else len(p) for p in payloads],
-                        pa.int64(),
-                    ),
-                    pa.array(
-                        [None if p is None else p.count(b" ") for p in payloads],
-                        pa.int64(),
-                    ),
-                    pa.array(
-                        [
-                            None if p is None else hashlib.sha256(p).hexdigest()
-                            for p in payloads
-                        ],
-                        pa.string(),
-                    ),
-                ],
-                schema=schema,
-            )
-
-    return df.select(id_col, payload_col).mapInArrow(
-        profile_batches, "doc_id bigint, n_bytes bigint, n_spaces bigint, sha256_hex string"
     )

@@ -1,23 +1,20 @@
-"""Deterministic training-shard export.
+"""Deterministic training-shard assignment and within-shard order.
 
-The last step of a training-data pipeline: split the curated corpus
+The last step of a training-data pipeline splits the curated corpus
 into N shards whose assignment is a pure function of the document id
 (md5 bucket — reproducible across engines, runs, and re-exports after
 upstream fixes), with a deterministic pseudo-random order *within*
 each shard so examples arrive decorrelated without ever globally
-sorting the corpus.
-
-Scale shape: one hash projection + one ``repartition(num_shards,
-shard)`` exchange + partition-local sort — no global window, no
-driver-side state, so 100 TB exports as N independent file groups.
-The reference has no export surface at all (its gold tables are the
-terminal layer); this extends SURVEY.md §2 K with the
-training-pipeline sink the task brief calls for.
+sorting the corpus.  ``shard_id`` and ``shuffle_order`` are those two
+keys; an export is one ``repartition(num_shards, shard)`` exchange plus
+a partition-local sort on them, with no global window and no
+driver-side state.  The reference has no export surface at all (its
+gold tables are the terminal layer); this extends SURVEY.md §2 K.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 DEFAULT_SEED = "shards-v1"
@@ -41,24 +38,3 @@ def shuffle_order(id_col: Column | str, seed: str = DEFAULT_SEED) -> Column:
     uniform, collision-negligible, and engine-portable."""
     c = F.col(id_col) if isinstance(id_col, str) else id_col
     return F.md5(F.concat_ws("||", F.lit(seed + "-order"), c.cast("string")))
-
-
-def export_training_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    num_shards: int = 16,
-    seed: str = DEFAULT_SEED,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` as ``shard=<k>/`` partitions, rows shuffled
-    deterministically within each shard."""
-    out = (
-        df.withColumn("shard", shard_id(id_col, num_shards, seed))
-        .withColumn("__ord", shuffle_order(id_col, seed))
-        .repartition(num_shards, "shard")
-        .sortWithinPartitions("shard", "__ord")
-        .drop("__ord")
-    )
-    out.write.format(fmt).mode(mode).partitionBy("shard").save(path)

@@ -215,23 +215,6 @@ def with_fingerprints(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def stratified_sample(
-    df: DataFrame,
-    strata_col: str,
-    fractions: dict[str, float],
-    seed: int = 42,
-) -> DataFrame:
-    """Per-stratum Bernoulli sampling (training-mix rebalancing).
-
-    ``sampleBy`` keeps approximately ``fractions[v]`` of rows per
-    stratum value, deterministic for a fixed seed AND a fixed input
-    partitioning (the sampler is per-partition; repartitioning changes
-    which rows survive — persist the sampled output rather than
-    re-deriving it if exact reproducibility across layouts matters).
-    """
-    return df.sampleBy(strata_col, fractions, seed=seed)
-
-
 def deterministic_sample_per_stratum(
     df: DataFrame,
     strata_col: str,

@@ -1,6 +1,5 @@
 from nasa_asteroid_data_lakehouse_spark.operators.dedup import (
     dedup_all_columns,
-    dedup_by_keys,
     dedup_deterministic,
     duplicate_groups,
 )
@@ -10,12 +9,7 @@ from nasa_asteroid_data_lakehouse_spark.operators.expectations import (
     check_ref_integrity,
     check_unique,
 )
-from nasa_asteroid_data_lakehouse_spark.operators.joins import (
-    anti_join,
-    key_integrity,
-    semi_join,
-    star_join,
-)
+from nasa_asteroid_data_lakehouse_spark.operators.joins import anti_join
 from nasa_asteroid_data_lakehouse_spark.operators.merge import (
     merge_dataframes,
     read_table_if_exists,
@@ -44,12 +38,10 @@ __all__ = [
     "check_ref_integrity",
     "check_unique",
     "dedup_all_columns",
-    "dedup_by_keys",
     "dedup_deterministic",
     "duplicate_groups",
     "except_rows",
     "intersect_rows",
-    "key_integrity",
     "merge_dataframes",
     "normalize_placeholders",
     "profile",
@@ -60,8 +52,6 @@ __all__ = [
     "scd2_compress",
     "with_salt",
     "save_or_update_table",
-    "semi_join",
-    "star_join",
     "top_k",
     "top_k_per_group",
     "union_by_name",

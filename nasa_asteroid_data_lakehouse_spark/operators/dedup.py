@@ -23,16 +23,6 @@ def dedup_all_columns(df: DataFrame) -> DataFrame:
     return df.dropDuplicates()
 
 
-def dedup_by_keys(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Key-subset dedup with arbitrary survivor (reference semantics).
-
-    Spark plans this as a partial + final hash aggregate on ``keys`` —
-    one shuffle, map-side combining first.  Use when the survivor
-    doesn't matter; otherwise ``dedup_deterministic``.
-    """
-    return df.dropDuplicates(keys)
-
-
 def dedup_deterministic(
     df: DataFrame, keys: list[str], order_by: list[Column | str]
 ) -> DataFrame:

@@ -128,34 +128,3 @@ def check_ref_integrity(
         ).alias("pass_rate"),
         (F.col("violations") == 0).alias("passed"),
     )
-
-
-def observed_check(
-    df: DataFrame, rules: dict[str, Column], name: str = "dq"
-) -> tuple[DataFrame, "Observation"]:
-    """In-flight expectations via ``df.observe``: the violation counters
-    ride along with whatever action the caller already runs (a write, a
-    count, a downstream aggregate) — ZERO extra scans, unlike
-    :func:`check`, which is its own aggregation job.
-
-    Returns ``(df_with_observation, observation)``; read
-    ``observation.get`` AFTER the first action on the returned frame.
-    The metric set mirrors :func:`check`: ``n_rows`` plus one violation
-    counter per rule (nulls count as violations).  This is the right
-    shape for production pipelines — DQ numbers for every batch you
-    were going to write anyway; use :func:`check` when you want a
-    standalone report table.
-    """
-    from pyspark.sql import Observation
-
-    if not rules:
-        raise ValueError("observed_check() needs at least one rule")
-    if "n_rows" in rules:
-        raise ValueError("rule name 'n_rows' is reserved for the row counter")
-    obs = Observation(name)
-    metrics = [F.count(F.lit(1)).alias("n_rows")]
-    for rule_name, cond in rules.items():
-        metrics.append(
-            F.sum(F.when(cond, 0).otherwise(1)).alias(rule_name)
-        )
-    return df.observe(obs, *metrics), obs

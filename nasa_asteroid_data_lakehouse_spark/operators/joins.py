@@ -1,49 +1,15 @@
-"""Star-schema join helpers.
+"""Anti-join helper (SURVEY.md §2 C1).
 
 The reference *designs* a star schema (fact carries sha2 SKs matching
 each dim — reference ``src/etl/silver_to_gold.py:131-133`` vs
-``:66-69,79-82,118-121``) but ships zero joins; this module is the join
-surface that design implies (SURVEY.md §2 C1).
-
-Scale stance: dims are small by construction (a dim that doesn't fit
-in executor memory is a modeling bug), so dim joins are broadcast hash
-joins — the fact side never shuffles.  Fact-fact joins shuffle on the
-join key; AQE handles skew splitting at runtime.
+``:66-69,79-82,118-121``) but ships zero joins.  The registered
+``neows_star_join`` query builds and joins that star inline; this
+module keeps the anti-join the reference's merge is built on.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.functions import broadcast
-
-
-def star_join(
-    fact: DataFrame,
-    dims: dict[str, DataFrame],
-    how: str = "inner",
-    broadcast_dims: bool = True,
-) -> DataFrame:
-    """Join a fact to each dim on the named key column.
-
-    ``dims`` maps join-key column name -> dim DataFrame; the key must
-    exist on both sides (USING-style equi-join, key kept once).  Each
-    dim is broadcast so N dim joins cost zero fact shuffles.
-    """
-    out = fact
-    for key, dim in dims.items():
-        d = broadcast(dim) if broadcast_dims else dim
-        out = out.join(d, on=key, how=how)
-    return out
-
-
-def semi_join(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:
-    """Rows of ``left`` with a match in ``right`` (no right columns).
-
-    Plans as a broadcast/shuffled *semi* join — cheaper than inner +
-    distinct because the right side is reduced to its keys.
-    """
-    return left.join(right, on=on, how="left_semi")
 
 
 def anti_join(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:
@@ -54,16 +20,3 @@ def anti_join(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:
     ``src/utils/bucket.py:79-82`` does it as union+dropDuplicates).
     """
     return left.join(right, on=on, how="left_anti")
-
-
-def key_integrity(fact: DataFrame, dim: DataFrame, key: str) -> DataFrame:
-    """Orphan fact keys: fact rows whose ``key`` is missing from dim.
-
-    Returns (key, orphan_count).  Useful as a data-quality gate after
-    star builds; broadcast anti-join keeps it one fact scan.
-    """
-    return (
-        fact.join(broadcast(dim.select(key)), on=key, how="left_anti")
-        .groupBy(key)
-        .agg(F.count(F.lit(1)).alias("orphan_count"))
-    )

@@ -26,10 +26,8 @@ column only the existing table has survives the union-by-name.
 
 Scale notes: plain-parquet merge is O(table) per batch — that is
 inherent to the format (no row-level transaction log).  At 100 TB the
-upgrade path is Delta/Iceberg ``MERGE INTO`` (file-skipping + txn log);
-the API here is format-agnostic so callers don't change.  For
-partitioned targets pass ``partition_by`` and only affected partitions
-are rewritten (dynamic partition overwrite).
+upgrade path is Delta/Iceberg ``MERGE INTO`` (file-skipping + txn log),
+or this engine's bucket-pruned ``lake.VersionedTable.upsert``.
 """
 
 from __future__ import annotations
@@ -76,17 +74,17 @@ def merge_dataframes(
 def read_table_if_exists(
     spark: SparkSession,
     path: str,
-    fmt: str = "parquet",
     schema: StructType | None = None,
 ) -> DataFrame | None:
-    """Existence probe via read-attempt, like the reference's
-    try/except AnalysisException (``src/utils/bucket.py:68-75``).
-    A declared ``schema`` skips footer inference."""
-    reader = spark.read.format(fmt)
+    """Existence probe of a parquet table via read-attempt, like the
+    reference's try/except AnalysisException
+    (``src/utils/bucket.py:68-75``).  A declared ``schema`` skips footer
+    inference."""
+    reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
     try:
-        return reader.load(path)
+        return reader.parquet(path)
     except AnalysisException:
         return None
 
@@ -97,11 +95,9 @@ def save_or_update_table(
     path: str,
     keys: list[str],
     order_by: list[Column | str] | None = None,
-    fmt: str = "parquet",
-    partition_by: list[str] | None = None,
     schema: StructType | None = None,
 ) -> None:
-    """Upsert ``df`` into the table at ``path`` on ``keys``.
+    """Upsert ``df`` into the parquet table at ``path`` on ``keys``.
 
     One merge for create and update (a create merges against no
     existing rows); only an update needs the staged write + atomic
@@ -110,14 +106,11 @@ def save_or_update_table(
     swap becomes a metastore/manifest pointer update (or use
     Delta/Iceberg and skip this function's staging entirely).
     """
-    existing = read_table_if_exists(spark, path, fmt, schema)
+    existing = read_table_if_exists(spark, path, schema)
     merged = merge_dataframes(existing, df, keys, order_by)
 
     def write_to(target: str) -> None:
-        writer = merged.write.format(fmt).mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(target)
+        merged.write.mode("overwrite").parquet(target)
 
     if existing is None:
         write_to(path)
@@ -128,10 +121,10 @@ def save_or_update_table(
 def staged_swap(path: str, write_fn) -> None:
     """Write a table rewrite to a sibling staging dir, then swap it in.
 
-    Shared by merge upserts and ``lake/compact.py``.  Failure handling:
-    a failed staging write is cleaned up (no orphaned ``__staging_*``
-    dirs); if the second rename fails the backup is restored, so the
-    table is never lost.  POSIX rename gives per-rename atomicity only —
+    Shared by merge upserts and the ``streaming/rollup`` sinks.  Failure
+    handling: a failed staging write is cleaned up (no orphaned
+    ``__staging_*`` dirs); if the second rename fails the backup is
+    restored, so the table is never lost.  POSIX rename gives per-rename atomicity only —
     there is a microsecond window between the two renames where ``path``
     is absent and a concurrent open can miss it.  True reader atomicity
     needs a pointer indirection (metastore / manifest — see

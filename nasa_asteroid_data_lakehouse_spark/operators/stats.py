@@ -15,8 +15,6 @@ No reference analog: the reference profiles null counts only
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -346,10 +344,6 @@ def cusum(df: DataFrame, order_col: str, value_col: str) -> DataFrame:
             "is_peak"
         ),
     )
-
-
-# Benford expectations for driver-side assertions in tests
-_BENFORD_EXPECTED = {d: math.log10(1 + 1 / d) for d in range(1, 10)}
 
 
 # --- classical two-sample tests ---------------------------------------------

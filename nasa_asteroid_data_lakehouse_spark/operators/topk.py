@@ -39,38 +39,3 @@ def top_k_per_group(
         df.withColumn(rank_col, fns[method]().over(w))
         .where(F.col(rank_col) <= k)
     )
-
-
-def top_k_per_group_salted(
-    df: DataFrame,
-    group_by: list[str],
-    order_by: list[Column | str],
-    k: int,
-    buckets: int = 16,
-    rank_col: str = "rank",
-) -> DataFrame:
-    """Two-phase top-k for skewed groups.
-
-    A window over a hot key funnels that key's entire partition
-    through one task.  Phase 1 ranks within (group, salt) — the hot
-    key's rows spread over ``buckets`` tasks and each keeps only its
-    local top-k, shrinking the survivors to ``buckets * k`` per group.
-    Phase 2 re-ranks the survivors within the group exactly.  Same
-    result as :func:`top_k_per_group` with ``row_number`` whenever the
-    ``order_by`` is a total order (ties must be broken — append a
-    unique id); equivalence is property-tested.
-    """
-    from nasa_asteroid_data_lakehouse_spark.operators.skew import with_salt
-
-    salted = with_salt(df, buckets)
-    w1 = Window.partitionBy(*group_by, "__salt").orderBy(*order_by)
-    survivors = (
-        salted.withColumn("__r1", F.row_number().over(w1))
-        .where(F.col("__r1") <= k)
-        .drop("__r1", "__salt")
-    )
-    w2 = Window.partitionBy(*group_by).orderBy(*order_by)
-    return (
-        survivors.withColumn(rank_col, F.row_number().over(w2))
-        .where(F.col(rank_col) <= k)
-    )

@@ -7,8 +7,9 @@ tests (and offline environments) supply fixture documents instead of
 hitting the NASA API.
 
 Scale note: single-document-per-day is fine for this feed (KB/day); a
-high-volume raw zone should use the JSONL writer plus
-``sources.rest.fetch_feed_distributed`` for parallel backfills.
+high-volume raw zone should read the ``rest_feed`` source
+(``sources/pyds.py``, one date window per executor partition) and land
+its rows with the JSONL writer.
 """
 
 from __future__ import annotations

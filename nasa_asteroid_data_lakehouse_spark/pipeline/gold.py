@@ -158,30 +158,13 @@ def build_gold(
     spark: SparkSession,
     silver: DataFrame,
     lake_root: str,
-    table_format: str = "parquet",
 ) -> dict[str, str]:
-    """Build + upsert all four gold tables; returns name -> path.
-
-    ``table_format="versioned"`` uses the manifest-based
-    ``lake.VersionedTable`` instead of plain-parquet overwrite: snapshot
-    isolation, time travel, and bucket-pruned upserts (only buckets
-    containing incoming keys are rewritten).
-    """
+    """Build + upsert all four gold tables; returns name -> path."""
     out = {}
     for name in GOLD_TABLES:
         path = f"{lake_root}/gold/{name}"
         df, keys, order_by = _gold_input(name, silver)
-        if table_format == "versioned":
-            from nasa_asteroid_data_lakehouse_spark.lake import VersionedTable
-
-            unique = merge_dataframes(None, df, keys, order_by)
-            table = VersionedTable(spark, path)
-            if table.latest_version() is None:
-                table.create(unique, keys=keys)
-            else:
-                table.upsert(unique)
-        else:
-            stored = StructType([f for f in df.schema if not f.name.startswith("__")])
-            save_or_update_table(spark, df, path, keys, order_by, schema=stored)
+        stored = StructType([f for f in df.schema if not f.name.startswith("__")])
+        save_or_update_table(spark, df, path, keys, order_by, schema=stored)
         out[name] = path
     return out

@@ -1,8 +1,6 @@
 from nasa_asteroid_data_lakehouse_spark.sources.readers import (
     read_json_multiline,
     read_jsonl,
-    read_parquet_table,
-    read_partition,
 )
 from nasa_asteroid_data_lakehouse_spark.sources.writers import (
     write_partitioned,
@@ -12,8 +10,6 @@ from nasa_asteroid_data_lakehouse_spark.sources.writers import (
 __all__ = [
     "read_json_multiline",
     "read_jsonl",
-    "read_parquet_table",
-    "read_partition",
     "write_partitioned",
     "write_table",
 ]

@@ -1,12 +1,12 @@
 """Spark 4 Python DataSource: the REST feed as a first-class
 ``spark.read.format("rest_feed")`` source (batch + structured stream).
 
-The round-1/2 REST path (``sources/rest.py``) is a helper API the
-caller invokes; this wraps the same date-windowed fetch in the V2
-Python DataSource contract (reference ingestion:
-``src/etl/bronze_ingest.py:18-27``) so it composes with everything a
-DataFrame source composes with — ``.load()``, schema enforcement,
-Structured Streaming triggers, ``availableNow`` backfills.
+This is the engine's one REST source.  It wraps the reference's
+date-windowed NeoWs fetch (reference ingestion:
+``src/etl/bronze_ingest.py:18-27``) in the V2 Python DataSource
+contract, so it composes with everything a DataFrame source composes
+with — ``.load()``, schema enforcement, Structured Streaming triggers,
+``availableNow`` backfills.
 
 Batch: one ``InputPartition`` per date window — EXECUTORS make the
 HTTP calls in parallel (a 10-year daily backfill fans out to ~520
@@ -47,7 +47,7 @@ SCHEMA = StructType(
 
 def _fetch(url: str, params: dict[str, str]) -> str:
     """GET -> raw JSON text.  Runs on executors for batch partitions;
-    requests is import-gated the same way sources/rest.py gates it."""
+    ``requests`` is an optional dependency, imported on first use."""
     try:
         import requests  # noqa: PLC0415 — optional dependency
     except ImportError as exc:  # pragma: no cover

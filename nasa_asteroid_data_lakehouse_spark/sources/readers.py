@@ -10,26 +10,7 @@ provided; the multiline one exists for parity and small control files.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-
-def read_parquet_table(
-    spark: SparkSession, path: str, where=None, columns: list[str] | None = None
-) -> DataFrame:
-    """Parquet scan with optional filter/projection.
-
-    Predicates and projections applied here reach the scan node
-    (PushedFilters / ReadSchema in .explain) — including partition
-    pruning on Hive-style layouts, which replaces the reference's
-    manual read-by-partition-path (``src/etl/silver_to_gold.py:34-37``).
-    """
-    df = spark.read.parquet(path)
-    if where is not None:
-        df = df.where(where)
-    if columns:
-        df = df.select(*columns)
-    return df
 
 
 def read_json_multiline(
@@ -55,35 +36,3 @@ def read_jsonl(
     else:
         reader = reader.option("inferSchema", "true")
     return reader.json(path)
-
-
-def read_partition(
-    spark: SparkSession, table_root: str, partition_col: str, value
-) -> DataFrame:
-    """One Hive partition via predicate (Catalyst prunes to the same
-    files the reference selects by path surgery)."""
-    return spark.read.parquet(table_root).where(F.col(partition_col) == value)
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | str | None = None,
-    header: bool = True,
-    delimiter: str = ",",
-) -> DataFrame:
-    """CSV scan.  Schema is strongly preferred: inference reads the
-    data twice, and at scale an all-string fallback silently recreates
-    the reference's silver-layer type-erasure bug (SURVEY.md §1.3).
-    ``mode=PERMISSIVE`` + ``columnNameOfCorruptRecord`` keeps bad rows
-    inspectable instead of failing the scan."""
-    reader = (
-        spark.read.option("header", str(header).lower())
-        .option("delimiter", delimiter)
-        .option("mode", "PERMISSIVE")
-    )
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)

@@ -239,77 +239,3 @@ def read_scored(
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def batch_kl_vs_reference(
-    batch_df: DataFrame,
-    lm_counts: DataFrame,
-    total: int,
-    text_col: str = "text",
-) -> DataFrame:
-    """KL(P_batch || P_reference) of one micro-batch's token
-    distribution against the static reference LM — single-row
-    (n_docs, n_tokens, n_terms, oov_rate, kl).  Unseen terms floor at
-    reference count 1 (the scoring module's Laplace edge), so the
-    divergence stays finite and the out-of-vocabulary mass is reported
-    separately (oov_rate) where it is exact."""
-    toks = corpus_stats.token_stream(batch_df, text_col, keep=())
-    bt = toks.groupBy("term").agg(F.count(F.lit(1)).alias("c_b")).localCheckpoint(
-        eager=False
-    )
-    # batch token total as a bounded scalar (the O(|V_batch|) count
-    # table is checkpointed, so this does not rescan the batch); an
-    # aggregate can't nest inside the final aggregate's expressions
-    n_b_val = bt.agg(F.sum("c_b")).collect()[0][0] or 0
-    joined = bt.join(F.broadcast(lm_counts), "term", "left").select(
-        "c_b",
-        F.col("c").isNull().alias("oov"),
-        F.coalesce("c", F.lit(1)).alias("c_ref"),
-    )
-    n_b = F.lit(n_b_val)
-    contrib = (F.col("c_b") / n_b) * F.log(
-        (F.col("c_b") / n_b) / (F.col("c_ref") / F.lit(total))
-    )
-    n_docs = batch_df.where(F.trim(text_col) != "").count()
-    return joined.agg(
-        F.lit(n_docs).alias("n_docs"),
-        F.coalesce(F.sum("c_b"), F.lit(0)).alias("n_tokens"),
-        F.count(F.lit(1)).alias("n_terms"),
-        F.round(
-            F.sum(F.when(F.col("oov"), F.col("c_b")).otherwise(F.lit(0))) / n_b,
-            6,
-        ).alias("oov_rate"),
-        F.round(F.sum(contrib), 6).alias("kl"),
-    )
-
-
-def drift_monitor_stream(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    reference_df: DataFrame,
-    out_path: str,
-    text_col: str = "text",
-    checkpoint: str | None = None,
-):
-    """Continuous distribution-drift monitor: per micro-batch, append
-    one row of (batch_id, n_docs, n_tokens, n_terms, oov_rate, kl)
-    measuring the batch's token distribution against the reference
-    corpus LM — the streaming twin of the PSI/KL batch gauges (a
-    rising kl or oov_rate is the data-drift alarm for a training-data
-    ingest).  The reference LM is built ONCE (checkpointed O(|V|)
-    table); per-batch cost is O(|batch| tokens).
-
-    Returns the unstarted ``DataStreamWriter``.
-    """
-    lm_counts, total = build_reference_lm(reference_df, text_col)
-
-    def measure_and_append(batch_df: DataFrame, batch_id: int) -> None:
-        row = batch_kl_vs_reference(batch_df, lm_counts, total, text_col)
-        row.select(F.lit(int(batch_id)).alias("batch_id"), "*").write.mode(
-            "append"
-        ).parquet(out_path)
-
-    return (
-        stream_df.writeStream.foreachBatch(measure_and_append)
-        .option("checkpointLocation", checkpoint or f"{out_path}__checkpoint")
-    )

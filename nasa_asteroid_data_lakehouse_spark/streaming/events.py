@@ -22,7 +22,6 @@ and assert stream results equal the batch computation on the same data.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -199,84 +198,6 @@ def sessionize(
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-
-
-def running_totals(events: DataFrame) -> DataFrame:
-    """Per-user lifetime running totals via ``transformWithStateInPandas``
-    (the Spark 4 arbitrary-state API — typed state handles + timers —
-    successor to ``applyInPandasWithState``, which :func:`sessionize`
-    demonstrates).  A ``ValueState`` of (n_events, total_value) survives
-    across micro-batches; Update mode emits the refreshed totals for
-    every user seen in the batch.
-
-    State is per-key and O(1) per user — at 100 TB the state store
-    shards by the groupBy key across executors (RocksDB-backed in
-    production configs), so lifetime aggregates never rescan history,
-    which is the entire point vs. a batch groupBy over the full log.
-
-    Runtime requirements (enforced by Spark at stream start, not here):
-    the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``) and the
-    ``protobuf`` package for the Python<->JVM state protocol.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n_events bigint, total_value double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = (
-                tuple(self._totals.get()) if self._totals.exists() else (0, 0.0)
-            )
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].fillna(0.0).sum())
-            total = round(total, 6)
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            """Required StatefulProcessor hook; this processor holds no
-            resources outside the state store, so teardown is a no-op
-            (nothing is swallowed here — errors in handleInputRows
-            propagate and fail the stream)."""
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType="user_id bigint, n_events bigint, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def run_stream_to_table(
-    spark: SparkSession,
-    source_dir: str,
-    out_path: str,
-    transform,
-    checkpoint: str | None = None,
-) -> None:
-    """Drive a file-source stream through ``transform`` into a parquet
-    sink with availableNow trigger (drain-everything-then-stop)."""
-    stream = read_event_stream(spark, source_dir)
-    result = transform(stream)
-    query = (
-        result.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint or os.path.join(out_path + "__checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
 
 
 def interval_join_streams(

@@ -68,42 +68,46 @@ def apply_feed_batch(
     if "_change_type" in feed.columns:
         feed = feed.where(F.col("_change_type") != F.lit("update_preimage"))
     # latest image per key within the batch (a batch can span commits).
-    # Checkpointed ONCE (guide §1.2): the apply consumes this frame up
-    # to five times (both presence probes, the delete write, the
-    # upsert's touched-bucket probe and its merge write), and each
-    # consumer used to re-evaluate the window over the micro-batch
+    # Cached ONCE (guide §1.2): the apply consumes this frame up to
+    # five times (the presence probe, the delete write, the upsert's
+    # touched-bucket probe and its merge write), and each consumer
+    # would otherwise re-evaluate the window over the micro-batch
     # source scan.  The frame is O(changed keys in one batch) — the
-    # change-proportional bound the module docstring states — so the
-    # materialization is small by construction.
+    # change-proportional bound the module docstring states — and is
+    # released before returning, so a long-running stream holds no
+    # blocks from applied batches.
     w = Window.partitionBy(*keys).orderBy(F.desc("_commit_version"))
     latest = (
         feed.withColumn("__rk", F.row_number().over(w))
         .where(F.col("__rk") == 1)
         .drop("__rk", "_commit_version")
-        .localCheckpoint(eager=True)
+        .persist()
     )
     marker = {"stream_txn": {"app_id": app_id, "batch_id": int(batch_id)}}
     images = latest.where(F.col("_change_type") != "delete").drop(
         "_change_type"
     )
     deletes = latest.where(F.col("_change_type") == "delete").select(*keys)
-    # one probe job instead of two isEmpty scans
-    probe = latest.agg(
-        F.count(F.when(F.col("_change_type") == "delete", 1)).alias("nd"),
-        F.count(F.when(F.col("_change_type") != "delete", 1)).alias("ni"),
-    ).first()
-    have_images = int(probe["ni"]) > 0
-    have_deletes = int(probe["nd"]) > 0
-    if have_deletes:
-        replica.delete_keys(
-            deletes, extra_meta=None if have_images else marker
-        )
-    if have_images:
-        replica.upsert(images, extra_meta=marker)
-    elif not have_deletes:
-        # empty batch: a marker-only commit still advances the
-        # watermark so the replay guard stays exact
-        replica.upsert(replica.read().limit(0), extra_meta=marker)
+    try:
+        # one probe job instead of two isEmpty scans
+        probe = latest.agg(
+            F.count(F.when(F.col("_change_type") == "delete", 1)).alias("nd"),
+            F.count(F.when(F.col("_change_type") != "delete", 1)).alias("ni"),
+        ).first()
+        have_images = int(probe["ni"]) > 0
+        have_deletes = int(probe["nd"]) > 0
+        if have_deletes:
+            replica.delete_keys(
+                deletes, extra_meta=None if have_images else marker
+            )
+        if have_images:
+            replica.upsert(images, extra_meta=marker)
+        elif not have_deletes:
+            # empty batch: a marker-only commit still advances the
+            # watermark so the replay guard stays exact
+            replica.upsert(replica.read().limit(0), extra_meta=marker)
+    finally:
+        latest.unpersist(blocking=True)
     return True
 
 

@@ -170,60 +170,6 @@ def test_heavy_hitters_cumulative_monotone(spark, sf_smoke):
     assert shares[-1] <= 1.0 + 1e-9
 
 
-def test_schema_drift_detection():
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from nasa_asteroid_data_lakehouse_spark.sources.schema_drift import (
-        diff_schemas,
-    )
-
-    old = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("name", StringType()),
-            StructField(
-                "diam",
-                StructType([StructField("km", DoubleType())]),
-            ),
-            StructField(
-                "approaches",
-                ArrayType(StructType([StructField("v", StringType())])),
-            ),
-        ]
-    )
-    new = StructType(
-        [
-            StructField("id", StringType()),  # retyped
-            StructField("name", StringType()),
-            StructField(
-                "diam",
-                StructType(
-                    [
-                        StructField("km", DoubleType()),
-                        StructField("mi", DoubleType()),  # nested add
-                    ]
-                ),
-            ),
-            # approaches removed
-        ]
-    )
-    d = diff_schemas(old, new)
-    assert d.added == {"diam.mi": "double"}
-    assert set(d.removed) == {"approaches", "approaches.element.v"}
-    assert d.retyped == {"id": ("bigint", "string")}
-    assert d.has_drift and not d.is_compatible
-
-    same = diff_schemas(old, old)
-    assert not same.has_drift and same.is_compatible
-
-
 def test_trailing_week_revenue_matches_oracle(spark, sf_dir):
     assert_matches_oracle(
         aq.trailing_week_revenue(spark, sf_dir), aq.TRAILING_WEEK_SQL, sf_dir

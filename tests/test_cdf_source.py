@@ -304,6 +304,52 @@ def test_replication_ignores_update_preimages(spark, table, tmp_path):
     assert got[3] == 999 and got[4] == 888  # postimages, never preimages
 
 
+def test_replication_apply_releases_its_batch_frame(spark, table, tmp_path):
+    """Each apply caches its latest-per-key frame for its own consumers
+    and frees it before returning: a long-running mirror holds no
+    blocks from applied batches, at no more Spark jobs per apply."""
+    from nasa_asteroid_data_lakehouse_spark.streaming.replication import (
+        apply_feed_batch,
+    )
+    from tests.conftest import jobs_in_group
+
+    sc = spark.sparkContext
+
+    def cached_rdds():
+        return len(sc._jsc.sc().getRDDStorageInfo())
+
+    rep = VersionedTable(spark, str(tmp_path / "rep_free"), num_buckets=4)
+    rep.create(
+        spark.createDataFrame([(i, i % 7) for i in range(10)], "k bigint, v bigint"),
+        keys=["k"],
+    )
+    baseline = cached_rdds()
+    for batch_id in range(3):
+        before = table.latest_version()
+        table.upsert(
+            spark.createDataFrame([(batch_id, 100 + batch_id)], "k bigint, v bigint")
+        )
+        feed = (
+            spark.read.format("table_changes")
+            .option("path", table.root)
+            .option("from_version", before)
+            .load()
+        )
+        applied, jobs = jobs_in_group(
+            sc,
+            f"replication_apply_{batch_id}",
+            lambda: apply_feed_batch(rep, feed, ["k"], batch_id),
+        )
+        assert applied is True
+        assert jobs <= 9
+        assert cached_rdds() == baseline
+    got = {r["k"]: r["v"] for r in rep.read().collect()}
+    assert got == {
+        **{i: i % 7 for i in range(10)},
+        **{b: 100 + b for b in range(3)},
+    }
+
+
 def test_feed_skips_maintenance_commits(spark, table):
     """Maintenance commits (data_change=false) are invisible to the
     change feed — Delta's dataChange contract.  compact/optimize

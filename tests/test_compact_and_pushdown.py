@@ -1,68 +1,10 @@
-"""Lakehouse maintenance (small-file compaction) and DSv2 parquet
-aggregate pushdown (COUNT/MIN/MAX answered from footer metadata)."""
+"""DSv2 parquet aggregate pushdown (COUNT/MIN/MAX answered from footer
+metadata) and runtime bloom filters on shuffle joins."""
 
 from __future__ import annotations
 
-import glob
-
 import pytest
 from pyspark.sql import functions as F
-
-from nasa_asteroid_data_lakehouse_spark.lake import compact as lc
-
-
-def _parquet_files(path):
-    return glob.glob(f"{path}/*.parquet")
-
-
-def test_compact_merges_small_files(spark, tmp_path):
-    path = str(tmp_path / "t")
-    spark.range(10_000).select(
-        F.col("id"), (F.col("id") % 50).alias("grp")
-    ).repartition(40).write.parquet(path)
-    assert len(_parquet_files(path)) == 40
-
-    plan = lc.compaction_plan(spark, path, target_file_bytes=1 << 30)
-    assert plan["n_files"] == 40 and plan["n_small"] == 40
-    assert plan["target_files"] == 1
-
-    before = spark.read.parquet(path)
-    before_rows = sorted(r["id"] for r in before.collect())
-    result = lc.compact(spark, path, target_file_bytes=1 << 30)
-    assert result["compacted"] is True
-    assert len(_parquet_files(path)) == 1
-    after_rows = sorted(r["id"] for r in spark.read.parquet(path).collect())
-    assert after_rows == before_rows  # lossless rewrite
-    # no staging/backup leftovers
-    assert not glob.glob(f"{path}__*")
-
-
-def test_compact_noop_on_healthy_table(spark, tmp_path):
-    path = str(tmp_path / "t2")
-    spark.range(1000).coalesce(1).write.parquet(path)
-    result = lc.compact(spark, path, target_file_bytes=1024)
-    assert result["compacted"] is False
-    assert len(_parquet_files(path)) == 1
-
-
-def test_compact_sorted_restores_clustering(spark, tmp_path):
-    path = str(tmp_path / "t3")
-    # shuffled writes: every file spans the whole key range
-    spark.range(10_000).select(
-        F.xxhash64("id").alias("key"), F.col("id")
-    ).repartition(8).write.parquet(path)
-    lc.compact(spark, path, target_file_bytes=1 << 16, sort_by=["key"])
-    # after range-compaction, per-file [min,max] envelopes are disjoint
-    stats = (
-        spark.read.parquet(path)
-        .groupBy(F.col("_metadata.file_path").alias("f"))
-        .agg(F.min("key").alias("lo"), F.max("key").alias("hi"))
-        .collect()
-    )
-    assert len(stats) >= 2
-    spans = sorted((r["lo"], r["hi"]) for r in stats)
-    for (_, hi_prev), (lo_next, _) in zip(spans, spans[1:]):
-        assert hi_prev <= lo_next
 
 
 @pytest.fixture()

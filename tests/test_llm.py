@@ -198,26 +198,6 @@ def test_sample_frames(spark, docs):
     assert frames[0]["frame_bytes"] == b"The quic"
 
 
-def test_resize_images(spark, docs):
-    payloads = multimodal.with_binary_payload(docs.where(F.col("doc_id") <= 2), "text")
-    out = {r["doc_id"]: r for r in multimodal.resize_images(payloads, height=4, width=4).collect()}
-    assert set(out) == {1, 2}
-    for r in out.values():
-        assert (r["height"], r["width"]) == (4, 4)
-        assert len(r["pixels"]) == 16
-    # deterministic fake decode: same input -> same pixels
-    again = {r["doc_id"]: r["pixels"] for r in multimodal.resize_images(payloads, height=4, width=4).collect()}
-    assert {k: v["pixels"] for k, v in out.items()} == again
-    # injected decoder wins over the fake path
-    import numpy as np
-
-    custom = multimodal.resize_images(
-        payloads, height=2, width=2,
-        decoder=lambda b: np.full((10, 10), 7, dtype=np.uint8),
-    ).collect()
-    assert all(r["pixels"] == bytes([7] * 4) for r in custom)
-
-
 def test_kmeans_ivf(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     centroids = similarity.kmeans_fit(emb, k=4, iters=3)
@@ -237,19 +217,6 @@ def test_kmeans_ivf(spark, sf_dir):
     exact = similarity.cosine_topk(emb, query, k=5).collect()
     exact_ids = {r["vec_id"] for r in exact}
     assert len(exact_ids & {r["vec_id"] for r in top}) >= 3  # decent recall
-
-
-def test_stratified_sample(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    fractions = {"en": 0.25, "zh": 1.0, "fr": 1.0, "es": 1.0, "de": 1.0}
-    sampled = text.stratified_sample(docs, "lang", fractions)
-    before = {r["lang"]: r["n"] for r in docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
-    after = {r["lang"]: r["n"] for r in sampled.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert after["zh"] == before["zh"]  # fraction 1.0 keeps everything
-    assert after["en"] < before["en"] * 0.6  # en meaningfully downsampled
-    # deterministic for fixed seed + layout
-    again = text.stratified_sample(docs, "lang", fractions)
-    assert sorted(r["doc_id"] for r in sampled.collect()) == sorted(r["doc_id"] for r in again.collect())
 
 
 def test_cosine_topk_arrow_backend_agrees(spark, sf_dir):
@@ -337,41 +304,6 @@ def test_repetition_stats(spark):
     assert r2["dup_bigram_frac"] == 0.0
     assert rows[4]["n_words"] == 1 and rows[4]["dup_bigram_frac"] == 0.0
 
-
-def test_export_training_shards(spark, tmp_path):
-    import glob
-
-    import pandas as pd
-
-    from nasa_asteroid_data_lakehouse_spark.llm import sharding
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    path = str(tmp_path / "shards")
-    sharding.export_training_shards(docs, path, num_shards=8)
-
-    back = spark.read.parquet(path)
-    assert back.count() == docs.count()
-    # assignment is the pure function shard_id(doc_id)
-    expected = {
-        r["doc_id"]: r["s"]
-        for r in docs.select("doc_id", sharding.shard_id("doc_id", 8).alias("s")).collect()
-    }
-    got = {r["doc_id"]: r["shard"] for r in back.collect()}
-    assert got == expected
-    # balanced: no shard more than 3x the smallest
-    sizes = back.groupBy("shard").count().collect()
-    ns = [r["count"] for r in sizes]
-    assert len(ns) == 8 and max(ns) <= 3 * min(ns)
-    # within-file order is the deterministic md5 shuffle order
-    f = sorted(glob.glob(f"{path}/shard=*/*.parquet"))[0]
-    pdf = pd.read_parquet(f)
-    keys = [
-        r["o"]
-        for r in spark.createDataFrame(pdf[["doc_id"]])
-        .select(sharding.shuffle_order("doc_id").alias("o"))
-        .collect()
-    ]
-    assert keys == sorted(keys)
 
 
 def test_chunk_documents(spark):

@@ -5,38 +5,9 @@ offset-per-window progression."""
 from __future__ import annotations
 
 import json
-import threading
-from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from urllib.parse import parse_qs, urlparse
-
-import pytest
 
 from nasa_asteroid_data_lakehouse_spark.sources import pyds
 from tests.fixtures_neows import DOC_DAY1
-
-
-class _Handler(BaseHTTPRequestHandler):
-    def do_GET(self):  # noqa: N802 — http.server API
-        params = {k: v[0] for k, v in parse_qs(urlparse(self.path).query).items()}
-        body = dict(DOC_DAY1)
-        body["__params__"] = params
-        payload = json.dumps(body).encode()
-        self.send_response(200)
-        self.send_header("Content-Type", "application/json")
-        self.send_header("Content-Length", str(len(payload)))
-        self.end_headers()
-        self.wfile.write(payload)
-
-    def log_message(self, *args):
-        pass
-
-
-@pytest.fixture(scope="module")
-def feed_url():
-    server = ThreadingHTTPServer(("127.0.0.1", 0), _Handler)
-    threading.Thread(target=server.serve_forever, daemon=True).start()
-    yield f"http://127.0.0.1:{server.server_address[1]}/feed"
-    server.shutdown()
 
 
 def test_windows_partitioning():

@@ -1,11 +1,11 @@
-"""Tests for source readers (JSONL, multiline JSON, distributed REST
-fetch), incremental sources and catalog views."""
+"""Tests for source readers (JSONL, multiline JSON), REST feed date
+windows, clustered writes and catalog views."""
 
 import json
 
 from pyspark.sql import functions as F
 
-from nasa_asteroid_data_lakehouse_spark.sources import readers, rest
+from nasa_asteroid_data_lakehouse_spark.sources import pyds, readers
 
 
 def test_read_jsonl_with_schema(spark, tmp_path):
@@ -28,31 +28,10 @@ def test_read_json_multiline(spark, tmp_path):
     assert df.select(F.size("outer.inner")).collect()[0][0] == 3
 
 
-def _fake_fetch(url, params):
-    return {"echo": params["start_date"], "url": url}
-
-
-def test_distributed_rest_fetch(spark):
-    import datetime
-
-    out = rest.fetch_feed_distributed(
-        spark,
-        datetime.date(2025, 1, 1),
-        datetime.date(2025, 1, 20),
-        fetch_fn=_fake_fetch,
-    ).collect()
-    assert len(out) == 3  # 20 days -> 3 seven-day windows
-    payloads = [json.loads(r["payload"]) for r in out]
-    assert {p["echo"] for p in payloads} == {"2025-01-01", "2025-01-08", "2025-01-15"}
-    assert all(p["url"] == rest.NEOWS_URL for p in payloads)
-
-
 def test_date_chunks_edges():
-    import datetime
-
-    chunks = rest.date_chunks(datetime.date(2025, 1, 1), datetime.date(2025, 1, 7))
+    chunks = pyds._windows("2025-01-01", "2025-01-07", 7)
     assert chunks == [("2025-01-01", "2025-01-07")]
-    chunks = rest.date_chunks(datetime.date(2025, 1, 1), datetime.date(2025, 1, 8))
+    chunks = pyds._windows("2025-01-01", "2025-01-08", 7)
     assert chunks == [("2025-01-01", "2025-01-07"), ("2025-01-08", "2025-01-08")]
 
 
@@ -68,49 +47,6 @@ def test_catalog_views_and_sql(spark):
     assert len(out) == 5
     assert sum(r["n"] for r in out) == 25
     assert cat.table("customer").count() == 150
-
-
-# --- incremental file-listing source -----------------------------------------
-
-
-def test_incremental_source(spark, tmp_path):
-    from nasa_asteroid_data_lakehouse_spark.sources import incremental
-
-    raw = tmp_path / "raw"
-    raw.mkdir()
-    manifest = str(tmp_path / "manifest.json")
-
-    spark.range(0, 5).write.mode("overwrite").parquet(str(raw / "batch1"))
-
-    # first run sees everything
-    df, files = incremental.read_incremental(spark, str(raw), manifest)
-    assert df is not None and df.count() == 5
-    assert len(files) >= 1
-
-    # not committed -> same batch again (at-least-once across crashes)
-    df2, files2 = incremental.read_incremental(spark, str(raw), manifest)
-    assert files2 == files
-
-    incremental.commit_files(manifest, files)
-    df3, files3 = incremental.read_incremental(spark, str(raw), manifest)
-    assert df3 is None and files3 == []
-
-    # new files arrive -> only they are read
-    spark.range(100, 103).write.mode("overwrite").parquet(str(raw / "batch2"))
-    df4, files4 = incremental.read_incremental(spark, str(raw), manifest)
-    assert df4 is not None
-    assert sorted(r["id"] for r in df4.collect()) == [100, 101, 102]
-    assert all("batch2" in f for f in files4)
-    incremental.commit_files(manifest, files4)
-
-    # immutability contract: mutating a committed file raises
-    committed = files4[0]
-    with open(committed, "ab") as f:
-        f.write(b"junk")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="mutated"):
-        incremental.discover_new_files(str(raw), manifest)
 
 
 def test_write_clustered_enables_skipping(spark, tmp_path):
@@ -148,13 +84,3 @@ def test_write_clustered_enables_skipping(spark, tmp_path):
     ranges.sort()
     overlaps = sum(1 for (a, b) in zip(ranges, ranges[1:]) if b[0] < a[1])
     assert overlaps <= 1, f"files overlap too much: {ranges}"
-
-
-def test_read_csv(spark, tmp_path):
-    p = tmp_path / "t.csv"
-    p.write_text("id,name,score\n1,a,1.5\n2,b,\n3,c,9.25\n")
-    out = readers.read_csv(spark, str(p), schema="id int, name string, score double")
-    rows = {r["id"]: r for r in out.collect()}
-    assert rows[1]["score"] == 1.5
-    assert rows[2]["score"] is None  # empty cell -> typed null, not ""
-    assert out.schema["score"].dataType.typeName() == "double"

@@ -180,61 +180,6 @@ def test_snapshot_diff_null_transitions_and_include_unchanged(spark):
     assert out[1]["old_v"] is None and out[1]["new_v"] == 1.0
 
 
-# --- observed_check (in-flight DQ metrics) ------------------------------------
-
-
-def test_observed_check_piggybacks_on_action(spark, tmp_path):
-    from nasa_asteroid_data_lakehouse_spark.operators import expectations as ex
-
-    df = spark.createDataFrame(
-        [(1, 10.0), (2, -5.0), (3, None), (4, 2.0)], "k long, v double"
-    )
-    rules = {"v_positive": F.col("v") > 0, "k_not_null": F.col("k").isNotNull()}
-    observed, obs = ex.observed_check(df, rules)
-    # the metrics ride along with the caller's own action (a write)
-    observed.write.mode("overwrite").parquet(str(tmp_path / "out"))
-    got = obs.get
-    assert got["n_rows"] == 4
-    assert got["v_positive"] == 2  # -5.0 and NULL both violate
-    assert got["k_not_null"] == 0
-
-
-def test_observed_check_matches_check(spark):
-    from nasa_asteroid_data_lakehouse_spark.operators import expectations as ex
-
-    df = spark.range(100).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("v")
-    )
-    rules = {"v_small": F.col("v") < 5}
-    observed, obs = ex.observed_check(df, rules)
-    observed.count()
-    report = {r["rule"]: r for r in ex.check(df, rules).collect()}
-    assert obs.get["v_small"] == report["v_small"]["violations"]
-
-
-# --- mapInArrow twin of the byte profile --------------------------------------
-
-
-def test_byte_profile_arrow_matches_pandas_path(spark):
-    from nasa_asteroid_data_lakehouse_spark.llm import multimodal as mm
-
-    docs = spark.createDataFrame(
-        [(1, "hello world"), (2, ""), (3, "a  b   c"), (4, None)],
-        ["doc_id", "text"],
-    )
-    payloads = mm.with_binary_payload(docs, "text").select("doc_id", "payload")
-    pandas_rows = sorted(
-        map(tuple, mm.byte_feature_profile(payloads).collect())
-    )
-    arrow_rows = sorted(
-        map(tuple, mm.byte_feature_profile_arrow(payloads).collect())
-    )
-    assert arrow_rows == pandas_rows
-    by_id = {r[0]: r for r in arrow_rows}
-    assert by_id[1][1] == 11 and by_id[1][2] == 1  # n_bytes, n_spaces
-    assert by_id[3][2] == 5
-
-
 # --- pagerank -----------------------------------------------------------------
 
 
@@ -311,13 +256,6 @@ def test_snapshot_diff_membership_only_and_validation(spark):
     assert out == {1: "delete", 3: "insert"}  # keys-only diff works
     with pytest.raises(ValueError):
         cdc.snapshot_diff(old, new, [], ["k"])
-
-
-def test_observed_check_reserved_rule_name(spark):
-    from nasa_asteroid_data_lakehouse_spark.operators import expectations as ex
-
-    with pytest.raises(ValueError):
-        ex.observed_check(spark.range(1), {"n_rows": F.col("id") > 0})
 
 
 def test_datasource_windows_validation():

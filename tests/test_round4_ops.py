@@ -320,10 +320,9 @@ def test_null_text_rows_excluded_from_shingle_operators(spark):
 
 
 def test_null_payload_features_propagate(spark):
-    """NULL binary payload (failed fetch) -> NULL byte features in all
-    three Arrow-boundary profilers; a real zero-byte payload keeps its
-    well-defined profile (len 0, sha256 of b'').  Pandas and Arrow
-    twins stay byte-identical on the NULL-bearing input."""
+    """NULL binary payload (failed fetch) -> NULL byte features in both
+    Arrow-boundary profilers; a real zero-byte payload keeps its
+    well-defined profile (len 0, sha256 of b'')."""
     import hashlib
 
     from nasa_asteroid_data_lakehouse_spark.llm import multimodal as mm
@@ -332,14 +331,13 @@ def test_null_payload_features_propagate(spark):
         [(0, b"ab cd"), (1, None), (2, b"")],
         "doc_id bigint, payload binary",
     )
-    for fn in (mm.byte_feature_profile, mm.byte_feature_profile_arrow):
-        rows = {r["doc_id"]: r for r in fn(df).collect()}
-        assert rows[1]["n_bytes"] is None
-        assert rows[1]["n_spaces"] is None
-        assert rows[1]["sha256_hex"] is None
-        assert rows[0]["n_bytes"] == 5 and rows[0]["n_spaces"] == 1
-        assert rows[2]["n_bytes"] == 0
-        assert rows[2]["sha256_hex"] == hashlib.sha256(b"").hexdigest()
+    rows = {r["doc_id"]: r for r in mm.byte_feature_profile(df).collect()}
+    assert rows[1]["n_bytes"] is None
+    assert rows[1]["n_spaces"] is None
+    assert rows[1]["sha256_hex"] is None
+    assert rows[0]["n_bytes"] == 5 and rows[0]["n_spaces"] == 1
+    assert rows[2]["n_bytes"] == 0
+    assert rows[2]["sha256_hex"] == hashlib.sha256(b"").hexdigest()
     feats = {r["doc_id"]: r for r in mm.extract_byte_features(df).collect()}
     assert feats[1]["n_bytes"] is None and feats[1]["entropy"] is None
     assert feats[1]["histogram"] is None

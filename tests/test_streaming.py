@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
 from nasa_asteroid_data_lakehouse_spark.streaming import events as se
+from nasa_asteroid_data_lakehouse_spark.streaming.replay import drain_to_parquet
 
 
 @pytest.fixture(scope="module")
@@ -24,10 +25,9 @@ def events_dir(spark, tmp_path_factory):
 
 
 def test_windowed_counts_stream_equals_batch(spark, events_dir, tmp_path):
-    out = str(tmp_path / "counts")
-    se.run_stream_to_table(spark, events_dir, out, se.windowed_counts)
+    stream = se.windowed_counts(se.read_event_stream(spark, events_dir))
     stream_result = (
-        spark.read.parquet(out)
+        drain_to_parquet(spark, stream, str(tmp_path / "counts"), events_dir)
         .groupBy("window_start", "event_type")
         .agg(F.sum("n_events").alias("n_events"), F.round(F.sum("sum_value"), 6).alias("sum_value"))
     )
@@ -58,11 +58,8 @@ def test_windowed_counts_stream_equals_batch(spark, events_dir, tmp_path):
 
 
 def test_stream_dedup_bounded(spark, events_dir, tmp_path):
-    out = str(tmp_path / "dedup")
-    se.run_stream_to_table(
-        spark, events_dir, out, lambda s: se.stream_dedup(s, ["user_id"])
-    )
-    result = spark.read.parquet(out)
+    stream = se.stream_dedup(se.read_event_stream(spark, events_dir), ["user_id"])
+    result = drain_to_parquet(spark, stream, str(tmp_path / "dedup"), events_dir)
     n_users = result.select("user_id").distinct().count()
     assert result.count() == n_users  # one row per user survived
 
@@ -127,107 +124,6 @@ def test_sessionize_stateful(spark, tmp_path):
     assert row["n_events"] == 2
     assert str(row["session_start"]) == "2024-01-01 10:00:00"
     assert str(row["session_end"]) == "2024-01-01 10:05:00"
-
-
-def test_running_totals_transform_with_state(spark, tmp_path):
-    """transformWithStateInPandas: ValueState accumulates across
-    micro-batches; the last Update-mode emission per user equals the
-    batch groupBy over the whole log.
-
-    Skipped where protobuf is absent: Spark's transformWithState state
-    protocol imports google.protobuf in the Python driver worker at
-    stream start (pyspark/sql/streaming/proto/StateMessage_pb2.py).
-    """
-    pytest.importorskip("google.protobuf")
-    import datetime
-    import time
-
-    src = str(tmp_path / "tws_src")
-    t0 = datetime.datetime(2024, 1, 1, 10, 0, 0)
-
-    def mk(rows):
-        return spark.createDataFrame(
-            [(i, t0, uid, "click", v, "{}") for i, uid, v in rows],
-            schema=se.EVENTS_SCHEMA,
-        )
-
-    mk([(1, 7, 1.0), (2, 7, 2.0), (3, 8, 5.0)]).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)
-    mk([(4, 7, 3.0)]).coalesce(1).write.mode("append").parquet(src)
-
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = se.read_event_stream(spark, src, max_files_per_trigger=1)
-    totals = se.running_totals(stream)
-    q = (
-        totals.writeStream.format("memory")
-        .queryName("tws_totals")
-        .option("checkpointLocation", str(tmp_path / "cp_tws"))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    rows = spark.sql("select * from tws_totals").collect()
-    # Update mode emits one row per (batch, user); keep each user's last
-    final = {}
-    for r in rows:
-        final[r["user_id"]] = (r["n_events"], r["total_value"])
-    assert final[7] == (3, 6.0)
-    assert final[8] == (1, 5.0)
-
-
-def test_kafka_shaped_roundtrip_and_stream(spark, tmp_path):
-    from nasa_asteroid_data_lakehouse_spark.streaming import kafka_shape as ks
-
-    events = read_table(spark, "/root/testdata/sf0.001", "events")
-    wire_dir = str(tmp_path / "wire")
-    ks.write_kafka_wire(events, wire_dir, num_partitions=4)
-
-    wire = spark.read.parquet(wire_dir)
-    assert [f.name for f in wire.schema.fields] == [
-        "key", "value", "topic", "partition", "offset", "timestamp", "timestampType",
-    ]
-    assert wire.count() == events.count()
-    # offsets are dense per partition: max(offset) + 1 == rows in partition
-    per_part = wire.groupBy("partition").agg(
-        F.count(F.lit(1)).alias("n"), (F.max("offset") + 1).alias("next_off")
-    )
-    assert all(r["n"] == r["next_off"] for r in per_part.collect())
-
-    # batch decode inverts the encode
-    decoded = ks.decode_events(wire)
-    assert decoded.count() == events.count()
-    a = {r["event_id"]: (r["user_id"], r["event_type"], str(r["ts"])) for r in decoded.collect()}
-    b = {r["event_id"]: (r["user_id"], r["event_type"], str(r["ts"])) for r in events.collect()}
-    assert a == b
-
-    # streamed decode + windowed agg drains and matches the batch agg
-    out = str(tmp_path / "counts")
-    from nasa_asteroid_data_lakehouse_spark.streaming.events import windowed_counts
-
-    stream = ks.read_kafka_shaped_stream(spark, wire_dir, max_files_per_trigger=2)
-    q = (
-        windowed_counts(ks.decode_events(stream))
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", out + "__ckpt")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emitted = spark.read.parquet(out)
-    batch = windowed_counts(events)
-    s = {(str(r["window_start"]), r["event_type"]): r["n_events"] for r in emitted.collect()}
-    b2 = {(str(r["window_start"]), r["event_type"]): r["n_events"] for r in batch.collect()}
-    assert s and set(s) <= set(b2)
-    for k in s:
-        assert s[k] == b2[k]
 
 
 def test_stream_stream_interval_join(spark, tmp_path):
@@ -639,60 +535,6 @@ def test_incremental_cms_is_lossless_linear_merge(spark, tmp_path):
         ).collect()
     }
     assert est["view"] >= 12 and est["click"] >= 3 and est["purchase"] >= 2
-
-
-def test_drift_monitor_flags_shifted_batch(spark, tmp_path):
-    """An in-distribution micro-batch scores near-zero KL and zero OOV
-    against the reference LM; an out-of-distribution batch scores
-    high KL and high OOV — the data-drift alarm."""
-    import os
-
-    from nasa_asteroid_data_lakehouse_spark.streaming.curation import (
-        drift_monitor_stream,
-    )
-
-    reference = spark.createDataFrame(
-        [(i, "the cat sat on the mat and the dog ran") for i in range(5)],
-        "doc_id long, text string",
-    )
-    src = str(tmp_path / "drift_in")
-    os.makedirs(src, exist_ok=True)
-    out = str(tmp_path / "drift_out")
-
-    in_dist = [(1, "the cat sat on the mat"), (2, "the dog ran")]
-    shifted = [(3, "quantum flux capacitor overload"), (4, "zyxqv plugh xyzzy")]
-
-    spark.createDataFrame(in_dist, "doc_id long, text string").write.mode(
-        "append"
-    ).parquet(src)
-    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = (
-        drift_monitor_stream(spark, stream, reference, out)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    spark.createDataFrame(shifted, "doc_id long, text string").write.mode(
-        "append"
-    ).parquet(src)
-    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = (
-        drift_monitor_stream(spark, stream, reference, out)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    rows = sorted(
-        spark.read.parquet(out).collect(), key=lambda r: r["batch_id"]
-    )
-    assert len(rows) == 2
-    good, bad = rows[0], rows[1]
-    assert good["oov_rate"] == 0.0
-    assert bad["oov_rate"] == 1.0
-    assert bad["kl"] > good["kl"] + 1.0
-    assert good["n_docs"] == 2 and bad["n_docs"] == 2
 
 
 def test_changepoint_monitor_stream_matches_batch_cusum(spark, tmp_path):

@@ -179,33 +179,6 @@ def test_vacuum_after_optimize_leaves_no_erased_rows_on_disk(spark, tmp_path):
         assert any(f.startswith(os.path.join(t._data_dir, txn, "")) for f in referenced)
 
 
-def test_gold_pipeline_on_versioned_tables(spark, tmp_path):
-    """The NeoWs gold build runs on VersionedTable: two daily upserts,
-    history recorded, time travel to day 1."""
-    import sys, os as _os
-    sys.path.insert(0, _os.path.join(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))), "tests"))
-    from nasa_asteroid_data_lakehouse_spark.pipeline.bronze import ingest_document
-    from nasa_asteroid_data_lakehouse_spark.pipeline.silver import build_silver
-    from nasa_asteroid_data_lakehouse_spark.pipeline.gold import build_gold
-    from tests.fixtures_neows import DAY1, DAY2, DOC_DAY1, DOC_DAY2
-
-    root = str(tmp_path / "lake")
-    p1 = ingest_document(root, DAY1, DOC_DAY1)
-    build_gold(spark, build_silver(spark, p1, dates=[DAY1]), root, table_format="versioned")
-    p2 = ingest_document(root, DAY2, DOC_DAY2)
-    build_gold(spark, build_silver(spark, p2, dates=[DAY2]), root, table_format="versioned")
-
-    fact = VersionedTable(spark, f"{root}/gold/fact_asteroid_approach")
-    assert fact.read().count() == 5
-    assert fact.read(version=0).count() == 3  # day 1 only
-    assert [h["operation"] for h in fact.history()] == ["upsert", "create"]
-
-    dim = VersionedTable(spark, f"{root}/gold/dim_asteroid")
-    assert dim.read().count() == 3
-    pk9 = dim.read().where(F.col("id") == 3542519).collect()[0]
-    assert pk9["absolute_magnitude_h"] == 21.90  # day-2 wins on upsert
-
-
 def test_change_feed(spark, table):
     incoming = spark.createDataFrame(
         [(5, "NEW5", 5.5), (200, "v200", 200.0)], ["k", "val", "m"]
