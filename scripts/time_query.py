@@ -7,6 +7,12 @@ Usage: python scripts/time_query.py name1,name2 [--sf /root/testdata/sf0.1]
 Mirrors bench.py methodology exactly: noop sink, System.gc() between
 timed runs, local[$SPARK_GRAFT_CPUS].  --n repeats each query and
 reports every sample plus the median, so host-band noise is visible.
+
+Beside the wall-clock samples, each line carries the JVM's JIT compile
+seconds (``jit_s``, from the CompilationMXBean) and its process CPU
+seconds (``cpu_s``, from the OperatingSystemMXBean) spent in each
+sample.  The MXBeans count compiler threads that have already exited;
+a per-thread sum does not.
 """
 
 from __future__ import annotations
@@ -35,6 +41,21 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(app_name="ndl-time-query", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
+    jvm, gateway = spark.sparkContext._jvm, spark.sparkContext._gateway
+    mgmt = jvm.java.lang.management.ManagementFactory
+    compilation, osbean = mgmt.getCompilationMXBean(), mgmt.getOperatingSystemMXBean()
+    # py4j looks methods up on the bean's runtime class, which sits in a
+    # package the JDK does not export; call through the public interface.
+    cpu_time = jvm.java.lang.Class.forName(
+        "com.sun.management.OperatingSystemMXBean"
+    ).getMethod("getProcessCpuTime", gateway.new_array(jvm.java.lang.Class, 0))
+    no_args = gateway.new_array(jvm.java.lang.Object, 0)
+
+    def jit_s() -> float:
+        return compilation.getTotalCompilationTime() / 1e3
+
+    def cpu_s() -> float:
+        return cpu_time.invoke(osbean, no_args) / 1e9
 
     import __spark_entry__ as entrymod
 
@@ -61,14 +82,18 @@ def main() -> None:
             with open(args.explain, "w") as fh:
                 fh.write(buf.getvalue())
             print(f"explain -> {args.explain}")
-        samples = []
+        samples, jit, cpu = [], [], []
         for _ in range(args.n):
             spark.sparkContext._jvm.System.gc()
+            j0, c0 = jit_s(), cpu_s()
             t0 = time.perf_counter()
             fn(spark, args.sf).write.format("noop").mode("overwrite").save()
             samples.append(round(time.perf_counter() - t0, 4))
+            jit.append(round(jit_s() - j0, 3))
+            cpu.append(round(cpu_s() - c0, 3))
         med = statistics.median(samples)
-        print(f"{name}: median={med:.3f}s samples={samples}")
+        print(f"{name}: median={med:.3f}s samples={samples} "
+              f"jit_s={jit} cpu_s={cpu}")
     spark.stop()
 
 
