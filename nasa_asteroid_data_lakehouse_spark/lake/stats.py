@@ -10,11 +10,11 @@ for chosen columns in ONE distributed pass using the hidden
 per-file jobs — the groupBy key is the file the row came from, so the
 scan stays a single job at any file count).
 
-``prunable_files`` then answers "which files can a range predicate
-skip" from the stats table alone — O(#files) metadata work instead of
-O(data).  At 100 TB with ~1 GB files that is ~100k stats rows: the
-stats table itself stays broadcastable, which is exactly why file
-skipping scales.
+A file must be read for ``col BETWEEN lo AND hi`` iff its [min, max]
+envelope intersects [lo, hi] — answered from the stats table alone,
+O(#files) metadata work instead of O(data).  At 100 TB with ~1 GB
+files that is ~100k stats rows: the stats table itself stays
+broadcastable, which is exactly why file skipping scales.
 
 Min/max are safe pruning bounds only for stable orderings; nulls are
 tracked separately (a file that is all-null for the column has
@@ -60,20 +60,4 @@ def collect_file_stats(
         .withColumn(
             "file", F.element_at(F.split(F.col("file_path"), "/"), -1)
         )
-    )
-
-
-def prunable_files(
-    stats: DataFrame, col: str, lo, hi
-) -> DataFrame:
-    """Split the stats table into keep/skip for ``col BETWEEN lo AND hi``.
-
-    A file must be read iff its [min, max] envelope intersects
-    [lo, hi]; all-null files (min is null) are skippable for any
-    range predicate.  Adds ``must_read`` boolean.
-    """
-    mn, mx = F.col(f"{col}_min"), F.col(f"{col}_max")
-    return stats.withColumn(
-        "must_read",
-        mn.isNotNull() & (mx >= F.lit(lo)) & (mn <= F.lit(hi)),
     )

@@ -1,6 +1,6 @@
 """Z-order (Morton curve) multi-key clustered layout.
 
-Single-key range clustering (``sources.writers.write_clustered``) gives
+Single-key range clustering (``repartitionByRange`` + sort) gives
 perfect file skipping on one key — and none on any other.  Tables
 filtered independently on two or more keys need a space-filling curve:
 interleave the bit patterns of each key's bucket rank so files cover
@@ -83,29 +83,3 @@ def zorder_buckets(df: DataFrame, keys: list[str], bits: int = 8) -> list[Column
         else:
             out.append(F.pmod(F.xxhash64(F.col(k)), F.lit(2**bits)))
     return out
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    keys: list[str],
-    bits: int = 8,
-    num_files: int | None = None,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-) -> None:
-    """Write ``df`` range-partitioned and sorted on the Morton key of
-    ``keys``: each output file covers a small key-space rectangle, so
-    parquet min/max footer stats prune files for predicates on any of
-    the clustered keys.  Choose ``num_files`` so files land ~1 GB."""
-    z = morton_interleave(zorder_buckets(df, keys, bits), bits)
-    n = num_files or df.sparkSession.sparkContext.defaultParallelism
-    (
-        df.withColumn("__zorder", z)
-        .repartitionByRange(n, "__zorder")
-        .sortWithinPartitions("__zorder")
-        .drop("__zorder")
-        .write.format(fmt)
-        .mode(mode)
-        .save(path)
-    )

@@ -540,8 +540,8 @@ def decontamination_hits(
     The eval side (benchmarks are small — thousands of docs vs billions
     in the corpus) collapses to a distinct-shingle set and is broadcast,
     so the 100 TB corpus side never shuffles: scan → explode → broadcast
-    hash join → partial-agg count per doc.  Pair with
-    :func:`decontaminate` to drop the hits.
+    hash join → partial-agg count per doc.  A ``left_anti`` join on
+    the hit ids drops them from the corpus.
     """
     ev = (
         eval_docs.select(
@@ -559,58 +559,11 @@ def decontamination_hits(
     )
 
 
-def decontaminate(
-    corpus: DataFrame,
-    eval_docs: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Corpus minus every doc flagged by :func:`decontamination_hits`
-    (left_anti on the hit ids)."""
-    hits = decontamination_hits(corpus, eval_docs, id_col, text_col, shingle_k)
-    return corpus.join(hits.select(id_col), id_col, "left_anti")
-
-
 # --- SimHash -------------------------------------------------------------------
 
 def _token_hash60(tok: Column) -> Column:
     """60-bit integer hash of a token (md5 prefix, base-16 decoded)."""
     return F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long")
-
-
-def with_simhash(
-    df: DataFrame, text_col: str = "text", out: str = "simhash", bits: int = 60
-) -> DataFrame:
-    """60-bit SimHash fingerprint from whitespace tokens.
-
-    Each distinct token votes ±1 per bit position of its hash; the
-    fingerprint sets bits with positive vote sums.  One fold over the
-    token array carries the full vote vector (each token hashed once);
-    the ``finish`` lambda assembles the bits.  Pure array algebra: no
-    explode, no shuffle, no Python — one projection.
-    """
-    toks = F.array_distinct(tokens(normalized_text(text_col)))
-    init = F.array(*[F.lit(0) for _ in range(bits)])
-
-    def step(acc: Column, tok: Column) -> Column:
-        h = _token_hash60(tok)
-        return F.array(
-            *[
-                acc[i] + F.when(h.bitwiseAND(F.lit(1 << i)) != 0, 1).otherwise(-1)
-                for i in range(bits)
-            ]
-        )
-
-    def finish(acc: Column) -> Column:
-        sim = F.lit(0).cast("long")
-        for i in range(bits):
-            sim = sim + F.when(acc[i] > 0, F.lit(1 << i).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        return sim
-
-    return df.withColumn(out, F.aggregate(toks, init, step, finish))
 
 
 def simhash_by_key(
@@ -620,16 +573,15 @@ def simhash_by_key(
     out: str = "simhash",
     bits: int = 60,
 ) -> DataFrame:
-    """``(key, simhash)`` via explode + 60 conditional-count aggregates.
+    """``(key, simhash)`` — 60-bit SimHash fingerprint from whitespace
+    tokens, via explode + 60 conditional-count aggregates.
 
-    Equivalent to :func:`with_simhash` (bit i of the fingerprint is set
-    iff more than half the distinct tokens have bit i set in their hash:
-    ±1 votes sum positive ⟺ 2·countᵢ > n) but shaped for scale: no
+    Each distinct token votes ±1 per bit position of its hash; bit i of
+    the fingerprint is set iff the votes sum positive, i.e. iff more
+    than half the distinct tokens have bit i set (2·countᵢ > n).  No
     per-token array construction, each token hashed exactly once, and
     the 60 ``sum((h >> i) & 1)`` aggregates partial-aggregate map-side
-    before the single shuffle on ``key_col``.  Prefer this form whenever
-    a key column exists; ``with_simhash`` remains the zero-shuffle
-    projection form for keyless frames.
+    before the single shuffle on ``key_col``.
     """
     toks = F.array_distinct(tokens(normalized_text(text_col)))
     exploded = (
@@ -726,7 +678,7 @@ def connected_components(
     Both paths return identical (node, min-reachable-id) labels.
 
     Distributed path: iterative min-label propagation as DataFrame
-    jobs (the same driver-loop pattern as ``similarity.kmeans_fit``):
+    jobs (a driver loop with one distributed round per iteration):
     each round every node takes the min of its own label and its
     neighbors' labels; convergence in O(graph diameter) rounds —
     near-dup clusters are shallow, so typically 2-4.  Each round is
@@ -825,23 +777,6 @@ def connected_components(
             break
     return labels
 
-
-def dedup_by_clusters(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-) -> DataFrame:
-    """Drop every near-duplicate except each cluster's minimum-id
-    survivor: pairs -> connected components -> anti-join the losers.
-    Composes with any pair generator (MinHash-LSH, SimHash, embedding
-    cosine)."""
-    components = connected_components(pairs)
-    losers = components.where(F.col("node") != F.col("component")).select(
-        F.col("node").alias("__loser")
-    )
-    return df.join(
-        losers, F.col(id_col) == F.col("__loser"), "left_anti"
-    )
 
 # --- incremental corpus dedup ------------------------------------------------
 
@@ -957,11 +892,12 @@ def dedup_by_clusters_best(
     id_col: str,
     order_by: list,
 ) -> DataFrame:
-    """Like :func:`dedup_by_clusters`, but each cluster's survivor is
+    """Drop every near-duplicate except each cluster's best survivor:
+    pairs -> connected components -> anti-join the losers, the survivor
     chosen by an explicit ordering (e.g. highest quality score or
-    longest text) instead of minimum id — the curation pattern where
-    near-duplicate groups keep their best exemplar.  ``order_by``
-    must be deterministic (include an id tie-break).
+    longest text) — the curation pattern where near-duplicate groups
+    keep their best exemplar.  ``order_by`` must be deterministic
+    (include an id tie-break).
 
     The ranking runs on the component table (only clustered docs, a
     tiny fraction of the corpus), so the quality-column join-back and

@@ -2,12 +2,10 @@
 columns with typed metadata.
 
 The Spark-side machinery is real and tested — binary columns, metadata
-structs, Arrow-batched ``mapInPandas`` feature extraction with explicit
-schemas, partition-friendly batch shapes.  The *codec* step (actual
-JPEG/PNG/audio decode) is stubbed: the decode libraries aren't in this
-container, so ``decode_image`` raises ``NotImplementedError`` unless a
-decoder is injected, while ``extract_byte_features`` computes real
-(library-free) content features so the full path is exercisable.
+structs, Arrow-batched ``mapInPandas`` byte profiling with an explicit
+schema, JVM-side payload dedup.  No codec step (JPEG/PNG/audio decode)
+runs here: the features are library-free byte statistics, so the full
+path is exercisable without decode libraries.
 
 At 100 TB: binaries ride the same parquet files as scalars (no side
 files to track); `maxRecordsPerFile` keeps row groups bounded; feature
@@ -17,9 +15,8 @@ transfer (no per-row Python overhead).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -52,77 +49,6 @@ def with_media_metadata(
     )
 
 
-def decode_image(payload: bytes, decoder: Callable[[bytes], np.ndarray] | None = None):
-    """Decode one image payload to an HxWxC array.
-
-    STUB: no image codec ships in this container.  Inject ``decoder``
-    (e.g. PIL/cv2-backed) in a real deployment.
-    """
-    if decoder is None:
-        raise NotImplementedError(
-            "image decoding requires an injected decoder (PIL/cv2 not available)"
-        )
-    return decoder(payload)
-
-
-FEATURE_SCHEMA = "doc_id bigint, n_bytes bigint, entropy double, mean_byte double, histogram array<double>"
-
-
-def extract_byte_features(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    hist_bins: int = 16,
-) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
-
-    Real (deterministic, library-free) content features standing where
-    decode+CNN-embed would run: byte histogram, mean, Shannon entropy.
-    Demonstrates the production batch shape: ``mapInPandas`` with an
-    explicit schema, vectorized numpy inside, one Python worker per
-    partition, Arrow transfer both ways.
-    """
-
-    def feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, sizes, entropies, means, hists = [], [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    # NULL payload (failed fetch) -> NULL features; only
-                    # a real zero-byte object gets the empty profile.
-                    ids.append(doc_id)
-                    sizes.append(None)
-                    entropies.append(None)
-                    means.append(None)
-                    hists.append(None)
-                    continue
-                arr = np.frombuffer(payload, dtype=np.uint8)
-                ids.append(doc_id)
-                sizes.append(int(arr.size))
-                if arr.size:
-                    counts = np.bincount(arr, minlength=256).astype(np.float64)
-                    probs = counts[counts > 0] / arr.size
-                    entropies.append(float(-(probs * np.log2(probs)).sum()))
-                    means.append(float(arr.mean()))
-                    hist = counts.reshape(hist_bins, -1).sum(axis=1) / arr.size
-                    hists.append([float(round(v, 6)) for v in hist])
-                else:
-                    entropies.append(0.0)
-                    means.append(0.0)
-                    hists.append([0.0] * hist_bins)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "n_bytes": sizes,
-                    "entropy": [None if e is None else round(e, 6) for e in entropies],
-                    "mean_byte": [None if m is None else round(m, 6) for m in means],
-                    "histogram": hists,
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(feature_batches, FEATURE_SCHEMA)
-
-
 PROFILE_SCHEMA = "doc_id bigint, n_bytes bigint, n_spaces bigint, sha256_hex string"
 
 
@@ -132,10 +58,8 @@ def byte_feature_profile(
     """Arrow-batched byte profile whose every output column is
     independently recomputable in ANSI SQL (``octet_length``, space
     count, ``sha256``) — the oracle-checkable face of the
-    ``mapInPandas`` path.  Same batch shape and schema discipline as
-    :func:`extract_byte_features`, which keeps the richer
-    entropy/histogram features (accuracy unit-tested, not
-    SQL-expressible)."""
+    ``mapInPandas`` path: explicit schema, one Python worker per
+    partition, Arrow transfer both ways."""
     import hashlib
 
     def profile_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -217,33 +141,3 @@ def payload_survivors(
     keep = hashed.groupBy("__sha").agg(F.min(id_col).alias(id_col))
     survivors = df.join(keep.select(id_col), id_col, "left_semi")
     return survivors.unionByName(df.where(F.col(payload_col).isNull()))
-
-
-def sample_frames(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    every_n_bytes: int = 64,
-    frame_size: int = 16,
-) -> DataFrame:
-    """'Frame sampling' over binary payloads: every Nth fixed-size slice
-    (the video-frame-sampling batch shape, minus the actual codec).
-    Returns one row per sampled frame (doc_id, frame_idx, frame_bytes).
-    """
-
-    def frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids, out_idx, out_bytes = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                data = payload or b""
-                for i, start in enumerate(range(0, len(data), every_n_bytes)):
-                    out_ids.append(doc_id)
-                    out_idx.append(i)
-                    out_bytes.append(data[start : start + frame_size])
-            yield pd.DataFrame(
-                {"doc_id": out_ids, "frame_idx": out_idx, "frame_bytes": out_bytes}
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        frame_batches, "doc_id bigint, frame_idx int, frame_bytes binary"
-    )

@@ -13,9 +13,9 @@ Two paths:
   bucket (optionally ± Hamming-1 probes).  Turns top-k into an
   equi-join on bucket id: the 1000-executor path.
 
-* ``ivf_topk`` — IVF with a k-means coarse quantizer (``kmeans_fit``,
-  Lloyd's iterations as DataFrame jobs): assign-to-centroid replaces
-  the bucket id and the search probes the ``nprobe`` nearest cells.
+* ``ivf_topk`` — IVF with a coarse quantizer (``seed_centroids``,
+  k-means at iteration 0): assign-to-centroid replaces the bucket id
+  and the search probes the ``nprobe`` nearest cells.
   Store the table partitioned by cluster to prune instead of filter.
 
 Vector contract (:func:`vec_valid`): a row participates in a vector
@@ -348,9 +348,8 @@ def seed_centroids(
 ) -> list[list[float]]:
     """The seed quantizer: the vectors of the ``k`` lowest ids among the
     :func:`vec_valid` rows, as Python floats — k-means at iteration 0,
-    the deterministic init :func:`kmeans_fit` starts from and the
-    quantizer every oracle-checked IVF/PQ query uses, since it stays
-    SQL-expressible.
+    deterministic across runs and engines, and the quantizer every
+    oracle-checked IVF/PQ query uses, since it stays SQL-expressible.
 
     Validity is filtered BEFORE the limit (a NULL-headed table still
     seeds from the valid rows further down), and a NULL id sorts LAST:
@@ -368,46 +367,6 @@ def seed_centroids(
         .collect()
     )
     return [[float(v) for v in r[vec_col]] for r in rows]
-
-
-def kmeans_fit(
-    df: DataFrame,
-    k: int = 8,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
-    """Lloyd's k-means over an embedding column, fully distributed.
-
-    Each iteration is two DataFrame jobs: (1) assign each vector to its
-    nearest centroid (broadcast centroid literals, argmin over k dots),
-    (2) recompute centroids via posexplode + groupBy(cluster, dim) avg.
-    Only the k×d centroid matrix ever reaches the driver.  Init is
-    :func:`seed_centroids` (deterministic across runs/engines).
-    """
-    df = df.where(vec_valid(F.col(vec_col)))  # module vector contract
-    centroids = seed_centroids(df, k, id_col, vec_col)
-    if not centroids:  # empty (or all-NULL-vector) input: nothing to fit
-        return []
-
-    for _ in range(iters):
-        assigned = with_ivf_assignment(df, centroids, vec_col)
-        new = (
-            assigned.select("cluster", F.posexplode(vec_col).alias("dim", "val"))
-            .groupBy("cluster", "dim")
-            .agg(F.avg("val").alias("v"))
-            .collect()
-        )
-        by_cluster: dict[int, dict[int, float]] = {}
-        for r in new:
-            by_cluster.setdefault(r["cluster"], {})[r["dim"]] = r["v"]
-        centroids = [
-            [by_cluster[c][d] for d in range(len(centroids[0]))]
-            if c in by_cluster
-            else centroids[c]  # empty cluster keeps its previous centroid
-            for c in range(k)
-        ]
-    return centroids
 
 
 def _sq_dist(vec_col: Column, centroid: list[float]) -> Column:
@@ -441,14 +400,14 @@ def with_ivf_assignment(
     NULL vectors assign to a NULL cluster anyway.  Empty centroids
     while assignable vectors EXIST raise instead of silently assigning
     every row to a dim-mismatched cluster 0 — unreachable from
-    ``kmeans_fit`` since its seeds filter NULLs before the limit, so
+    :func:`seed_centroids` since it filters NULLs before the limit, so
     this only fires on caller-supplied empty lists.
     """
     if not centroids:
         if not df.where(vec_valid(F.col(vec_col))).isEmpty():
             raise ValueError(
                 "empty centroid list while the DataFrame has non-NULL "
-                "vectors: fit centroids first (kmeans_fit) or pass "
+                "vectors: seed centroids first (seed_centroids) or pass "
                 "explicit centroids"
             )
         centroids = [[0.0]]

@@ -6,10 +6,8 @@ is the distributed part — at 100 TB it is one narrow pair projection
 (zip of two array slices, no shuffle) followed by a hash aggregate
 whose shuffle key is the pair itself, with map-side partial counts
 doing almost all the reduction (pair vocabulary is tiny next to the
-token stream).  The merge-apply step is a narrow per-document fold.
-The training loop (one merge per iteration) lives on the driver, like
-every published BPE trainer; each iteration is one count + one apply,
-both linear scans.
+token stream).  This module holds that count step; the
+``bpe_pair_counts_documents`` query serves one iteration of it.
 
 No reference analog: the reference's text surface is
 profile/normalize only (``src/etl/silver_to_gold.py``); net-new per
@@ -27,9 +25,6 @@ __all__ = [
     "adjacent_pairs",
     "pair_counts",
     "pair_counts_from_tokens",
-    "best_merge",
-    "apply_merge",
-    "train_bpe",
 ]
 
 _PAIR_T = "array<struct<a:string,b:string>>"
@@ -75,82 +70,3 @@ def pair_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     tokenization of the normalized text)."""
     toks = text.tokens(text.normalized_text(text_col))
     return pair_counts_from_tokens(df.select(toks.alias("toks")))
-
-
-def best_merge(df: DataFrame, text_col: str = "text") -> tuple[str, str]:
-    """The next BPE merge: the most frequent pair, ties broken
-    lexicographically so training is deterministic.  One bounded
-    driver row — the scan stays distributed."""
-    row = (
-        pair_counts(df, text_col)
-        .orderBy(F.desc("pair_count"), "a", "b")
-        .limit(1)
-        .collect()
-    )
-    if not row:
-        raise ValueError("corpus has no adjacent token pairs")
-    return row[0]["a"], row[0]["b"]
-
-
-def apply_merge(tokens_col: Column, a: str, b: str, joiner: str = "") -> Column:
-    """Apply one BPE merge to a token array: every left-to-right,
-    non-overlapping occurrence of adjacent (a, b) becomes one token
-    ``a + joiner + b`` — standard greedy BPE semantics ("aaa" under
-    merge (a,a) -> ["aa", "a"]).
-
-    Pure ``aggregate`` fold — narrow, no shuffle, no Python UDF; the
-    training loop can apply it to the whole corpus per iteration.
-    """
-    a_lit, b_lit = F.lit(a), F.lit(b)
-    merged_tok = F.concat_ws(joiner, a_lit, b_lit)
-    return F.aggregate(
-        tokens_col,
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == a_lit)
-            & (x == b_lit),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1), F.array(merged_tok)
-            ),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-
-
-def train_bpe(
-    df: DataFrame,
-    text_col: str = "text",
-    n_merges: int = 8,
-    joiner: str = "",
-) -> list[tuple[str, str, int]]:
-    """Driver-looped BPE training: learn ``n_merges`` merges, each
-    iteration one distributed pair count (+ bounded 1-row collect) and
-    one narrow merge-apply projection.
-
-    This is the published BPE trainer shape — the driver holds only
-    the merge table (O(n_merges)); the corpus never leaves the
-    executors.  The lineage grows one ``aggregate`` expression per
-    merge, bounded by ``n_merges`` (no O(corpus) checkpoints — see
-    BASELINE "Checkpoint-granularity correction").  Ties break
-    lexicographically so the learned merge sequence is deterministic
-    on any cluster layout.
-    """
-    work = df.select(
-        text.tokens(text.normalized_text(text_col)).alias("toks")
-    )
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        top = (
-            pair_counts_from_tokens(work)
-            .orderBy(F.desc("pair_count"), "a", "b")
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        a, b, n = top[0]["a"], top[0]["b"], top[0]["pair_count"]
-        merges.append((a, b, n))
-        work = work.select(
-            apply_merge(F.col("toks"), a, b, joiner).alias("toks")
-        )
-    return merges

@@ -20,8 +20,6 @@ from nasa_asteroid_data_lakehouse_spark.operators.scd import scd2_compress
 from nasa_asteroid_data_lakehouse_spark.operators.profile import profile
 from nasa_asteroid_data_lakehouse_spark.operators.skew import (
     salted_agg,
-    salted_broadcast_left,
-    salted_count,
     with_salt,
 )
 from nasa_asteroid_data_lakehouse_spark.operators.setops import (
@@ -47,8 +45,6 @@ __all__ = [
     "profile",
     "read_table_if_exists",
     "salted_agg",
-    "salted_broadcast_left",
-    "salted_count",
     "scd2_compress",
     "with_salt",
     "save_or_update_table",

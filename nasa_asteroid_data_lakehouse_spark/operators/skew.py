@@ -1,7 +1,7 @@
 """Skew-aware aggregation and join helpers.
 
 At 100 TB a handful of hot keys (one boilerplate document hash, one
-mega-customer) serialize into single straggler tasks.  Three standard
+mega-customer) serialize into single straggler tasks.  Two standard
 remedies, composable with everything else:
 
 * AQE skew-join splitting — already on via the session factory
@@ -13,9 +13,6 @@ remedies, composable with everything else:
   (map-side) aggregation already mitigates most of this; explicit
   salting is for the residual case where even one reducer per key is
   too much (e.g. count-distinct-ish payloads).
-* ``salted_broadcast_left`` — replicate-right/salt-left pattern for
-  joining a skewed fact to a dim too large to broadcast whole but small
-  enough to replicate N×.
 """
 
 from __future__ import annotations
@@ -45,7 +42,7 @@ def salted_agg(
     phase-2 re-combine over the phase-1 partials); e.g.
     ``{"total": ("price", F.sum, F.sum), "mx": ("price", F.max, F.max)}``.
     Only algebraic aggregates decompose this way (express avg as
-    sum+count; count as ``salted_count``).
+    sum+count; count as ``(col, F.count, F.sum)``).
     """
     salted = with_salt(df, buckets)
     phase1 = salted.groupBy(*keys, "__salt").agg(
@@ -54,37 +51,6 @@ def salted_agg(
     return phase1.groupBy(*keys).agg(
         *[fn2(f"__p1_{out}").alias(out) for out, (_, _, fn2) in aggs.items()]
     )
-
-
-def salted_count(df: DataFrame, keys: list[str], buckets: int = 16, out: str = "n") -> DataFrame:
-    """Skew-proof count per key: count per (key, salt), sum per key."""
-    salted = with_salt(df, buckets)
-    return (
-        salted.groupBy(*keys, "__salt")
-        .agg(F.count(F.lit(1)).alias("__partial"))
-        .groupBy(*keys)
-        .agg(F.sum("__partial").alias(out))
-    )
-
-
-def salted_broadcast_left(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str,
-    buckets: int = 8,
-) -> DataFrame:
-    """Join a skewed fact to a mid-size dim by salting the fact side and
-    replicating the dim ``buckets``× (dim rows exploded over every salt
-    value), so one hot key spreads over ``buckets`` tasks.
-    """
-    salted_fact = fact.withColumn(
-        "__salt", F.pmod(F.xxhash64(*fact.columns), F.lit(buckets))
-    )
-    replicated_dim = dim.withColumn(
-        "__salt",
-        F.explode(F.array(*[F.lit(i) for i in range(buckets)])),
-    )
-    return salted_fact.join(replicated_dim, [on, "__salt"]).drop("__salt")
 
 
 def heavy_hitters(

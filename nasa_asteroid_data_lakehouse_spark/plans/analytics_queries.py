@@ -13,21 +13,17 @@ from nasa_asteroid_data_lakehouse_spark.catalog import read_table
 from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
-
-
 def q9_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9-style: profit by supplier nation and order year.
 
     6-table join; every dimension (part, supplier, nation) broadcast,
     orders joined on the fact key.  Profit = revenue - retail cost.
     """
-    lineitem = _t(spark, sf_dir, "lineitem")
-    orders = _t(spark, sf_dir, "orders")
-    part = _t(spark, sf_dir, "part")
-    supplier = _t(spark, sf_dir, "supplier")
-    nation = _t(spark, sf_dir, "nation")
+    lineitem = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
+    part = read_table(spark, sf_dir, "part")
+    supplier = read_table(spark, sf_dir, "supplier")
+    nation = read_table(spark, sf_dir, "nation")
 
     return (
         lineitem.join(
@@ -88,7 +84,7 @@ def _pearson(a: str, b: str):
 
 def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical rollup: revenue at (status, priority), (status), ()."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return (
         orders.rollup("o_orderstatus", "o_orderpriority")
         .agg(
@@ -115,7 +111,7 @@ ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST
 
 def cube_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cube over (event_type, weekday): all 4 grouping combinations."""
-    events = _t(spark, sf_dir, "events").withColumn(
+    events = read_table(spark, sf_dir, "events").withColumn(
         "weekday", F.dayofweek("ts")
     )
     return (
@@ -140,13 +136,13 @@ def stats_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlation, covariance per market segment."""
     from nasa_asteroid_data_lakehouse_spark.operators import stats
 
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     # non-finite prices are corrupt records with no moments: one NaN
     # makes every stddev/var/corr NaN (and DuckDB's STDDEV_SAMP
     # raises), so the measure contract filters them like NULLs
     # (operators/stats.finite); NULL rows keep their existing
     # aggregate-ignores-NULL semantics.
-    orders = _t(spark, sf_dir, "orders").where(
+    orders = read_table(spark, sf_dir, "orders").where(
         F.col("o_totalprice").isNull() | stats.finite("o_totalprice")
     )
     joined = orders.join(
@@ -184,7 +180,7 @@ ORDER BY c_mktsegment
 
 def pivot_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: daily counts per event type as columns."""
-    events = _t(spark, sf_dir, "events").withColumn(
+    events = read_table(spark, sf_dir, "events").withColumn(
         "day", F.to_date("ts")
     )
     types = ["click", "error", "purchase", "signup", "view"]
@@ -214,12 +210,12 @@ def full_outer_nation_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join: customer count vs supplier count per nation key
     (nations can have either, both, or neither)."""
     cust = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .groupBy(F.col("c_nationkey").alias("nationkey"))
         .agg(F.count(F.lit(1)).alias("n_customers"))
     )
     supp = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .groupBy(F.col("s_nationkey").alias("nationkey"))
         .agg(F.count(F.lit(1)).alias("n_suppliers"))
     )
@@ -245,8 +241,8 @@ FROM c FULL OUTER JOIN s ON c.nationkey = s.nationkey
 def above_segment_average_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated-subquery pattern: orders above their customer
     segment's average order value (decorrelated via window avg)."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    orders = _t(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    orders = read_table(spark, sf_dir, "orders")
     from pyspark.sql import Window
 
     joined = orders.join(broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
@@ -277,7 +273,7 @@ def sql_serving_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     in SQL (replaces the reference's Streamlit/DuckDB catalog page —
     reference ``src/streamlit_app.py:35-53``)."""
     for name in ("orders", "customer", "nation"):
-        _t(spark, sf_dir, name).createOrReplaceTempView(name)
+        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
     return spark.sql(
         """
         SELECT n_name,
@@ -327,10 +323,9 @@ ORACLES = {
 
 def session_windows_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch session windows (30-min inactivity gap) via the built-in
-    ``session_window`` expression — the batch twin of
-    ``streaming.events.sessionize``; oracle mirrors it with the
+    ``session_window`` expression; oracle mirrors it with the
     lag+cumulative-sum session numbering."""
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     return (
         events.groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
         .agg(
@@ -375,7 +370,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nasa_asteroid_data_lakehouse_spark.llm.text import normalized_text, tokens
     from pyspark.sql import Window
 
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     n_docs = docs.count()
     terms = docs.select(
         "doc_id", F.explode(tokens(normalized_text("text"))).alias("term")
@@ -431,7 +426,7 @@ def embedding_centroids_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid — one NaN would poison a whole dimension's mean."""
     from nasa_asteroid_data_lakehouse_spark.llm import similarity
 
-    emb = _t(spark, sf_dir, "embeddings").where(
+    emb = read_table(spark, sf_dir, "embeddings").where(
         similarity.vec_valid(F.col("embedding"))
     )
     return (
@@ -474,7 +469,7 @@ def star_build_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     depends on)."""
     from nasa_asteroid_data_lakehouse_spark.functions import surrogate_key
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     dim_date = (
         orders.select(F.to_date("o_orderdate").alias("order_date"))
         .na.drop()
@@ -531,7 +526,7 @@ def purchases_after_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     within 1 hour after a click by the same user."""
     from nasa_asteroid_data_lakehouse_spark.operators.temporal import range_join
 
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     clicks = events.where(F.col("event_type") == "click").select(
         "user_id", F.col("event_id").alias("click_id"), F.col("ts").alias("click_ts")
     )
@@ -561,7 +556,7 @@ def last_click_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     recent click at or before the purchase."""
     from nasa_asteroid_data_lakehouse_spark.operators.temporal import asof_join
 
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     purchases = events.where(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("p_ts")
     )
@@ -592,7 +587,7 @@ def pack_documents_for_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing: deterministic 2048-token training bins per lang."""
     from nasa_asteroid_data_lakehouse_spark.llm.packing import pack_documents
 
-    docs = _t(spark, sf_dir, "documents").select("lang", "doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").select("lang", "doc_id", "text")
     return pack_documents(
         docs, budget=2048, partition_cols=["lang"]
     )
@@ -642,10 +637,10 @@ def nation_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         intersect_rows,
     )
 
-    cust_nations = _t(spark, sf_dir, "customer").select(
+    cust_nations = read_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nationkey")
     )
-    supp_nations = _t(spark, sf_dir, "supplier").select(
+    supp_nations = read_table(spark, sf_dir, "supplier").select(
         F.col("s_nationkey").alias("nationkey")
     )
     both = intersect_rows(cust_nations, supp_nations).withColumn(
@@ -677,7 +672,7 @@ def sql_subqueries(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection, IN-subquery and correlated EXISTS in the predicate —
     Catalyst decorrelates all three; the oracle runs the same text."""
     for name in ("orders", "customer"):
-        _t(spark, sf_dir, name).createOrReplaceTempView(name)
+        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
     return spark.sql(SQL_SUBQUERIES_SQL)
 
 
@@ -810,7 +805,7 @@ def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUPING_ID to disambiguate which set produced each row (a real
     NULL value vs a superaggregate NULL).  Spark plans one Expand +
     one aggregate — the sets share a single scan and shuffle."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     orders.createOrReplaceTempView("__gs_orders")
     return spark.sql("""
         SELECT o_orderstatus, o_orderpriority,
@@ -846,7 +841,7 @@ def quantiles_by_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``approx_quantiles_lineitem`` below) — exact percentile must
     collect each group's values, the sketch is a fixed-size partial
     aggregate."""
-    lineitem = _t(spark, sf_dir, "lineitem")
+    lineitem = read_table(spark, sf_dir, "lineitem")
     pct = F.expr("percentile(l_extendedprice, array(0.25, 0.5, 0.9, 0.99))")
     return (
         lineitem.groupBy("l_returnflag")
@@ -888,7 +883,7 @@ def approx_quantiles_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicates).  DuckDB recomputes group keys + counts exactly and
     expects TRUE flags, so the driver value-hashes the whole result;
     ``quantiles_by_returnflag`` carries the exact-value semantics."""
-    lineitem = _t(spark, sf_dir, "lineitem")
+    lineitem = read_table(spark, sf_dir, "lineitem")
     acc = 10000
     tol = 1.0 / acc + 0.01
     est = lineitem.groupBy("l_returnflag").agg(
@@ -963,12 +958,12 @@ def winsorized_prices_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from nasa_asteroid_data_lakehouse_spark.operators import stats
 
-    cust = _t(spark, sf_dir, "customer")
+    cust = read_table(spark, sf_dir, "customer")
     # measure contract: non-finite prices have no quantile rank (the
     # two engines disagree on where NaN sorts within quantile_cont),
     # so they filter like NULLs; NULL rows keep their existing
     # percentile-ignores-NULL semantics.
-    orders = _t(spark, sf_dir, "orders").where(
+    orders = read_table(spark, sf_dir, "orders").where(
         F.col("o_totalprice").isNull() | stats.finite("o_totalprice")
     )
     joined = orders.join(
@@ -1040,7 +1035,9 @@ def decile_stats_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     adversarial gate caught the shifted decile assignment."""
     from pyspark.sql import Window
 
-    orders = _t(spark, sf_dir, "orders").where(F.col("o_totalprice").isNotNull())
+    orders = read_table(spark, sf_dir, "orders").where(
+        F.col("o_totalprice").isNotNull()
+    )
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     ranked = orders.select(
         "o_orderpriority",
@@ -1106,7 +1103,7 @@ def sketch_rollup_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests/test_scale_features.py."""
     from nasa_asteroid_data_lakehouse_spark.operators import sketches as sk
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     per = sk.segment_sketches(orders, "o_orderpriority", "o_custkey", "o_totalprice")
     est_seg = sk.estimate_segments(per).select(
         F.col("o_orderpriority").alias("segment"), "n_rows", "distinct_est", "p50_est"
@@ -1204,7 +1201,7 @@ def theta_overlap_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     is in exact mode and the estimates are exact."""
     from nasa_asteroid_data_lakehouse_spark.operators import sketches as sk
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     per = sk.segment_theta_sketches(orders, "o_orderpriority", "o_custkey")
     est = sk.theta_overlap_matrix(per, "o_orderpriority")
 
@@ -1287,7 +1284,7 @@ def scd2_user_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from nasa_asteroid_data_lakehouse_spark.operators.scd import scd2_compress
 
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     return scd2_compress(
         events,
         keys=["user_id"],
@@ -1336,7 +1333,7 @@ def anomaly_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         rolling_zscore,
     )
 
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     daily = resample(
         events, "ts", ["event_type"], [F.count(F.lit(1)).alias("n")], "1 day"
     )
@@ -1389,7 +1386,7 @@ def funnel_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     join; the events table is scanned once per step with the
     event_type filter pushed to parquet.
     """
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
 
     # Each step frontier is localCheckpoint-ed: the count-union below
     # replans every branch's full lineage, so without the cut a k-step
@@ -1470,7 +1467,7 @@ def regression_stats_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     §2.D).  Single hash-aggregate pass: all six moments come from one
     shuffle on the group key with map-side partial aggregation.
     """
-    lineitem = _t(spark, sf_dir, "lineitem")
+    lineitem = read_table(spark, sf_dir, "lineitem")
     return (
         lineitem.groupBy("l_returnflag")
         .agg(
@@ -1520,7 +1517,7 @@ def fuzzy_part_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         blocked_fuzzy_pairs,
     )
 
-    part = _t(spark, sf_dir, "part")
+    part = read_table(spark, sf_dir, "part")
     return blocked_fuzzy_pairs(
         part,
         name_col="p_name",
@@ -1570,7 +1567,7 @@ def file_skipping_stats_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from nasa_asteroid_data_lakehouse_spark.lake.stats import collect_file_stats
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     with query_scratch("ndl_filestats_", sf_dir, "orders") as tmp:
         orders.write.partitionBy("o_orderpriority").mode("overwrite").parquet(tmp)
 
@@ -1624,8 +1621,8 @@ def dq_report_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from nasa_asteroid_data_lakehouse_spark.operators import expectations as ex
 
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer")
 
     row_rules = {
         "orderkey_not_null": F.col("o_orderkey").isNotNull(),
@@ -1708,7 +1705,7 @@ def heavy_hitters_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from nasa_asteroid_data_lakehouse_spark.operators.skew import heavy_hitters
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     return heavy_hitters(orders, ["o_custkey"], top_n=20)
 
 
@@ -1742,7 +1739,7 @@ def trailing_week_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     One shuffle for the daily aggregate; the window runs over the
     2.4k-row daily table.
     """
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     daily = (
         orders.groupBy(F.to_date("o_orderdate").alias("day"))
         .agg(F.sum("o_totalprice").alias("rev"))
@@ -1790,7 +1787,7 @@ def cdc_snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-safe column comparison."""
     from nasa_asteroid_data_lakehouse_spark.operators import cdc
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     k = F.col("o_orderkey")
     old = orders.where(k % 10 < 7).select("o_orderkey", "o_totalprice",
                                           "o_orderstatus")
@@ -1851,7 +1848,7 @@ def variant_props_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     extraction is a cheap offset lookup — the right way to query JSON
     event payloads without a fixed schema (vs from_json, which needs
     the schema up front: see from_json_events)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     k = F.variant_get(F.try_parse_json("props"), "$.k", "bigint")
     return (
         ev.select("event_type", k.alias("k"))
@@ -1902,7 +1899,7 @@ def pit_scd2_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nasa_asteroid_data_lakehouse_spark.operators.scd import scd2_compress
     from nasa_asteroid_data_lakehouse_spark.operators.temporal import asof_join
 
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     history = (
         scd2_compress(
             events.where(F.col("event_type") != "purchase"),
@@ -1984,7 +1981,7 @@ def native_session_windows_events(spark: SparkSession, sf_dir: str) -> DataFrame
     window's end starts a new session; the islands formulation's `>`
     break differs on that boundary).  NULL timestamps carry no session
     and are excluded on both sides."""
-    ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
+    ev = read_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     return (
         ev.groupBy("user_id", F.session_window("ts", "30 minutes"))
         .agg(
@@ -2038,7 +2035,7 @@ def ewma_daily_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sort+Window, fixed-order weighted sum)."""
     from nasa_asteroid_data_lakehouse_spark.operators.timeseries import ewma, resample
 
-    ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
+    ev = read_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     daily = resample(ev, "ts", ["event_type"], [F.count(F.lit(1)).alias("n")], "1 day")
     return ewma(daily, ["event_type"], "bucket_ts", "n", alpha=_EWMA_ALPHA,
                 lags=_EWMA_LAGS)
@@ -2081,7 +2078,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark sorts NULLs first where DuckDB sorts them last)."""
     from pyspark.sql import Window
 
-    ev = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
+    ev = read_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = ev.select(
         F.col("event_type").alias("from_type"),
@@ -2132,7 +2129,7 @@ def retention_cohorts_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     (per-user first-seen, then cohort x offset distinct counts), both
     shuffling on keys that shrink as they go."""
     ev = (
-        _t(spark, sf_dir, "events")
+        read_table(spark, sf_dir, "events")
         .where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
         .select("user_id", F.to_date("ts").alias("day"))
     )
@@ -2176,7 +2173,7 @@ def cumulative_users_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ev = (
-        _t(spark, sf_dir, "events")
+        read_table(spark, sf_dir, "events")
         .where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
         .select("user_id", F.to_date("ts").alias("day"))
     )
@@ -2226,7 +2223,7 @@ def interarrival_burstiness_users(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     return interarrival_stats(
-        _t(spark, sf_dir, "events"),
+        read_table(spark, sf_dir, "events"),
         key_col="user_id",
         ts_col="ts",
         tiebreak=("event_id",),
@@ -2272,7 +2269,7 @@ def top_session_paths_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    events = _t(spark, sf_dir, "events").where(
+    events = read_table(spark, sf_dir, "events").where(
         F.col("ts").isNotNull()
         & F.col("user_id").isNotNull()
         & F.col("event_type").isNotNull()
@@ -2359,7 +2356,7 @@ def time_weighted_value_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    events = _t(spark, sf_dir, "events").where(
+    events = read_table(spark, sf_dir, "events").where(
         F.col("ts").isNotNull()
         & F.col("user_id").isNotNull()
         & F.col("value").isNotNull()
@@ -2426,7 +2423,7 @@ def rolling_active_users_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     incomplete on the right); early days keep their partial left
     windows (WAU over available history).
     """
-    events = _t(spark, sf_dir, "events").where(
+    events = read_table(spark, sf_dir, "events").where(
         F.col("ts").isNotNull() & F.col("user_id").isNotNull()
     )
     # One events scan: the (day, user) distinct table feeds the
@@ -2494,7 +2491,7 @@ def key_skew_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB ``quantile_cont`` share linear interpolation (the MAD/
     quantile-kit contract).
     """
-    orders = _t(spark, sf_dir, "orders").where(F.col("o_custkey").isNotNull())
+    orders = read_table(spark, sf_dir, "orders").where(F.col("o_custkey").isNotNull())
     counts = orders.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("n"))
     return counts.agg(
         F.count(F.lit(1)).alias("n_keys"),
@@ -2552,7 +2549,7 @@ def monthly_revenue_growth_orders(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     from pyspark.sql import Window
 
-    orders = _t(spark, sf_dir, "orders").where(F.col("o_orderdate").isNotNull())
+    orders = read_table(spark, sf_dir, "orders").where(F.col("o_orderdate").isNotNull())
     monthly = orders.groupBy(
         F.trunc("o_orderdate", "month").alias("month")
     ).agg(
@@ -2607,7 +2604,7 @@ def conversion_latency_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualifying purchase via a shuffle join on the user key) and a
     single-row summary.
     """
-    events = _t(spark, sf_dir, "events").where(
+    events = read_table(spark, sf_dir, "events").where(
         F.col("ts").isNotNull() & F.col("user_id").isNotNull()
     )
     first_view = (
@@ -2686,7 +2683,7 @@ def linear_attribution_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    events = _t(spark, sf_dir, "events").where(
+    events = read_table(spark, sf_dir, "events").where(
         F.col("ts").isNotNull() & F.col("user_id").isNotNull()
     )
     purchases = events.where(F.col("event_type") == "purchase").select(
@@ -2763,7 +2760,7 @@ def rolling_correlation_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    events = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
+    events = read_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     daily = events.groupBy(F.to_date("ts").alias("day")).agg(
         F.count(F.when(F.col("event_type") == "view", 1)).alias("x"),
         F.count(F.when(F.col("event_type") == "purchase", 1)).alias("y"),
@@ -2822,7 +2819,7 @@ def hourly_seasonality_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind anomaly baselines and capacity planning.  ISO day numbering
     (1 = Monday) on both engines; one hash agg + a broadcast of the
     single-row total."""
-    events = _t(spark, sf_dir, "events").where(F.col("ts").isNotNull())
+    events = read_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     cells = events.groupBy(
         F.dayofweek("ts").alias("_dow_sun1"),
         F.hour("ts").alias("hour"),
@@ -2885,7 +2882,7 @@ def psi_orders_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from nasa_asteroid_data_lakehouse_spark.operators import stats
 
-    orders = _t(spark, sf_dir, "orders").where(
+    orders = read_table(spark, sf_dir, "orders").where(
         stats.finite("o_totalprice") & F.col("o_orderdate").isNotNull()
     )
     ref = orders.where(F.col("o_orderdate") < _PSI_SPLIT)

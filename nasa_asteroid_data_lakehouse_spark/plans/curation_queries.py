@@ -23,18 +23,10 @@ from pyspark.sql import functions as F
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
 from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 from nasa_asteroid_data_lakehouse_spark.llm import curation, similarity, text
-from nasa_asteroid_data_lakehouse_spark.plans.llm_queries import _bucket_sql
+from nasa_asteroid_data_lakehouse_spark.plans import _EN, _NORMC, _TOKSC, _bucket_sql
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-# normalized text with NULL pinned to '' (engine coalesces the same way)
-_NORMC = r"trim(regexp_replace(lower(coalesce(text, '')), '\s+', ' ', 'g'))"
-# token array of the normalized text; blank -> [] (string_split('') is [''])
-_TOKS = (
-    f"CASE WHEN {_NORMC} = '' THEN []::VARCHAR[] "
-    f"ELSE string_split({_NORMC}, ' ') END"
-)
 
 
 # --- Gopher-style composite quality gate -------------------------------------
@@ -48,11 +40,9 @@ def quality_filter_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curation.quality_filter(docs).drop("text")
 
 
-_EN = ", ".join(f"'{w}'" for w in text.STOPWORDS["en"])
-
 QUALITY_FILTER_SQL = rf"""
 WITH base AS (
-  SELECT doc_id, {_TOKS} AS w FROM documents
+  SELECT doc_id, {_TOKSC} AS w FROM documents
 ),
 core AS (
   SELECT doc_id, w,

@@ -21,6 +21,12 @@ from nasa_asteroid_data_lakehouse_spark.llm import (
     similarity,
     text,
 )
+from nasa_asteroid_data_lakehouse_spark.plans import (
+    _EN,
+    _NORM,
+    _bucket_sql,
+    _cos_sql,
+)
 
 # --- text statistics ---------------------------------------------------------
 
@@ -29,8 +35,6 @@ def text_stats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     return text.with_text_stats(docs).drop("text")
 
-
-_EN = ", ".join(f"'{w}'" for w in text.STOPWORDS["en"])
 
 TEXT_STATS_SQL = rf"""
 WITH base AS (
@@ -102,8 +106,6 @@ def fingerprint_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     return text.with_fingerprints(docs).drop("text")
 
-
-_NORM = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
 
 FINGERPRINT_SQL = rf"""
 SELECT doc_id,
@@ -352,9 +354,7 @@ def byte_features_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     Emits the oracle-checkable byte profile (``byte_feature_profile``):
     every column is recomputed by DuckDB from the source text
     (octet_length / space count / sha256), so the driver value-hashes
-    the whole Arrow round trip.  The non-SQL-expressible features
-    (entropy, histogram) stay in ``extract_byte_features``, accuracy-
-    asserted in tests/test_multimodal.py.
+    the whole Arrow round trip.
     """
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     payloads = multimodal.with_binary_payload(docs, "text")
@@ -586,7 +586,7 @@ def simhash_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _simhash_sql_core() -> str:
     """CTE chain computing doc_id -> simhash, mirroring
-    llm/dedup.py:with_simhash bit-for-bit (md5-prefix token hash,
+    llm/dedup.py:simhash_by_key bit-for-bit (md5-prefix token hash,
     +/-1 votes per bit, bit set on positive vote sum)."""
     votes = ",\n    ".join(
         f"SUM(CASE WHEN (h >> {i}) & 1 = 1 THEN 1 ELSE -1 END) AS v{i}"
@@ -650,7 +650,6 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {_SIMHASH_MAX_HAMMING}
 # --- embedding-cosine near-duplicates ----------------------------------------
 
 _NEAR_DUP_THRESHOLD = 0.35
-_EMB_DIM = 64
 
 
 def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -670,24 +669,6 @@ def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, threshold=_NEAR_DUP_THRESHOLD
     )
 
-
-def _bucket_sql(num_planes: int, vec_expr: str) -> str:
-    planes = similarity.hyperplane_coefficients(num_planes, _EMB_DIM)
-    terms = []
-    for p, coefs in enumerate(planes):
-        lits = ", ".join(repr(c) for c in coefs)
-        terms.append(
-            f"(CASE WHEN list_dot_product({vec_expr}::DOUBLE[], [{lits}]::DOUBLE[]) >= 0"
-            f" THEN {1 << p} ELSE 0 END)"
-        )
-    return "(" + " + ".join(terms) + ")::BIGINT"
-
-
-_COS_AB = (
-    "list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])"
-    " / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))"
-    " * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))"
-)
 
 EMBEDDING_NEAR_DUP_SQL = f"""
 WITH valid AS (
@@ -709,10 +690,10 @@ bucketed AS (
   FROM valid
 )
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       ROUND({_COS_AB}, 6) AS cosine_sim
+       ROUND({_cos_sql("a", "b")}, 6) AS cosine_sim
 FROM bucketed a JOIN bucketed b
   ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE ROUND({_COS_AB}, 6) >= {_NEAR_DUP_THRESHOLD}
+WHERE ROUND({_cos_sql("a", "b")}, 6) >= {_NEAR_DUP_THRESHOLD}
 """
 
 
@@ -778,12 +759,10 @@ _IVF_TOPK = 15
 
 def ivf_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF search with a seed quantizer (centroids = the 8 lowest-id
-    vectors, i.e. kmeans_fit iters=0): assign every vector to its
-    nearest centroid, probe the query's 2 nearest cells only.
-
-    The Lloyd-iterated quantizer (llm/similarity.py:kmeans_fit) is
-    exercised in tests/test_llm.py; the seed variant keeps the oracle
-    SQL-expressible so the driver hash-checks the IVF plumbing.
+    vectors, i.e. k-means at iteration 0): assign every vector to its
+    nearest centroid, probe the query's 2 nearest cells only.  The seed
+    quantizer keeps the oracle SQL-expressible so the driver
+    hash-checks the IVF plumbing.
     """
     emb = read_table(spark, sf_dir, "embeddings")
     # centroid index == seed rank, matching the oracle's
@@ -1605,20 +1584,13 @@ def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a 16-seed quantizer, then drop any vector whose cluster holds a
     lower-id neighbor with cosine >= 0.35 — cluster-then-prune keeps
     the pairwise compare at O(n^2/k).  Seed centroids (16 lowest ids,
-    kmeans iters=0) keep the oracle SQL-expressible; the Lloyd-iterated
-    quantizer is exercised in tests."""
+    k-means at iteration 0) keep the oracle SQL-expressible."""
     emb = read_table(spark, sf_dir, "embeddings")
     centroids = similarity.seed_centroids(emb, _SEMDEDUP_K)
     return similarity.semantic_dedup(
         emb, centroids, _SEMDEDUP_THRESHOLD
     ).orderBy("vec_id")
 
-
-_COS_AB = (
-    "list_dot_product(x.embedding::DOUBLE[], b.embedding::DOUBLE[])"
-    " / (sqrt(list_dot_product(x.embedding::DOUBLE[], x.embedding::DOUBLE[]))"
-    " * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))"
-)
 
 SEMDEDUP_SQL = f"""
 WITH seeds AS (
@@ -1640,7 +1612,7 @@ dropped AS (
   SELECT DISTINCT b.vec_id
   FROM a x, a b
   WHERE x.c = b.c AND x.vec_id < b.vec_id
-    AND ROUND({_COS_AB}, 6) >= {_SEMDEDUP_THRESHOLD}
+    AND ROUND({_cos_sql("x", "b")}, 6) >= {_SEMDEDUP_THRESHOLD}
 )
 SELECT a.vec_id, a.c AS cluster
 FROM a LEFT JOIN dropped d ON a.vec_id = d.vec_id

@@ -20,15 +20,11 @@ from nasa_asteroid_data_lakehouse_spark.functions import (
 )
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
-
-
 # --- D4/D5/E: dedup --------------------------------------------------------
 
 def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic key-subset dedup: one row per text, lowest doc_id wins."""
-    docs = _t(spark, sf_dir, "documents")
+    docs = read_table(spark, sf_dir, "documents")
     return ops.dedup_deterministic(
         docs.select("doc_id", "text", "lang", "source"), ["text"], ["doc_id"]
     )
@@ -43,7 +39,7 @@ QUALIFY row_number() OVER (PARTITION BY text ORDER BY doc_id) = 1
 
 def dedup_all_columns_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-row exact dedup (reference dropDuplicates() semantics)."""
-    docs = _t(spark, sf_dir, "documents").select("lang", "source")
+    docs = read_table(spark, sf_dir, "documents").select("lang", "source")
     return ops.dedup_all_columns(docs)
 
 
@@ -52,7 +48,9 @@ DEDUP_ALL_SQL = "SELECT DISTINCT lang, source FROM documents"
 
 def duplicate_groups_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-group report on documents (lang, source) pairs."""
-    return ops.duplicate_groups(_t(spark, sf_dir, "documents"), ["lang", "source"])
+    return ops.duplicate_groups(
+        read_table(spark, sf_dir, "documents"), ["lang", "source"]
+    )
 
 
 DUP_GROUPS_SQL = """
@@ -65,7 +63,7 @@ FROM documents GROUP BY lang, source HAVING COUNT(*) > 1
 
 def profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-pass null/distinct profile (replaces the reference's 80-job loop)."""
-    return ops.profile(_t(spark, sf_dir, "documents"))
+    return ops.profile(read_table(spark, sf_dir, "documents"))
 
 
 PROFILE_SQL = """
@@ -91,7 +89,9 @@ SELECT 'n_chars', COUNT(*), COUNT(*) FILTER (WHERE n_chars IS NULL),
 
 def normalize_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trim + placeholder->null on string columns, types preserved."""
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "lang", "source", "n_chars")
+    docs = read_table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "source", "n_chars"
+    )
     return ops.normalize_placeholders(docs)
 
 
@@ -109,13 +109,13 @@ FROM documents
 
 def union_by_name_parties(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-tolerant union: customers ∪ suppliers with disjoint extras."""
-    cust = _t(spark, sf_dir, "customer").select(
+    cust = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("party_key"),
         F.col("c_name").alias("party_name"),
         F.col("c_nationkey").alias("nationkey"),
         F.col("c_mktsegment").alias("mktsegment"),
     )
-    supp = _t(spark, sf_dir, "supplier").select(
+    supp = read_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("party_key"),
         F.col("s_name").alias("party_name"),
         F.col("s_nationkey").alias("nationkey"),
@@ -138,7 +138,7 @@ FROM supplier
 
 def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-10 orders by totalprice (TakeOrderedAndProject plan)."""
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     return ops.top_k(orders, [F.desc("o_totalprice"), F.asc("o_orderkey")], 10)
 
 
@@ -150,7 +150,7 @@ FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
 
 def topk_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer via ranking window."""
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_totalprice"
     )
     return ops.top_k_per_group(
@@ -173,7 +173,7 @@ def running_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative order value per customer over order date."""
     from pyspark.sql import Window
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         .orderBy("o_orderdate", "o_orderkey")
@@ -199,9 +199,9 @@ FROM orders
 
 def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti-join: customers with no URGENT-priority order."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     urgent = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .where(F.col("o_orderpriority") == "1-URGENT")
         .select(F.col("o_custkey").alias("c_custkey"))
     )
@@ -226,7 +226,7 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     'incoming' = orders with orderkey % 2 == 0 (tagged batch=2).
     Incoming wins on overlap (orderkey % 6 == 0 → batch 2 survives).
     """
-    orders = _t(spark, sf_dir, "orders").select(
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
     existing = orders.where(F.col("o_orderkey") % 3 == 0).withColumn(
@@ -260,7 +260,7 @@ QUALIFY row_number() OVER (PARTITION BY o_orderkey ORDER BY prio) = 1
 
 def surrogate_keys_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-derived sha2-256 dim keys (reference gold-layer pattern)."""
-    nation = _t(spark, sf_dir, "nation")
+    nation = read_table(spark, sf_dir, "nation")
     return nation.select(
         "n_nationkey",
         "n_name",
@@ -281,7 +281,7 @@ FROM nation
 
 def calendar_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar decomposition of event timestamps (date-dim pattern)."""
-    events = _t(spark, sf_dir, "events").select("event_id", "ts")
+    events = read_table(spark, sf_dir, "events").select("event_id", "ts")
     return with_calendar_parts(events, "ts").drop("ts")
 
 
@@ -299,7 +299,7 @@ FROM events
 
 def from_json_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed extraction from the events.props JSON-string column."""
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     parsed = events.withColumn(
         "props_parsed", F.from_json(F.col("props"), "k INT")
     )
@@ -351,10 +351,10 @@ ORACLES = {
 # --- I: event-time windowing (streaming mirror, batch-checkable) -------------
 
 def windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-day event-time windows — the same ``window()``
-    expression streaming/events.windowed_counts runs with a watermark;
-    here in batch form so the DuckDB oracle can check it."""
-    events = _t(spark, sf_dir, "events")
+    """Tumbling 1-day event-time windows — the ``window()``
+    expression a stream runs with a watermark, here in batch form so
+    the DuckDB oracle can check it."""
+    events = read_table(spark, sf_dir, "events")
     return (
         events.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
         .agg(
@@ -391,7 +391,7 @@ def gap_filled_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     previous hour's value in ``sum_value_filled`` and is_gap=true."""
     from nasa_asteroid_data_lakehouse_spark.operators import timeseries
 
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     hourly = timeseries.resample(
         events,
         "ts",
@@ -437,8 +437,9 @@ def zorder_keys_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-bit bucket ranks of o_custkey and o_totalprice, then profile the
     curve (row count + revenue per z-value).  Deterministic modulo /
     width buckets here so DuckDB can mirror the bit arithmetic; the
-    production writer (lake/zorder.py: write_zordered) buckets by
-    approxQuantile rank instead.  Pure projection + one hash agg —
+    table layout path (``VersionedTable.optimize`` via
+    lake/zorder.py: zorder_buckets) buckets by approxQuantile rank
+    instead.  Pure projection + one hash agg —
     no UDF, no extra shuffle."""
     from nasa_asteroid_data_lakehouse_spark.lake.zorder import morton_interleave
 
@@ -447,7 +448,7 @@ def zorder_keys_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NaN/Inf prices have no width bucket (the cents/floor cast would
     # raise under ANSI and in DuckDB); NULL prices keep their existing
     # NULL-group semantics, so exclude ONLY non-finite values.
-    orders = _t(spark, sf_dir, "orders").where(
+    orders = read_table(spark, sf_dir, "orders").where(
         F.col("o_totalprice").isNull() | stats.finite("o_totalprice")
     )
     b1 = (F.col("o_custkey") % 256).cast("long")
@@ -501,7 +502,7 @@ def asof_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     fill's tearing hazard on null carried values."""
     from nasa_asteroid_data_lakehouse_spark.operators.temporal import asof_join
 
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     purchases = events.where(
         (F.col("event_type") == "purchase") & F.col("value").isNotNull()
     ).select("user_id", "ts", "event_id", F.col("value").alias("purchase_value"))
@@ -560,7 +561,7 @@ def range_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is compact and order-free."""
     from nasa_asteroid_data_lakehouse_spark.operators.temporal import range_join
 
-    events = _t(spark, sf_dir, "events")
+    events = read_table(spark, sf_dir, "events")
     purchases = events.where(F.col("event_type") == "purchase").select(
         "user_id", F.col("ts").alias("p_ts"), F.col("event_id").alias("purchase_id")
     )
@@ -611,7 +612,7 @@ def salted_agg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides)."""
     from nasa_asteroid_data_lakehouse_spark.operators.skew import salted_agg
 
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     out = salted_agg(
         orders.select("o_orderpriority", "o_totalprice", "o_orderkey"),
         ["o_orderpriority"],
@@ -657,8 +658,8 @@ def bucketed_join_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep the catalog clean across invocations."""
     import uuid
 
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer")
     tag = uuid.uuid4().hex[:8]
     t_o, t_c = f"ndl_b_orders_{tag}", f"ndl_b_cust_{tag}"
     (

@@ -24,17 +24,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
-
-
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-style pricing summary (flagship).
 
     Exercises scan, filter (pushed to parquet), projection, hash
     aggregate with map-side partials, and sort.
     """
-    lineitem = _t(spark, sf_dir, "lineitem")
+    lineitem = read_table(spark, sf_dir, "lineitem")
     return (
         lineitem.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -87,9 +83,9 @@ def q3_top_unshipped_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-fact shuffled join (orders x lineitem on orderkey), agg, and
     TakeOrderedAndProject (orderBy+limit never fully sorts the cluster).
     """
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    lineitem = _t(spark, sf_dir, "lineitem")
+    customer = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
+    lineitem = read_table(spark, sf_dir, "lineitem")
     cutoff = F.lit("1998-06-01").cast("timestamp")
     return (
         lineitem.where(F.col("l_shipdate") > cutoff)
@@ -133,11 +129,11 @@ def q5_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Star join across 5 tables; every dimension side is broadcast so the
     only shuffle is the final groupBy on n_name (then AQE-coalesced).
     """
-    region = _t(spark, sf_dir, "region")
-    nation = _t(spark, sf_dir, "nation")
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    lineitem = _t(spark, sf_dir, "lineitem")
+    region = read_table(spark, sf_dir, "region")
+    nation = read_table(spark, sf_dir, "nation")
+    customer = read_table(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
+    lineitem = read_table(spark, sf_dir, "lineitem")
 
     dims = (
         customer.join(broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
 from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 from nasa_asteroid_data_lakehouse_spark.llm import multimodal as mm
+from nasa_asteroid_data_lakehouse_spark.plans import _VEC_VALID_SQL
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -113,9 +114,9 @@ def frame_sample_manifest_documents(spark: SparkSession, sf_dir: str) -> DataFra
     a clip with ``n_frames = n_chars % 240 + 1`` synthetic frames and
     emit the evenly-strided sample of up to 8 frame indices per clip —
     ``frame_idx = floor(i * n_frames / k)``, the manifest a decode
-    stage (llm/multimodal.py: sample_frames) would fetch.  The decode
-    itself stays stubbed (no codecs in this container); the manifest
-    math, schema, and row explosion are the real Spark-side plumbing.
+    stage would fetch.  No decode runs here (no codecs in this
+    container); the manifest math, schema, and row explosion are the
+    real Spark-side plumbing.
 
     Scale shape: one narrow projection + explode(sequence()) — no
     shuffle at all; the manifest can feed a decode ``mapInPandas``
@@ -360,11 +361,6 @@ _IVFR_K = 10
 _IVFR_NPROBE = 2
 _IVFR_CENTROIDS = 8
 
-_VOK = (
-    "embedding IS NOT NULL AND len(list_filter(embedding, "
-    "x -> x IS NULL OR isnan(x) OR isinf(x))) = 0"
-)
-
 
 def ivf_recall_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of 2-cell IVF probing vs the exact ranking, per anchor
@@ -389,11 +385,11 @@ IVF_RECALL_SQL = f"""
 WITH seeds AS (
   SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, cv FROM (
     SELECT vec_id, embedding::DOUBLE[] AS cv FROM embeddings
-    WHERE {_VOK} ORDER BY vec_id LIMIT {_IVFR_CENTROIDS})
+    WHERE {_VEC_VALID_SQL} ORDER BY vec_id LIMIT {_IVFR_CENTROIDS})
 ),
 valid AS (
   SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings
-  WHERE vec_id IS NOT NULL AND {_VOK}
+  WHERE vec_id IS NOT NULL AND {_VEC_VALID_SQL}
 ),
 assign AS (
   SELECT id, v, c FROM (

@@ -23,17 +23,15 @@ from nasa_asteroid_data_lakehouse_spark.catalog import read_table
 from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 from nasa_asteroid_data_lakehouse_spark.llm import dedup, text
 from nasa_asteroid_data_lakehouse_spark.operators.stats import finite
+from nasa_asteroid_data_lakehouse_spark.plans import (
+    _NORM,
+    _TOKS,
+    _VEC_VALID_SQL,
+    _d2_sql,
+)
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-# DuckDB twin of llm/text.normalized_text (NULL propagates)
-_NORM = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
-# DuckDB twin of llm/text.tokens(normalized_text): blank -> [], NULL -> NULL
-_TOKS = (
-    f"CASE WHEN {_NORM} = '' THEN []::VARCHAR[] "
-    f"ELSE string_split({_NORM}, ' ') END"
-)
 
 
 # --- character-class profile per source --------------------------------------
@@ -894,11 +892,6 @@ ORACLES["asof_last_error_events"] = ASOF_LAST_ERROR_SQL
 
 from nasa_asteroid_data_lakehouse_spark.llm import similarity
 
-_VEC_VALID_SQL = (
-    "embedding IS NOT NULL AND len(list_filter(embedding, "
-    "x -> x IS NULL OR isnan(x) OR isinf(x))) = 0"
-)
-
 
 def dim_stats_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-dimension moments of the embedding matrix (n / mean / min /
@@ -985,16 +978,6 @@ def pq_codes_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_d2_sql(vec: str, cent: str, lo: str, hi: str) -> str:
-    """Squared distance over v[lo+1..hi] in SEQUENTIAL fold order —
-    the exact textual twin of llm/similarity._sq_dist (COALESCE: an
-    empty slice folds to 0.0 like the engine's empty aggregate)."""
-    return (
-        f"COALESCE(list_sum(list_transform(range({lo} + 1, {hi} + 1), "
-        f"j -> ({vec}[j] - {cent}[j]) * ({vec}[j] - {cent}[j]))), 0.0)"
-    )
-
-
 def _pq_sub_bounds_sql(s: int, vec: str = "e.v") -> tuple[str, str]:
     sub = f"GREATEST(1, CAST(ceil(len({vec}) / 4.0) AS INT))"
     return (f"({s} * {sub})", f"LEAST(({s} + 1) * {sub}, len({vec}))")
@@ -1016,7 +999,7 @@ assign AS (
       ORDER BY
         CASE sub.s
           {" ".join(
-              f"WHEN {s} THEN " + _pq_d2_sql(
+              f"WHEN {s} THEN " + _d2_sql(
                   "e.v", "seeds.cv", _pq_sub_bounds_sql(s)[0],
                   _pq_sub_bounds_sql(s)[1]
               )
@@ -1043,8 +1026,8 @@ ORACLES["pq_codes_embeddings"] = PQ_CODES_SQL
 def centroid_inertia_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cluster size and inertia (sum of squared distance to the
     assigned centroid) under the 8-seed quantizer — the k-means
-    quality gauge at iteration 0 (kmeans_fit's Lloyd loop is
-    pytest-pinned; the seed form keeps the oracle expressible).
+    quality gauge at iteration 0 (the seed form keeps the oracle
+    expressible).
 
     Distances fold sequentially on both engines and are
     lattice-rounded (1e-6) BEFORE the per-cluster sum, which is then
@@ -1074,7 +1057,7 @@ def centroid_inertia_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CI_D2 = _pq_d2_sql("e.v", "seeds.cv", "0", "len(e.v)")
+_CI_D2 = _d2_sql("e.v", "seeds.cv", "0", "len(e.v)")
 
 CENTROID_INERTIA_SQL = f"""
 WITH valid AS (
@@ -1832,7 +1815,7 @@ assign AS (
       ORDER BY
         CASE sub.s
           {" ".join(
-              f"WHEN {sp} THEN " + _pq_d2_sql(
+              f"WHEN {sp} THEN " + _d2_sql(
                   "e.v", "seeds.cv", _pq_sub_bounds_sql(sp)[0],
                   _pq_sub_bounds_sql(sp)[1]
               )

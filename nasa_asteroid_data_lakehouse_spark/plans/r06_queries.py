@@ -31,21 +31,15 @@ from pyspark.sql import functions as F
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
 from nasa_asteroid_data_lakehouse_spark.llm import similarity, text
 from nasa_asteroid_data_lakehouse_spark.operators.stats import finite
+from nasa_asteroid_data_lakehouse_spark.plans import (
+    _NORM,
+    _TOKS,
+    _VEC_VALID_SQL,
+    _bucket_sql,
+)
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-# DuckDB twin of llm/text.normalized_text (NULL propagates)
-_NORM = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
-# DuckDB twin of llm/text.tokens(normalized_text): blank -> [], NULL -> NULL
-_TOKS = (
-    f"CASE WHEN {_NORM} = '' THEN []::VARCHAR[] "
-    f"ELSE string_split({_NORM}, ' ') END"
-)
-_VEC_VALID_SQL = (
-    "embedding IS NOT NULL AND len(list_filter(embedding,"
-    " x -> x IS NULL OR isnan(x) OR isinf(x))) = 0"
-)
 
 
 # === STL-style seasonal decomposition ========================================
@@ -1068,8 +1062,6 @@ def ndcg_lsh_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ndcg_sql() -> str:
-    from nasa_asteroid_data_lakehouse_spark.plans.llm_queries import _bucket_sql
-
     ws, cum = similarity.dcg_weights(_NDCG_K)
     dcg_terms = " + ".join(
         f"h{r} * {ws[r - 1]!r}" for r in range(1, _NDCG_K + 1)

@@ -34,28 +34,15 @@ from nasa_asteroid_data_lakehouse_spark.catalog import read_table
 from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 from nasa_asteroid_data_lakehouse_spark.llm import similarity, text
 from nasa_asteroid_data_lakehouse_spark.operators.stats import finite
+from nasa_asteroid_data_lakehouse_spark.plans import (
+    _TOKS,
+    _VEC_VALID_SQL,
+    _bucket_sql,
+    _cos_sql,
+)
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-# DuckDB twin of llm/text.normalized_text (NULL propagates)
-_NORM = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
-# DuckDB twin of llm/text.tokens(normalized_text): blank -> [], NULL -> NULL
-_TOKS = (
-    f"CASE WHEN {_NORM} = '' THEN []::VARCHAR[] "
-    f"ELSE string_split({_NORM}, ' ') END"
-)
-_VEC_VALID_SQL = (
-    "embedding IS NOT NULL AND len(list_filter(embedding,"
-    " x -> x IS NULL OR isnan(x) OR isinf(x))) = 0"
-)
-# a/b-aliased cosine for pair CTEs (llm_queries' _COS_AB is shadowed
-# by a later x/b redefinition in that module — keep a local twin)
-_COS_AB = (
-    "list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])"
-    " / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))"
-    " * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))"
-)
 
 
 # === Pareto skyline over the bounded daily table ==============================
@@ -871,10 +858,6 @@ def embedding_split_leakage_embeddings(
 
 
 def _esl_sql() -> str:
-    from nasa_asteroid_data_lakehouse_spark.plans.llm_queries import (
-        _bucket_sql,
-    )
-
     split_expr = (
         "CASE WHEN ('0x' || substr(md5('esplit-v1' || '||' ||"
         " CAST(vec_id AS VARCHAR)), 1, 8))::BIGINT % 10 <= 7 THEN 'train'"
@@ -909,10 +892,10 @@ bucketed AS (
 ),
 pairs AS (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-         ROUND({_COS_AB}, 6) AS cosine_sim
+         ROUND({_cos_sql("a", "b")}, 6) AS cosine_sim
   FROM bucketed a JOIN bucketed b
     ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-  WHERE ROUND({_COS_AB}, 6) >= {_ESL_THRESHOLD}
+  WHERE ROUND({_cos_sql("a", "b")}, 6) >= {_ESL_THRESHOLD}
 ),
 splits AS (
   SELECT vec_id, {split_expr} AS split
@@ -1075,7 +1058,6 @@ ORACLES["tfidf_cosine_pairs_documents"] = TFIDF_COSINE_SQL
 
 
 # === LSH-kNN hubness audit ====================================================
-
 
 
 def hubness_lsh_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:

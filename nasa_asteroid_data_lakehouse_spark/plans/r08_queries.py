@@ -41,45 +41,17 @@ from nasa_asteroid_data_lakehouse_spark.catalog import read_table
 from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
 from nasa_asteroid_data_lakehouse_spark.llm import similarity
 from nasa_asteroid_data_lakehouse_spark.operators.stats import finite
+from nasa_asteroid_data_lakehouse_spark.plans import (
+    _EMB_DIM,
+    _NORM,
+    _VEC_VALID_SQL,
+    _bucket_sql,
+    _cos_sql,
+    _d2_sql,
+)
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-_EMB_DIM = 64
-_VEC_VALID_SQL = (
-    "embedding IS NOT NULL AND len(list_filter(embedding,"
-    " x -> x IS NULL OR isnan(x) OR isinf(x))) = 0"
-)
-
-
-def _d2_sql(vec: str, cent: str, lo: str, hi: str) -> str:
-    """Squared distance over ``vec[lo+1..hi]`` in SEQUENTIAL fold order —
-    textual twin of llm/similarity._sq_dist (local copy: module-level
-    fragment constants shadow across plans modules, round-6 lesson)."""
-    return (
-        f"COALESCE(list_sum(list_transform(range({lo} + 1, {hi} + 1), "
-        f"j -> ({vec}[j] - {cent}[j]) * ({vec}[j] - {cent}[j]))), 0.0)"
-    )
-
-
-def _bucket_sql(num_planes: int, vec_expr: str) -> str:
-    """Sign-LSH bucket twin (bit p weighted 2^p, ascending planes)."""
-    planes = similarity.hyperplane_coefficients(num_planes, _EMB_DIM)
-    terms = []
-    for p, coefs in enumerate(planes):
-        lits = ", ".join(repr(c) for c in coefs)
-        terms.append(
-            f"(CASE WHEN list_dot_product({vec_expr}::DOUBLE[], [{lits}]::DOUBLE[]) >= 0"
-            f" THEN {1 << p} ELSE 0 END)"
-        )
-    return "(" + " + ".join(terms) + ")::BIGINT"
-
-
-_COS_AB = (
-    "list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[])"
-    " / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))"
-    " * sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[])))"
-)
 
 
 # === IVF-PQ composite ANN ======================================================
@@ -926,7 +898,7 @@ bucketed AS (
 ),
 cand AS (
   SELECT a.vec_id AS vec_id, b.vec_id AS id_b,
-         ROUND({_COS_AB}, 6) AS cos
+         ROUND({_cos_sql("a", "b")}, 6) AS cos
   FROM bucketed a JOIN bucketed b
     ON a.bucket = b.bucket AND a.vec_id <> b.vec_id
 ),
@@ -1404,10 +1376,6 @@ ORACLES["ivfpq_residual_topk_embeddings"] = IVFPQ_RESIDUAL_SQL
 
 # === MinHash (bands x rows) parameter sweep ====================================
 
-# DuckDB twin of llm/text.normalized_text (local copy — round-6 lesson:
-# never import fragment constants across plans modules)
-_NORM_SQL = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
-
 _MBS_N = 8           # signature length
 _MBS_K = 2           # shingle size (words) — the dedup family's setting
 _MBS_BANDS = (8, 4, 2)
@@ -1690,7 +1658,7 @@ WITH sh AS (
          THEN list_distinct(list_transform(range(1, len(words) - {k - 2}),
                             j -> array_to_string(words[j:j+{k - 1}], ' ')))
          ELSE [array_to_string(words, ' ')] END AS shingles
-  FROM (SELECT doc_id, string_split({_NORM_SQL}, ' ') AS words
+  FROM (SELECT doc_id, string_split({_NORM}, ' ') AS words
         FROM (SELECT doc_id, text FROM documents
               WHERE text IS NOT NULL AND doc_id IS NOT NULL
               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id

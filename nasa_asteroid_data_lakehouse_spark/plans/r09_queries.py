@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
 from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
+from nasa_asteroid_data_lakehouse_spark.plans import _NORM
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -1053,10 +1054,6 @@ ORACLES["packing_budget_sweep_documents"] = PACKING_BUDGET_SWEEP_SQL
 
 # === Jaccard threshold sweep ====================================================
 
-# DuckDB twin of llm/text.normalized_text (local copy — round-6 lesson:
-# never import fragment constants across plans modules)
-_JTS_NORM_SQL = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
-
 _JTS_N = 8            # signature length
 _JTS_K = 2            # shingle size (words) — the dedup family's setting
 _JTS_BANDS = 4        # fixed (4, 2) banding: the production config
@@ -1206,7 +1203,7 @@ WITH sh AS (
          THEN list_distinct(list_transform(range(1, len(words) - {k - 2}),
                             j -> array_to_string(words[j:j+{k - 1}], ' ')))
          ELSE [array_to_string(words, ' ')] END AS shingles
-  FROM (SELECT doc_id, string_split({_JTS_NORM_SQL}, ' ') AS words
+  FROM (SELECT doc_id, string_split({_NORM}, ' ') AS words
         FROM (SELECT doc_id, text FROM documents
               WHERE text IS NOT NULL AND doc_id IS NOT NULL
               ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
 from nasa_asteroid_data_lakehouse_spark.scratch import query_scratch
+from nasa_asteroid_data_lakehouse_spark.plans import _EN, _NORM, _TOKSC
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -1214,9 +1215,9 @@ def decontamination_ngram_sweep_documents(
     in the same projection (a struct-array explode tags rows with n),
     so adding an n costs one array column, not another corpus scan.
     The eval side stays broadcast exactly as in the registered
-    decontaminate query; counts are monotone NON-INCREASING in n by
-    construction (an (n+1)-gram match implies an n-gram match on the
-    same tokens).  Output: 3 rows."""
+    ``decontaminate_documents`` query; counts are monotone
+    NON-INCREASING in n by construction (an (n+1)-gram match implies an
+    n-gram match on the same tokens).  Output: 3 rows."""
     from nasa_asteroid_data_lakehouse_spark.llm import dedup
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1283,7 +1284,6 @@ def decontamination_ngram_sweep_documents(
 
 
 def _dns_sql() -> str:
-    norm = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
     per_n = "\nUNION ALL\n".join(
         f"""SELECT CAST({n} AS BIGINT) AS n,
        (SELECT CAST(COUNT(DISTINCT c.doc_id) AS BIGINT)
@@ -1315,7 +1315,7 @@ corpus{n} AS (SELECT DISTINCT doc_id, unnest(shingles) AS shingle FROM sh{n}
         for n in _DNS_NS
     )
     return rf"""
-WITH w AS (SELECT doc_id, string_split({norm}, ' ') AS words FROM documents),
+WITH w AS (SELECT doc_id, string_split({_NORM}, ' ') AS words FROM documents),
 {shingle_ctes}
 {per_n}
 ORDER BY n
@@ -1392,14 +1392,8 @@ def quality_threshold_sweep_documents(
 
 
 def _qts_sql() -> str:
-    from nasa_asteroid_data_lakehouse_spark.llm import curation, text
+    from nasa_asteroid_data_lakehouse_spark.llm import curation
 
-    en = ", ".join(f"'{w}'" for w in text.STOPWORDS["en"])
-    normc = r"trim(regexp_replace(lower(coalesce(text, '')), '\s+', ' ', 'g'))"
-    toks = (
-        f"CASE WHEN {normc} = '' THEN []::VARCHAR[] "
-        f"ELSE string_split({normc}, ' ') END"
-    )
     per_t = "\nUNION ALL\n".join(
         f"""SELECT CAST({t} AS BIGINT) AS min_words,
        CAST(COALESCE(SUM(CASE WHEN other_ok AND n_words >= {t}
@@ -1417,7 +1411,7 @@ FROM feats"""
     )
     return rf"""
 WITH base AS (
-  SELECT doc_id, {toks} AS w FROM documents
+  SELECT doc_id, {_TOKSC} AS w FROM documents
 ),
 core AS (
   SELECT doc_id, w,
@@ -1426,7 +1420,7 @@ core AS (
          THEN ROUND(length(array_to_string(w, '')) / len(w), 6)
          ELSE 0.0 END AS avg_word_len,
     CASE WHEN len(w) > 0
-         THEN ROUND(len(list_filter(w, t -> t IN ({en}))) / len(w), 6)
+         THEN ROUND(len(list_filter(w, t -> t IN ({_EN}))) / len(w), 6)
          ELSE 0.0 END AS stopword_ratio,
     CASE WHEN len(w) > 1
          THEN ROUND(1 - len(list_distinct(list_transform(range(1, len(w)),

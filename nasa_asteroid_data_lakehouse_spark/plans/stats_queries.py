@@ -20,16 +20,10 @@ from pyspark.sql.functions import broadcast
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
 from nasa_asteroid_data_lakehouse_spark.llm import sharding, text, tokenizer
 from nasa_asteroid_data_lakehouse_spark.operators import stats
+from nasa_asteroid_data_lakehouse_spark.plans import _NORMC, _TOKSC
 
 QUERIES: dict = {}
 ORACLES: dict = {}
-
-# normalized text + token array, NULL pinned to '' (mirrors llm/text.py)
-_NORMC = r"trim(regexp_replace(lower(coalesce(text, '')), '\s+', ' ', 'g'))"
-_TOKS = (
-    f"CASE WHEN {_NORMC} = '' THEN []::VARCHAR[] "
-    f"ELSE string_split({_NORMC}, ' ') END"
-)
 
 
 # --- BPE pair counts (tokenizer training, one merge iteration) ---------------
@@ -51,7 +45,7 @@ def bpe_pair_counts_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 BPE_PAIR_COUNTS_SQL = f"""
-WITH toks AS (SELECT {_TOKS} AS t FROM documents),
+WITH toks AS (SELECT {_TOKSC} AS t FROM documents),
 pairs AS (
   SELECT t[i] AS a, t[i + 1] AS b
   FROM toks, UNNEST(range(1, len(t))) AS g(i)

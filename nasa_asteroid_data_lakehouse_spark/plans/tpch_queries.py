@@ -30,10 +30,6 @@ from pyspark.sql.functions import broadcast
 from nasa_asteroid_data_lakehouse_spark.catalog import read_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return read_table(spark, sf_dir, name)
-
-
 # --- Q4: order priority checking (EXISTS semi-join) --------------------------
 
 
@@ -42,11 +38,11 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     the order date, counted by priority.  EXISTS → LEFT SEMI join on
     the fact key; the lineitem scan receives no filter but the join is
     key-local after the orders filter prunes the build side."""
-    orders = _t(spark, sf_dir, "orders").where(
+    orders = read_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-04-01").cast("timestamp"))
     )
-    late = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    late = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
     return (
         orders.join(
             late,
@@ -80,7 +76,7 @@ ORDER BY o_orderpriority
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pure scan-filter-aggregate: all three predicates push to the
     parquet reader; no shuffle beyond the single-row final agg."""
-    lineitem = _t(spark, sf_dir, "lineitem")
+    lineitem = read_table(spark, sf_dir, "lineitem")
     return (
         lineitem.where(
             (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
@@ -115,22 +111,22 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ship year.  Supplier→nation and customer→nation are broadcast; the
     lineitem↔orders join is the only fact-fact shuffle."""
     n1, n2 = "NATION_1", "NATION_2"
-    nation = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    nation = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     supp = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .join(broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .select(F.col("s_suppkey"), F.col("n_name").alias("supp_nation"))
     )
     cust = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .join(broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .select(F.col("c_custkey"), F.col("n_name").alias("cust_nation"))
     )
-    lineitem = _t(spark, sf_dir, "lineitem").where(
+    lineitem = read_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") <= F.lit("1997-12-31").cast("timestamp"))
     )
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    orders = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     return (
         lineitem.join(broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -174,10 +170,10 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NATION_3's share of PROMO-part revenue sold into EUROPE, by
     order year.  Conditional aggregation over a 6-table star join;
     every dimension broadcast."""
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    nation = read_table(spark, sf_dir, "nation")
+    region = read_table(spark, sf_dir, "region")
     euro_cust = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .join(broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .join(
             broadcast(region.where(F.col("r_name") == "EUROPE")),
@@ -186,18 +182,19 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey")
     )
     supp_nation = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .join(broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .select(F.col("s_suppkey"), F.col("n_name").alias("supp_nation"))
     )
-    promo = _t(spark, sf_dir, "part").where(F.col("p_type") == "PROMO")
+    promo = read_table(spark, sf_dir, "part").where(F.col("p_type") == "PROMO")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .join(broadcast(promo), F.col("l_partkey") == F.col("p_partkey"))
         .join(broadcast(supp_nation), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(
-            _t(spark, sf_dir, "orders"), F.col("l_orderkey") == F.col("o_orderkey")
+            read_table(spark, sf_dir, "orders"),
+            F.col("l_orderkey") == F.col("o_orderkey"),
         )
         .join(broadcast(euro_cust), F.col("o_custkey") == F.col("c_custkey"), "left_semi")
         .groupBy(F.year("o_orderdate").alias("o_year"))
@@ -239,13 +236,13 @@ ORDER BY 1
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top 20 customers by lost revenue from returned ('R') lines in
     1997H1.  TakeOrderedAndProject caps the sort at k rows."""
-    returned = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
-    orders = _t(spark, sf_dir, "orders").where(
+    returned = read_table(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
+    orders = read_table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-07-01").cast("timestamp"))
     )
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    cust = read_table(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
     return (
         returned.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
@@ -284,11 +281,11 @@ def q12_late_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """For lines shipped >60 days after the order date in 1997, count
     urgent (1/2) vs other priorities by order status — the Q12
     pattern with o_orderstatus standing in for l_shipmode."""
-    lineitem = _t(spark, sf_dir, "lineitem").where(
+    lineitem = read_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    orders = _t(spark, sf_dir, "orders")
+    orders = read_table(spark, sf_dir, "orders")
     urgent = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
     return (
         lineitem.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -324,11 +321,11 @@ ORDER BY o_orderstatus
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Percent of one month's revenue from PROMO-type parts.
     Broadcast part join + conditional aggregation into one scalar."""
-    lineitem = _t(spark, sf_dir, "lineitem").where(
+    lineitem = read_table(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-10-01").cast("timestamp"))
     )
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    part = read_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         lineitem.join(broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
@@ -362,14 +359,14 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     The HAVING pre-aggregation shrinks the fact side before any join —
     at 100 TB this is the difference between joining 60 B rows and
     joining the handful of jumbo orders."""
-    lineitem = _t(spark, sf_dir, "lineitem")
+    lineitem = read_table(spark, sf_dir, "lineitem")
     big = (
         lineitem.groupBy("l_orderkey")
         .agg(F.round(F.sum("l_quantity"), 2).alias("total_qty"))
         .where(F.col("total_qty") > 250)
     )
-    orders = _t(spark, sf_dir, "orders")
-    cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
+    orders = read_table(spark, sf_dir, "orders")
+    cust = read_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     return (
         big.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
@@ -401,8 +398,8 @@ def q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue from three brand × size × quantity bands.  The OR of
     conjunctions is declared once; Catalyst extracts the common
     p_partkey join and pushes brand/size to the part scan."""
-    lineitem = _t(spark, sf_dir, "lineitem")
-    part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    lineitem = read_table(spark, sf_dir, "lineitem")
+    part = read_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     qty, size, brand = F.col("l_quantity"), F.col("p_size"), F.col("p_brand")
     bands = (
         ((brand == "Brand#11") & size.between(1, 15) & qty.between(1, 21))
@@ -437,13 +434,13 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with above-average positive balance and no orders
     since 2000, by nation.  The average is a broadcast scalar; the
     NOT-EXISTS is a left-anti join against the filtered orders."""
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    cust = read_table(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
     avg_bal = (
         cust.where(F.col("c_acctbal") > 0)
         .agg(F.avg("c_acctbal").alias("avg_bal"))
     )
-    recent = _t(spark, sf_dir, "orders").where(
+    recent = read_table(spark, sf_dir, "orders").where(
         F.col("o_orderdate") >= F.lit("2000-01-01").cast("timestamp")
     ).select("o_custkey")
     return (
@@ -491,19 +488,19 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     cost = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.min(F.col("l_extendedprice") / F.col("l_quantity")).alias("unit_cost"))
     )
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")
+    nation = read_table(spark, sf_dir, "nation")
+    region = read_table(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")
     eur_supp = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .join(broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .select("s_suppkey", "s_name", "s_acctbal", F.col("n_name").alias("nation"))
     )
-    parts = _t(spark, sf_dir, "part").where(
+    parts = read_table(spark, sf_dir, "part").where(
         (F.col("p_size") == 15) & (F.col("p_type") == "STANDARD")
     ).select("p_partkey", "p_name")
     w = Window.partitionBy("p_partkey")
@@ -557,17 +554,17 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     The filtered fact is computed once and reused for both the per-part
     sums and the grand-total scalar (broadcast as a 1-row cross join)."""
     nat1_supp = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .join(
             broadcast(
-                _t(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_1")
+                read_table(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_1")
             ),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .select("s_suppkey")
     )
     li = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .select("l_partkey", "l_suppkey", "l_extendedprice")
         .join(broadcast(nat1_supp), F.col("l_suppkey") == F.col("s_suppkey"), "left_semi")
     )
@@ -608,8 +605,8 @@ def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     included via the left outer join).  The non-equi part of the join
     condition (priority exclusion) stays in the join, not a post-filter,
     so null-extension semantics match canonical Q13."""
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
-    orders = _t(spark, sf_dir, "orders").select(
+    cust = read_table(spark, sf_dir, "customer").select("c_custkey")
+    orders = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority"
     )
     per_cust = (
@@ -651,7 +648,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     FP-stable across engines; the revenue view is computed once and
     reused for the scalar (Spark reuses the shuffle via AQE)."""
     revenue = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .where(
             (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
@@ -664,7 +661,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     max_rev = revenue.agg(F.max("total_revenue").alias("max_revenue"))
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    supp = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         revenue.crossJoin(broadcast(max_rev))
         .where(F.col("total_revenue") == F.col("max_revenue"))
@@ -698,17 +695,17 @@ def q16_parts_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     band, and negative-balance suppliers (the fixtures' stand-in for
     the 'customer complaints' comment filter).  NOT IN → left anti."""
     bad_supp = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .where(F.col("s_acctbal") < 0)
         .select("s_suppkey")
     )
-    parts = _t(spark, sf_dir, "part").where(
+    parts = read_table(spark, sf_dir, "part").where(
         (F.col("p_brand") != "Brand#15")
         & (F.col("p_type") != "PROMO")
         & F.col("p_size").isin(1, 9, 14, 19, 23, 36, 45, 49)
     ).select("p_partkey", "p_brand", "p_type", "p_size")
     return (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .select("l_partkey", "l_suppkey")
         .join(broadcast(parts), F.col("l_partkey") == F.col("p_partkey"))
         .join(broadcast(bad_supp), F.col("l_suppkey") == F.col("s_suppkey"), "left_anti")
@@ -741,12 +738,12 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (semi-joined first, so the threshold pass scans only brand parts);
     the threshold is rounded in both engines for FP-stable comparison."""
     brand_parts = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .where(F.col("p_brand") == "Brand#13")
         .select("p_partkey")
     )
     li = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .select("l_partkey", "l_quantity", "l_extendedprice")
         .join(broadcast(brand_parts), F.col("l_partkey") == F.col("p_partkey"), "left_semi")
     )
@@ -779,12 +776,12 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; the IN becomes a left-semi join — no row multiplication
     at any step."""
     red_parts = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .where(F.col("p_name").like("red%"))
         .select("p_partkey")
     )
     movers = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .where(
             (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -795,9 +792,9 @@ def q20_potential_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("qty") > 50)
         .select("l_suppkey")
     )
-    nat2 = _t(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_2")
+    nat2 = read_table(spark, sf_dir, "nation").where(F.col("n_name") == "NATION_2")
     return (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .join(broadcast(nat2), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(movers, F.col("s_suppkey") == F.col("l_suppkey"), "left_semi")
         .select("s_name", "s_acctbal")
@@ -835,12 +832,12 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     late suppliers) — one shuffle replaces two correlated self-joins,
     which at 100 TB is the difference between 1 and 3 fact shuffles."""
     orders_f = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .where(F.col("o_orderstatus") == "F")
         .select("o_orderkey", "o_orderdate")
     )
     li = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_suppkey", "l_shipdate")
         .join(orders_f, F.col("l_orderkey") == F.col("o_orderkey"))
         .withColumn(
@@ -852,7 +849,7 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("l_suppkey").alias("n_supp"),
         F.countDistinct(F.when(F.col("is_late"), F.col("l_suppkey"))).alias("n_late"),
     )
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    supp = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         li.where(F.col("is_late"))
         .join(

@@ -1,6 +1,5 @@
 from nasa_asteroid_data_lakehouse_spark.sources.readers import (
     read_json_multiline,
-    read_jsonl,
 )
 from nasa_asteroid_data_lakehouse_spark.sources.writers import (
     write_partitioned,
@@ -9,7 +8,6 @@ from nasa_asteroid_data_lakehouse_spark.sources.writers import (
 
 __all__ = [
     "read_json_multiline",
-    "read_jsonl",
     "write_partitioned",
     "write_table",
 ]

@@ -10,7 +10,6 @@ the incoming frame, so a daily rerun can't truncate the whole table.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def write_partitioned(
@@ -38,37 +37,3 @@ def write_partitioned(
 
 def write_table(df: DataFrame, path: str, mode: str = "overwrite", fmt: str = "parquet") -> None:
     df.write.format(fmt).mode(mode).save(path)
-
-
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    cluster_by: list[str],
-    num_files: int | None = None,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-) -> None:
-    """Range-clustered layout: rows range-partitioned across ``num_files``
-    files on ``cluster_by`` and sorted within each file.
-
-    Every file then covers a narrow, near-disjoint value range, so
-    parquet footer min/max stats let a filtered scan skip whole files
-    and row groups — the data-skipping layout for selective predicates
-    on the cluster keys (the single/prefix-key case of Z-ordering;
-    tables filtered on two independent keys need a real space-filling
-    curve, out of scope here).  Unlike ``partitionBy``, clustering
-    handles high-cardinality keys (timestamps, ids) without the
-    one-directory-per-value explosion.
-
-    At 100 TB: choose ``num_files`` so files land ~1 GB; the range
-    exchange samples key quantiles, so skew is balanced automatically.
-    """
-    cols = [F.col(c) for c in cluster_by]
-    n = num_files or df.sparkSession.sparkContext.defaultParallelism
-    (
-        df.repartitionByRange(n, *cols)
-        .sortWithinPartitions(*cols)
-        .write.format(fmt)
-        .mode(mode)
-        .save(path)
-    )

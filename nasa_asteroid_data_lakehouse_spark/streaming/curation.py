@@ -1,27 +1,16 @@
-"""Streaming corpus curation: continuous document admission.
+"""Streaming corpus curation: continuous LM-based quality scoring.
 
-Composes the batch curation operators into a Structured Streaming
-ingest path:
+Composes the batch corpus-statistics operators into a Structured
+Streaming path: a static reference unigram LM is built once
+(:func:`build_reference_lm`), and every micro-batch is scored against
+it in ``foreachBatch`` (:func:`score_stream`) — the per-document
+aggregation is batch-shaped, which is exactly what foreachBatch is for.
+Each batch writes its own ``batch=<id>`` partition, so a replayed
+batch replaces rather than duplicates its output
+(:func:`read_scored` reads the latest score per document).
 
-* the stateless quality gate
-  (:func:`~nasa_asteroid_data_lakehouse_spark.llm.curation.quality_filter_stateless`)
-  runs INSIDE the stream — pure projection, no state, no watermark;
-* near-duplicate screening against everything already admitted runs in
-  ``foreachBatch`` via
-  :func:`~nasa_asteroid_data_lakehouse_spark.llm.dedup.incremental_admit`
-  — the corpus-vs-batch screen is inherently batch-shaped (it reads
-  the admitted table), which is exactly what foreachBatch is for.
-
-Each micro-batch is therefore: gate (streaming) -> screen vs corpus
-(batch join) -> append admitted rows.  Replayed batches re-admit the
-same rows idempotently because admission is a pure function of
-(corpus, batch) and appends are keyed by doc id through the same
-deterministic merge the batch pipeline uses.
-
-At scale the admitted corpus keeps its band-bucket table persisted
-(computed once per admitted doc), so each micro-batch shuffles only
-the new documents — the streaming cost per batch is O(|batch|), not
-O(|corpus|).
+Per-batch cost is O(|batch|) against the O(|V|) broadcast LM table,
+never O(|corpus|).
 """
 
 from __future__ import annotations
@@ -30,62 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
-from nasa_asteroid_data_lakehouse_spark.llm import corpus_stats, curation, dedup
-
-
-def admit_stream(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    table_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    jaccard_threshold: float = 0.7,
-    checkpoint: str | None = None,
-):
-    """Continuous curation sink: quality-gate the stream, then per
-    micro-batch admit only documents that are not near-duplicates of
-    the already-admitted corpus, appending them to ``table_path``.
-
-    The gate preserves input columns, so gating is a genuine
-    stateless projection + filter on the stream — no join, no state,
-    no watermark.  The corpus probe reads through Spark (not the
-    driver's local filesystem), so object-store / HDFS table paths
-    keep their near-dup screen and replay protection.
-
-    Returns the unstarted ``DataStreamWriter`` (callers pick the
-    trigger and call ``start()``), matching ``merge_sink``'s shape.
-    """
-    in_cols = list(stream_df.columns)
-    gated = (
-        curation.quality_filter_stateless(stream_df, id_col, text_col)
-        .where(F.col("keep"))
-        .select(*in_cols)
-    )
-
-    def screen_and_append(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            corpus = spark.read.parquet(table_path)
-        except AnalysisException:  # first batch: no table yet
-            corpus = None
-        admitted = dedup.incremental_admit(
-            corpus if corpus is not None else batch_df.limit(0),
-            batch_df,
-            id_col,
-            text_col=text_col,
-            jaccard_threshold=jaccard_threshold,
-        )
-        if corpus is not None:
-            # replay safety: a re-delivered doc id is already in the
-            # corpus; drop it before appending
-            admitted = admitted.join(
-                corpus.select(id_col), id_col, "left_anti"
-            )
-        admitted.write.mode("append").parquet(table_path)
-
-    return (
-        gated.writeStream.foreachBatch(screen_and_append)
-        .option("checkpointLocation", checkpoint or f"{table_path}__checkpoint")
-    )
+from nasa_asteroid_data_lakehouse_spark.llm import corpus_stats
 
 
 def build_reference_lm(
@@ -172,8 +106,8 @@ def score_stream(
 
     The per-doc aggregation is a STREAMING aggregation if run inside
     the stream (unbounded state: doc ids never expire), so it runs in
-    ``foreachBatch`` — batch-shaped work in the batch slot, the same
-    split ``admit_stream`` uses.  Replay-safe by construction: each
+    ``foreachBatch`` — batch-shaped work in the batch slot.
+    Replay-safe by construction: each
     micro-batch overwrites its own ``batch=<id>`` partition directory
     under ``out_path``, so a re-delivered batch replaces rather than
     duplicates its output (the standard idempotent-append pattern for
@@ -221,8 +155,7 @@ def read_scored(
     (sink directory absent) returns an empty frame with the minimal
     score schema (id, n_tokens, mean_surprisal, batch) — the full
     schema also carries the source stream's columns, unknowable until
-    a batch lands; same no-table-yet totality as the module's other
-    sinks."""
+    a batch lands."""
     try:
         df = spark.read.parquet(out_path)
     except AnalysisException:  # no batch committed yet

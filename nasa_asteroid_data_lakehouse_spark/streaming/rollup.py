@@ -34,8 +34,6 @@ __all__ = [
     "fold_mergeable_batch",
     "fold_rollup_batch",
     "incremental_rollup_sink",
-    "incremental_cms_sink",
-    "changepoint_monitor_sink",
 ]
 
 
@@ -146,7 +144,7 @@ def incremental_rollup_sink(
     ``table_root/applied`` in the SAME atomic swap
     (:func:`fold_rollup_batch`).  Returns the unstarted
     ``DataStreamWriter`` (callers pick the trigger and call
-    ``start()``), matching ``admit_stream``'s shape.
+    ``start()``).
 
     Read the maintained view with ``spark.read.parquet(root + "/data")``
     — mean is derivable as sum_val / n_vals.
@@ -154,104 +152,6 @@ def incremental_rollup_sink(
 
     def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
         fold_rollup_batch(spark, batch_df, batch_id, table_root, keys, value_col)
-
-    return (
-        stream_df.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint or f"{table_root}__checkpoint")
-    )
-
-
-def incremental_cms_sink(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    table_root: str,
-    item_col: str,
-    depth: int = 4,
-    width: int = 1024,
-    seed: str = "cms-v1",
-    checkpoint: str | None = None,
-):
-    """Continuously-maintained count-min sketch: each micro-batch's
-    depth×width counter table (operators/sketches.count_min_counters)
-    merges into the persistent sketch by cell-wise sum.  CMS is a
-    LINEAR sketch, so the merged counters equal a single-pass build
-    over all delivered rows EXACTLY — the maintenance is lossless, and
-    the state is depth×width rows regardless of how much data has
-    streamed through.  Same atomic applied-marker protocol as
-    :func:`incremental_rollup_sink`.  Query with
-    operators/sketches.count_min_estimate over ``root + "/data"``.
-    """
-    from nasa_asteroid_data_lakehouse_spark.operators.sketches import (
-        count_min_counters,
-    )
-
-    def merge_cells(state: DataFrame, partial: DataFrame) -> DataFrame:
-        return (
-            state.unionByName(partial)
-            .groupBy("j", "bucket")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fold_mergeable_batch(
-            spark,
-            batch_df,
-            batch_id,
-            table_root,
-            lambda b: count_min_counters(b, item_col, depth, width, seed),
-            merge_cells,
-        )
-
-    return (
-        stream_df.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint or f"{table_root}__checkpoint")
-    )
-
-
-def changepoint_monitor_sink(
-    spark: SparkSession,
-    stream_df: DataFrame,
-    table_root: str,
-    ts_col: str = "ts",
-    checkpoint: str | None = None,
-):
-    """Streaming CUSUM changepoint screen
-    (operators/stats.cusum composed over the incremental fold).
-
-    Each micro-batch folds the per-day event-count rollup with the
-    same atomic applied-marker protocol as
-    :func:`incremental_rollup_sink` (replays never double-count),
-    then recomputes the CUSUM screen over the MAINTAINED series and
-    republishes it at ``table_root/cusum``.  The screen is a derived
-    view of O(days)-bounded state — per-batch recomputation is exact
-    and idempotent, so it carries no markers of its own, and the
-    running-sum window only ever touches the bounded series, never
-    the stream.  Read with ``spark.read.parquet(root + "/cusum")``;
-    the ``is_peak`` rows are the current changepoint candidates.
-    """
-    from nasa_asteroid_data_lakehouse_spark.operators.stats import cusum
-
-    def fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        days = batch_df.where(F.col(ts_col).isNotNull()).select(
-            F.to_date(ts_col).alias("day"), F.lit(1).alias("one")
-        )
-        fold_rollup_batch(spark, days, batch_id, table_root, ["day"], "one")
-        state = spark.read.parquet(f"{table_root}/data")
-        screen = cusum(
-            state.select("day", F.col("n_rows").alias("n_events")),
-            "day",
-            "n_events",
-        )
-        view = f"{table_root}/cusum"
-        # Probe via a read attempt, not a driver-local filesystem check
-        # — table_root may be on a non-local filesystem (S3A/HDFS)
-        # where os.path.exists is always False and the second batch's
-        # plain write (errorifexists) would throw.  Same probe
-        # fold_mergeable_batch uses.
-        if read_table_if_exists(spark, view) is not None:
-            staged_swap(view, lambda p: screen.write.parquet(p))
-        else:
-            screen.write.parquet(view)
 
     return (
         stream_df.writeStream.foreachBatch(fold_batch)

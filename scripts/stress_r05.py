@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from nasa_asteroid_data_lakehouse_spark.plans import llm_queries as lq
 from nasa_asteroid_data_lakehouse_spark.plans import r05_queries as r5
 from nasa_asteroid_data_lakehouse_spark.session import get_spark
 from scripts.stress_curation import probe, synth_docs, synth_vecs
@@ -45,7 +46,7 @@ def main() -> None:
         )
         probe(
             "media_metadata_1M",
-            lambda: r5.media_metadata_documents(spark, sf),
+            lambda: lq.media_metadata_documents(spark, sf),
         )
         probe(
             "payload_survivors_1M",

@@ -24,6 +24,7 @@ Usage: python scripts/stress_r07.py [n_docs] [n_vecs] [n_events] [n_orders]
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import tempfile
 
@@ -101,29 +102,20 @@ def main() -> None:
         f"centroid_drift_{n_vecs}",
         lambda: r7.centroid_drift_splits_embeddings(spark, sf),
     )
-    # LSH probes run at 12 planes (4096 buckets): buckets = 2^planes is
-    # the occupancy lever — the fixture's 4 planes (16 buckets) holds
-    # ~30 vectors/bucket at sf0.01 but goes quadratic at 1M vectors
-    # (62.5k/bucket).  One plane per corpus doubling keeps the
-    # within-bucket verify constant; the probes time the lever turned.
-    r7._ESL_PLANES, esl_planes0 = 12, r7._ESL_PLANES
-    r7._HUB_PLANES, hub_planes0 = 12, r7._HUB_PLANES
-    try:
-        probe(
-            f"embedding_split_leakage_{n_vecs}_12planes",
-            lambda: r7.embedding_split_leakage_embeddings(spark, sf),
-        )
-        probe(
-            f"hubness_lsh_{n_vecs}_12planes",
-            lambda: r7.hubness_lsh_embeddings(spark, sf),
-        )
-    finally:
-        r7._ESL_PLANES, r7._HUB_PLANES = esl_planes0, hub_planes0
+    probe(
+        f"embedding_split_leakage_{n_vecs}",
+        lambda: r7.embedding_split_leakage_embeddings(spark, sf),
+    )
+    probe(
+        f"hubness_lsh_{n_vecs}",
+        lambda: r7.hubness_lsh_embeddings(spark, sf),
+    )
     probe(
         f"mase_seasonal_naive_{n_events}",
         lambda: r7.mase_seasonal_naive_events(spark, sf),
     )
     probe(f"skyline_daily_{n_events}", lambda: r7.skyline_daily_events(spark, sf))
+    shutil.rmtree(sf, ignore_errors=True)
     spark.stop()
 
 

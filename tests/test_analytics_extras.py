@@ -96,38 +96,6 @@ def test_file_skipping_stats_matches_oracle(spark, sf_dir):
     )
 
 
-def test_prunable_files_is_safe(spark, sf_smoke, tmp_path):
-    """Reading ONLY the must_read files loses no matching rows."""
-    from nasa_asteroid_data_lakehouse_spark.lake.stats import (
-        collect_file_stats,
-        prunable_files,
-    )
-
-    orders = read_table(spark, sf_smoke, "orders")
-    path = str(tmp_path / "orders_files")
-    # several files so pruning has something to skip
-    orders.repartitionByRange(8, "o_totalprice").write.parquet(path)
-
-    back = spark.read.parquet(path)
-    stats = collect_file_stats(back, ["o_totalprice"])
-    lo, hi = 50_000.0, 60_000.0
-    marked = prunable_files(stats, "o_totalprice", lo, hi).collect()
-    keep = {r["file"] for r in marked if r["must_read"]}
-    assert 0 < len(keep) < len(marked), "range-partitioned files must prune"
-
-    kept_rows = (
-        back.withColumn(
-            "f",
-            F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1),
-        )
-        .where(F.col("f").isin(keep))
-        .where(F.col("o_totalprice").between(lo, hi))
-        .count()
-    )
-    all_rows = orders.where(F.col("o_totalprice").between(lo, hi)).count()
-    assert kept_rows == all_rows
-
-
 def test_dq_report_orders_matches_oracle(spark, sf_dir):
     assert_matches_oracle(
         aq.dq_report_orders(spark, sf_dir), aq.DQ_REPORT_SQL, sf_dir

@@ -68,12 +68,12 @@ def test_ivf_assignment_empty_centroids_nonempty_df_raises(spark):
 
 def test_kmeans_and_assignment_empty(spark, empty_vecs):
     from nasa_asteroid_data_lakehouse_spark.llm.similarity import (
-        kmeans_fit,
+        seed_centroids,
         semantic_dedup,
         with_ivf_assignment,
     )
 
-    centroids = kmeans_fit(empty_vecs, k=4)
+    centroids = seed_centroids(empty_vecs, k=4)
     assert centroids == []
     assigned = with_ivf_assignment(empty_vecs, centroids)
     assert assigned.count() == 0

@@ -186,11 +186,11 @@ def test_ranked_topk_excludes_nan_scores(spark):
 
 
 def test_kmeans_seeds_skip_null_headed_rows(spark):
-    """A table whose k lowest ids all carry NULL vectors must still fit
-    (seeds filter NULLs before the limit); with_ivf_assignment's
-    empty-centroid raise is then unreachable from kmeans_fit."""
+    """A table whose k lowest ids all carry NULL vectors must still
+    seed (seeds filter NULLs before the limit); with_ivf_assignment's
+    empty-centroid raise is then unreachable from seed_centroids."""
     from nasa_asteroid_data_lakehouse_spark.llm.similarity import (
-        kmeans_fit,
+        seed_centroids,
         with_ivf_assignment,
     )
 
@@ -200,17 +200,17 @@ def test_kmeans_seeds_skip_null_headed_rows(spark):
         (12, [1.1, 2.1]),
     ]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    cents = kmeans_fit(df, k=2, iters=2)
+    cents = seed_centroids(df, k=2)
     assert len(cents) == 2 and len(cents[0]) == 2
     assigned = with_ivf_assignment(df, cents)
     # NULL vectors get a NULL cluster; valid vectors a real one
     got = {r["vec_id"]: r["cluster"] for r in assigned.collect()}
     assert got[0] is None and got[10] is not None
-    # all-NULL table: kmeans returns [], assignment stays total
+    # all-NULL table: no seeds, assignment stays total
     nulls = spark.createDataFrame(
         [(1, None)], "vec_id bigint, embedding array<float>"
     )
-    assert kmeans_fit(nulls, k=2) == []
+    assert seed_centroids(nulls, k=2) == []
     assert with_ivf_assignment(nulls, []).count() == 1
 
 
@@ -320,8 +320,8 @@ def test_null_text_rows_excluded_from_shingle_operators(spark):
 
 
 def test_null_payload_features_propagate(spark):
-    """NULL binary payload (failed fetch) -> NULL byte features in both
-    Arrow-boundary profilers; a real zero-byte payload keeps its
+    """NULL binary payload (failed fetch) -> NULL byte features in the
+    Arrow-boundary profiler; a real zero-byte payload keeps its
     well-defined profile (len 0, sha256 of b'')."""
     import hashlib
 
@@ -338,10 +338,6 @@ def test_null_payload_features_propagate(spark):
     assert rows[0]["n_bytes"] == 5 and rows[0]["n_spaces"] == 1
     assert rows[2]["n_bytes"] == 0
     assert rows[2]["sha256_hex"] == hashlib.sha256(b"").hexdigest()
-    feats = {r["doc_id"]: r for r in mm.extract_byte_features(df).collect()}
-    assert feats[1]["n_bytes"] is None and feats[1]["entropy"] is None
-    assert feats[1]["histogram"] is None
-    assert feats[2]["n_bytes"] == 0 and feats[2]["entropy"] == 0.0
 
 
 def test_balanced_mixture_keeps_null_stratum(spark, tmp_path):

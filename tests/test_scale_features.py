@@ -15,18 +15,6 @@ def lineitem(spark):
     return read_table(spark, "/root/testdata/sf0.001", "lineitem")
 
 
-def test_salted_count_matches_plain(spark, lineitem):
-    plain = {
-        r["l_returnflag"]: r["n"]
-        for r in lineitem.groupBy("l_returnflag").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    salted = {
-        r["l_returnflag"]: r["n"]
-        for r in skew.salted_count(lineitem, ["l_returnflag"], buckets=8).collect()
-    }
-    assert plain == salted
-
-
 def test_salted_agg_matches_plain(spark, lineitem):
     plain = {
         r["l_returnflag"]: (round(r["total"], 4), r["mx"])
@@ -44,16 +32,6 @@ def test_salted_agg_matches_plain(spark, lineitem):
         ).collect()
     }
     assert plain == two_phase
-
-
-def test_salted_broadcast_left_matches_plain(spark):
-    fact = spark.createDataFrame(
-        [(1, 10.0)] * 50 + [(2, 5.0)] * 3, ["k", "v"]  # key 1 is hot
-    )
-    dim = spark.createDataFrame([(1, "one"), (2, "two")], ["k", "name"])
-    plain = fact.join(dim, "k").groupBy("name").count().collect()
-    salted = skew.salted_broadcast_left(fact, dim, "k", buckets=4).groupBy("name").count().collect()
-    assert sorted(map(tuple, plain)) == sorted(map(tuple, salted))
 
 
 def test_partition_pruning(spark, tmp_path):
@@ -125,44 +103,6 @@ def test_equi_depth_bucket_temporal(spark):
     b = orders.select(equi_depth_bucket(orders, "o_orderdate", bits=4).alias("b"))
     stats = b.agg(F.min("b"), F.max("b"), F.countDistinct("b")).first()
     assert stats[0] >= 0 and stats[1] <= 15 and stats[2] >= 12
-
-
-def test_write_zordered_clusters_both_keys(spark, tmp_path):
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from nasa_asteroid_data_lakehouse_spark.lake.zorder import write_zordered
-
-    orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    path = str(tmp_path / "orders_z")
-    write_zordered(orders, path, ["o_custkey", "o_totalprice"], bits=8, num_files=16)
-
-    out = spark.read.parquet(path)
-    assert out.count() == orders.count()
-    assert sorted(out.columns) == sorted(orders.columns)
-
-    # Each file should cover a narrow rectangle of (custkey, price)
-    # space: with 16 range partitions the top 4 z-bits fix 2 bits of
-    # each key, so per-file spans ~25% of each key's range.  Assert the
-    # average span is well below a random layout's ~100%.
-    for key in ("o_custkey", "o_totalprice"):
-        spans, gmin, gmax = [], None, None
-        for f in sorted(glob.glob(f"{path}/*.parquet")):
-            md = pq.read_metadata(f)
-            idx = next(
-                i for i in range(md.num_columns)
-                if md.row_group(0).column(i).path_in_schema == key
-            )
-            mins = [md.row_group(g).column(idx).statistics.min for g in range(md.num_row_groups)]
-            maxs = [md.row_group(g).column(idx).statistics.max for g in range(md.num_row_groups)]
-            spans.append((min(mins), max(maxs)))
-            gmin = min(mins) if gmin is None else min(gmin, min(mins))
-            gmax = max(maxs) if gmax is None else max(gmax, max(maxs))
-        assert len(spans) >= 8
-        width = gmax - gmin
-        avg_frac = sum((b - a) / width for a, b in spans) / len(spans)
-        assert avg_frac < 0.6, f"{key}: files too wide on average ({avg_frac:.2f})"
 
 
 def test_winsorize_plan_broadcasts_bounds(spark):

@@ -1,8 +1,7 @@
-"""Statistical-mining + tokenizer-training family: BPE pair counts /
-merge application, deterministic shuffle manifests, equi-depth
-histograms, chi-square independence, Benford screens, FD conflict
-mining — each oracle-checked against DuckDB plus invariant or
-brute-force property tests.
+"""Statistical-mining family: BPE pair counts, deterministic shuffle
+manifests, equi-depth histograms, chi-square independence, Benford
+screens, FD conflict mining — each oracle-checked against DuckDB plus
+invariant or brute-force property tests.
 """
 
 from __future__ import annotations
@@ -10,7 +9,6 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from nasa_asteroid_data_lakehouse_spark.llm import tokenizer
 from nasa_asteroid_data_lakehouse_spark.plans import stats_queries as sq
@@ -84,106 +82,6 @@ def test_pair_counts_brute_force(spark, sf_smoke):
     }
     texts = [r["text"] for r in docs.select("text").collect() if r["text"]]
     assert got == _brute_pairs(texts)
-
-
-def test_best_merge_is_max_pair(spark, sf_smoke):
-    docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
-    a, b = tokenizer.best_merge(docs)
-    brute = _brute_pairs(
-        [r["text"] for r in docs.select("text").collect() if r["text"]]
-    )
-    best = min(
-        brute.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-    )
-    assert (a, b) == best[0]
-
-
-def _brute_merge(toks: list[str], a: str, b: str) -> list[str]:
-    out: list[str] = []
-    for x in toks:
-        if out and out[-1] == a and x == b:
-            out[-1] = a + b
-        else:
-            out.append(x)
-    return out
-
-
-def test_apply_merge_greedy_semantics(spark):
-    """Greedy left-to-right, non-overlapping merge of ("a", "b"),
-    including the ("a","a")-on-"aaa" style self-pair via brute force."""
-    cases = [
-        ["a", "b", "a", "b"],       # both merge
-        ["a", "a", "b", "b"],       # one merge mid-array
-        ["x"],                      # untouched
-        [],                         # empty
-        ["a", "b", "a", "b", "a"],  # non-overlapping L->R
-        ["b", "a", "b", "b"],       # merge not at position 0
-    ]
-    schema = StructType([StructField("toks", ArrayType(StringType()))])
-    df = spark.createDataFrame([(t,) for t in cases], schema)
-    merged = [
-        r["m"]
-        for r in df.select(
-            tokenizer.apply_merge(F.col("toks"), "a", "b").alias("m")
-        ).collect()
-    ]
-    for toks, got in zip(cases, merged):
-        assert got == _brute_merge(toks, "a", "b"), (toks, got)
-    # self-pair greedy semantics: "aaa" -> ["aa", "a"]
-    df2 = spark.createDataFrame([(["a", "a", "a"],)], schema)
-    got2 = df2.select(
-        tokenizer.apply_merge(F.col("toks"), "a", "a").alias("m")
-    ).collect()[0]["m"]
-    assert got2 == ["aa", "a"]
-
-
-def test_apply_merge_round_trips_pair_count(spark, sf_smoke):
-    """After applying the best merge, that pair's count drops to zero
-    (merged occurrences disappear from the pair stream)."""
-    docs = spark.read.parquet(f"{sf_smoke}/documents.parquet").limit(50)
-    a, b = tokenizer.best_merge(docs)
-    from nasa_asteroid_data_lakehouse_spark.llm import text as t
-
-    toks = t.tokens(t.normalized_text("text"))
-    merged = docs.select(
-        F.array_join(tokenizer.apply_merge(toks, a, b, joiner="\x00"), " ").alias(
-            "text"
-        )
-    )
-    remaining = {
-        (r["a"], r["b"]): r["pair_count"]
-        for r in tokenizer.pair_counts(merged).collect()
-    }
-    assert (a, b) not in remaining
-
-
-def _brute_train_bpe(texts: list[str], n_merges: int) -> list[tuple[str, str, int]]:
-    corpora = [
-        " ".join(t.lower().split()).split()
-        for t in texts
-        if t and t.strip()
-    ]
-    merges = []
-    for _ in range(n_merges):
-        counts: dict[tuple[str, str], int] = {}
-        for toks in corpora:
-            for a, b in zip(toks, toks[1:]):
-                counts[(a, b)] = counts.get((a, b), 0) + 1
-        if not counts:
-            break
-        (a, b), n = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        merges.append((a, b, n))
-        corpora = [_brute_merge(t, a, b) for t in corpora]
-    return merges
-
-
-def test_train_bpe_matches_reference_trainer(spark, sf_smoke):
-    """4 learned merges over a 60-doc corpus reproduce a pure-Python
-    BPE trainer exactly (pair choice, tie-breaks, counts)."""
-    docs = spark.read.parquet(f"{sf_smoke}/documents.parquet").limit(60)
-    got = tokenizer.train_bpe(docs, n_merges=4)
-    texts = [r["text"] for r in docs.select("text").collect()]
-    assert got == _brute_train_bpe(texts, 4)
 
 
 # --- invariants --------------------------------------------------------------
